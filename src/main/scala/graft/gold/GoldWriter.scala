@@ -15,8 +15,8 @@ import graft.quality.QualityChecks.Report
   * overwrite: writing a frame partitioned by the series key replaces exactly
   * the partitions present in the frame and leaves all others intact — the
   * same idempotence guarantee, but parallel and transactional per partition,
-  * and it scales to any number of series. JDBC stays available through the
-  * standard `df.write.format("jdbc")` path (no database in this harness).
+  * and it scales to any number of series. The JDBC warehouse load lives in
+  * `JdbcSink` (exercised against embedded Derby by `JdbcSinkSpec`).
   *
   * All artifact I/O goes through the Hadoop FileSystem API, so paths work
   * identically on local disk, HDFS, or cloud object stores.

@@ -1,15 +1,21 @@
 package graft.gold
 
-import java.sql.Connection
+import java.sql.{Connection, DriverManager}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.datasources.jdbc.JdbcUtils
+import org.apache.spark.sql.jdbc.JdbcDialects
+import org.apache.spark.sql.types.StructType
 
-/** JDBC warehouse sink (SURVEY.md §2.1 SRC6, §2.4 G4/G5): the standard
-  * Spark JDBC write path with the reference's batching behavior
-  * (`db/sql.py:10–40`, `load_hicp_to_sql.py:88–101`). Executed end-to-end
-  * by JdbcSinkSpec against embedded Derby (the JDBC engine that ships with
-  * Spark); the parquet partition-overwrite path in `GoldWriter` remains the
-  * default sink.
+import graft.ops.Exec
+
+/** JDBC warehouse sink (SURVEY.md §2.1 SRC6, §2.4 G4/G5) with the
+  * reference's batching behavior (`db/sql.py:10–40`,
+  * `load_hicp_to_sql.py:88–101`): a small series loads in one driver-side
+  * transaction, a larger frame through the standard Spark JDBC write path.
+  * Executed end-to-end by JdbcSinkSpec against embedded Derby (the JDBC
+  * engine that ships with Spark); the parquet partition-overwrite path in
+  * `GoldWriter` remains the default sink.
   */
 object JdbcSink {
 
@@ -85,17 +91,87 @@ object JdbcSink {
       .save()
 
   /** The reference's full warehouse load (`load_hicp_to_sql.py:76–101`):
-    * ensure the table, DELETE the series being loaded, then batched append —
-    * delete-then-append makes a replay idempotent (G5). The driver-side
-    * connection handles DDL + delete; the append fans out to executor tasks.
+    * ensure the table, DELETE the series being loaded, then insert it —
+    * delete-then-insert makes a replay idempotent (G5). A frame of at most
+    * `Exec.SmallInputRows` rows (one bounded collect, `Exec.collectIfSmall`)
+    * is loaded on ONE driver connection in ONE transaction, so a failed
+    * insert rolls the DELETE back and the old rows survive; a larger frame
+    * keeps the executor-parallel append ([[loadDistributed]]).
     */
   def loadSeries(df: DataFrame, cfg: JdbcConfig,
-                 geo: String, coicop: String, unit: String): Unit = {
-    val conn = java.sql.DriverManager.getConnection(cfg.url, cfg.user, cfg.password)
+                 geo: String, coicop: String, unit: String): Unit =
+    Exec.collectIfSmall(df) match {
+      case Some(rows) => loadRows(df.schema, rows, cfg, geo, coicop, unit)
+      case None => loadDistributed(df, cfg, geo, coicop, unit)
+    }
+
+  /** The above-cap branch of [[loadSeries]]: the driver-side connection
+    * handles DDL + delete (committed on its own), then the append fans out to
+    * executor tasks. */
+  private[gold] def loadDistributed(df: DataFrame, cfg: JdbcConfig,
+                                    geo: String, coicop: String, unit: String): Unit = {
+    val conn = DriverManager.getConnection(cfg.url, cfg.user, cfg.password)
     try {
       ensureTable(conn, cfg.table)
       deleteSeries(conn, cfg.table, geo, coicop, unit)
     } finally conn.close()
     append(df, cfg)
+  }
+
+  /** The small-input branch of [[loadSeries]]: DELETE + `batchSize`-row
+    * batched INSERT of the collected `rows` in one transaction at
+    * `isolationLevel`. */
+  private def loadRows(schema: StructType, rows: Array[Row], cfg: JdbcConfig,
+                       geo: String, coicop: String, unit: String): Unit = {
+    val conn = DriverManager.getConnection(cfg.url, cfg.user, cfg.password)
+    try {
+      ensureTable(conn, cfg.table)
+      conn.setAutoCommit(false)
+      IsolationLevels.get(cfg.isolationLevel).foreach(conn.setTransactionIsolation)
+      try {
+        deleteSeries(conn, cfg.table, geo, coicop, unit)
+        insertRows(conn, cfg, schema, rows)
+        conn.commit()
+      } catch {
+        case e: Throwable => conn.rollback(); throw e
+      }
+    } finally conn.close()
+  }
+
+  /** `isolationLevel` names as Spark's JDBC writer reads them ("NONE" keeps
+    * the connection's default level). */
+  private val IsolationLevels: Map[String, Int] = Map(
+    "READ_UNCOMMITTED" -> Connection.TRANSACTION_READ_UNCOMMITTED,
+    "READ_COMMITTED" -> Connection.TRANSACTION_READ_COMMITTED,
+    "REPEATABLE_READ" -> Connection.TRANSACTION_REPEATABLE_READ,
+    "SERIALIZABLE" -> Connection.TRANSACTION_SERIALIZABLE)
+
+  private def insertRows(conn: Connection, cfg: JdbcConfig, schema: StructType,
+                         rows: Array[Row]): Unit = {
+    val dialect = JdbcDialects.get(cfg.url)
+    val nullTypes = schema.fields.map(f => JdbcUtils.getJdbcType(f.dataType, dialect).jdbcNullType)
+    val ps = conn.prepareStatement(
+      s"INSERT INTO ${cfg.table} (${schema.fieldNames.mkString(", ")}) " +
+        s"VALUES (${schema.fields.map(_ => "?").mkString(", ")})")
+    try {
+      rows.grouped(cfg.batchSize).foreach { batch =>
+        batch.foreach { r =>
+          nullTypes.indices.foreach { i =>
+            if (r.isNullAt(i)) ps.setNull(i + 1, nullTypes(i))
+            else ps.setObject(i + 1, jdbcValue(r.get(i)))
+          }
+          ps.addBatch()
+        }
+        ps.executeBatch()
+      }
+    } finally ps.close()
+  }
+
+  /** java.time values (Spark's Java 8 datetime API) as JDBC types. */
+  private def jdbcValue(v: Any): Any = v match {
+    case d: java.time.LocalDate => java.sql.Date.valueOf(d)
+    case t: java.time.Instant => java.sql.Timestamp.from(t)
+    case t: java.time.LocalDateTime => java.sql.Timestamp.valueOf(t)
+    case other => other
   }
 }

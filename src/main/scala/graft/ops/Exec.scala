@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, lit,
   row_number, spark_partition_id, sum}
@@ -47,6 +47,17 @@ object Exec {
     val bytes = pinned.queryExecution.withCachedData.stats.sizeInBytes
     if (bytes <= maxBytes) broadcast(pinned) else pinned
   }
+
+  /** A frame over the persisted `df`'s cached relation itself, for reading
+    * one cache from both arms of a self-join. Joining a persisted frame with
+    * a frame derived from it gives the second arm's leaf fresh attribute ids;
+    * a `localCheckpoint` leaf (the family memos) does not canonicalize them
+    * away, so that arm misses the cache and recomputes `df`. Copies of the
+    * cached relation share one cache however their ids are renewed. */
+  def cachedScan(df: DataFrame): DataFrame =
+    new org.apache.spark.sql.classic.Dataset[Row](
+      df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      df.queryExecution.withCachedData, org.apache.spark.sql.Encoders.row(df.schema))
 
   /** Default byte cap for [[broadcastIfSmallBytes]]: 128 MiB. */
   val DefaultBroadcastBytes: Long = 128L << 20
@@ -107,9 +118,33 @@ object Exec {
     * cluster deployments whose drivers are smaller than the default budget
     * assumes (the r17 advisor's ask), and for honest measurement of the
     * distributed paths at SFs where the gates would otherwise engage (the
-    * committed sf1 distributed-branch A/B). Default: gates on. */
+    * committed sf1 distributed-branch A/B). Default: gates on. The
+    * small-input gates [[smallInput]] and [[collectIfSmall]] obey it too. */
   private val driverGateOff: Boolean =
     sys.env.get("SPARK_GRAFT_DRIVER_GATE").exists(_.equalsIgnoreCase("off"))
+
+  /** Row cap of the small-input paths through the medallion (one-partition
+    * silver sort, driver-side quality gate, one-transaction JDBC load). A
+    * single series is a few hundred rows; there every Spark stage, query and
+    * commit is fixed overhead, while above the cap the distributed plans
+    * keep their scaling. */
+  val SmallInputRows: Long = 100000L
+
+  /** True when an input known to hold `rows` rows takes a small-input path
+    * (false under `SPARK_GRAFT_DRIVER_GATE=off`). */
+  def smallInput(rows: Long): Boolean = !driverGateOff && rows <= SmallInputRows
+
+  /** The collect-based small-input gate: ONE bounded job,
+    * `limit(SmallInputRows + 1).collect()`, returns every row of `df` when
+    * it has at most [[SmallInputRows]] of them, otherwise None and the
+    * caller runs its distributed branch. Callers project `df` to the columns
+    * they need first. Always None under `SPARK_GRAFT_DRIVER_GATE=off`. */
+  def collectIfSmall(df: DataFrame): Option[Array[Row]] =
+    if (driverGateOff) None
+    else {
+      val rows = df.limit(SmallInputRows.toInt + 1).collect()
+      if (rows.length <= SmallInputRows) Some(rows) else None
+    }
 
   /** Distributed EXACT global rank — the scalable replacement for an
     * unpartitioned `row_number().over(Window.orderBy(...))`, which funnels

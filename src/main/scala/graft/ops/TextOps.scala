@@ -180,8 +180,8 @@ object TextOps {
     // of the per-source counts — exact integers); the persist is still
     // load-bearing for the two downstream reads and released under the
     // Exec.clearPinned contract.
-    val counts = globalTokenCounts(docs, memoKey)
-      .persist().transform(Exec.trackPersisted)
+    val counts = Exec.cachedScan(globalTokenCounts(docs, memoKey)
+      .persist().transform(Exec.trackPersisted))
     val total = counts.agg(sum(col("n")).as("total"))
     counts.crossJoin(broadcast(total))
       .filter(col("n") > col("total") * supportPct / 100.0)

@@ -1,17 +1,21 @@
 package graft.quality
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Data-quality checks Q1–Q7 (SURVEY.md §2.3), generalized from the
   * reference's hard-coded HICP silver checks (`check_hicp_quality.py:52–119`)
   * to arbitrary (key, time, value) table shapes.
   *
-  * Every check is a DataFrame aggregation — partial+final hash aggregate, no
-  * driver loops (the reference's per-group Python loop for continuity,
-  * `:89–100`, becomes a single groupBy). `runChecks` batches all scalar checks
-  * into ONE job so the quality gate costs two scans total at any scale.
+  * Every check is a DataFrame aggregation — partial+final hash aggregate (the
+  * reference's per-group Python loop for continuity, `:89–100`, becomes a
+  * single groupBy). The gate, `runChecks`, has two branches with identical
+  * reports: a small input (at most `Exec.SmallInputRows` rows, e.g. one
+  * series) is collected in ONE bounded job and checked on the driver; a
+  * larger one runs three concurrent aggregation queries — the scalar checks,
+  * the duplicate-key grouping and the continuity grouping.
   */
 object QualityChecks {
 
@@ -340,23 +344,54 @@ object QualityChecks {
         "values_positive", "times_parseable", "monthly_continuity", "passed")
   }
 
-  /** E2: run Q1–Q7 over a silver-shaped table. All scalar checks share ONE
+  /** E2: run Q1–Q7 over a silver-shaped table. Q1 reads the schema only;
+    * Q2–Q7 take one of two branches that give identical reports
+    * (`QualityChecksSpec` runs both on every fixture):
+    *
+    *   - small input — at most `Exec.SmallInputRows` rows, e.g. one series —
+    *     ONE bounded job collects the columns the checks read
+    *     ([[driverChecks]] has the details) and Q2–Q7 are computed from
+    *     those rows on the driver;
+    *   - larger input, a column type the driver branch does not handle, or
+    *     `SPARK_GRAFT_DRIVER_GATE=off`: [[distributedChecks]], three
+    *     concurrent aggregation queries.
+    */
+  def runChecks(df: DataFrame, requiredCols: Seq[String], keyCols: Seq[String],
+                timeCol: String, valueCol: String, groupCols: Seq[String]): Report =
+    withRequired(df, requiredCols) { q1 =>
+      driverProbe(df, requiredCols, keyCols, timeCol, valueCol, groupCols)
+        .flatMap(p => graft.ops.Exec.collectIfSmall(p).map(
+          reportFromRows(p, _, q1, requiredCols, keyCols, timeCol, valueCol, groupCols)))
+        .getOrElse(distributedReport(df, q1, requiredCols, keyCols, timeCol, valueCol, groupCols))
+    }
+
+  /** Q1, then `rest` only when every required column is present. */
+  private def withRequired(df: DataFrame, requiredCols: Seq[String])
+                          (rest: CheckResult => Report): Report = {
+    val missing = missingColumns(df, requiredCols)
+    val q1 = CheckResult("required_columns", missing.isEmpty,
+      Map("missing" -> missing.mkString(",")))
+    if (missing.nonEmpty) Report(passed = false, Seq(q1), Map.empty) else rest(q1)
+  }
+
+  /** The distributed branch of [[runChecks]]. All scalar checks share ONE
     * aggregation job; duplicate-keys and continuity each need their own
     * grouping, so those two jobs run CONCURRENTLY with the scalar job (the
     * three are independent Spark actions — on a cluster their stages overlap,
     * so the gate costs max(scan) wall-clock, not 3×scan).
     */
-  def runChecks(df: DataFrame, requiredCols: Seq[String], keyCols: Seq[String],
-                timeCol: String, valueCol: String, groupCols: Seq[String]): Report = {
+  private[quality] def distributedChecks(df: DataFrame, requiredCols: Seq[String],
+      keyCols: Seq[String], timeCol: String, valueCol: String,
+      groupCols: Seq[String]): Report =
+    withRequired(df, requiredCols)(
+      distributedReport(df, _, requiredCols, keyCols, timeCol, valueCol, groupCols))
+
+  private def distributedReport(df: DataFrame, q1: CheckResult, requiredCols: Seq[String],
+      keyCols: Seq[String], timeCol: String, valueCol: String,
+      groupCols: Seq[String]): Report = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
-
-    val missing = missingColumns(df, requiredCols)
-    val q1 = CheckResult("required_columns", missing.isEmpty,
-      Map("missing" -> missing.mkString(",")))
-    if (missing.nonEmpty)
-      return Report(passed = false, Seq(q1), Map.empty)
 
     val scalarAggs: Seq[Column] =
       requiredCols.map(nullCountCol) ++ Seq(
@@ -377,28 +412,142 @@ object QualityChecks {
     val scalars = Await.result(scalarsF, Duration.Inf)
     def l(name: String): Long = scalars.getAs[Long](name)
     def s(name: String): String = Option(scalars.getAs[String](name)).getOrElse("null")
-
-    val dupRows = Await.result(dupF, Duration.Inf)
     val continuity = Await.result(contF, Duration.Inf)
 
-    val nullsByCol = requiredCols.map(c => c -> l(s"${c}_nulls"))
+    report(q1, requiredCols.map(c => c -> l(s"${c}_nulls")),
+      Await.result(dupF, Duration.Inf), l(s"${valueCol}_nonpositive"), l("time_nulls"),
+      continuity.getAs[Long]("groups"), continuity.getAs[Long]("failing"),
+      l("rows"), SummaryKeys.map(s))
+  }
+
+  /** The driver branch of [[runChecks]] without its row cap (the gate in
+    * [[runChecks]] keeps it to small inputs). One job collects the checked
+    * columns plus two row-level predicates Spark evaluates in that same job
+    * — `value <= 0` and the month of `time` as `year * 12 + month` of
+    * `date_trunc('month', time)` — so Q4 and Q6 keep Spark's comparison and
+    * calendar semantics exactly. Grouping then follows Spark's rules: null
+    * keys form one group, NaN equals NaN and -0.0 equals 0.0; min/max
+    * follow Spark's ordering (NaN largest, strings by UTF-8 bytes); and the
+    * summary strings come from Spark's own `cast(... as string)` on a
+    * one-row local frame, which Spark folds without a job.
+    */
+  private[quality] def driverChecks(df: DataFrame, requiredCols: Seq[String],
+      keyCols: Seq[String], timeCol: String, valueCol: String,
+      groupCols: Seq[String]): Report =
+    withRequired(df, requiredCols) { q1 =>
+      val probe = driverProbe(df, requiredCols, keyCols, timeCol, valueCol, groupCols)
+        .getOrElse(throw new IllegalArgumentException(
+          "a key, group, time or value column type the driver branch does not handle"))
+      reportFromRows(probe, probe.collect(), q1, requiredCols, keyCols, timeCol, valueCol,
+        groupCols)
+    }
+
+  private val NonPositiveCol = "__qc_nonpositive"
+  private val MonthCol = "__qc_month"
+  private val SummaryKeys = Seq("min_time", "max_time", "value_min", "value_max")
+
+  /** Atomic types whose grouping and ordering the driver branch reproduces;
+    * strings only with the default (binary) collation. */
+  private def driverType(dt: DataType): Boolean = dt match {
+    case BooleanType | ByteType | ShortType | IntegerType | LongType |
+         FloatType | DoubleType | DateType | TimestampType | TimestampNTZType => true
+    case _: DecimalType => true
+    case st: StringType => st.collationId == StringType.collationId
+    case _ => false
+  }
+
+  /** The checked columns (each once) + the two predicates, or None when a
+    * key, group, time or value column has a type outside [[driverType]]. */
+  private def driverProbe(df: DataFrame, requiredCols: Seq[String], keyCols: Seq[String],
+      timeCol: String, valueCol: String, groupCols: Seq[String]): Option[DataFrame] = {
+    val typed = df.select((keyCols ++ groupCols :+ timeCol :+ valueCol).distinct.map(col): _*)
+    if (!typed.schema.forall(f => driverType(f.dataType))) None
+    else {
+      val cols = (requiredCols ++ keyCols ++ groupCols :+ timeCol :+ valueCol).distinct
+      val monthStart = date_trunc("month", col(timeCol))
+      Some(df.select(cols.map(col) ++ Seq(
+        (col(valueCol) <= 0).as(NonPositiveCol),
+        (year(monthStart) * 12 + month(monthStart)).as(MonthCol)): _*))
+    }
+  }
+
+  /** A grouping-key atom with Spark's equality: floating values by their
+    * bits after mapping -0.0 to 0.0 (NaN bits are canonical), so NaN equals
+    * NaN; nulls stay null and so form one group. */
+  private def keyAtom(v: Any): Any = v match {
+    case d: Double => java.lang.Double.doubleToLongBits(if (d == 0.0) 0.0 else d)
+    case f: Float => java.lang.Float.floatToIntBits(if (f == 0.0f) 0.0f else f)
+    case other => other
+  }
+
+  /** Spark's ordering of two non-null values of one [[driverType]]. */
+  private def sparkCompare(a: Any, b: Any): Int = (a, b) match {
+    case (x: Double, y: Double) => if (x == y) 0 else java.lang.Double.compare(x, y)
+    case (x: Float, y: Float) => if (x == y) 0 else java.lang.Float.compare(x, y)
+    case (x: String, y: String) =>
+      java.util.Arrays.compareUnsigned(x.getBytes(java.nio.charset.StandardCharsets.UTF_8),
+        y.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    case (x: Comparable[_], y) => x.asInstanceOf[Comparable[Any]].compareTo(y)
+  }
+
+  private def reportFromRows(probe: DataFrame, rows: Array[Row], q1: CheckResult,
+      requiredCols: Seq[String], keyCols: Seq[String], timeCol: String, valueCol: String,
+      groupCols: Seq[String]): Report = {
+    val at = probe.columns.zipWithIndex.toMap
+    def key(r: Row, cols: Seq[String]): Seq[Any] = cols.map(c => keyAtom(r.get(at(c))))
+    def countRows(p: Row => Boolean): Long = rows.count(p).toLong
+    // a global groupBy (no columns) is one group even over no rows
+    def groups(cols: Seq[String]): Long =
+      if (cols.isEmpty) 1L else rows.iterator.map(key(_, cols)).distinct.size.toLong
+    def extreme(c: String, sign: Int): Any = rows.iterator.map(_.get(at(c)))
+      .filter(_ != null)
+      .foldLeft(null: Any)((m, v) => if (m == null || sign * sparkCompare(v, m) < 0) v else m)
+
+    val mi = at(MonthCol)
+    val months = scala.collection.mutable.HashMap.empty[Seq[Any], Set[Int]]
+    rows.foreach { r =>
+      val k = key(r, groupCols)
+      val ms = months.getOrElse(k, Set.empty[Int])
+      months(k) = if (r.isNullAt(mi)) ms else ms + r.getInt(mi)
+    }
+    val failing = months.values.count(ms => ms.size >= 3 && ms.size != ms.max - ms.min + 1)
+
+    val spark = probe.sparkSession
+    val fields = SummaryKeys.zip(Seq(timeCol, timeCol, valueCol, valueCol))
+      .map { case (n, c) => StructField(n, probe.schema(at(c)).dataType) }
+    val extremes = Row(extreme(timeCol, 1), extreme(timeCol, -1),
+      extreme(valueCol, 1), extreme(valueCol, -1))
+    val summary = spark.createDataFrame(java.util.Collections.singletonList(extremes),
+        StructType(fields))
+      .select(fields.map(f => col(f.name).cast("string")): _*).collect()(0)
+      .toSeq.map(v => Option(v).fold("null")(_.toString))
+
+    report(q1, requiredCols.map(c => c -> countRows(_.isNullAt(at(c)))),
+      rows.length - groups(keyCols),
+      countRows(r => !r.isNullAt(at(NonPositiveCol)) && r.getBoolean(at(NonPositiveCol))),
+      countRows(_.isNullAt(at(timeCol))),
+      if (groupCols.isEmpty) 1L else months.size.toLong, failing.toLong,
+      rows.length.toLong, summary)
+  }
+
+  /** Assemble Q1–Q7 from the branch-independent counts; `summary` is in
+    * [[SummaryKeys]] order. */
+  private def report(q1: CheckResult, nullsByCol: Seq[(String, Long)], dupRows: Long,
+      nonPositive: Long, timeNulls: Long, groups: Long, failingGroups: Long, rows: Long,
+      summary: Seq[String]): Report = {
     val checks = Seq(
       q1,
       CheckResult("no_nulls", nullsByCol.forall(_._2 == 0L),
         nullsByCol.map { case (c, n) => c -> n.toString }.toMap),
       CheckResult("no_duplicate_keys", dupRows == 0L, Map("n_dup_rows" -> dupRows.toString)),
-      CheckResult("values_positive", l(s"${valueCol}_nonpositive") == 0L,
-        Map("n_nonpositive" -> l(s"${valueCol}_nonpositive").toString)),
-      CheckResult("times_parseable", l("time_nulls") == 0L,
-        Map("n_unparseable" -> l("time_nulls").toString)),
-      CheckResult("monthly_continuity", continuity.getAs[Long]("failing") == 0L,
-        Map("groups" -> continuity.getAs[Long]("groups").toString,
-          "failing_groups" -> continuity.getAs[Long]("failing").toString)))
-
+      CheckResult("values_positive", nonPositive == 0L,
+        Map("n_nonpositive" -> nonPositive.toString)),
+      CheckResult("times_parseable", timeNulls == 0L,
+        Map("n_unparseable" -> timeNulls.toString)),
+      CheckResult("monthly_continuity", failingGroups == 0L,
+        Map("groups" -> groups.toString, "failing_groups" -> failingGroups.toString)))
     Report(checks.forall(_.passed), checks,
-      Map("rows" -> l("rows").toString,
-        "min_time" -> s("min_time"), "max_time" -> s("max_time"),
-        "value_min" -> s("value_min"), "value_max" -> s("value_max")))
+      Map("rows" -> rows.toString) ++ SummaryKeys.zip(summary))
   }
 
   /** k-anonymity screen over a quasi-identifier tuple — the privacy check a

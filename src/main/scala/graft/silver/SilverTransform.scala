@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.jsonstat.JsonStat
+import graft.ops.Exec
 
 /** Silver-stage transformations S3–S6 (SURVEY.md §2.2).
   *
@@ -44,10 +45,21 @@ object SilverTransform {
     df.select(present.map(col): _*)
   }
 
+  private def seriesKeys(df: DataFrame): Seq[Column] =
+    Seq("geo", "coicop", "time").filter(df.columns.contains).map(col)
+
   /** S5: deterministic series sort (global range-partitioned sort). */
   def sortSeries(df: DataFrame): DataFrame = {
-    val keys = Seq("geo", "coicop", "time").filter(df.columns.contains).map(col)
+    val keys = seriesKeys(df)
     if (keys.isEmpty) df else df.orderBy(keys: _*)
+  }
+
+  /** S5 for a small input: the same order in ONE partition, sorted in
+    * place — no range-partition sampling job and no shuffle, and a write of
+    * it still yields one file. */
+  private def sortSeriesLocal(df: DataFrame): DataFrame = {
+    val keys = seriesKeys(df)
+    if (keys.isEmpty) df else df.coalesce(1).sortWithinPartitions(keys: _*)
   }
 
   /** S6: constant lineage columns stamped on every row. */
@@ -57,14 +69,20 @@ object SilverTransform {
 
   /** E1 silver build: payload JSON → tidy, time-parsed, projected, sorted,
     * lineage-stamped silver DataFrame (`process_hicp_silver.py:121–154`).
+    * A cube of at most `Exec.SmallInputRows` cells sorts in one partition
+    * ([[sortSeriesLocal]]); larger cubes keep the global sort.
     */
   def silver(spark: SparkSession, payloadJson: String,
              processedAtUtc: String, rawBlob: String): DataFrame = {
-    val tidy = JsonStat.densify(spark, payloadJson)
+    val cube = JsonStat.parse(payloadJson)
+    val tidy = JsonStat.densify(spark, cube)
     val timed =
       if (tidy.columns.contains("time"))
         tidy.withColumn("time", parseTimeCode(col("time")))
       else tidy
-    withLineage(sortSeries(project(timed)), processedAtUtc, rawBlob)
+    val sorted =
+      if (Exec.smallInput(cube.n)) sortSeriesLocal(project(timed))
+      else sortSeries(project(timed))
+    withLineage(sorted, processedAtUtc, rawBlob)
   }
 }

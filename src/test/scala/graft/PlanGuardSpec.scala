@@ -634,6 +634,39 @@ class PlanGuardSpec extends SparkSpec {
     graft.ops.Exec.releaseAll(spark)
   }
 
+  test("silver: a small cube sorts in one partition and writes one file; above the cap the global sort stays") {
+    // a single-series cube sorts with coalesce(1) + sortWithinPartitions:
+    // no range-partition sampling job and no shuffle; a cube above
+    // Exec.SmallInputRows keeps the range-partitioned global sort
+    def payload(geos: Int, coicops: Int, months: Int): String = {
+      def index(codes: Seq[String]) =
+        codes.zipWithIndex.map { case (c, i) => s""""$c": $i""" }.mkString("{", ", ", "}")
+      val times = (0 until months).map(k => f"${2000 + k / 12}M${k % 12 + 1}%02d")
+      s"""{"id": ["geo", "coicop", "time"], "size": [$geos, $coicops, $months],
+         |"dimension": {"geo": {"category": {"index": ${index((0 until geos).map(g => s"G$g"))}}},
+         |  "coicop": {"category": {"index": ${index((0 until coicops).map(c => s"C$c"))}}},
+         |  "time": {"category": {"index": ${index(times)}}}},
+         |"value": {"0": 1.5}}""".stripMargin
+    }
+    def shuffles(plan: org.apache.spark.sql.execution.SparkPlan) = plan.collect {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+    }
+    val small = graft.silver.SilverTransform.silver(spark, payload(2, 3, 24), "t", "raw/x.json")
+    val smallPlan = staticPlan(small)
+    assert(shuffles(smallPlan).isEmpty, s"small silver write must not shuffle:\n$smallPlan")
+    val dir = java.nio.file.Files.createTempDirectory("silver_small")
+    small.write.mode("overwrite").parquet(dir.toString)
+    val files = dir.toFile.listFiles().map(_.getName).filter(_.endsWith(".parquet"))
+    assert(files.length == 1, s"expected one parquet file, got ${files.toSeq}")
+    val cells = 100L * 10 * 101
+    assert(cells > graft.ops.Exec.SmallInputRows)
+    val bigPlan = staticPlan(
+      graft.silver.SilverTransform.silver(spark, payload(100, 10, 101), "t", "raw/x.json"))
+    assert(shuffles(bigPlan).exists(_.outputPartitioning
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.physical.RangePartitioning]),
+      s"above the cap silver must keep the range-partitioned sort:\n$bigPlan")
+  }
+
   test("substring spans: one corpus pass, sort-based dup detection, no join-back") {
     // pins the r10 rewrite: duplicate windows are found by ONE exchange on
     // the hash + a per-key WindowExec count — NOT groupBy-count + join-back

@@ -30,13 +30,38 @@ class JdbcSinkSpec extends SparkSpec {
 
   private val cfg = JdbcSink.JdbcConfig(url, "fact_hicp", "", "")
 
-  private def count(where: String = ""): Long = {
+  private def count(where: String = "", table: String = "fact_hicp"): Long = {
     val c = conn()
     try {
       val rs = c.createStatement()
-        .executeQuery(s"SELECT COUNT(*) FROM fact_hicp $where")
+        .executeQuery(s"SELECT COUNT(*) FROM $table $where")
       rs.next(); rs.getLong(1)
     } finally c.close()
+  }
+
+  private def deFeb(table: String): Double = {
+    val c = conn()
+    try {
+      val rs = c.createStatement().executeQuery(
+        s"SELECT value FROM $table WHERE geo = 'DE' AND time = DATE('2024-02-01')")
+      assert(rs.next())
+      rs.getDouble(1)
+    } finally c.close()
+  }
+
+  /** Load DE and FR, replay DE: the warehouse must be unchanged. */
+  private def assertReplayIdempotent(table: String)
+      (load: (org.apache.spark.sql.DataFrame, JdbcSink.JdbcConfig, String) => Unit): Unit = {
+    val cfg = JdbcSink.JdbcConfig(url, table, "", "")
+    load(rows.filter(col("geo") === "DE"), cfg, "DE")
+    load(rows.filter(col("geo") === "FR"), cfg, "FR")
+    assert(count(table = table) == 3)
+    // replay the DE series: delete-then-append must leave counts unchanged
+    load(rows.filter(col("geo") === "DE"), cfg, "DE")
+    assert(count(table = table) == 3, "replaying a series load must not duplicate rows")
+    assert(count("WHERE geo = 'DE'", table) == 2)
+    // and the values are the replayed ones, not stale
+    assert(math.abs(deFeb(table) - 105.7) < 1e-9)
   }
 
   test("ensureTable is idempotent and creates the gold schema") {
@@ -49,20 +74,29 @@ class JdbcSinkSpec extends SparkSpec {
   }
 
   test("delete-then-append load is idempotent: replaying a series changes nothing") {
-    JdbcSink.loadSeries(rows.filter(col("geo") === "DE"), cfg, "DE", "CP00", "I15")
-    JdbcSink.loadSeries(rows.filter(col("geo") === "FR"), cfg, "FR", "CP00", "I15")
-    assert(count() == 3)
-    // replay the DE series: delete-then-append must leave counts unchanged
-    JdbcSink.loadSeries(rows.filter(col("geo") === "DE"), cfg, "DE", "CP00", "I15")
-    assert(count() == 3, "replaying a series load must not duplicate rows")
-    assert(count("WHERE geo = 'DE'") == 2)
-    // and the values are the replayed ones, not stale
-    val c = conn()
-    try {
-      val rs = c.createStatement().executeQuery(
-        "SELECT value FROM fact_hicp WHERE geo = 'DE' AND time = DATE('2024-02-01')")
-      assert(rs.next() && math.abs(rs.getDouble(1) - 105.7) < 1e-9)
-    } finally c.close()
+    assertReplayIdempotent("fact_hicp") { (df, cfg, geo) =>
+      JdbcSink.loadSeries(df, cfg, geo, "CP00", "I15")
+    }
+  }
+
+  test("the distributed load branch is replay-idempotent too") {
+    assertReplayIdempotent("fact_hicp_distributed") { (df, cfg, geo) =>
+      JdbcSink.loadDistributed(df, cfg, geo, "CP00", "I15")
+    }
+  }
+
+  test("a replay that fails mid-insert rolls back: the old rows survive") {
+    // one-row batches, so the first row's INSERT has run when the second
+    // one violates NOT NULL
+    val cfg = JdbcSink.JdbcConfig(url, "fact_hicp_atomic", "", "", batchSize = 1)
+    val de = rows.filter(col("geo") === "DE")
+    JdbcSink.loadSeries(de, cfg, "DE", "CP00", "I15")
+    val bad = de.withColumn("processed_at_utc",
+      when(col("time") === to_date(lit("2024-02-01")), lit(null).cast("string"))
+        .otherwise(col("processed_at_utc")))
+    intercept[Exception](JdbcSink.loadSeries(bad, cfg, "DE", "CP00", "I15"))
+    assert(count(table = "fact_hicp_atomic") == 2, "the failed replay must not delete the series")
+    assert(math.abs(deFeb("fact_hicp_atomic") - 105.7) < 1e-9)
   }
 
   test("loadSeries honors a non-default table name end to end") {

@@ -135,6 +135,12 @@ class ExecReleaseSpec extends SparkSpec {
     Exec.releaseAll(spark)
   }
 
+  test("collectIfSmall: every row up to the small-input cap, None one row above it") {
+    val cap = Exec.SmallInputRows
+    assert(Exec.collectIfSmall(spark.range(cap).toDF()).map(_.length).contains(cap.toInt))
+    assert(Exec.collectIfSmall(spark.range(cap + 1).toDF()).isEmpty)
+  }
+
   test("globalRank equals an unpartitioned row_number, including ties and desc order") {
     import spark.implicits._
     import org.apache.spark.sql.functions._

@@ -1,7 +1,12 @@
 package graft.quality
 
-import java.sql.Timestamp
+import java.sql.{Date, Timestamp}
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types._
+
 import graft.SparkSpec
+import graft.silver.SilverTransform
 
 /** Mutant fixtures per FIXTURES.md §A2 — each mutant must flip exactly its
   * targeted check.
@@ -19,13 +24,29 @@ class QualityChecksSpec extends SparkSpec {
     (ts("2024-03-01 00:00:00"), "LU", "CP00", "I15", Some(106.0)),
     (ts("2024-04-01 00:00:00"), "LU", "CP00", "I15", Some(106.2)))
 
+  /** `runChecks` after asserting that its driver and distributed branches
+    * return identical reports, detail maps and summary strings included. */
+  private def checked(df: DataFrame, requiredCols: Seq[String], keyCols: Seq[String],
+                      timeCol: String, valueCol: String,
+                      groupCols: Seq[String]): QualityChecks.Report = {
+    val onDriver = QualityChecks.driverChecks(df, requiredCols, keyCols, timeCol, valueCol,
+      groupCols)
+    val distributed = QualityChecks.distributedChecks(df, requiredCols, keyCols, timeCol,
+      valueCol, groupCols)
+    assert(onDriver == distributed, s"driver branch:\n$onDriver\ndistributed branch:\n$distributed")
+    val r = QualityChecks.runChecks(df, requiredCols, keyCols, timeCol, valueCol, groupCols)
+    assert(r == distributed)
+    r
+  }
+
+  private val Silver = Seq("time", "geo", "coicop", "unit", "value")
+
+  private def runSilver(df: DataFrame) =
+    checked(df, requiredCols = Silver, keyCols = Seq("time", "geo", "coicop", "unit"),
+      timeCol = "time", valueCol = "value", groupCols = Seq("geo", "coicop", "unit"))
+
   private def run(rows: Seq[(Timestamp, String, String, String, Option[Double])]) =
-    QualityChecks.runChecks(
-      rows.toDF("time", "geo", "coicop", "unit", "value"),
-      requiredCols = Seq("time", "geo", "coicop", "unit", "value"),
-      keyCols = Seq("time", "geo", "coicop", "unit"),
-      timeCol = "time", valueCol = "value",
-      groupCols = Seq("geo", "coicop", "unit"))
+    runSilver(rows.toDF(Silver: _*))
 
   private def failing(r: QualityChecks.Report): Set[String] =
     r.checks.filterNot(_.passed).map(_.name).toSet
@@ -39,7 +60,7 @@ class QualityChecksSpec extends SparkSpec {
 
   test("missing required column fails Q1 and short-circuits") {
     val df = clean.toDF("time", "geo", "coicop", "unit", "value").drop("value")
-    val r = QualityChecks.runChecks(df, Seq("time", "value"), Seq("time"), "time", "time", Seq("geo"))
+    val r = checked(df, Seq("time", "value"), Seq("time"), "time", "time", Seq("geo"))
     assert(!r.passed && failing(r) == Set("required_columns"))
   }
 
@@ -82,6 +103,97 @@ class QualityChecksSpec extends SparkSpec {
     assert(failing(r) == Set("monthly_continuity"))
     val detail = r.checks.find(_.name == "monthly_continuity").get.detail
     assert(detail("groups") == "2" && detail("failing_groups") == "1")
+  }
+
+  /** A single-series JSON-stat payload shaped like the HICP feed: dense
+    * values, or a sparse object that leaves out the NaN cells. */
+  private def payload(times: Seq[String], values: Seq[Double], sparse: Boolean): String = {
+    def index(codes: Seq[String]) =
+      codes.zipWithIndex.map { case (c, i) => s""""$c": $i""" }.mkString("{", ", ", "}")
+    val value =
+      if (sparse) values.zipWithIndex.filterNot(_._1.isNaN)
+        .map { case (v, i) => s""""$i": $v""" }.mkString("{", ", ", "}")
+      else values.mkString("[", ", ", "]")
+    s"""{"id": ["unit", "coicop", "geo", "time"], "size": [1, 1, 1, ${times.size}],
+       |"dimension": {"unit": {"category": {"index": {"I15": 0}}},
+       |  "coicop": {"category": {"index": {"CP00": 0}}},
+       |  "geo": {"category": {"index": {"DE": 0}}},
+       |  "time": {"category": {"index": ${index(times)}}}},
+       |"value": $value}""".stripMargin
+  }
+
+  test("both branches agree on the four HICP defect shapes, read back from silver parquet") {
+    val times = (0 until 36).map(k => f"${2000 + k / 12}M${k % 12 + 1}%02d")
+    val values = times.indices.map(k => 100.0 + k * 0.25)
+    val shapes = Seq(
+      "clean" -> payload(times, values, sparse = false),
+      // 2001M05 and 2001-05 are the same month: a duplicated key
+      "dup_key" -> payload(times :+ "2001-05", values :+ 104.0, sparse = false),
+      "non_positive" -> payload(times, values.updated(7, 0.0).updated(6, -101.5), sparse = false),
+      "bad_time" -> payload(times.updated(9, "2000X10"), values, sparse = false),
+      "gap" -> payload(times, values.updated(20, Double.NaN).updated(21, Double.NaN),
+        sparse = true))
+    val failed = shapes.map { case (name, p) =>
+      val dir = java.nio.file.Files.createTempDirectory(s"qc_$name").toString
+      SilverTransform.silver(spark, p, "2026-01-01T00:00:00Z", "raw/x.json")
+        .write.mode("overwrite").parquet(dir)
+      name -> failing(runSilver(spark.read.parquet(dir)))
+    }.toMap
+    assert(failed("clean").isEmpty)
+    assert(failed("dup_key") == Set("no_duplicate_keys"))
+    assert(failed("non_positive") == Set("values_positive"))
+    assert(failed("bad_time").contains("times_parseable"))
+    assert(failed("gap") == Set("no_nulls"))
+  }
+
+  test("both branches group like Spark: null keys, NaN == NaN, -0.0 == 0.0, empty input") {
+    val schema = StructType(Seq(
+      StructField("time", TimestampType), StructField("g", DoubleType),
+      StructField("s", StringType), StructField("value", DoubleType)))
+    val t = (m: Int) => ts(f"2024-$m%02d-01 00:00:00")
+    val rows = Seq(
+      // (NaN, a), whatever the NaN bits: months 1, 2, 4 -> failing, and
+      // (time, g, s) repeats at month 1 -> one duplicate
+      Row(t(1), Double.NaN, "a", 1.0), Row(t(2), Double.NaN, "a", 2.0),
+      Row(t(4), Double.NaN, "a", 3.0),
+      Row(t(1), java.lang.Double.longBitsToDouble(0x7ff8000000000001L), "a", 9.0),
+      // (0.0, a) and (-0.0, a) are one group: months 1..3 -> ok, one duplicate
+      Row(t(1), 0.0, "a", Double.NaN), Row(t(2), -0.0, "a", -0.0), Row(t(3), 0.0, "a", 5.0),
+      Row(t(1), -0.0, "a", 6.0),
+      // (null, null) is one group: months 1, 3, 5 -> failing; a null time
+      Row(t(1), null, null, 4.0), Row(t(3), null, null, null), Row(t(5), null, null, 2.5),
+      Row(null, null, null, 7.0),
+      // (null, a) is its own group; its repeated key is the third duplicate
+      Row(t(1), null, "a", 1.5), Row(t(1), null, "a", 1.5))
+    val df = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    val r = checked(df, Seq("time", "g"), Seq("time", "g", "s"), "time", "value", Seq("g", "s"))
+    val cont = r.checks.find(_.name == "monthly_continuity").get.detail
+    assert(cont == Map("groups" -> "4", "failing_groups" -> "2"))
+    assert(r.checks.find(_.name == "no_duplicate_keys").get.detail("n_dup_rows") == "3")
+    assert(r.summary("value_max") == "NaN")
+    // no grouping columns: one global group; empty input
+    checked(df, Seq("time"), Seq.empty, "time", "value", Seq.empty)
+    checked(df.limit(0), Seq("time"), Seq("time"), "time", "value", Seq("g"))
+    checked(df.limit(0), Seq("time"), Seq.empty, "time", "value", Seq.empty)
+  }
+
+  test("both branches agree on qc_report_gate column types: DATE time, DECIMAL value, INT/LONG keys") {
+    val schema = StructType(Seq(
+      StructField("l_orderkey", LongType), StructField("l_linenumber", IntegerType),
+      StructField("l_suppkey", LongType), StructField("l_shipdate", DateType),
+      StructField("l_quantity", DecimalType(15, 2))))
+    def row(o: Long, l: Int, s: Long, d: String, q: String) =
+      Row(o, l, s, Option(d).map(Date.valueOf).orNull, Option(q).map(BigDecimal(_).bigDecimal).orNull)
+    val rows = Seq(
+      row(1, 1, 7, "1996-03-13", "17.00"), row(1, 2, 7, "1996-04-12", "36.00"),
+      row(1, 3, 7, "1996-05-29", "8.50"), row(2, 1, 9, "1997-01-28", "38.00"),
+      row(2, 1, 9, "1997-03-28", "-1.00"), row(3, 1, 9, "1997-02-02", "0.00"),
+      row(3, 2, 11, null, "45.25"), row(4, 1, 11, "1995-10-30", null))
+    val df = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    val r = checked(df, Seq("l_orderkey", "l_linenumber", "l_shipdate", "l_quantity"),
+      Seq("l_orderkey", "l_linenumber"), "l_shipdate", "l_quantity", Seq("l_suppkey"))
+    assert(r.summary == Map("rows" -> "8", "min_time" -> "1995-10-30",
+      "max_time" -> "1997-03-28", "value_min" -> "-1.00", "value_max" -> "45.25"))
   }
 
   test("column profiler: one row per column with exact distincts, nulls, min/max") {

@@ -7,13 +7,16 @@
 #   3. MicroBench warm-median perf gate vs the committed MICROBENCH.json
 #      (>1.3x warm regression on any tracked query fails; pass --update
 #      via UPDATE_PERF=1 to refresh the artifact after it passes)
-#   4. driver-artifact hygiene: every BENCH_*/CORRECTNESS_*/LEAKCHECK/
+#   4. repo benchmark smoke: one short untraced hicp_series run, whose
+#      per-op checks must all pass ("correct": true) — catches a wrong
+#      small-input fast path through the medallion
+#   5. driver-artifact hygiene: every BENCH_*/CORRECTNESS_*/LEAKCHECK/
 #      COPYCHECK/MICROBENCH artifact must be committed (untracked round
 #      artifacts were an r12 AND r13 verdict item — this makes it a gate)
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-echo "== 0/4 testdata mtime stamp =="
+echo "== 0/5 testdata mtime stamp =="
 # A mid-round driver regeneration of /root/testdata invalidated a green
 # sbt-test run silently in r15 (BloomStreamSpec fixture guard). Record the
 # newest parquet mtime in the gate log and in a tracked stamp file, so any
@@ -28,21 +31,29 @@ if [[ -f .testdata_stamp ]] && [[ "$(cat .testdata_stamp)" != "$stamp" ]]; then
 fi
 echo "$stamp" > .testdata_stamp
 
-echo "== 1/4 sbt test =="
+echo "== 1/5 sbt test =="
 sbt -batch test
 
-echo "== 2/4 correctness gate (sf0.01) =="
+echo "== 2/5 correctness gate (sf0.01) =="
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/roundend_verify"
 python3 tools/selfcheck.py /tmp/roundend_verify /root/testdata/sf0.01
 
-echo "== 3/4 perf gate (warm medians, sf0.1) =="
+echo "== 3/5 perf gate (warm medians, sf0.1) =="
 if [[ "${UPDATE_PERF:-0}" == "1" ]]; then
   sbt -batch "runMain graft.MicroBench --gate --update"
 else
   sbt -batch "runMain graft.MicroBench --gate"
 fi
 
-echo "== 4/4 driver-artifact hygiene =="
+echo "== 4/5 benchmark smoke (hicp_series) =="
+bench="$(python3 perfbench/run.py --workload hicp_series --seed 1 --seconds 4 --trace 0 | tail -1)"
+echo "$bench"
+if ! python3 -c 'import json, sys; sys.exit(0 if json.loads(sys.argv[1]).get("correct") is True else 1)' "$bench"; then
+  echo "hicp_series benchmark run is not correct"
+  exit 1
+fi
+
+echo "== 5/5 driver-artifact hygiene =="
 dirty="$(git status --porcelain -- 'BENCH_*.json' 'CORRECTNESS_*.json' \
   'LEAKCHECK.json' 'COPYCHECK.json' 'MICROBENCH.json' 'BASELINE.md' \
   'PROGRESS.jsonl')"
