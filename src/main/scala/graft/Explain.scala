@@ -20,6 +20,9 @@ object Explain {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // a session running many operator families needs more than Spark's
+      // default 100 cached generated classes; each eviction is a recompile
+      .config("spark.sql.codegen.cache.maxEntries", "5000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     names.foreach { n =>

@@ -56,21 +56,37 @@ object Ingest {
     }
   }
 
-  /** Bronze meta wrapper (`ingestion_hicp_raw.py:63–71`). */
+  /** Bronze meta wrapper (`ingestion_hicp_raw.py:63–71`). The meta object
+    * is serialized by Jackson, so any character in a param or the dataset
+    * name stays valid JSON; the payload is kept byte for byte.
+    */
   def wrap(payloadJson: String, dataset: String, params: Seq[(String, String)],
            fetchedAtUtc: String): String = {
-    val paramsJson = params.map { case (k, v) => s""""$k": "$v"""" }.mkString("{", ", ", "}")
-    s"""{"meta": {"dataset": "$dataset", "params": $paramsJson,
-       |  "fetched_at_utc": "$fetchedAtUtc",
-       |  "source": "Eurostat dissemination API", "pipeline_stage": "bronze/raw"},
+    val meta = json.createObjectNode()
+    meta.put("dataset", dataset)
+    val ps = meta.putObject("params")
+    params.foreach { case (k, v) => ps.put(k, v) }
+    meta.put("fetched_at_utc", fetchedAtUtc)
+    meta.put("source", "Eurostat dissemination API")
+    meta.put("pipeline_stage", "bronze/raw")
+    s"""{"meta": ${json.writeValueAsString(meta)},
        | "data": $payloadJson}""".stripMargin
   }
 
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
   /** G6+G7: land the wrapped payload at `raw/<dataset>/geo=../coicop=../
-    * ts=<ts>.json` (`ingestion_hicp_raw.py:73–78`).
+    * ts=<ts>.json` (`ingestion_hicp_raw.py:73–78`). Each of `dataset`,
+    * `geo`, `coicop` and `ts` must be one path segment (no separator, no
+    * `..`), so a hostile value cannot land outside its series' directory.
     */
   def land(spark: SparkSession, rawRoot: String, dataset: String, geo: String,
            coicop: String, ts: String, wrapped: String): String = {
+    Seq("dataset" -> dataset, "geo" -> geo, "coicop" -> coicop, "ts" -> ts).foreach {
+      case (name, v) =>
+        require(v.nonEmpty && !v.contains('/') && !v.contains('\\') && !v.contains(".."),
+          s"$name must be one non-empty path segment without '/', '\\' or '..': $v")
+    }
     val path = s"$rawRoot/$dataset/geo=$geo/coicop=$coicop/ts=$ts.json"
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)

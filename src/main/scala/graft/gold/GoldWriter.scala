@@ -154,18 +154,20 @@ object GoldWriter {
   }
 
   /** G1: quality-gate enforcement (`load_hicp_to_sql.py:18–29`) — resolve the
-    * latest report via the pointer and fail-stop unless it is a PASS.
+    * latest report via the pointer and fail-stop unless that report's own
+    * verdict (`report.passed`) is true; its file name is not trusted.
     */
   def requirePass(spark: SparkSession, reportDir: String): String = {
-    val pointer = readString(spark, s"$reportDir/LATEST.json")
-    val path = "\"latest_report\"\\s*:\\s*\"([^\"]+)\"".r
-      .findFirstMatchIn(pointer)
-      .map(_.group(1))
+    val path = Option(json.readTree(readString(spark, s"$reportDir/LATEST.json"))
+        .get("latest_report")).filter(_.isTextual).map(_.asText)
       .getOrElse(throw new IllegalStateException("LATEST.json has no latest_report"))
-    if (!path.contains("_PASS"))
+    val verdict = json.readTree(readString(spark, path)).path("report").path("passed")
+    if (!verdict.isBoolean || !verdict.booleanValue)
       throw new IllegalStateException(s"quality gate: latest report is not PASS: $path")
     path
   }
+
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
 
   /** SRC5 as a distributed operator: latest object PER PREFIX from a listing
     * frame `(prefix, path, mtime)` — the same argmax [[latestPath]] performs

@@ -1,6 +1,10 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, lit,
   row_number, spark_partition_id, sum}
@@ -134,16 +138,41 @@ object Exec {
     * (false under `SPARK_GRAFT_DRIVER_GATE=off`). */
   def smallInput(rows: Long): Boolean = !driverGateOff && rows <= SmallInputRows
 
-  /** The collect-based small-input gate: ONE bounded job,
-    * `limit(SmallInputRows + 1).collect()`, returns every row of `df` when
-    * it has at most [[SmallInputRows]] of them, otherwise None and the
-    * caller runs its distributed branch. Callers project `df` to the columns
-    * they need first. Always None under `SPARK_GRAFT_DRIVER_GATE=off`. */
-  def collectIfSmall(df: DataFrame): Option[Array[Row]] =
+  /** The collect-based small-input gate: ONE bounded collect,
+    * `limit(SmallInputRows + 1)`, returns every row of `df` when it has at
+    * most [[SmallInputRows]] of them AND they fit `maxBytes`, otherwise None
+    * and the caller runs its distributed branch. Callers project `df` to
+    * the columns they need first. Always None under
+    * `SPARK_GRAFT_DRIVER_GATE=off`.
+    *
+    * Width-proof like [[fitsDriverCollect]]: the byte leg prices the
+    * collected rows in their compact binary (`UnsafeRow`) form, before any
+    * is decoded into driver objects, so a few very wide rows (long texts,
+    * fat arrays) fall back although the row leg would pass them. */
+  def collectIfSmall(df: DataFrame,
+      maxBytes: Long = DefaultDriverCollectBytes): Option[Array[Row]] =
+    collectInternalIfSmall(df, maxBytes).map { rows =>
+      val fromRow = ExpressionEncoder(df.schema).resolveAndBind().createDeserializer()
+      rows.map(fromRow)
+    }
+
+  /** [[collectIfSmall]] without the decode: the rows stay in Spark's
+    * internal form, so driver code reads strings as `UTF8String` (Spark's
+    * byte equality) and arrays as `ArrayData` (what the native kernels such
+    * as `DotProduct.compute` take) exactly as the distributed plan sees them. */
+  def collectInternalIfSmall(df: DataFrame,
+      maxBytes: Long = DefaultDriverCollectBytes): Option[Array[InternalRow]] =
     if (driverGateOff) None
     else {
-      val rows = df.limit(SmallInputRows.toInt + 1).collect()
-      if (rows.length <= SmallInputRows) Some(rows) else None
+      val qe = df.limit(SmallInputRows.toInt + 1).queryExecution
+      val rows = SQLExecution.withNewExecutionId(qe, Some("collectIfSmall"))(
+        qe.executedPlan.executeCollect())
+      lazy val toUnsafe = UnsafeProjection.create(df.schema)
+      val bytes = rows.iterator.map {
+        case u: UnsafeRow => u.getSizeInBytes.toLong
+        case r => toUnsafe(r).getSizeInBytes.toLong
+      }.sum
+      if (rows.length <= SmallInputRows && bytes <= maxBytes) Some(rows) else None
     }
 
   /** Distributed EXACT global rank — the scalable replacement for an

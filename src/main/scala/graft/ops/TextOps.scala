@@ -1,8 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Text-analysis operators over the `documents` table (SURVEY.md §2.12 +
   * LLM-pipeline extensions): normalization, tokenization, token statistics,
@@ -314,6 +318,10 @@ object TextOps {
     * computes identically on any IEEE-754 engine.
     */
   def q4(c: Column): Column = floor(c * 10000 + 0.5) / 10000
+
+  /** [[q4]] on the driver: Spark's `floor` of a double yields a long
+    * (NaN → 0, saturating), which is then divided as a double. */
+  def q4(x: Double): Double = math.floor(x * 10000 + 0.5).toLong / 10000.0
 
   def qualityScore(docs: DataFrame): DataFrame = {
     val toks = tokens(col("text"))
@@ -1108,8 +1116,7 @@ object TextOps {
       case (acc, (src, bp)) => when(col("source") === src, lit(bp)).otherwise(acc)
     }
     docs
-      .withColumn("bucket", expr(
-        "CAST(conv(substring(md5(concat('mix:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT) % 10000"))
+      .withColumn("bucket", mixBucket)
       .withColumn("kept", (col("bucket") < thr).cast("long"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_total"), sum(col("kept")).as("n_kept"))
@@ -1120,6 +1127,10 @@ object TextOps {
         col("target_frac"), col("realized_frac"))
       .orderBy(col("source"))
   }
+
+  /** The salted 'mix:' md5 bucket of `doc_id`, in [0, 10000). */
+  private def mixBucket: Column = expr(
+    "CAST(conv(substring(md5(concat('mix:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT) % 10000")
 
   /** Temperature-scaled source mixture weights — the multinomial sampling
     * recipe of multi-source/multilingual pretraining (T5 §3.3.1, XLM-R
@@ -2033,18 +2044,34 @@ object TextOps {
     *   5. pack the survivors into `budget`-token sequences in doc_id
     *      order (same math as txt_pack_sequences).
     *
-    * Scale shape: stages 1–4 are semi/anti-joins on bare doc_id (text
-    * never re-shuffles); the only wide exchange is the 5-gram hash probe,
-    * keyed by the 61-bit shingle hash exactly as decontaminationScan
-    * partitions it. The final global-order window is the packer's
-    * documented contract (per-shard at 100 TB).
+    * Two branches, chosen once per input by [[Exec.collectInternalIfSmall]]
+    * (at most `Exec.SmallInputRows` documents whose features fit
+    * `Exec.DefaultDriverCollectBytes`; never under
+    * `SPARK_GRAFT_DRIVER_GATE=off`):
+    *
+    *   - small input ([[pipelineE2EOnDriver]]): one narrow projection
+    *     computes each document's Spark-evaluated features (tokens,
+    *     fingerprint, `n`-gram shingle hashes, mixing draw) in one bounded
+    *     collect, and the driver runs the five stages over those rows. The
+    *     result is a local frame, so collecting it starts no job.
+    *   - otherwise ([[pipelineE2EDistributed]]): stages 1–4 are semi/anti-
+    *     joins on bare doc_id (text never re-shuffles); the only wide
+    *     exchange is the 5-gram hash probe, keyed by the 61-bit shingle hash
+    *     exactly as decontaminationScan partitions it. The final global-order
+    *     window is the packer's documented contract (per-shard at 100 TB).
     */
   def pipelineE2E(docs: DataFrame,
                   keepBp: Map[String, Int] =
                     Map("src0" -> 9000, "src1" -> 5000, "src2" -> 500),
                   defaultBp: Int = 7500,
                   evalMod: Long = 97L, n: Int = 5,
-                  budget: Int = 512): DataFrame = {
+                  budget: Int = 512): DataFrame =
+    pipelineE2EOnDriver(docs, keepBp, defaultBp, evalMod, n, budget)
+      .getOrElse(pipelineE2EDistributed(docs, keepBp, defaultBp, evalMod, n, budget))
+
+  /** The distributed branch of [[pipelineE2E]]. */
+  private[graft] def pipelineE2EDistributed(docs: DataFrame, keepBp: Map[String, Int],
+      defaultBp: Int, evalMod: Long, n: Int, budget: Int): DataFrame = {
     graft.functions.MinHashFunctions.register(docs.sparkSession)
     // 1. quality filter (C4/Gopher rule stack verdict)
     val d1 = docs.join(
@@ -2070,11 +2097,97 @@ object TextOps {
     val thr = keepBp.toSeq.sortBy(_._1).foldLeft(lit(defaultBp)) {
       case (acc, (src, bp)) => when(col("source") === src, lit(bp)).otherwise(acc)
     }
-    val d4 = d3.filter(expr(
-      "CAST(conv(substring(md5(concat('mix:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT) % 10000")
-      < thr)
+    val d4 = d3.filter(mixBucket < thr)
     // 5. sequence packing over the surviving corpus
     packSequences(d4, budget)
+  }
+
+  /** The small-input branch of [[pipelineE2E]], or None when the gate sends
+    * `docs` to the distributed branch. Spark evaluates every per-row
+    * expression (normalization, md5, shingle hashing), so the driver never
+    * re-implements Spark's string or hash semantics; it runs the relational
+    * steps with the distributed branch's rules: `filterDecisions`' default
+    * verdict, keep-first exact dedup, the `doc_id % evalMod` eval slice and
+    * its shingle probe, the mixing threshold and the packing cumsum in
+    * doc_id order. Tokens compare as `UTF8String`, Spark's byte equality; a
+    * bigram is a token pair, since tokens never hold the ' ' that joins
+    * them. Inputs outside the shapes this branch mirrors (a null doc_id or
+    * text, a repeated doc_id, non-long/string key columns) also take the
+    * distributed branch. `maxBytes` is the gate's byte budget.
+    */
+  private[graft] def pipelineE2EOnDriver(docs: DataFrame, keepBp: Map[String, Int],
+      defaultBp: Int, evalMod: Long, n: Int, budget: Int,
+      maxBytes: Long = Exec.DefaultDriverCollectBytes): Option[DataFrame] = {
+    val fields = docs.schema.map(f => f.name -> f).toMap
+    val typed = Seq("doc_id" -> LongType, "text" -> StringType, "source" -> StringType)
+      .forall { case (c, t) => fields.get(c).exists(_.dataType == t) }
+    if (!typed) return None
+    graft.functions.MinHashFunctions.register(docs.sparkSession)
+    val features = docs
+      .withColumn("toks", tokens(col("text")))
+      .select(col("doc_id"), col("source"), col("toks"),
+        size(array_distinct(col("toks"))).as("n_distinct"),
+        fingerprint(col("text")).as("fp"),
+        expr(s"shingle_hashes(toks, $n)").as("sh"),
+        mixBucket.as("mix"))
+    Exec.collectInternalIfSmall(features, maxBytes).flatMap { rows =>
+      val ids = rows.iterator.filterNot(_.isNullAt(0)).map(_.getLong(0)).toSet
+      if (ids.size != rows.length || rows.exists(_.isNullAt(2))) None
+      else Some(pipelineLocal(docs, rows, fields("doc_id").nullable, keepBp,
+        defaultBp, evalMod, budget))
+    }
+  }
+
+  private def pipelineLocal(docs: DataFrame, rows: Array[InternalRow],
+      idNullable: Boolean, keepBp: Map[String, Int], defaultBp: Int,
+      evalMod: Long, budget: Int): DataFrame = {
+    def id(r: InternalRow): Long = r.getLong(0)
+    def toks(r: InternalRow): ArrayData = r.getArray(2)
+    // 1. quality filter: filterDecisions with its default rules
+    def keep(r: InternalRow): Boolean = {
+      val t = toks(r)
+      val nTok = t.numElements()
+      val distinctRatio = q4(r.getInt(3).toDouble / nTok)
+      val topBigramFrac =
+        if (nTok < 2) 0.0
+        else {
+          val counts = scala.collection.mutable.HashMap.empty[(UTF8String, UTF8String), Int]
+          (0 until nTok - 1).foreach { i =>
+            val bg = (t.getUTF8String(i), t.getUTF8String(i + 1))
+            counts(bg) = counts.getOrElse(bg, 0) + 1
+          }
+          q4(counts.values.max.toDouble / (nTok - 1))
+        }
+      !(nTok < 10 || nTok > 100000 || distinctRatio < 0.3 || topBigramFrac > 0.3)
+    }
+    val d1 = rows.filter(keep)
+    // 2. exact dedup: the min doc_id per fingerprint
+    val firsts = d1.groupBy(_.getUTF8String(4)).valuesIterator.map(_.map(id).min).toSet
+    val d2 = d1.filter(r => firsts(id(r)))
+    // 3. decontamination against the held-out eval slice
+    val (evalSlice, train) = d2.partition(id(_) % evalMod == 0)
+    val evalHashes = evalSlice.flatMap(_.getArray(5).toLongArray()).toSet
+    val d3 = train.filterNot(_.getArray(5).toLongArray().exists(evalHashes))
+    // 4. source mixing
+    val thr = keepBp.map { case (src, bp) => UTF8String.fromString(src) -> bp }
+    val d4 = d3.filter { r =>
+      r.getLong(6) < (if (r.isNullAt(1)) defaultBp else thr.getOrElse(r.getUTF8String(1), defaultBp))
+    }
+    // 5. sequence packing in doc_id order
+    var cum = 0L
+    val packed = d4.sortBy(id).map { r =>
+      val nTok = toks(r).numElements()
+      cum += nTok
+      val (first, last) = ((cum - nTok) / budget, (cum - 1) / budget)
+      Row(id(r), nTok, first, last, last - first + 1)
+    }
+    val schema = StructType(Seq(
+      StructField("doc_id", LongType, idNullable),
+      StructField("n_tokens", IntegerType),
+      StructField("first_seq", LongType),
+      StructField("last_seq", LongType),
+      StructField("n_seqs_spanned", LongType)))
+    docs.sparkSession.createDataFrame(java.util.Arrays.asList(packed: _*), schema)
   }
 
   /** Vocabulary-coverage / OOV curve — the first number a tokenizer or

@@ -1,8 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType, StringType,
+  StructField, StructType}
 
 /** Vector / similarity-search operators over `embeddings(vec_id, embedding:
   * array<float>[64], label)` (LLM-pipeline extension).
@@ -1031,30 +1034,47 @@ object VectorOps {
     * batch-touching pairs — the DuckDB oracle computes exactly that
     * full+filter form.
     *
-    * Scale shape: the batch side (vectors + norms) rides a BYTE-gated
-    * broadcast onto the label-blocked corpus stream, so the corpus
-    * embeddings never shuffle and per-ingest cost is |batch| ×
-    * block-occupancy — the corpus² pair space is never touched. A batch
-    * too large for the gate falls back to a label-keyed shuffle join.
+    * A pair with a zero-norm vector has no cosine and is dropped (its
+    * division yields null rather than failing the query under ANSI mode).
+    *
+    * Two branches, chosen once per input by [[Exec.collectInternalIfSmall]]
+    * (never under `SPARK_GRAFT_DRIVER_GATE=off`):
+    *
+    *   - small batch and corpus ([[incrementalCosineOnDriver]]): one
+    *     projection per side collects (label, vec_id, embedding, norm) and
+    *     the driver scores the label blocks with `DotProduct.compute`.
+    *   - otherwise ([[incrementalCosineDistributed]]): the batch side
+    *     (vectors + norms) rides a BYTE-gated broadcast onto the
+    *     label-blocked corpus stream, so the corpus embeddings never shuffle
+    *     and per-ingest cost is |batch| × block-occupancy — the corpus² pair
+    *     space is never touched. A batch too large for the gate falls back
+    *     to a label-keyed shuffle join.
     */
   def incrementalCosinePairs(corpus: DataFrame, batch: DataFrame,
-                             threshold: Double = 0.45): DataFrame = {
+                             threshold: Double = 0.45): DataFrame =
+    incrementalCosineOnDriver(corpus, batch, threshold)
+      .getOrElse(incrementalCosineDistributed(corpus, batch, threshold))
+
+  /** The norm-carrying projection both branches score from. */
+  private def cosinePrep(df: DataFrame): DataFrame =
+    df.select(col("label"), col("vec_id"), col("embedding"),
+      sqrt(call_function("dot_product", col("embedding"), col("embedding"))).as("nrm"))
+
+  /** The distributed branch of [[incrementalCosinePairs]]. */
+  private[graft] def incrementalCosineDistributed(corpus: DataFrame, batch: DataFrame,
+      threshold: Double): DataFrame = {
     graft.functions.DotProduct.register(corpus.sparkSession)
-    def prep(df: DataFrame, isNew: Boolean): DataFrame =
-      df.select(col("label"), col("vec_id"), col("embedding"),
-        sqrt(call_function("dot_product", col("embedding"), col("embedding")))
-          .as("nrm"),
-        lit(isNew).as("is_new"))
-    val all = prep(corpus, isNew = false).unionByName(prep(batch, isNew = true))
+    val all = cosinePrep(corpus).withColumn("is_new", lit(false))
+      .unionByName(cosinePrep(batch).withColumn("is_new", lit(true)))
     val probe = Exec.broadcastIfSmallBytes(
-      prep(batch, isNew = true).select(col("label"),
+      cosinePrep(batch).select(col("label"),
         col("vec_id").as("vec_x"), col("embedding").as("e_x"),
         col("nrm").as("nrm_x")))
     probe.join(all, Seq("label"))
       .filter(col("vec_x") =!= col("vec_id"))
-      .withColumn("sim", q4(
-        call_function("dot_product", col("e_x"), col("embedding"))
-          / (col("nrm_x") * col("nrm"))))
+      .withColumn("sim", q4(try_divide(
+        call_function("dot_product", col("e_x"), col("embedding")),
+        col("nrm_x") * col("nrm"))))
       .filter(col("sim") >= threshold)
       .select(col("label"),
         least(col("vec_x"), col("vec_id")).as("vec_a"),
@@ -1072,6 +1092,72 @@ object VectorOps {
           .as("pair_kind"),
         col("sim"))
       .orderBy(col("vec_a"), col("vec_b"))
+  }
+
+  /** The small-input branch of [[incrementalCosinePairs]], or None when the
+    * gate sends the batch or the corpus to the distributed branch. Spark
+    * computes each vector's norm; the driver scores every batch vector
+    * against its label block of corpus ∪ batch with the distributed
+    * branch's kernel and order of operations (`DotProduct.compute` of probe
+    * then match, divided by the product of the norms, then `q4`), skips
+    * zero-norm pairs as its null division does, and collapses a new/new
+    * pair's two orientations. Both inputs must share one column typing
+    * (else the distributed union would widen it) with long vec_ids.
+    * `maxBytes` is the gate's byte budget.
+    */
+  private[graft] def incrementalCosineOnDriver(corpus: DataFrame, batch: DataFrame,
+      threshold: Double,
+      maxBytes: Long = Exec.DefaultDriverCollectBytes): Option[DataFrame] = {
+    // element nullability aside (the union widens it), as the union types them
+    def types(df: DataFrame) = Seq("label", "vec_id", "embedding")
+      .map(c => df.schema.find(_.name == c).map(_.dataType).map {
+        case ArrayType(e, _) => ArrayType(e, containsNull = true)
+        case t => t
+      })
+    val (labelType, isFloat) = types(batch) match {
+      case Seq(Some(l), Some(LongType), Some(ArrayType(e, _))) if types(corpus) == types(batch) =>
+        (l, e == FloatType)
+      case _ => return None
+    }
+    graft.functions.DotProduct.register(corpus.sparkSession)
+    for {
+      probe <- Exec.collectInternalIfSmall(cosinePrep(batch), maxBytes)
+      stored <- Exec.collectInternalIfSmall(cosinePrep(corpus), maxBytes)
+    } yield {
+      // rows without a label, id or embedding never join, match or score
+      def scored(rows: Array[InternalRow]) =
+        rows.filterNot(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2))
+      val blocks = (scored(stored).map(_ -> false) ++ scored(probe).map(_ -> true))
+        .groupBy(_._1.get(0, labelType))
+      val pairs = scala.collection.mutable.LinkedHashMap.empty[(Any, Long, Long), (Boolean, Double)]
+      for {
+        x <- scored(probe)
+        (y, yNew) <- blocks(x.get(0, labelType))
+        if x.getLong(1) != y.getLong(1)
+        den = x.getDouble(3) * y.getDouble(3)
+        if den != 0
+        sim = TextOps.q4(graft.functions.DotProduct.compute(
+          x.getArray(2), y.getArray(2), isFloat, isFloat) / den)
+        if sim >= threshold
+      } {
+        val key = (x.get(0, labelType), math.min(x.getLong(1), y.getLong(1)),
+          math.max(x.getLong(1), y.getLong(1)))
+        val (bothNew, firstSim) = pairs.getOrElse(key, (false, sim))
+        pairs(key) = (bothNew || yNew, firstSim)
+      }
+      val rows = pairs.toSeq.sortBy { case ((_, a, b), _) => (a, b) }.map {
+        case ((label, a, b), (bothNew, sim)) =>
+          Row(CatalystTypeConverters.convertToScala(label, labelType), a, b,
+            if (bothNew) "new_new" else "new_corpus", sim)
+      }
+      corpus.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+        // nullability as the distributed plan derives it from the batch side
+        StructType(Seq(StructField("label", labelType, batch.schema("label").nullable),
+          StructField("vec_a", LongType, batch.schema("vec_id").nullable),
+          StructField("vec_b", LongType, batch.schema("vec_id").nullable),
+          StructField("pair_kind", StringType, nullable = false),
+          StructField("sim", DoubleType))))
+    }
   }
 
   /** Reciprocal-rank fusion of two first-stage retrievers (brute-force

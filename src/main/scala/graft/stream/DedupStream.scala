@@ -1,10 +1,15 @@
 package graft.stream
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType,
+  StringType, StructField, StructType}
 
-import graft.ops.{DedupOps, TextOps}
+import graft.functions.IntersectCount
+import graft.ops.{DedupOps, Exec, TextOps}
 
 /** Streaming incremental near-duplicate detection — the CONTINUOUS-ingest
   * form of [[graft.ops.DedupOps.incrementalMinhashPairs]]: micro-batches of
@@ -15,12 +20,15 @@ import graft.ops.{DedupOps, TextOps}
   * per-event extremes.
   *
   * Exactly-once contract (the idempotentHourlySink discipline): every
-  * micro-batch writes BOTH its pair output and its index contribution as
-  * `src_batch=<id>` partitions with dynamic partition overwrite, and the
-  * probe EXCLUDES the current batch id from the index read — so a batch
-  * replayed after a crash (at any point between the two writes and the
-  * checkpoint commit) REPLACES its own partitions and never double-pairs
-  * against its own half-written index rows.
+  * micro-batch writes its pair output and its index contribution (bands,
+  * then sets) to the leaf directories `…/src_batch=<id>` in overwrite mode,
+  * and the probe EXCLUDES the current batch id from the index read. An
+  * overwrite deletes its leaf when the write starts and fills it when the
+  * job commits, so a crash leaves each of the batch's three partitions
+  * whole, absent, or holding only the hidden `_temporary` files readers
+  * skip; replaying the batch (Structured Streaming does, because its
+  * checkpoint commit never happened) REPLACES all three and never
+  * double-pairs against its own half-written index rows.
   *
   * Pair-uniqueness invariant: a pair is emitted exactly once, by the LATER
   * of its two documents' batches (corpus rows live in the seed partition
@@ -29,11 +37,30 @@ import graft.ops.{DedupOps, TextOps}
   * pinned by DedupStreamSpec against `incrementalMinhashPairs` on the
   * same corpus/batch split.
   *
-  * Scale shape: identical to the batch probe — band keys and doc ids in
-  * every exchange, shingle-hash sets only in the per-pair verification
-  * join, the index read partition-pruned by `src_batch`.
+  * Two branches per batch, chosen once from the batch by
+  * [[graft.ops.Exec.collectInternalIfSmall]] (never under
+  * `SPARK_GRAFT_DRIVER_GATE=off`):
+  *
+  *   - small batch ([[processBatchOnDriver]]): one projection collects
+  *     each document's shingle hashes and band keys; the index is probed by
+  *     two bounded lookups (the bands joined with the batch's band keys,
+  *     then the sets of the candidate ids), and the driver pairs and
+  *     verifies.
+  *   - otherwise ([[processBatchDistributed]]): the same shape as the batch
+  *     probe — band keys and doc ids in every exchange, shingle-hash sets
+  *     only in the per-pair verification join, the index read
+  *     partition-pruned by `src_batch`.
   */
 object DedupStream {
+
+  private val BandsSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("band", IntegerType),
+    StructField("band_key", LongType)))
+  private val SetsSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("hs", ArrayType(LongType))))
+  private val PairsSchema = StructType(Seq(
+    StructField("doc_a", LongType), StructField("doc_b", LongType),
+    StructField("jaccard", DoubleType)))
 
   private def sigs(docs: DataFrame, k: Int): DataFrame = {
     graft.functions.MinHashFunctions.register(docs.sparkSession)
@@ -51,12 +78,14 @@ object DedupStream {
         .as(Seq("band", "band_key")))
 
   private def writePartition(df: DataFrame, dir: String, batchId: Long): Unit =
-    df.withColumn("src_batch", lit(batchId))
-      .write
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("src_batch")
-      .mode("overwrite")
-      .parquet(dir)
+    df.write.mode("overwrite").parquet(s"$dir/src_batch=$batchId")
+
+  /** The index rows written by batches other than `batchId`. */
+  private def indexRead(spark: SparkSession, dir: String, schema: StructType,
+                        batchId: Long): DataFrame =
+    spark.read.schema(schema.add("src_batch", LongType)).parquet(dir)
+      .filter(col("src_batch") =!= batchId)
+      .drop("src_batch")
 
   /** Seed the index directories with the standing corpus (partition
     * `src_batch=-1`) — run once before the stream starts; linear in the
@@ -77,7 +106,14 @@ object DedupStream {
   def processBatch(batch: Dataset[Row], batchId: Long,
                    indexDir: String, outDir: String,
                    k: Int = 32, bands: Int = 8,
-                   threshold: Double = 0.5): Unit = {
+                   threshold: Double = 0.5): Unit =
+    if (!processBatchOnDriver(batch, batchId, indexDir, outDir, k, bands, threshold))
+      processBatchDistributed(batch, batchId, indexDir, outDir, k, bands, threshold)
+
+  /** The distributed branch of [[processBatch]]. */
+  private[graft] def processBatchDistributed(batch: Dataset[Row], batchId: Long,
+      indexDir: String, outDir: String, k: Int, bands: Int,
+      threshold: Double): Unit = {
     val spark = batch.sparkSession
     val bs = sigs(batch.toDF(), k).persist()
     val bBands = bandsOf(bs, k, bands)
@@ -115,6 +151,103 @@ object DedupStream {
     writePartition(bs.select(col("doc_id"), col("hs")), s"$indexDir/sets", batchId)
     bs.unpersist()
   }
+
+  /** The small-batch branch of [[processBatch]]; false (nothing written)
+    * when the gate sends the batch to the distributed branch. Spark
+    * computes every document's shingle hashes and band keys; the driver
+    * forms the same candidates as the distributed branch (this batch
+    * against the index's other batches, and against itself), verifies them
+    * with `IntersectCount.compute`, the size prune and Spark's `round`
+    * rule, and writes the same three partitions. A lookup that overflows
+    * the gate (a boilerplate-heavy index) also falls back. `maxBytes` is
+    * the gate's byte budget.
+    */
+  private[graft] def processBatchOnDriver(batch: Dataset[Row], batchId: Long,
+      indexDir: String, outDir: String, k: Int, bands: Int, threshold: Double,
+      maxBytes: Long = Exec.DefaultDriverCollectBytes): Boolean = {
+    val spark = batch.sparkSession
+    val typed = Seq("doc_id" -> LongType, "text" -> StringType).forall { case (c, t) =>
+      batch.schema.find(_.name == c).exists(_.dataType == t)
+    }
+    def lookup(df: => DataFrame, keys: Seq[Row]): Option[Array[InternalRow]] =
+      if (keys.isEmpty) Some(Array.empty) else Exec.collectInternalIfSmall(df, maxBytes)
+    val written = for {
+      rows <- if (typed) Exec.collectInternalIfSmall(
+          sigs(batch.toDF(), k).select(col("doc_id"), col("hs"),
+            expr(s"band_hashes(sig, $bands, ${k / bands})").as("keys")), maxBytes)
+        else None
+      if !rows.exists(_.isNullAt(0))
+      sets = rows.map(r => (r.getLong(0), r.getArray(1)))
+      bandRows = for (r <- rows; (key, band) <- r.getArray(2).toLongArray().zipWithIndex)
+        yield (band, key, r.getLong(0))
+      // lookup 1: the index docs sharing a (band, band_key) with this batch
+      keys = bandRows.map { case (band, key, _) => Row(band, key) }.distinct.toSeq
+      priorRows <- lookup(
+        indexRead(spark, s"$indexDir/bands", BandsSchema, batchId)
+          .join(local(spark, keys, StructType(BandsSchema.drop(1))), Seq("band", "band_key")),
+        keys)
+      candidates = candidatePairs(bandRows,
+        priorRows.map(r => (r.getInt(0), r.getLong(1), r.getLong(2))))
+      // lookup 2: the index sets of every candidate id (a batch doc's id may
+      // also sit in the index, as in the distributed branch's union)
+      ids = candidates.flatMap { case (a, b) => Seq(a, b) }.toSeq.map(id => Row(id))
+      setRows <- lookup(
+        indexRead(spark, s"$indexDir/sets", SetsSchema, batchId)
+          .join(local(spark, ids, StructType(SetsSchema.take(1))), Seq("doc_id")),
+        ids)
+    } yield {
+      val setsOf = (setRows.map(r => (r.getLong(0), r.getArray(1))) ++ sets).toSeq
+        .groupMap(_._1)(_._2)
+      val pairs = for {
+        (a, b) <- candidates.toSeq
+        ha <- setsOf.getOrElse(a, Nil)
+        hb <- setsOf.getOrElse(b, Nil)
+        jaccard <- verifiedJaccard(ha, hb, threshold)
+      } yield Row(a, b, jaccard)
+      writePartition(local(spark, pairs, PairsSchema), outDir, batchId)
+      writePartition(local(spark, bandRows.toSeq.map { case (band, key, id) => Row(id, band, key) },
+        BandsSchema), s"$indexDir/bands", batchId)
+      writePartition(local(spark, sets.toSeq.map { case (id, hs) => Row(id, hs.toLongArray().toSeq) },
+        SetsSchema), s"$indexDir/sets", batchId)
+    }
+    written.isDefined
+  }
+
+  /** The distributed branch's candidate pairs, as (doc_a < doc_b) or, for
+    * an index doc with the batch doc's own id, (id, id): each batch row
+    * `(band, band_key, doc_id)` against the index rows in its bucket, and
+    * the batch's rows against each other. */
+  private def candidatePairs(batchBands: Array[(Int, Long, Long)],
+                             indexBands: Array[(Int, Long, Long)]): Set[(Long, Long)] = {
+    val prior = indexBands.groupMap(r => (r._1, r._2))(_._3)
+    val vsIndex = batchBands.iterator.flatMap { case (band, key, id) =>
+      prior.getOrElse((band, key), Array.empty[Long]).iterator
+        .map(p => (math.min(id, p), math.max(id, p)))
+    }
+    val self = batchBands.groupMap(r => (r._1, r._2))(_._3).valuesIterator.flatMap { ids =>
+      for (l <- ids.iterator; r <- ids.iterator if l < r) yield (l, r)
+    }
+    (vsIndex ++ self).toSet
+  }
+
+  /** The distributed branch's verification of one candidate pair of sorted
+    * shingle-hash sets: the size prune, then the Jaccard rounded to 4
+    * places by Spark's `round` rule for doubles (HALF_UP on the shortest
+    * decimal representation), kept when it reaches `threshold`. */
+  private def verifiedJaccard(ha: ArrayData, hb: ArrayData,
+                              threshold: Double): Option[Double] = {
+    val (na, nb) = (ha.numElements(), hb.numElements())
+    if (math.min(na, nb).toDouble / math.max(na, nb) < threshold) None
+    else {
+      val inter = IntersectCount.compute(ha, hb)
+      val jaccard = java.math.BigDecimal.valueOf(inter.toDouble / (na + nb - inter))
+        .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
+      if (jaccard >= threshold) Some(jaccard) else None
+    }
+  }
+
+  private def local(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
   /** Wire a streaming `docs` source (doc_id, text) into the incremental
     * dedup loop. Seed the index from the corpus first.

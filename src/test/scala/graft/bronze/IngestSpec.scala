@@ -49,4 +49,24 @@ class IngestSpec extends SparkSpec {
     assert(silver.count() == 2)
     assert(JsonStat.parse(readBack).dims.map(_._1) == Seq("geo", "time"))
   }
+
+  test("wrap: quotes and backslashes in params and dataset still give valid JSON") {
+    val wrapped = Ingest.wrap(payload, "d\"s\\", Seq("geo" -> "L\"U", "note" -> "a\\b\n"),
+      "2026-01-01T00:00:00+00:00")
+    val meta = new com.fasterxml.jackson.databind.ObjectMapper().readTree(wrapped).get("meta")
+    assert(meta.get("dataset").asText == "d\"s\\")
+    assert(meta.get("params").get("geo").asText == "L\"U")
+    assert(meta.get("params").get("note").asText == "a\\b\n")
+    assert(JsonStat.parse(wrapped).dims.map(_._1) == Seq("geo", "time"))
+  }
+
+  test("land: path separators and '..' in dataset, geo, coicop or ts are rejected") {
+    val root = java.nio.file.Files.createTempDirectory("raw").toString
+    def land(dataset: String = "d", geo: String = "LU", coicop: String = "CP00",
+             ts: String = "t") = Ingest.land(spark, root, dataset, geo, coicop, ts, "{}")
+    Seq(() => land(geo = "../../escape"), () => land(coicop = "CP/00"),
+      () => land(dataset = ".."), () => land(ts = "a\\b"), () => land(geo = ""))
+      .foreach(f => intercept[IllegalArgumentException](f()))
+    assert(land().endsWith("d/geo=LU/coicop=CP00/ts=t.json"))
+  }
 }

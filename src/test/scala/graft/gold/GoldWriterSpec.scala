@@ -40,6 +40,14 @@ class GoldWriterSpec extends SparkSpec {
     intercept[IllegalStateException] { GoldWriter.requirePass(spark, dir) }
   }
 
+  test("G1: the gate reads the report's verdict, not a _PASS in its path") {
+    val dir = Files.createTempDirectory("gate").toString + "/reports_PASS_archive"
+    val fail = Report(passed = false, Seq(CheckResult("x", passed = false, Map())), Map())
+    val p = GoldWriter.writeReport(spark, dir, fail, "20260103_000000", "processed/c.parquet")
+    assert(p.contains("_PASS"), "the directory name holds _PASS")
+    intercept[IllegalStateException] { GoldWriter.requirePass(spark, dir) }
+  }
+
   test("SRC5: latestPath resolves the most recently modified object") {
     val dir = Files.createTempDirectory("blobs").toString
     val f1 = new java.io.File(dir, "ts=20260101.json")

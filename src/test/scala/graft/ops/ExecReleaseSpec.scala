@@ -140,6 +140,13 @@ class ExecReleaseSpec extends SparkSpec {
     assert(Exec.collectIfSmall(spark.range(cap).toDF()).map(_.length).contains(cap.toInt))
     assert(Exec.collectIfSmall(spark.range(cap + 1).toDF()).isEmpty)
   }
+  test("collectIfSmall: the byte leg declines a few very wide rows the row leg admits") {
+    val wide = spark.range(3).toDF()
+      .select(org.apache.spark.sql.functions.expr("repeat('x', 100000)").as("s"))
+    assert(Exec.collectIfSmall(wide, maxBytes = 200000L).isEmpty)
+    assert(Exec.collectIfSmall(wide).map(_.map(_.getString(0).length).toSeq)
+      .contains(Seq(100000, 100000, 100000)))
+  }
 
   test("globalRank equals an unpartitioned row_number, including ties and desc order") {
     import spark.implicits._

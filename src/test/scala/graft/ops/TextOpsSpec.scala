@@ -813,6 +813,65 @@ class TextOpsSpec extends SparkSpec {
     assert(rows.length < docs.count())
   }
 
+  private val pipelineArgs = (Map("src0" -> 9000, "src1" -> 5000, "src2" -> 500), 7500, 97L, 5, 512)
+
+  private def pipelineBranches(docs: org.apache.spark.sql.DataFrame,
+      maxBytes: Long = Exec.DefaultDriverCollectBytes) = {
+    val (keepBp, defaultBp, evalMod, n, budget) = pipelineArgs
+    (TextOps.pipelineE2EOnDriver(docs, keepBp, defaultBp, evalMod, n, budget, maxBytes),
+      TextOps.pipelineE2EDistributed(docs, keepBp, defaultBp, evalMod, n, budget))
+  }
+
+  private def pipelineDocs(rows: (Long, String, String)*): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    rows.toDF("doc_id", "text", "source")
+  }
+
+  test("pipeline e2e: the driver branch equals the distributed branch on the corpus and edge cases") {
+    val rng = new scala.util.Random(7)
+    val vocab = (0 until 40).map(i => s"w$i")
+    def good(len: Int): String = Seq.fill(len)(vocab(rng.nextInt(vocab.size))).mkString(" ")
+    val (t1, t2, evalText) = (good(30), good(40), good(25))
+    val edge = pipelineDocs(
+      (910001L, "", "src0"), (910002L, " \t\n ", "src0"), (910003L, "solo", "src1"),
+      (910004L, t1, "src0"), (910005L, t1, "src1"),          // exact duplicate texts
+      (910006L, "  " + t1.toUpperCase.replace(" ", "\t\n  ") + "\n", "src0"),
+      (910007L, "İstanbul ẞtraße " + t2, "src0"),          // non-ASCII case folding
+      (910008L, "i̇stanbul ßtraße " + t2, "src1"),
+      (97L * 9400, evalText, "src0"),                         // eval slice
+      (910009L, evalText.split(" ").take(6).mkString(" ") + " " + good(30), "src0"),
+      (910010L, good(50), "other"), (910011L, good(50), null), (910012L, good(50), "src2"),
+      (910013L, Seq.fill(20)("w1 w2").mkString(" "), "src0")) // repetitive
+    val corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val cases = Seq(
+      "sf0.001 corpus" -> corpus,
+      "edge docs" -> edge,
+      "corpus + edge docs" -> corpus.select("doc_id", "text", "source").unionByName(edge),
+      "empty input" -> edge.limit(0))
+    cases.foreach { case (name, docs) =>
+      val (driver, distributed) = pipelineBranches(docs)
+      assert(driver.isDefined, s"$name: the small input must take the driver branch")
+      val (got, want) = (driver.get.collect().toSeq, distributed.collect().toSeq)
+      assert(got == want, s"$name: driver=${got.take(5)} distributed=${want.take(5)}")
+      assert(driver.get.schema == distributed.schema, s"$name: ${driver.get.schema}")
+    }
+    val kept = pipelineBranches(edge)._1.get.collect().map(_.getLong(0)).toSet
+    assert(kept(910004L) && !kept(910005L) && !kept(910006L), s"keep-first dedup: $kept")
+    assert(!kept(910008L), s"the case-folded duplicate must go: $kept")
+    assert(!kept(910009L), s"the doc sharing a 5-gram with the eval slice must go: $kept")
+  }
+
+  test("pipeline e2e: null text and a batch of a few very long documents take the distributed branch") {
+    val withNull = pipelineDocs((1L, "a b c d e f g h i j k", "src0"), (2L, null, "src0"))
+    assert(pipelineBranches(withNull)._1.isEmpty)
+    assert(TextOps.pipelineE2E(withNull).collect().toSeq == pipelineBranches(withNull)._2.collect().toSeq)
+    val long = pipelineDocs((1 to 3).map(d =>
+      (d.toLong, (0 until 30000).map(i => s"d${d}w$i").mkString(" "), "src0")): _*)
+    assert(pipelineBranches(long, maxBytes = 512L << 10)._1.isEmpty,
+      "three 30k-token documents exceed a 512 KiB budget")
+    assert(pipelineBranches(long)._1.isDefined, "the default budget holds them")
+  }
+
   test("fertilityByLang: exact counts, and the rollup agrees with bpeEncode per-doc") {
     import spark.implicits._
     val docs = Seq(

@@ -591,9 +591,6 @@ class VectorOpsSpec extends SparkSpec {
     // equal the full batch operator over the union filtered to the batch
     val twins = emb.filter(col("vec_id") < 5)
       .withColumn("vec_id", col("vec_id") + 1000000L)
-    val inc = VectorOps.incrementalCosinePairs(emb, twins).collect()
-      .map(r => (r.getLong(1), r.getLong(2), r.getString(3), r.getDouble(4)))
-      .toSet
     val full = VectorOps.cosineNearDupPairs(emb.unionByName(twins), 0.45)
       .collect()
       .filter(r => r.getLong(1) >= 1000000L || r.getLong(2) >= 1000000L)
@@ -602,12 +599,65 @@ class VectorOpsSpec extends SparkSpec {
         val kind = if (a >= 1000000L && b >= 1000000L) "new_new" else "new_corpus"
         (a, b, kind, r.getDouble(3))
       }.toSet
-    assert(inc == full,
-      s"delta identity broken: only-inc=${inc -- full} only-full=${full -- inc}")
-    (0L until 5L).foreach { v =>
-      assert(inc.contains((v, v + 1000000L, "new_corpus", 1.0)),
-        s"missing twin pair for $v in $inc")
+    // through the gated operator (the driver branch here) and the distributed one
+    Seq(VectorOps.incrementalCosinePairs(emb, twins),
+        VectorOps.incrementalCosineDistributed(emb, twins, 0.45)).foreach { out =>
+      val inc = out.collect()
+        .map(r => (r.getLong(1), r.getLong(2), r.getString(3), r.getDouble(4)))
+        .toSet
+      assert(inc == full,
+        s"delta identity broken: only-inc=${inc -- full} only-full=${full -- inc}")
+      (0L until 5L).foreach { v =>
+        assert(inc.contains((v, v + 1000000L, "new_corpus", 1.0)),
+          s"missing twin pair for $v in $inc")
+      }
     }
+  }
+
+  private def cosineBranches(corpus: org.apache.spark.sql.DataFrame,
+      batch: org.apache.spark.sql.DataFrame, maxBytes: Long = Exec.DefaultDriverCollectBytes) =
+    (VectorOps.incrementalCosineOnDriver(corpus, batch, 0.45, maxBytes),
+      VectorOps.incrementalCosineDistributed(corpus, batch, 0.45))
+
+  private def vectors(rows: (Long, Int, Seq[Float])*): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    rows.toDF("vec_id", "label", "embedding").select("vec_id", "embedding", "label")
+  }
+
+  test("incremental cosine dedup: the driver branch equals the distributed branch") {
+    val twins = emb.filter(col("vec_id") < 5).withColumn("vec_id", col("vec_id") + 1000000L)
+    val base = emb.filter(col("vec_id") === 7).collect()(0)
+    val (label, e) = (base.getAs[Int]("label"), base.getAs[scala.collection.Seq[Float]]("embedding").toSeq)
+    val edge = vectors(
+      (2000001L, label, Seq.fill(e.size)(0f)),                 // zero norm
+      (2000002L, label, e.map(_ * 2)), (2000003L, label, e),   // new/new, both orientations
+      (2000004L, label + 100, e))                              // a label the corpus lacks
+    val withZero = emb.unionByName(vectors((3000001L, label, Seq.fill(e.size)(0f))))
+    val cases = Seq(
+      "odd/even split" -> (emb.filter(col("vec_id") % 2 =!= 0), emb.filter(col("vec_id") % 2 === 0)),
+      "planted twins" -> (emb, twins),
+      "edge batch" -> (withZero, edge),
+      "empty batch" -> (emb, twins.limit(0)))
+    cases.foreach { case (name, (corpus, batch)) =>
+      val (driver, distributed) = cosineBranches(corpus, batch)
+      assert(driver.isDefined, s"$name: the small input must take the driver branch")
+      val (got, want) = (driver.get.collect().toSeq, distributed.collect().toSeq)
+      assert(got == want, s"$name: driver=${got.take(5)} distributed=${want.take(5)}")
+      assert(driver.get.schema == distributed.schema, s"$name: ${driver.get.schema}")
+    }
+    val pairs = cosineBranches(withZero, edge)._1.get.collect()
+      .map(r => (r.getLong(1), r.getLong(2)) -> r.getString(3)).toMap
+    assert(pairs.get((2000002L, 2000003L)).contains("new_new"), s"$pairs")
+    assert(pairs.get((7L, 2000003L)).contains("new_corpus"), s"$pairs")
+    assert(!pairs.keys.exists { case (a, b) => Set(a, b).exists(Set(2000001L, 3000001L)) },
+      s"zero-norm vectors have no cosine: $pairs")
+  }
+
+  test("incremental cosine dedup: a batch of a few very wide vectors takes the distributed branch") {
+    val wide = vectors((1 to 3).map(i => (i.toLong, 0, Seq.fill(50000)(i.toFloat))): _*)
+    assert(cosineBranches(wide, wide, maxBytes = 256L << 10)._1.isEmpty,
+      "three 50k-dimension vectors exceed a 256 KiB budget")
+    assert(cosineBranches(wide, wide)._1.isDefined, "the default budget holds them")
   }
 
   test("int8 quantization: codes honor the affine formula, recall audited, degenerate dims code to 0") {

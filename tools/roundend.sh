@@ -7,9 +7,11 @@
 #   3. MicroBench warm-median perf gate vs the committed MICROBENCH.json
 #      (>1.3x warm regression on any tracked query fails; pass --update
 #      via UPDATE_PERF=1 to refresh the artifact after it passes)
-#   4. repo benchmark smoke: one short untraced hicp_series run, whose
-#      per-op checks must all pass ("correct": true) — catches a wrong
-#      small-input fast path through the medallion
+#   4. repo benchmark smoke: short untraced hicp_series and corpus_ingest
+#      runs, plus corpus_ingest with SPARK_GRAFT_DRIVER_GATE=off, whose
+#      per-op checks and end-of-run delta identity must all pass
+#      ("correct": true) — catches a wrong small-input fast path, and a
+#      broken distributed branch behind it
 #   5. driver-artifact hygiene: every BENCH_*/CORRECTNESS_*/LEAKCHECK/
 #      COPYCHECK/MICROBENCH artifact must be committed (untracked round
 #      artifacts were an r12 AND r13 verdict item — this makes it a gate)
@@ -45,13 +47,20 @@ else
   sbt -batch "runMain graft.MicroBench --gate"
 fi
 
-echo "== 4/5 benchmark smoke (hicp_series) =="
-bench="$(python3 perfbench/run.py --workload hicp_series --seed 1 --seconds 4 --trace 0 | tail -1)"
-echo "$bench"
-if ! python3 -c 'import json, sys; sys.exit(0 if json.loads(sys.argv[1]).get("correct") is True else 1)' "$bench"; then
-  echo "hicp_series benchmark run is not correct"
-  exit 1
-fi
+echo "== 4/5 benchmark smoke (hicp_series; corpus_ingest through both branches) =="
+smoke() {  # smoke <label> <workload> [ENV=VALUE ...]: the run must be correct
+  local label="$1" workload="$2"; shift 2
+  local bench
+  bench="$(env "$@" python3 perfbench/run.py --workload "$workload" --seed 1 --seconds 4 --trace 0 | tail -1)"
+  echo "$label: $bench"
+  if ! python3 -c 'import json, sys; sys.exit(0 if json.loads(sys.argv[1]).get("correct") is True else 1)' "$bench"; then
+    echo "$label benchmark run is not correct"
+    exit 1
+  fi
+}
+smoke hicp_series hicp_series
+smoke corpus_ingest corpus_ingest
+smoke "corpus_ingest (SPARK_GRAFT_DRIVER_GATE=off)" corpus_ingest SPARK_GRAFT_DRIVER_GATE=off
 
 echo "== 5/5 driver-artifact hygiene =="
 dirty="$(git status --porcelain -- 'BENCH_*.json' 'CORRECTNESS_*.json' \
