@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: one JSON line with per-query wall-clock seconds at the
   * SF dir given by SPARK_GRAFT_SF_DIR (driver contract).
   *
@@ -41,15 +39,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = Sessions.local(cpus)
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // a session running many operator families needs more than Spark's
-      // default 100 cached generated classes; each eviction is a recompile
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection main: prints `explain("formatted")` for the given query
   * names (or a representative default set) so scan pushdown, broadcast
   * choices, and whole-stage-codegen spans can be audited.
@@ -15,15 +13,7 @@ object Explain {
       if (args.length > 1) args.drop(1).toSeq.filter(SparkEntry.queries.contains)
       else Seq("rel_q5_region_revenue", "rel_q1_pricing_summary", "rel_topk_parts",
         "ev_sessionize", "dedup_minhash_lsh", "vec_knn_cosine")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // a session running many operator families needs more than Spark's
-      // default 100 cached generated classes; each eviction is a recompile
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val spark = Sessions.local("4").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     names.foreach { n =>
       println(s"\n========== $n ==========")

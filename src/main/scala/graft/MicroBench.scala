@@ -124,15 +124,7 @@ object MicroBench {
         "`runMain graft.MicroBench --gate --update` after seeding the file " +
         "with {\"<query>\": 0} entries for the tracked set")
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // a session running many operator families needs more than Spark's
-      // default 100 cached generated classes; each eviction is a recompile
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val spark = Sessions.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val timings = names.map { n =>

@@ -4,10 +4,12 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.{LocalTableScanExec, SQLExecution}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, lit,
   row_number, spark_partition_id, sum}
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.Platform
 
 /** Execution-shape helpers shared by the operator families. */
 object Exec {
@@ -138,20 +140,13 @@ object Exec {
     * (false under `SPARK_GRAFT_DRIVER_GATE=off`). */
   def smallInput(rows: Long): Boolean = !driverGateOff && rows <= SmallInputRows
 
-  /** The collect-based small-input gate: ONE bounded collect,
-    * `limit(SmallInputRows + 1)`, returns every row of `df` when it has at
-    * most [[SmallInputRows]] of them AND they fit `maxBytes`, otherwise None
-    * and the caller runs its distributed branch. Callers project `df` to
-    * the columns they need first. Always None under
-    * `SPARK_GRAFT_DRIVER_GATE=off`.
-    *
-    * Width-proof like [[fitsDriverCollect]]: the byte leg prices the
-    * collected rows in their compact binary (`UnsafeRow`) form, before any
-    * is decoded into driver objects, so a few very wide rows (long texts,
-    * fat arrays) fall back although the row leg would pass them. */
-  def collectIfSmall(df: DataFrame,
-      maxBytes: Long = DefaultDriverCollectBytes): Option[Array[Row]] =
-    collectInternalIfSmall(df, maxBytes).map { rows =>
+  /** The collect-based small-input gate: ONE bounded job returns every row
+    * of `df` when it has at most [[SmallInputRows]] of them AND they fit
+    * [[DefaultDriverCollectBytes]], otherwise None and the caller runs its
+    * distributed branch. Callers project `df` to the columns they need
+    * first. Always None under `SPARK_GRAFT_DRIVER_GATE=off`. */
+  def collectIfSmall(df: DataFrame): Option[Array[Row]] =
+    collectInternalIfSmall(df).map { rows =>
       val fromRow = ExpressionEncoder(df.schema).resolveAndBind().createDeserializer()
       rows.map(fromRow)
     }
@@ -159,21 +154,89 @@ object Exec {
   /** [[collectIfSmall]] without the decode: the rows stay in Spark's
     * internal form, so driver code reads strings as `UTF8String` (Spark's
     * byte equality) and arrays as `ArrayData` (what the native kernels such
-    * as `DotProduct.compute` take) exactly as the distributed plan sees them. */
+    * as `DotProduct.compute` take) exactly as the distributed plan sees them.
+    *
+    * Bounded before anything reaches the driver, and width-proof like
+    * [[fitsDriverCollect]]: each of the plan's P partitions serializes its
+    * rows as length-prefixed `UnsafeRow` bytes and stops, shipping nothing,
+    * at the first row past its share — `SmallInputRows / P` rows (rounded
+    * up) or `maxBytes / P` bytes. So the job computes at most about
+    * [[SmallInputRows]] rows of `df` and the driver receives at most
+    * `maxBytes` whatever the input's size, and a few very wide rows (long
+    * texts, fat arrays) fall back although the row cap would pass them. An
+    * input near either cap whose rows crowd one partition also falls back.
+    * A plan that is already a local relation is read without a job. */
   def collectInternalIfSmall(df: DataFrame,
       maxBytes: Long = DefaultDriverCollectBytes): Option[Array[InternalRow]] =
     if (driverGateOff) None
     else {
-      val qe = df.limit(SmallInputRows.toInt + 1).queryExecution
-      val rows = SQLExecution.withNewExecutionId(qe, Some("collectIfSmall"))(
-        qe.executedPlan.executeCollect())
-      lazy val toUnsafe = UnsafeProjection.create(df.schema)
-      val bytes = rows.iterator.map {
-        case u: UnsafeRow => u.getSizeInBytes.toLong
-        case r => toUnsafe(r).getSizeInBytes.toLong
-      }.sum
-      if (rows.length <= SmallInputRows && bytes <= maxBytes) Some(rows) else None
+      val qe = df.queryExecution
+      val schema = df.schema
+      def fits(rows: Int, bytes: Long) = rows <= SmallInputRows && bytes <= maxBytes
+      qe.executedPlan match {
+        case local: LocalTableScanExec =>
+          val rows = local.executeCollect()
+          lazy val toUnsafe = UnsafeProjection.create(schema)
+          val bytes = rows.iterator.map {
+            case u: UnsafeRow => 4L + u.getSizeInBytes
+            case r => 4L + toUnsafe(r).getSizeInBytes
+          }.sum
+          if (fits(rows.length, bytes)) Some(rows) else None
+        case plan =>
+          val parts = SQLExecution.withNewExecutionId(qe, Some("collectIfSmall")) {
+            val rdd = plan.execute()
+            val p = math.max(1, rdd.getNumPartitions)
+            val (rowShare, byteShare) = ((SmallInputRows + p - 1) / p, maxBytes / p)
+            rdd.mapPartitions { it =>
+              Iterator.single(boundedPartition(it, schema, rowShare, byteShare))
+            }.collect()
+          }
+          if (parts.exists(_.isEmpty)) None
+          else {
+            val chunks = parts.flatten
+            val rows = chunks.flatMap(decodeRows(_, schema.length))
+            if (fits(rows.length, chunks.map(_.length.toLong).sum)) Some(rows) else None
+          }
+      }
     }
+
+  /** One partition of [[collectInternalIfSmall]]: its rows as
+    * length-prefixed `UnsafeRow` bytes, or None at the first row past
+    * `maxRows` rows or `maxBytes` bytes (the rows after it are never
+    * computed). */
+  private def boundedPartition(it: Iterator[InternalRow], schema: StructType,
+      maxRows: Long, maxBytes: Long): Option[Array[Byte]] = {
+    lazy val toUnsafe = UnsafeProjection.create(schema)
+    val bytes = new java.io.ByteArrayOutputStream()
+    val out = new java.io.DataOutputStream(bytes)
+    val buf = new Array[Byte](4096)
+    var rows = 0L
+    while (it.hasNext) {
+      val u = it.next() match {
+        case u: UnsafeRow => u
+        case r => toUnsafe(r)
+      }
+      rows += 1
+      if (rows > maxRows || bytes.size.toLong + 4 + u.getSizeInBytes > maxBytes) return None
+      out.writeInt(u.getSizeInBytes)
+      u.writeToStream(out, buf)
+    }
+    Some(bytes.toByteArray)
+  }
+
+  /** The rows of one [[boundedPartition]] chunk, read in place. */
+  private def decodeRows(chunk: Array[Byte], numFields: Int): Seq[InternalRow] = {
+    val in = java.nio.ByteBuffer.wrap(chunk)
+    val rows = Seq.newBuilder[InternalRow]
+    while (in.hasRemaining) {
+      val size = in.getInt()
+      val row = new UnsafeRow(numFields)
+      row.pointTo(chunk, Platform.BYTE_ARRAY_OFFSET + in.position(), size)
+      in.position(in.position() + size)
+      rows += row
+    }
+    rows.result()
+  }
 
   /** Distributed EXACT global rank — the scalable replacement for an
     * unpartitioned `row_number().over(Window.orderBy(...))`, which funnels

@@ -2113,29 +2113,34 @@ object TextOps {
     * bigram is a token pair, since tokens never hold the ' ' that joins
     * them. Inputs outside the shapes this branch mirrors (a null doc_id or
     * text, a repeated doc_id, non-long/string key columns) also take the
-    * distributed branch. `maxBytes` is the gate's byte budget.
+    * distributed branch.
     */
   private[graft] def pipelineE2EOnDriver(docs: DataFrame, keepBp: Map[String, Int],
-      defaultBp: Int, evalMod: Long, n: Int, budget: Int,
-      maxBytes: Long = Exec.DefaultDriverCollectBytes): Option[DataFrame] = {
+      defaultBp: Int, evalMod: Long, n: Int, budget: Int): Option[DataFrame] = {
     val fields = docs.schema.map(f => f.name -> f).toMap
     val typed = Seq("doc_id" -> LongType, "text" -> StringType, "source" -> StringType)
       .forall { case (c, t) => fields.get(c).exists(_.dataType == t) }
     if (!typed) return None
+    Exec.collectInternalIfSmall(pipelineFeatures(docs, n)).flatMap { rows =>
+      val ids = rows.iterator.filterNot(_.isNullAt(0)).map(_.getLong(0)).toSet
+      if (ids.size != rows.length || rows.exists(_.isNullAt(2))) None
+      else Some(pipelineLocal(docs, rows, fields("doc_id").nullable, keepBp,
+        defaultBp, evalMod, budget))
+    }
+  }
+
+  /** The per-document features [[pipelineE2EOnDriver]] collects: doc_id,
+    * source, tokens, distinct-token count, fingerprint, `n`-gram shingle
+    * hashes and mixing draw, all evaluated by Spark. */
+  private[graft] def pipelineFeatures(docs: DataFrame, n: Int): DataFrame = {
     graft.functions.MinHashFunctions.register(docs.sparkSession)
-    val features = docs
+    docs
       .withColumn("toks", tokens(col("text")))
       .select(col("doc_id"), col("source"), col("toks"),
         size(array_distinct(col("toks"))).as("n_distinct"),
         fingerprint(col("text")).as("fp"),
         expr(s"shingle_hashes(toks, $n)").as("sh"),
         mixBucket.as("mix"))
-    Exec.collectInternalIfSmall(features, maxBytes).flatMap { rows =>
-      val ids = rows.iterator.filterNot(_.isNullAt(0)).map(_.getLong(0)).toSet
-      if (ids.size != rows.length || rows.exists(_.isNullAt(2))) None
-      else Some(pipelineLocal(docs, rows, fields("doc_id").nullable, keepBp,
-        defaultBp, evalMod, budget))
-    }
   }
 
   private def pipelineLocal(docs: DataFrame, rows: Array[InternalRow],

@@ -1056,7 +1056,7 @@ object VectorOps {
       .getOrElse(incrementalCosineDistributed(corpus, batch, threshold))
 
   /** The norm-carrying projection both branches score from. */
-  private def cosinePrep(df: DataFrame): DataFrame =
+  private[graft] def cosinePrep(df: DataFrame): DataFrame =
     df.select(col("label"), col("vec_id"), col("embedding"),
       sqrt(call_function("dot_product", col("embedding"), col("embedding"))).as("nrm"))
 
@@ -1103,11 +1103,9 @@ object VectorOps {
     * zero-norm pairs as its null division does, and collapses a new/new
     * pair's two orientations. Both inputs must share one column typing
     * (else the distributed union would widen it) with long vec_ids.
-    * `maxBytes` is the gate's byte budget.
     */
   private[graft] def incrementalCosineOnDriver(corpus: DataFrame, batch: DataFrame,
-      threshold: Double,
-      maxBytes: Long = Exec.DefaultDriverCollectBytes): Option[DataFrame] = {
+      threshold: Double): Option[DataFrame] = {
     // element nullability aside (the union widens it), as the union types them
     def types(df: DataFrame) = Seq("label", "vec_id", "embedding")
       .map(c => df.schema.find(_.name == c).map(_.dataType).map {
@@ -1121,8 +1119,8 @@ object VectorOps {
     }
     graft.functions.DotProduct.register(corpus.sparkSession)
     for {
-      probe <- Exec.collectInternalIfSmall(cosinePrep(batch), maxBytes)
-      stored <- Exec.collectInternalIfSmall(cosinePrep(corpus), maxBytes)
+      probe <- Exec.collectInternalIfSmall(cosinePrep(batch))
+      stored <- Exec.collectInternalIfSmall(cosinePrep(corpus))
     } yield {
       // rows without a label, id or embedding never join, match or score
       def scored(rows: Array[InternalRow]) =

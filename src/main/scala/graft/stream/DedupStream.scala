@@ -159,22 +159,19 @@ object DedupStream {
     * against the index's other batches, and against itself), verifies them
     * with `IntersectCount.compute`, the size prune and Spark's `round`
     * rule, and writes the same three partitions. A lookup that overflows
-    * the gate (a boilerplate-heavy index) also falls back. `maxBytes` is
-    * the gate's byte budget.
+    * the gate (a boilerplate-heavy index) also falls back.
     */
   private[graft] def processBatchOnDriver(batch: Dataset[Row], batchId: Long,
-      indexDir: String, outDir: String, k: Int, bands: Int, threshold: Double,
-      maxBytes: Long = Exec.DefaultDriverCollectBytes): Boolean = {
+      indexDir: String, outDir: String, k: Int, bands: Int,
+      threshold: Double): Boolean = {
     val spark = batch.sparkSession
     val typed = Seq("doc_id" -> LongType, "text" -> StringType).forall { case (c, t) =>
       batch.schema.find(_.name == c).exists(_.dataType == t)
     }
     def lookup(df: => DataFrame, keys: Seq[Row]): Option[Array[InternalRow]] =
-      if (keys.isEmpty) Some(Array.empty) else Exec.collectInternalIfSmall(df, maxBytes)
+      if (keys.isEmpty) Some(Array.empty) else Exec.collectInternalIfSmall(df)
     val written = for {
-      rows <- if (typed) Exec.collectInternalIfSmall(
-          sigs(batch.toDF(), k).select(col("doc_id"), col("hs"),
-            expr(s"band_hashes(sig, $bands, ${k / bands})").as("keys")), maxBytes)
+      rows <- if (typed) Exec.collectInternalIfSmall(batchFeatures(batch.toDF(), k, bands))
         else None
       if !rows.exists(_.isNullAt(0))
       sets = rows.map(r => (r.getLong(0), r.getArray(1)))
@@ -212,6 +209,13 @@ object DedupStream {
     }
     written.isDefined
   }
+
+  /** The per-document features [[processBatchOnDriver]] collects: doc_id,
+    * sorted shingle hashes and the `bands` MinHash band keys, all evaluated
+    * by Spark. */
+  private[graft] def batchFeatures(docs: DataFrame, k: Int, bands: Int): DataFrame =
+    sigs(docs, k).select(col("doc_id"), col("hs"),
+      expr(s"band_hashes(sig, $bands, ${k / bands})").as("keys"))
 
   /** The distributed branch's candidate pairs, as (doc_a < doc_b) or, for
     * an index doc with the batch doc's own id, (id, id): each batch row

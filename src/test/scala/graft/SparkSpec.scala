@@ -10,16 +10,7 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // a session running many operator families needs more than Spark's
-      // default 100 cached generated classes; each eviction is a recompile
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val s = Sessions.local("4").appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

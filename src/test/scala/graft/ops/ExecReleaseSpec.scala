@@ -143,9 +143,43 @@ class ExecReleaseSpec extends SparkSpec {
   test("collectIfSmall: the byte leg declines a few very wide rows the row leg admits") {
     val wide = spark.range(3).toDF()
       .select(org.apache.spark.sql.functions.expr("repeat('x', 100000)").as("s"))
-    assert(Exec.collectIfSmall(wide, maxBytes = 200000L).isEmpty)
+    assert(Exec.collectInternalIfSmall(wide, maxBytes = 200000L).isEmpty)
     assert(Exec.collectIfSmall(wide).map(_.map(_.getString(0).length).toSeq)
       .contains(Seq(100000, 100000, 100000)))
+  }
+
+  test("collectIfSmall: a frame many times the byte budget ships at most the budget to the driver") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerTaskEnd}
+    val budget = 256L << 10
+    // 64 rows of 3,000 md5 strings each: about 7 MB, 28 times the budget
+    val wide = spark.range(0, 64, 1, 4).toDF().select(org.apache.spark.sql.functions.expr(
+      "transform(sequence(1, 3000), i -> md5(cast(id * 3000 + i as string)))").as("hs"))
+    val shipped = new java.util.concurrent.atomic.AtomicLong()
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        shipped.addAndGet(e.taskMetrics.resultSize)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = done.countDown()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(Exec.collectInternalIfSmall(wide, budget).isEmpty)
+      // the job's end event follows its tasks' on the listener bus
+      assert(done.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      assert(shipped.get <= budget, s"the driver received ${shipped.get} bytes")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(Exec.collectInternalIfSmall(wide).map(_.length).contains(64))
+  }
+
+  test("collectIfSmall: above the row cap the job computes about the cap's rows, not the input's") {
+    val cap = Exec.SmallInputRows
+    val computed = spark.sparkContext.longAccumulator("rows computed")
+    val counted = org.apache.spark.sql.functions.udf { (id: Long) => computed.add(1); id }
+    val big = spark.range(0, 4 * cap, 1, 4).toDF().select(counted(
+      org.apache.spark.sql.functions.col("id")).as("id"))
+    assert(Exec.collectInternalIfSmall(big).isEmpty)
+    // each of the 4 partitions stops at the first row past its quarter
+    assert(computed.value <= cap + 4, s"computed ${computed.value} rows")
   }
 
   test("globalRank equals an unpartitioned row_number, including ties and desc order") {

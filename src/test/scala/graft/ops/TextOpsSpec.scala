@@ -815,10 +815,9 @@ class TextOpsSpec extends SparkSpec {
 
   private val pipelineArgs = (Map("src0" -> 9000, "src1" -> 5000, "src2" -> 500), 7500, 97L, 5, 512)
 
-  private def pipelineBranches(docs: org.apache.spark.sql.DataFrame,
-      maxBytes: Long = Exec.DefaultDriverCollectBytes) = {
+  private def pipelineBranches(docs: org.apache.spark.sql.DataFrame) = {
     val (keepBp, defaultBp, evalMod, n, budget) = pipelineArgs
-    (TextOps.pipelineE2EOnDriver(docs, keepBp, defaultBp, evalMod, n, budget, maxBytes),
+    (TextOps.pipelineE2EOnDriver(docs, keepBp, defaultBp, evalMod, n, budget),
       TextOps.pipelineE2EDistributed(docs, keepBp, defaultBp, evalMod, n, budget))
   }
 
@@ -867,7 +866,7 @@ class TextOpsSpec extends SparkSpec {
     assert(TextOps.pipelineE2E(withNull).collect().toSeq == pipelineBranches(withNull)._2.collect().toSeq)
     val long = pipelineDocs((1 to 3).map(d =>
       (d.toLong, (0 until 30000).map(i => s"d${d}w$i").mkString(" "), "src0")): _*)
-    assert(pipelineBranches(long, maxBytes = 512L << 10)._1.isEmpty,
+    assert(Exec.collectInternalIfSmall(TextOps.pipelineFeatures(long, 5), 512L << 10).isEmpty,
       "three 30k-token documents exceed a 512 KiB budget")
     assert(pipelineBranches(long)._1.isDefined, "the default budget holds them")
   }

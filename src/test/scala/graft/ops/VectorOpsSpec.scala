@@ -615,8 +615,8 @@ class VectorOpsSpec extends SparkSpec {
   }
 
   private def cosineBranches(corpus: org.apache.spark.sql.DataFrame,
-      batch: org.apache.spark.sql.DataFrame, maxBytes: Long = Exec.DefaultDriverCollectBytes) =
-    (VectorOps.incrementalCosineOnDriver(corpus, batch, 0.45, maxBytes),
+      batch: org.apache.spark.sql.DataFrame) =
+    (VectorOps.incrementalCosineOnDriver(corpus, batch, 0.45),
       VectorOps.incrementalCosineDistributed(corpus, batch, 0.45))
 
   private def vectors(rows: (Long, Int, Seq[Float])*): org.apache.spark.sql.DataFrame = {
@@ -655,7 +655,7 @@ class VectorOpsSpec extends SparkSpec {
 
   test("incremental cosine dedup: a batch of a few very wide vectors takes the distributed branch") {
     val wide = vectors((1 to 3).map(i => (i.toLong, 0, Seq.fill(50000)(i.toFloat))): _*)
-    assert(cosineBranches(wide, wide, maxBytes = 256L << 10)._1.isEmpty,
+    assert(Exec.collectInternalIfSmall(VectorOps.cosinePrep(wide), 256L << 10).isEmpty,
       "three 50k-dimension vectors exceed a 256 KiB budget")
     assert(cosineBranches(wide, wide)._1.isDefined, "the default budget holds them")
   }

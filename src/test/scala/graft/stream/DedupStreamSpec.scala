@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
-import graft.ops.DedupOps
+import graft.ops.{DedupOps, Exec}
 
 /** The streaming incremental dedup twin is verified against the one-shot
   * batch operator: feeding the batch slice through N micro-batches and
@@ -167,10 +167,14 @@ class DedupStreamSpec extends SparkSpec {
   test("a batch of a few very long documents falls back to the distributed branch") {
     val corpus = docs.filter(col("doc_id") % 10 =!= 0).select("doc_id", "text")
     val long = textDocs((1 to 3).map(d => (800000L + d) -> words(s"d${d}w", 0 until 20000)): _*)
+    assert(Exec.collectInternalIfSmall(DedupStream.batchFeatures(long, 32, 8), 256L << 10).isEmpty,
+      "three 20k-token documents exceed a 256 KiB budget")
     val tmp = Files.createTempDirectory("dedup_wide").toString
     DedupStream.seedIndex(corpus, s"$tmp/index")
-    assert(!DedupStream.processBatchOnDriver(long, 7L, s"$tmp/index", s"$tmp/pairs",
-      32, 8, 0.5, maxBytes = 256L << 10), "three 20k-token documents exceed a 256 KiB budget")
+    val nullId = Seq(Some(800004L) -> words("a", 0 until 20), None -> words("b", 0 until 20))
+      .toDF("doc_id", "text")
+    assert(!DedupStream.processBatchOnDriver(nullId, 7L, s"$tmp/index", s"$tmp/pairs", 32, 8, 0.5),
+      "a null doc_id takes the distributed branch")
     assert(!new java.io.File(s"$tmp/index/bands/src_batch=7").exists(),
       "a declined driver branch writes nothing")
     assert(DedupStream.processBatchOnDriver(long, 7L, s"$tmp/index", s"$tmp/pairs",
