@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * DuckDB oracle gate can run unchanged at ~sf1 (6M-row lineitem from sf0.1
   * × 10). Not part of the shipped library — harness-side evidence tooling.
   *
-  * Replication discipline (mirrors ScaleSmoke's reasoning):
+  * Replication discipline:
   *  - every table key is shifted by `copy * 10_000_000`, one consistent
   *    offset per copy, so copy c's orders reference copy c's customers and
   *    the fact/dim ratios stay exactly proportional;

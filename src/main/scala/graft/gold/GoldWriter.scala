@@ -16,7 +16,10 @@ import graft.quality.QualityChecks.Report
   * the partitions present in the frame and leaves all others intact — the
   * same idempotence guarantee, but parallel and transactional per partition,
   * and it scales to any number of series. The JDBC warehouse load lives in
-  * `JdbcSink` (exercised against embedded Derby by `JdbcSinkSpec`).
+  * `JdbcSink`: one routine, the series DELETE plus batched INSERT in one
+  * transaction, fed a small frame's collected rows or a larger frame's
+  * partitions streamed one at a time (exercised against embedded Derby by
+  * `JdbcSinkSpec`).
   *
   * All artifact I/O goes through the Hadoop FileSystem API, so paths work
   * identically on local disk, HDFS, or cloud object stores.

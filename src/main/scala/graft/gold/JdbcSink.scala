@@ -2,6 +2,8 @@ package graft.gold
 
 import java.sql.{Connection, DriverManager}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.datasources.jdbc.JdbcUtils
 import org.apache.spark.sql.jdbc.JdbcDialects
@@ -11,11 +13,14 @@ import graft.ops.Exec
 
 /** JDBC warehouse sink (SURVEY.md §2.1 SRC6, §2.4 G4/G5) with the
   * reference's batching behavior (`db/sql.py:10–40`,
-  * `load_hicp_to_sql.py:88–101`): a small series loads in one driver-side
-  * transaction, a larger frame through the standard Spark JDBC write path.
-  * Executed end-to-end by JdbcSinkSpec against embedded Derby (the JDBC
-  * engine that ships with Spark); the parquet partition-overwrite path in
-  * `GoldWriter` remains the default sink.
+  * `load_hicp_to_sql.py:88–101`): one load routine, DELETE plus batched
+  * INSERT in one driver-side transaction, the reference's single
+  * `engine.begin()`. Its rows come from one of two sources: a small frame's
+  * bounded collect, or a larger frame streamed one partition at a time.
+  * Table names must be plain SQL identifiers. Executed end-to-end by
+  * JdbcSinkSpec against embedded Derby (the JDBC engine that ships with
+  * Spark); the parquet partition-overwrite path in `GoldWriter` remains the
+  * default sink.
   */
 object JdbcSink {
 
@@ -33,7 +38,7 @@ object JdbcSink {
     * does not parse).
     */
   def createTableDdl(table: String = "fact_hicp"): String =
-    s"""CREATE TABLE $table (
+    s"""CREATE TABLE ${sqlTable(table)} (
        |  time DATE NOT NULL,
        |  geo VARCHAR(10) NOT NULL,
        |  coicop VARCHAR(20) NOT NULL,
@@ -56,10 +61,21 @@ object JdbcSink {
 
   /** G4: idempotent DDL through a plain driver-side connection. */
   def ensureTable(conn: Connection, table: String = "fact_hicp"): Unit =
-    if (!tableExists(conn, table)) {
+    if (!tableExists(conn, sqlTable(table))) {
       val st = conn.createStatement()
       try st.execute(createTableDdl(table)) finally st.close()
     }
+
+  private val SqlIdentifier = "[A-Za-z_][A-Za-z0-9_]*".r
+
+  /** `table`, which every statement here interpolates into its SQL, when it
+    * is a plain SQL identifier; anything else (a quote, a `;`, a dotted
+    * name) is rejected before it reaches the database. */
+  private def sqlTable(table: String): String = {
+    require(table != null && SqlIdentifier.matches(table),
+      s"JDBC table name must be a plain SQL identifier: '$table'")
+    table
+  }
 
   /** G5 first half: driver-side DELETE of the series about to be loaded
     * (`delete_existing_series`, `load_hicp_to_sql.py:54–62`).
@@ -67,70 +83,47 @@ object JdbcSink {
   def deleteSeries(conn: Connection, table: String,
                    geo: String, coicop: String, unit: String): Int = {
     val ps = conn.prepareStatement(
-      s"DELETE FROM $table WHERE geo = ? AND coicop = ? AND unit = ?")
+      s"DELETE FROM ${sqlTable(table)} WHERE geo = ? AND coicop = ? AND unit = ?")
     try {
       ps.setString(1, geo); ps.setString(2, coicop); ps.setString(3, unit)
       ps.executeUpdate()
     } finally ps.close()
   }
 
-  /** G5 second half: batched executor-parallel append — each task opens its
-    * own connection and writes `batchSize`-row batches (the Spark analogue of
-    * chunked multi-VALUES + fast_executemany).
-    */
-  def append(df: DataFrame, cfg: JdbcConfig): Unit =
-    df.write
-      .format("jdbc")
-      .option("url", cfg.url)
-      .option("dbtable", cfg.table)
-      .option("user", cfg.user)
-      .option("password", cfg.password)
-      .option("batchsize", cfg.batchSize)
-      .option("isolationLevel", cfg.isolationLevel)
-      .mode("append")
-      .save()
-
   /** The reference's full warehouse load (`load_hicp_to_sql.py:76–101`):
-    * ensure the table, DELETE the series being loaded, then insert it —
-    * delete-then-insert makes a replay idempotent (G5). A frame of at most
-    * `Exec.SmallInputRows` rows (one bounded collect, `Exec.collectIfSmall`)
-    * is loaded on ONE driver connection in ONE transaction, so a failed
-    * insert rolls the DELETE back and the old rows survive; a larger frame
-    * keeps the executor-parallel append ([[loadDistributed]]).
+    * ensure the table, then DELETE the series being loaded and insert it in
+    * ONE transaction — delete-then-insert makes a replay idempotent (G5),
+    * and a failed insert rolls the DELETE back, so the old rows survive at
+    * every size. A frame of at most `Exec.SmallInputRows` rows arrives in
+    * one bounded collect (`Exec.collectIfSmall`); a larger one is streamed
+    * ([[loadStreamed]]).
     */
   def loadSeries(df: DataFrame, cfg: JdbcConfig,
                  geo: String, coicop: String, unit: String): Unit =
     Exec.collectIfSmall(df) match {
-      case Some(rows) => loadRows(df.schema, rows, cfg, geo, coicop, unit)
-      case None => loadDistributed(df, cfg, geo, coicop, unit)
+      case Some(rows) => loadRows(df.schema, rows.iterator, cfg, geo, coicop, unit)
+      case None => loadStreamed(df, cfg, geo, coicop, unit)
     }
 
-  /** The above-cap branch of [[loadSeries]]: the driver-side connection
-    * handles DDL + delete (committed on its own), then the append fans out to
-    * executor tasks. */
-  private[gold] def loadDistributed(df: DataFrame, cfg: JdbcConfig,
-                                    geo: String, coicop: String, unit: String): Unit = {
-    val conn = DriverManager.getConnection(cfg.url, cfg.user, cfg.password)
-    try {
-      ensureTable(conn, cfg.table)
-      deleteSeries(conn, cfg.table, geo, coicop, unit)
-    } finally conn.close()
-    append(df, cfg)
-  }
+  /** The above-cap row source of [[loadSeries]]: `toLocalIterator` holds one
+    * partition in driver memory at a time while [[loadRows]] inserts. */
+  private[gold] def loadStreamed(df: DataFrame, cfg: JdbcConfig,
+                                 geo: String, coicop: String, unit: String): Unit =
+    loadRows(df.schema, df.toLocalIterator().asScala, cfg, geo, coicop, unit)
 
-  /** The small-input branch of [[loadSeries]]: DELETE + `batchSize`-row
-    * batched INSERT of the collected `rows` in one transaction at
-    * `isolationLevel`. */
-  private def loadRows(schema: StructType, rows: Array[Row], cfg: JdbcConfig,
+  /** DELETE + `batchSize`-row batched INSERT of `rows` in one transaction
+    * at `isolationLevel`. */
+  private def loadRows(schema: StructType, rows: Iterator[Row], cfg: JdbcConfig,
                        geo: String, coicop: String, unit: String): Unit = {
+    val table = sqlTable(cfg.table)
     val conn = DriverManager.getConnection(cfg.url, cfg.user, cfg.password)
     try {
-      ensureTable(conn, cfg.table)
+      ensureTable(conn, table)
       conn.setAutoCommit(false)
       IsolationLevels.get(cfg.isolationLevel).foreach(conn.setTransactionIsolation)
       try {
-        deleteSeries(conn, cfg.table, geo, coicop, unit)
-        insertRows(conn, cfg, schema, rows)
+        deleteSeries(conn, table, geo, coicop, unit)
+        insertRows(conn, table, cfg, schema, rows)
         conn.commit()
       } catch {
         case e: Throwable => conn.rollback(); throw e
@@ -146,12 +139,12 @@ object JdbcSink {
     "REPEATABLE_READ" -> Connection.TRANSACTION_REPEATABLE_READ,
     "SERIALIZABLE" -> Connection.TRANSACTION_SERIALIZABLE)
 
-  private def insertRows(conn: Connection, cfg: JdbcConfig, schema: StructType,
-                         rows: Array[Row]): Unit = {
+  private def insertRows(conn: Connection, table: String, cfg: JdbcConfig,
+                         schema: StructType, rows: Iterator[Row]): Unit = {
     val dialect = JdbcDialects.get(cfg.url)
     val nullTypes = schema.fields.map(f => JdbcUtils.getJdbcType(f.dataType, dialect).jdbcNullType)
     val ps = conn.prepareStatement(
-      s"INSERT INTO ${cfg.table} (${schema.fieldNames.mkString(", ")}) " +
+      s"INSERT INTO $table (${schema.fieldNames.mkString(", ")}) " +
         s"VALUES (${schema.fields.map(_ => "?").mkString(", ")})")
     try {
       rows.grouped(cfg.batchSize).foreach { batch =>

@@ -14,7 +14,7 @@ import scala.jdk.CollectionConverters._
   * the cartesian product of per-dimension category code lists in `id` order;
   * `value` is either a dense JSON array (nulls allowed) or a sparse object
   * keyed by the *string* flat index — missing indices densify to null rows,
-  * which are KEPT (`:101–102`).
+  * which are KEPT (`:101–102`), and an index outside `[0, n)` is rejected.
   *
   * Spark-first design: the flat index is decoded into per-dimension positions
   * with pure column arithmetic — `(i / stride_j) % size_j` — and positions map
@@ -74,6 +74,9 @@ object JsonStat {
     } else if (valueNode.isObject) {
       val m = valueNode.fields().asScala
         .map(e => e.getKey.toLong -> e.getValue.asDouble()).toMap
+      val outside = m.keys.filter(i => i < 0 || i >= total).toSeq.sorted
+      require(outside.isEmpty, s"sparse value index ${outside.take(5).mkString(", ")} " +
+        s"outside [0, $total), the product of sizes")
       JsonStatCube(dims, None, Some(m))
     } else {
       throw new IllegalArgumentException(s"unsupported value type: ${valueNode.getNodeType}")

@@ -130,7 +130,7 @@ object Exec {
     sys.env.get("SPARK_GRAFT_DRIVER_GATE").exists(_.equalsIgnoreCase("off"))
 
   /** Row cap of the small-input paths through the medallion (one-partition
-    * silver sort, driver-side quality gate, one-transaction JDBC load). A
+    * silver sort, driver-side quality gate, collected JDBC rows). A
     * single series is a few hundred rows; there every Spark stage, query and
     * commit is fixed overhead, while above the cap the distributed plans
     * keep their scaling. */

@@ -14,8 +14,9 @@ import org.apache.spark.sql.types._
   * single groupBy). The gate, `runChecks`, has two branches with identical
   * reports: a small input (at most `Exec.SmallInputRows` rows, e.g. one
   * series) is collected in ONE bounded job and checked on the driver; a
-  * larger one runs three concurrent aggregation queries — the scalar checks,
-  * the duplicate-key grouping and the continuity grouping.
+  * larger one runs the scalar checks, the duplicate-key grouping and the
+  * continuity grouping as ONE Spark action (a union of three one-row
+  * aggregates, read by position).
   */
 object QualityChecks {
 
@@ -353,8 +354,8 @@ object QualityChecks {
     *     ([[driverChecks]] has the details) and Q2–Q7 are computed from
     *     those rows on the driver;
     *   - larger input, a column type the driver branch does not handle, or
-    *     `SPARK_GRAFT_DRIVER_GATE=off`: [[distributedChecks]], three
-    *     concurrent aggregation queries.
+    *     `SPARK_GRAFT_DRIVER_GATE=off`: [[distributedChecks]], one Spark
+    *     action over three aggregations.
     */
   def runChecks(df: DataFrame, requiredCols: Seq[String], keyCols: Seq[String],
                 timeCol: String, valueCol: String, groupCols: Seq[String]): Report =
@@ -374,11 +375,13 @@ object QualityChecks {
     if (missing.nonEmpty) Report(passed = false, Seq(q1), Map.empty) else rest(q1)
   }
 
-  /** The distributed branch of [[runChecks]]. All scalar checks share ONE
-    * aggregation job; duplicate-keys and continuity each need their own
-    * grouping, so those two jobs run CONCURRENTLY with the scalar job (the
-    * three are independent Spark actions — on a cluster their stages overlap,
-    * so the gate costs max(scan) wall-clock, not 3×scan).
+  /** The distributed branch of [[runChecks]]: ONE Spark action. The scalar
+    * aggregate, the duplicate-key aggregate and the continuity aggregate are
+    * one-row frames of one shape (branch tag, counts, summary strings); their
+    * union is collected once and each value is read by its position, never
+    * by a column name that a checked column's derived name could shadow.
+    * The three branches keep their own aggregations, so AQE still runs
+    * their shuffle stages concurrently.
     */
   private[quality] def distributedChecks(df: DataFrame, requiredCols: Seq[String],
       keyCols: Seq[String], timeCol: String, valueCol: String,
@@ -389,35 +392,25 @@ object QualityChecks {
   private def distributedReport(df: DataFrame, q1: CheckResult, requiredCols: Seq[String],
       keyCols: Seq[String], timeCol: String, valueCol: String,
       groupCols: Seq[String]): Report = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-
-    val scalarAggs: Seq[Column] =
-      requiredCols.map(nullCountCol) ++ Seq(
-        nonPositiveCount(df, valueCol),
-        nullTimeCount(df, timeCol),
-        count(lit(1)).as("rows"),
-        min(col(timeCol)).cast("string").as("min_time"),
-        max(col(timeCol)).cast("string").as("max_time"),
-        min(col(valueCol)).cast("string").as("value_min"),
-        max(col(valueCol)).cast("string").as("value_max"))
-    val scalarsF = Future { df.agg(scalarAggs.head, scalarAggs.tail: _*).collect()(0) }
-    val dupF = Future { duplicateKeyCount(df, keyCols).collect()(0).getAs[Long]("n_dup_rows") }
-    val contF = Future {
-      monthlyContinuity(df, groupCols, timeCol)
-        .agg(count(lit(1)).as("groups"),
-          count(when(!col("ok"), 1)).as("failing")).collect()(0)
-    }
-    val scalars = Await.result(scalarsF, Duration.Inf)
-    def l(name: String): Long = scalars.getAs[Long](name)
-    def s(name: String): String = Option(scalars.getAs[String](name)).getOrElse("null")
-    val continuity = Await.result(contF, Duration.Inf)
-
-    report(q1, requiredCols.map(c => c -> l(s"${c}_nulls")),
-      Await.result(dupF, Duration.Inf), l(s"${valueCol}_nonpositive"), l("time_nulls"),
-      continuity.getAs[Long]("groups"), continuity.getAs[Long]("failing"),
-      l("rows"), SummaryKeys.map(s))
+    val noStrings = typedLit(Seq.empty[String])
+    // counts: one null count per required column, then the non-positive
+    // values, the null times and the rows; strings: SummaryKeys' order
+    val scalars = df.agg(lit(0),
+      array(requiredCols.map(nullCountCol) ++ Seq(nonPositiveCount(df, valueCol),
+        nullTimeCount(df, timeCol), count(lit(1))): _*),
+      array(Seq(min(col(timeCol)), max(col(timeCol)), min(col(valueCol)), max(col(valueCol)))
+        .map(_.cast("string")): _*))
+    val dups = duplicateKeyCount(df, keyCols).select(lit(1), array(col("n_dup_rows")), noStrings)
+    val continuity = monthlyContinuity(df, groupCols, timeCol)
+      .agg(lit(2), array(count(lit(1)), count(when(!col("ok"), 1))), noStrings)
+    val byBranch = scalars.union(dups).union(continuity).collect()
+      .map(r => r.getInt(0) -> r).toMap
+    def counts(branch: Int): Seq[Long] = byBranch(branch).getSeq[Long](1)
+    val n = requiredCols.size
+    val scalarCounts = counts(0)
+    report(q1, requiredCols.zip(scalarCounts), counts(1)(0), scalarCounts(n),
+      scalarCounts(n + 1), counts(2)(0), counts(2)(1), scalarCounts(n + 2),
+      byBranch(0).getSeq[String](2).map(v => Option(v).getOrElse("null")))
   }
 
   /** The driver branch of [[runChecks]] without its row cap (the gate in

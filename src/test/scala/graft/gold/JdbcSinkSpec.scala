@@ -6,10 +6,10 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Executes the JDBC gold path end-to-end against embedded Derby (in-memory,
-  * ships with Spark, same JVM as the local executors — so the Spark JDBC
-  * append actually writes through executor tasks). Proves the reference's
-  * delete-then-append contract (`load_hicp_to_sql.py:54–101`): loading the
-  * same series twice leaves the warehouse unchanged.
+  * ships with Spark). Proves the reference's delete-then-append contract
+  * (`load_hicp_to_sql.py:54–101`) through both row sources of the one load
+  * routine: loading the same series twice leaves the warehouse unchanged,
+  * and a failed replay leaves the old rows.
   */
 class JdbcSinkSpec extends SparkSpec {
 
@@ -79,24 +79,51 @@ class JdbcSinkSpec extends SparkSpec {
     }
   }
 
-  test("the distributed load branch is replay-idempotent too") {
-    assertReplayIdempotent("fact_hicp_distributed") { (df, cfg, geo) =>
-      JdbcSink.loadDistributed(df, cfg, geo, "CP00", "I15")
+  test("the streamed row source is replay-idempotent too") {
+    assertReplayIdempotent("fact_hicp_streamed") { (df, cfg, geo) =>
+      JdbcSink.loadStreamed(df, cfg, geo, "CP00", "I15")
     }
   }
 
-  test("a replay that fails mid-insert rolls back: the old rows survive") {
-    // one-row batches, so the first row's INSERT has run when the second
-    // one violates NOT NULL
-    val cfg = JdbcSink.JdbcConfig(url, "fact_hicp_atomic", "", "", batchSize = 1)
+  /** Load DE, then replay it with a NOT NULL violation on the second row in
+    * one-row batches, so the first row's INSERT has run when the second one
+    * fails: the old rows must survive. */
+  private def assertFailedReplayRollsBack(table: String)
+      (load: (org.apache.spark.sql.DataFrame, JdbcSink.JdbcConfig) => Unit): Unit = {
+    val cfg = JdbcSink.JdbcConfig(url, table, "", "", batchSize = 1)
     val de = rows.filter(col("geo") === "DE")
-    JdbcSink.loadSeries(de, cfg, "DE", "CP00", "I15")
+    load(de, cfg)
     val bad = de.withColumn("processed_at_utc",
       when(col("time") === to_date(lit("2024-02-01")), lit(null).cast("string"))
         .otherwise(col("processed_at_utc")))
-    intercept[Exception](JdbcSink.loadSeries(bad, cfg, "DE", "CP00", "I15"))
-    assert(count(table = "fact_hicp_atomic") == 2, "the failed replay must not delete the series")
-    assert(math.abs(deFeb("fact_hicp_atomic") - 105.7) < 1e-9)
+    intercept[Exception](load(bad, cfg))
+    assert(count(table = table) == 2, "the failed replay must not delete the series")
+    assert(math.abs(deFeb(table) - 105.7) < 1e-9)
+  }
+
+  test("a replay that fails mid-insert rolls back: the old rows survive") {
+    assertFailedReplayRollsBack("fact_hicp_atomic")(JdbcSink.loadSeries(_, _, "DE", "CP00", "I15"))
+  }
+
+  test("a streamed replay that fails mid-insert rolls back too") {
+    assertFailedReplayRollsBack("fact_hicp_streamed_atomic")(
+      JdbcSink.loadStreamed(_, _, "DE", "CP00", "I15"))
+  }
+
+  test("a table name that is not a plain SQL identifier is rejected before any SQL runs") {
+    val hostile = "fact_hicp; DROP TABLE x"
+    val de = rows.filter(col("geo") === "DE")
+    intercept[IllegalArgumentException](JdbcSink.createTableDdl(hostile))
+    intercept[IllegalArgumentException](
+      JdbcSink.loadSeries(de, JdbcSink.JdbcConfig(url, hostile, "", ""), "DE", "CP00", "I15"))
+    Seq(hostile, "gold.fact_hicp", "fact_hicp'", "1fact", "").foreach { name =>
+      val c = conn()
+      try {
+        intercept[IllegalArgumentException](JdbcSink.ensureTable(c, name))
+        intercept[IllegalArgumentException](JdbcSink.deleteSeries(c, name, "DE", "CP00", "I15"))
+      } finally c.close()
+    }
+    assert(JdbcSink.createTableDdl("Fact_HICP_2").startsWith("CREATE TABLE Fact_HICP_2 ("))
   }
 
   test("loadSeries honors a non-default table name end to end") {

@@ -141,6 +141,20 @@ class JsonStatSpec extends SparkSpec {
     }
   }
 
+  test("error: a sparse value index outside [0, n) names the index") {
+    def sparse(value: String) = JsonStat.parse(
+      s"""{"id": ["geo", "time"], "size": [1, 3],
+         |"dimension": {"geo": {"category": {"index": {"LU": 0}}},
+         |              "time": {"category": {"index": {"2024M01": 0, "2024M02": 1, "2024M03": 2}}}},
+         |"value": $value}""".stripMargin)
+    assert(sparse("""{"0": 1.0, "2": 3.0}""").sparseValues.get.size == 2)
+    Seq("3" -> """{"0": 1.0, "2": 3.0, "3": 4.0}""", "-1" -> """{"-1": 1.0, "1": 2.0}""")
+      .foreach { case (key, value) =>
+        val e = intercept[IllegalArgumentException](sparse(value))
+        assert(e.getMessage.contains(s"index $key outside [0, 3)"), e.getMessage)
+      }
+  }
+
   test("error: id/size length mismatch fails loudly at parse time") {
     val e = intercept[IllegalArgumentException] {
       JsonStat.parse(

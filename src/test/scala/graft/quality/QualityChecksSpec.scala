@@ -177,6 +177,27 @@ class QualityChecksSpec extends SparkSpec {
     checked(df.limit(0), Seq("time"), Seq.empty, "time", "value", Seq.empty)
   }
 
+  test("a required column named time keeps its own null count when timeCol is another") {
+    // the distributed branch derives `time_nulls` both for the required
+    // column `time` (Q2) and for the time column `t2` (Q5)
+    val rows = clean.map { case (t, g, c, u, v) => (t, Option(t), g, c, u, v) }
+    val may = ts("2024-05-01 00:00:00")
+    val t2Null = (rows :+ ((may, None, "LU", "CP00", "I15", Some(1.0))))
+      .toDF("time", "t2", "geo", "coicop", "unit", "value")
+    def check(df: DataFrame) = checked(df, requiredCols = Silver,
+      keyCols = Seq("t2", "geo", "coicop", "unit"), timeCol = "t2", valueCol = "value",
+      groupCols = Seq("geo", "coicop", "unit"))
+    val r = check(t2Null)
+    assert(r.checks.find(_.name == "no_nulls").get.detail("time") == "0")
+    assert(failing(r) == Set("times_parseable"))
+    // the reverse: `time` has the null, `t2` none — Q2 must fail
+    val timeNull = (rows :+ ((null: Timestamp, Some(may), "LU", "CP00", "I15", Some(1.0))))
+      .toDF("time", "t2", "geo", "coicop", "unit", "value")
+    val reverse = check(timeNull)
+    assert(reverse.checks.find(_.name == "no_nulls").get.detail("time") == "1")
+    assert(failing(reverse) == Set("no_nulls"))
+  }
+
   test("both branches agree on qc_report_gate column types: DATE time, DECIMAL value, INT/LONG keys") {
     val schema = StructType(Seq(
       StructField("l_orderkey", LongType), StructField("l_linenumber", IntegerType),
