@@ -91,8 +91,7 @@ object DedupOps {
     * collisions (P ≈ n²/2⁶⁵ — negligible at any realistic block size).
     */
   def ngramJaccardPairs(docs: DataFrame, bucketWidth: Int = 16,
-                        threshold: Double = 0.5,
-                        maxBroadcastCandidates: Long = 1000000L): DataFrame = {
+                        threshold: Double = 0.5): DataFrame = {
     graft.functions.MinHashFunctions.register(docs.sparkSession)
     val base = docs
       .withColumn("toks", TextOps.tokens(col("text")))
@@ -146,11 +145,11 @@ object DedupOps {
       .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
         greatest(col("doc_a"), col("doc_b")).as("doc_b"), col("lang"))
       .distinct()
-    // verification attaches the sorted hash arrays by joining the (gated)
-    // candidate list onto the shingled table — when candidates broadcast,
-    // the arrays never shuffle at all
+    // verification attaches the sorted hash arrays by joining the
+    // candidate list onto the shingled table — when Spark broadcasts the
+    // candidates, the arrays never shuffle at all
     val sets = base.select(col("doc_id"), col("sh"))
-    Exec.broadcastIfSmall(candidates, maxBroadcastCandidates)
+    candidates
       .join(sets.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
       .join(sets.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), Seq("doc_b"))
       // shingle_hashes emits sorted arrays: the intersection is a native
@@ -175,8 +174,7 @@ object DedupOps {
     * CONTRACT: recall covers same-(lang, source) pairs; cross-source
     * containment needs the LSH family's length-agnostic bands instead.
     */
-  def containmentPairs(docs: DataFrame, threshold: Double = 0.8,
-                       maxBroadcastCandidates: Long = 1000000L): DataFrame = {
+  def containmentPairs(docs: DataFrame, threshold: Double = 0.8): DataFrame = {
     graft.functions.MinHashFunctions.register(docs.sparkSession)
     val base = docs
       .withColumn("toks", TextOps.tokens(col("text")))
@@ -211,7 +209,7 @@ object DedupOps {
         col("lang"), col("source"))
       .distinct()
     val sets = base.select(col("doc_id"), col("sh"))
-    Exec.broadcastIfSmall(candidates, maxBroadcastCandidates)
+    candidates
       .join(sets.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
       .join(sets.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), Seq("doc_b"))
       .withColumn("inter", expr("sorted_intersect_count(sh_a, sh_b)"))
@@ -237,9 +235,8 @@ object DedupOps {
     */
   def minhashLshPairs(docs: DataFrame, k: Int = 32, bands: Int = 8,
                       threshold: Double = 0.5,
-                      maxBroadcastCandidates: Long = 1000000L,
                       memoKey: Option[String] = None): DataFrame =
-    minhashPairsMemo(docs, k, bands, threshold, maxBroadcastCandidates, memoKey)
+    minhashPairsMemo(docs, k, bands, threshold, memoKey)
       .orderBy(col("doc_a"), col("doc_b"))
 
   /** Session-scoped memo of the VERIFIED pair set: the pair list, the
@@ -259,16 +256,15 @@ object DedupOps {
   }
 
   private def minhashPairsMemo(docs: DataFrame, k: Int, bands: Int,
-                               threshold: Double, maxBroadcastCandidates: Long,
-                               memoKey: Option[String]): DataFrame =
+                               threshold: Double, memoKey: Option[String]): DataFrame =
     memoKey match {
       case None =>
-        minhashLshPairsUnsorted(docs, k, bands, threshold, maxBroadcastCandidates)
+        minhashLshPairsUnsorted(docs, k, bands, threshold)
       case Some(mk) =>
         val full = docs.sparkSession.sparkContext.applicationId +
           s"#$mk#$k#$bands#$threshold"
         pairMemo.getOrElseUpdate(full,
-          minhashLshPairsUnsorted(docs, k, bands, threshold, maxBroadcastCandidates)
+          minhashLshPairsUnsorted(docs, k, bands, threshold)
             .localCheckpoint())
     }
 
@@ -276,8 +272,7 @@ object DedupOps {
     * clustering pass) that only need the edges, not a presentation order.
     */
   private def minhashLshPairsUnsorted(docs: DataFrame, k: Int, bands: Int,
-                                      threshold: Double,
-                                      maxBroadcastCandidates: Long): DataFrame = {
+                                      threshold: Double): DataFrame = {
     val rowsPerBand = k / bands
     graft.functions.MinHashFunctions.register(docs.sparkSession)
     // IDENTICAL-FINGERPRINT COLLAPSE (r16 sf10 graduation finding): a
@@ -301,8 +296,7 @@ object DedupOps {
       .persist().transform(Exec.trackPersisted)
     val reps = members.groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
     val withSig = docs
-      .join(Exec.broadcastIfSmall(reps.select(col("doc_id")),
-        maxBroadcastCandidates), Seq("doc_id"))
+      .join(reps.select(col("doc_id")), Seq("doc_id"))
       .withColumn("toks", toksOf)
       .withColumn("hs", expr("shingle_hashes(toks, 3)"))
       .filter(size(col("hs")) > 0)
@@ -327,12 +321,10 @@ object DedupOps {
     // modulo negligible 64-bit collisions; shingle_hashes already dedups)
     val sets = withSig.select(col("doc_id"), col("hs").as("hset"))
     // the candidate pair list is normally orders of magnitude smaller than
-    // the shingle-set table — broadcast it onto both set joins so the wide
-    // hash arrays never shuffle. The hint is GATED on the actual candidate
-    // count: a degenerate corpus can make the pair set arbitrarily large,
-    // and past the cap we fall back to a shuffle join (AQE may still
-    // broadcast from runtime stats if it genuinely fits).
-    val repPairs = Exec.broadcastIfSmall(candidates, maxBroadcastCandidates)
+    // the shingle-set table, and AQE broadcasts it onto both set joins from
+    // its runtime size. It carries NO hint: a degenerate corpus can make
+    // the pair set arbitrarily large, and then the joins stay shuffles.
+    val repPairs = candidates
       .join(sets.select(col("doc_id").as("doc_a"), col("hset").as("h_a")), Seq("doc_a"))
       .join(sets.select(col("doc_id").as("doc_b"), col("hset").as("h_b")), Seq("doc_b"))
       .filter(sizeCompatible(col("h_a"), col("h_b"), threshold))
@@ -410,14 +402,13 @@ object DedupOps {
     // candidates and recall stays exact relative to this reference —
     // while the verification join prices |c(r=2)| pairs, not the r=1
     // reference's ~100× blowup (measured 2.3M vs 28k at sf1; the r=1
-    // member's cost still shows, as its candidate COUNT). Candidate list
-    // broadcast-gated onto the set joins so the wide hash arrays never
-    // shuffle (the production pair generator's contract).
+    // member's cost still shows, as its candidate COUNT). The candidate
+    // list joins the sets unhinted, as in the production pair generator.
     // the r=2 candidate set is BOTH the verification input and one of the
     // swept configs — materialize it once (r17; it was band-joined twice)
     val candRef = Exec.trackTransient(candidates(k / 2).localCheckpoint())
     val truth = Exec.trackTransient(
-      Exec.broadcastIfSmall(candRef, 1000000L)
+      candRef
       .join(sets.select(col("doc_id").as("doc_a"), col("hset").as("h_a")), Seq("doc_a"))
       .join(sets.select(col("doc_id").as("doc_b"), col("hset").as("h_b")), Seq("doc_b"))
       .filter(sizeCompatible(col("h_a"), col("h_b"), threshold))
@@ -475,7 +466,7 @@ object DedupOps {
     * batch of documents probes the standing band index of the EXISTING
     * corpus, emitting only new-vs-corpus and new-vs-new verified pairs.
     * The corpus is never re-paired against itself: candidate generation is
-    * `batch_bands ⋈ all_bands` with the batch side build/broadcast-gated,
+    * `batch_bands ⋈ all_bands` with the batch side the smaller join input,
     * so pairing cost scales with |batch| · bucket-occupancy, not |corpus|²
     * — the corpus-side work is the one-time linear index build (signature
     * + band explode, which a production pipeline persists between runs).
@@ -493,9 +484,7 @@ object DedupOps {
     */
   def incrementalMinhashPairs(corpus: DataFrame, batch: DataFrame,
                               k: Int = 32, bands: Int = 8,
-                              threshold: Double = 0.5,
-                              maxBroadcastCandidates: Long = 1000000L,
-                              maxBroadcastBatchBands: Long = 4000000L): DataFrame = {
+                              threshold: Double = 0.5): DataFrame = {
     val rowsPerBand = k / bands
     graft.functions.MinHashFunctions.register(corpus.sparkSession)
     def sigs(docs: DataFrame, isNew: Boolean): DataFrame = docs
@@ -512,11 +501,10 @@ object DedupOps {
       posexplode(expr(s"band_hashes(sig, $bands, $rowsPerBand)"))
         .as(Seq("band", "band_key")))
     // PROBE: batch bands against the full index. The batch side is the
-    // small one — broadcast-gate it so the standing index never shuffles
-    // (the production shape: index stays partitioned where it lives).
+    // small one; Spark broadcasts it while it is small enough.
     // new-new pairs arrive in both orientations; normalize + distinct.
     val batchBands = banded(withSig.filter(col("is_new")))
-    val candidates = Exec.broadcastIfSmall(batchBands, maxBroadcastBatchBands)
+    val candidates = batchBands
       .as("l")
       .join(banded(withSig).as("r"), Seq("band", "band_key"))
       .filter(col("l.doc_id") =!= col("r.doc_id"))
@@ -526,10 +514,9 @@ object DedupOps {
         (col("l.is_new") && col("r.is_new")).as("both_new"))
       .dropDuplicates("doc_a", "doc_b")
     // verification: exact Jaccard on the hashed shingle sets, candidate
-    // list broadcast-gated onto both set joins (the minhashLshPairs
-    // contract — wide hash arrays never cross an exchange)
+    // list joined unhinted onto both set joins (the minhashLshPairs shape)
     val sets = withSig.select(col("doc_id"), col("hs").as("hset"))
-    Exec.broadcastIfSmall(candidates, maxBroadcastCandidates)
+    candidates
       .join(sets.select(col("doc_id").as("doc_a"), col("hset").as("h_a")), Seq("doc_a"))
       .join(sets.select(col("doc_id").as("doc_b"), col("hset").as("h_b")), Seq("doc_b"))
       .filter(sizeCompatible(col("h_a"), col("h_b"), threshold))
@@ -731,7 +718,7 @@ object DedupOps {
                       threshold: Double = 0.5, maxIters: Int = 20,
                       memoKey: Option[String] = None): DataFrame =
     connectedComponents(
-      minhashPairsMemo(docs, k, bands, threshold, 1000000L, memoKey), maxIters)
+      minhashPairsMemo(docs, k, bands, threshold, memoKey), maxIters)
 
   /** Cluster RESOLUTION policy — the decision the dedup pipeline actually
     * ships: per near-dup component, which copy SURVIVES. The naive policy
@@ -769,7 +756,7 @@ object DedupOps {
   def nearDupDegreeHist(docs: DataFrame, k: Int = 32, bands: Int = 8,
                         threshold: Double = 0.5,
                         memoKey: Option[String] = None): DataFrame =
-    minhashPairsMemo(docs, k, bands, threshold, 1000000L, memoKey)
+    minhashPairsMemo(docs, k, bands, threshold, memoKey)
       .select(explode(array(col("doc_a"), col("doc_b"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("degree"))
       .groupBy(col("degree")).agg(count(lit(1)).as("n_nodes"))
@@ -820,8 +807,7 @@ object DedupOps {
       .persist().transform(Exec.trackPersisted)
     val reps = members.groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
     val sigs = docs
-      .join(Exec.broadcastIfSmall(reps.select(col("doc_id")), 1000000L),
-        Seq("doc_id"))
+      .join(reps.select(col("doc_id")), Seq("doc_id"))
       .withColumn("toks", TextOps.tokens(col("text")))
       .withColumn("sig", expr("simhash61(toks)"))
       .select(col("doc_id"), col("sig"))
@@ -881,7 +867,7 @@ object DedupOps {
     *
     * Every exchange before verification carries ≤ segment-width strings
     * and long ids; the 64-char keys join in only for the final
-    * (byte-gated broadcast) verification. Candidate cardinality is
+    * verification, broadcast while the key table is small. Candidate cardinality is
     * INSTRUMENTED: the count after the segment join is logged, with a
     * warning past 64× the representative count — the signal that a corpus
     * defeats the segment selectivity and the operator is drifting
@@ -899,8 +885,7 @@ object DedupOps {
     * diagnostic is the pre-flight check for it).
     */
   def editDistancePairs(docs: DataFrame, keyLen: Int = 64,
-                        maxDist: Int = 4,
-                        maxBroadcastProfileBytes: Long = Exec.DefaultBroadcastBytes): DataFrame = {
+                        maxDist: Int = 4): DataFrame = {
     val keyed = docs
       .select(col("doc_id"), col("lang"),
         rpad(substring(col("text"), 1, keyLen), keyLen, " ").as("key"))
@@ -963,13 +948,12 @@ object DedupOps {
         s"the representative count ($nReps) — the segment filter is not " +
         "selective on this corpus and the verification join is drifting " +
         "quadratic; consider a longer key or a smaller maxDist")
-    // byte-gated broadcast of the per-doc key column for verification:
-    // a key row is ~80 B, candidates can be orders of magnitude more pairs
-    // — broadcasting keys means nothing wide ever enters an exchange; past
-    // the gate the joins degrade to shuffles (narrow pairs move, each key
-    // row moves once)
-    val prof = Exec.broadcastIfSmallBytes(
-      keys.select(col("doc_id"), col("key")), maxBroadcastProfileBytes)
+    // the per-doc key column for verification: a key row is ~80 B,
+    // candidates can be orders of magnitude more pairs. `keys` is
+    // materialized (counted above), so Spark plans from its real size:
+    // broadcast keys mean nothing wide ever enters an exchange; too large,
+    // the joins are shuffles (narrow pairs move, each key row moves once)
+    val prof = keys.select(col("doc_id"), col("key"))
     val repPairs = cand
       .join(prof.select(col("doc_id").as("doc_a"), col("key").as("key_a")),
         Seq("doc_a"))
@@ -1248,15 +1232,15 @@ object DedupOps {
     * operator in DedupOpsSpec).
     *
     * Scale shape: the corpus contributes ONE linear scan, and its windows
-    * NEVER shuffle — the batch's distinct hash set (byte-gated broadcast)
+    * NEVER shuffle — the batch's distinct hash set (broadcast while small)
     * semi-join-filters the corpus window stream map-side, so only hashes
     * the batch can actually match reach the occurrence-count exchange (a
     * first cut aggregated ALL corpus hashes and paid a corpus-wide
     * shuffle: 18.4 s at sf1, MORE than the full batch recompute; the
     * probe-set pushdown makes the exchange batch-proportional). In
     * production the counted index is persisted once and the scan
-    * disappears too; a batch too large for the broadcast gate falls back
-    * to the shuffle join. Batch-internal duplicates ride a window count
+    * disappears too; a batch too large to broadcast falls back to the
+    * shuffle join. Batch-internal duplicates ride a window count
     * over the batch's own hashes. Cost per ingest ∝ batch chars +
     * matched index rows, never corpus².
     */
@@ -1271,9 +1255,10 @@ object DedupOps {
     // probe + coverage both read the batch windows — pin one pass
     val batchWins = wins(batch).persist().transform(Exec.trackPersisted)
     // probe-set pushdown: a corpus hash the batch never produces cannot
-    // change any batch window's coverage — drop it BEFORE the aggregate
-    val probeSet = Exec.broadcastIfSmallBytes(
-      batchWins.select(col("h")).distinct())
+    // change any batch window's coverage — drop it BEFORE the aggregate.
+    // The set is often past AQE's runtime threshold yet small enough to
+    // broadcast (unhinted it shuffled the corpus: 9.5 → 17.1 s at sf1)
+    val probeSet = Exec.broadcastIfKnownSmall(batchWins.select(col("h")).distinct())
     val index = wins(corpus)
       .join(probeSet, Seq("h"), "left_semi")
       .groupBy(col("h")).agg(count(lit(1)).as("n_corpus"))

@@ -11,47 +11,26 @@ import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, lit,
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.Platform
 
-/** Execution-shape helpers shared by the operator families. */
+/** Execution-shape helpers shared by the operator families.
+  *
+  * No helper here runs a job to choose a join strategy. The families hint
+  * `broadcast` where a side is small by construction (a filtered dimension,
+  * a one-row scalar) or was already counted for the family's own loop;
+  * every other side goes into the join bare, and Spark picks the strategy:
+  * the planner from a scan's static size, AQE from a computed side's
+  * runtime size. [[broadcastIfKnownSmall]] covers the computed sides that
+  * measured slower that way. */
 object Exec {
 
-  /** Broadcast `df` only when its row count is at most `maxRows`; otherwise
-    * return it unhinted and let AQE pick the join strategy from runtime
-    * shuffle stats. An UNCONDITIONAL broadcast hint on a data-dependent
-    * candidate set is a scale hazard: a boilerplate-heavy corpus (every doc
-    * landing in one LSH band bucket) inflates the candidate-pair set past
-    * the broadcast limit and kills the job. The count here is cheap — `df`
-    * is persisted first and every call site passes a narrow
-    * (few-long-columns) frame, so the gate costs one small job and the
-    * frame is computed once either way.
-    */
-  def broadcastIfSmall(df: DataFrame, maxRows: Long): DataFrame = {
-    val pinned = trackPersisted(df.persist())
-    if (pinned.count() <= maxRows) broadcast(pinned) else pinned
-  }
-
-  /** Byte-gated variant of [[broadcastIfSmall]]: broadcast only when the
-    * frame's MEASURED in-memory size is at most `maxBytes`. A row-count gate
-    * silently assumes a row width — `editDistancePairs`' old 1M-row default
-    * was ~600 MB once the 62-hash array per profile row is priced in, far
-    * past what a broadcast should cost per executor. Sizing the gate in
-    * bytes makes the memory contract explicit and width-proof.
-    *
-    * Mechanics: the frame is persisted, materialized by the same cheap
-    * `count()` the row gate already paid (so the gate adds no job), and the
-    * size read from the cached relation's accumulated batch stats
-    * (`withCachedData.stats.sizeInBytes` — actual bytes, not an optimizer
-    * estimate, because materialization precedes the read). The default cap,
-    * 128 MiB, is ~1–2% of a typical executor heap; the deserialized
-    * broadcast hash relation runs a small constant factor larger than the
-    * columnar-compressed measurement, which the margin absorbs. Past the
-    * gate the join degrades to a shuffle, same as the row variant.
-    */
-  def broadcastIfSmallBytes(df: DataFrame,
-                            maxBytes: Long = DefaultBroadcastBytes): DataFrame = {
-    val pinned = trackPersisted(df.persist())
-    pinned.count()
-    val bytes = pinned.queryExecution.withCachedData.stats.sizeInBytes
-    if (bytes <= maxBytes) broadcast(pinned) else pinned
+  /** `df`, hinted `broadcast` when its known size is at most 128 MiB: the
+    * broadcast decision for a computed join side that is usually small but
+    * may be past AQE's 10 MiB runtime threshold. The size is what is known
+    * without running anything: the [[measuredBytes]] of a materialized
+    * frame, else the optimizer's estimate. It runs no Spark job. */
+  def broadcastIfKnownSmall(df: DataFrame): DataFrame = {
+    val bytes = measuredBytes(df).map(BigInt(_))
+      .getOrElse(df.queryExecution.optimizedPlan.stats.sizeInBytes)
+    if (bytes <= (128L << 20)) broadcast(df) else df
   }
 
   /** A frame over the persisted `df`'s cached relation itself, for reading
@@ -64,9 +43,6 @@ object Exec {
     new org.apache.spark.sql.classic.Dataset[Row](
       df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
       df.queryExecution.withCachedData, org.apache.spark.sql.Encoders.row(df.schema))
-
-  /** Default byte cap for [[broadcastIfSmallBytes]]: 128 MiB. */
-  val DefaultBroadcastBytes: Long = 128L << 20
 
   /** Default byte budget for a driver-resident collect gate
     * ([[fitsDriverCollect]]): 1/16 of the driver heap, capped at 256 MiB.
@@ -105,9 +81,8 @@ object Exec {
     * fast path used to gate on a ROW count alone (`maxDriverEdges = 4M`),
     * silently assuming a row width — 4M three-long rows is ~100 MB of data
     * but order 0.5–1 GB of driver Row objects. The gate now ALSO prices the
-    * frame's MEASURED bytes (the [[broadcastIfSmallBytes]] doctrine applied
-    * to collects): `rows` must fit the caller's row cap, and when the gated
-    * frame is a materialized checkpoint its block bytes must fit
+    * frame's MEASURED bytes: `rows` must fit the caller's row cap, and when
+    * the gated frame is a materialized checkpoint its block bytes must fit
     * [[DefaultDriverCollectBytes]]. Width-proof: a frame of wide rows (fat
     * arrays, long strings) trips the byte leg long before the row leg.
     * Callers already have `rows` in hand (the gate statistic doubled as a

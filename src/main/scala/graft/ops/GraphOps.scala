@@ -1072,12 +1072,11 @@ object GraphOps {
   def modularity(edges: DataFrame, rounds: Int = 2,
                  memoKey: Option[String] = None): DataFrame = {
     val (e, _) = undirectedShared(edges, memoKey)
-    // the |V|-row label frame joins the |E|-row edge list three times —
-    // count-gate broadcast it (checkpointed frames report unknown stats,
-    // so without the hint every label join plans as a full edge shuffle;
-    // pageRank's rank-vector contract). Past the gate it degrades to
-    // hash joins on the narrow (long, long) keys.
-    val labels = Exec.broadcastIfSmall(lpaLabels(e, rounds, memoKey), 4000000L)
+    // the |V|-row label frame joins the |E|-row edge list three times; it
+    // is an eager checkpoint, so all three read one materialization, and
+    // Spark broadcasts it from its size (hash joins on the narrow
+    // (long, long) keys when it is too large)
+    val labels = lpaLabels(e, rounds, memoKey)
     val mRow = e.agg(count(lit(1)).as("m"))
     val deg = e.select(col("a").as("node"))
       .union(e.select(col("b").as("node")))
@@ -1159,7 +1158,8 @@ object GraphOps {
     * (src)-keyed self-join of the directed frame), whose output is
     * Σ_z deg(z)² — bounded because the sampled graph's degrees don't
     * grow with SF; the non-edge filter is one anti-join on the (long,
-    * long) pair; degree annotation is two count-gated broadcast joins.
+    * long) pair; degree annotation is two joins that Spark broadcasts
+    * while the degree table is small.
     * Nothing wider than two longs crosses any exchange.
     */
   def jaccardLinkPrediction(edges: DataFrame, k: Int = 25): DataFrame = {
@@ -1175,12 +1175,8 @@ object GraphOps {
       .join(e.select(col("a").as("x"), col("b").as("y")),
         Seq("x", "y"), "left_anti")
     cand
-      .join(Exec.broadcastIfSmall(
-        deg.select(col("src").as("x"), col("deg").as("deg_x")), 4000000L),
-        Seq("x"))
-      .join(Exec.broadcastIfSmall(
-        deg.select(col("src").as("y"), col("deg").as("deg_y")), 4000000L),
-        Seq("y"))
+      .join(deg.select(col("src").as("x"), col("deg").as("deg_x")), Seq("x"))
+      .join(deg.select(col("src").as("y"), col("deg").as("deg_y")), Seq("y"))
       .withColumn("jaccard", floor(
         col("common").cast("double")
           / (col("deg_x") + col("deg_y") - col("common")).cast("double")
@@ -1203,8 +1199,8 @@ object GraphOps {
     * once at the end. deg(z) ≥ 2 for every center (it is adjacent to both
     * endpoints), so ln never sees 1. Scale shape identical to the Jaccard
     * op: center-keyed wedge enumeration (Σ deg² on a degree-bounded
-    * sampled graph), the center's degree joined count-gated-broadcast
-    * BEFORE the pair aggregate, one anti-join against the edge set —
+    * sampled graph), the center's degree joined (broadcast by Spark while
+    * small) BEFORE the pair aggregate, one anti-join against the edge set —
     * nothing wider than two longs and a term integer in any exchange.
     */
   def adamicAdarLinks(edges: DataFrame, k: Int = 25): DataFrame = {
@@ -1217,9 +1213,7 @@ object GraphOps {
         col("d1.src") === col("d2.src") && col("d1.dst") < col("d2.dst"))
       .select(col("d1.src").as("z"), col("d1.dst").as("x"),
         col("d2.dst").as("y"))
-      .join(Exec.broadcastIfSmall(
-        deg.select(col("src").as("z"), col("deg").as("deg_z")), 4000000L),
-        Seq("z"))
+      .join(deg.select(col("src").as("z"), col("deg").as("deg_z")), Seq("z"))
       .withColumn("term",
         floor(lit(1000000.0) / log(col("deg_z").cast("double")) + 0.5)
           .cast("long"))
@@ -2305,12 +2299,12 @@ object GraphOps {
         .agg(sort_array(collect_list(col("nb"))).as("nbs"))
         .coalesce(8)
         .localCheckpoint())
-    // byte-gated, not unconditional: adjacency rows carry full neighbor
-    // arrays, so a large edge frame would blow past the broadcast limit —
-    // past the gate the hop joins degrade to shuffles (r14 advisor item).
-    // The estimate is one narrow agg over the already-checkpointed frame,
-    // NOT broadcastIfSmallBytes: its persist+count pass re-materializes
-    // the wide array rows into the memory store (measured +4 s at sf0.1)
+    // byte-gated (128 MiB), not unconditional: adjacency rows carry full
+    // neighbor arrays, so a large edge frame would blow past the broadcast
+    // limit — past the gate the hop joins degrade to shuffles (r14 advisor
+    // item). The estimate is one narrow agg over the already-checkpointed
+    // frame, which the driver gate below reads too (a persist+count pass
+    // re-materializes the wide array rows: measured +4 s at sf0.1)
     // coalesce: sum over an empty adjacency is NULL, and getLong would NPE
     val sz = adj.agg(
       coalesce(sum(size(col("nbs"))), lit(0L)).cast("long").as("entries"),
@@ -2326,7 +2320,7 @@ object GraphOps {
       return randomWalkDriver(adj, walkLen)
     val approxBytes = sz.getLong(0) * 8L + sz.getLong(1) * 24L
     val adjCur = adj.withColumnRenamed("x", "cur")
-    val bAdj = if (approxBytes <= Exec.DefaultBroadcastBytes)
+    val bAdj = if (approxBytes <= (128L << 20))
       broadcast(adjCur) else adjCur
     var frontier = adj.select(col("x").as("seed"), col("x").as("cur"))
     val visits = scala.collection.mutable.ListBuffer(

@@ -42,17 +42,18 @@ object Relational {
         count(lit(1)).as("count_order"))
       .orderBy(col("l_returnflag"), col("l_linestatus"))
 
-  /** TPC-H Q3-shaped: fact-fact join (sort-merge) + byte-gated customer
+  /** TPC-H Q3-shaped: fact-fact join (sort-merge) + customer segment
     * filter, grouped revenue, top-10. The customer side is filtered *before*
-    * the join, and its broadcast is BYTE-GATED — the segment slice is
-    * ~1/|segments| of a table that scales with the data, so past the cap
-    * the join degrades to a shuffle instead of an OOM'd mandatory hint.
+    * the join and carries no hint — the segment slice is ~1/|segments| of a
+    * table that scales with the data, so the planner broadcasts it from the
+    * scan's size while it is small and shuffles it past that, instead of an
+    * OOM'd mandatory hint.
     */
   def topRevenueOrders(li: DataFrame, orders: DataFrame, customer: DataFrame,
                        segment: String, k: Int): DataFrame = {
     val cust = customer.filter(col("c_mktsegment") === segment).select("c_custkey")
     li.join(orders, col("l_orderkey") === col("o_orderkey"))
-      .join(Exec.broadcastIfSmallBytes(cust), col("o_custkey") === col("c_custkey"))
+      .join(cust, col("o_custkey") === col("c_custkey"))
       .groupBy(col("l_orderkey"), col("o_orderdate"), col("o_orderpriority"))
       .agg(round(sum(revenue), 2).as("revenue"))
       .select(col("l_orderkey"), col("revenue"),
@@ -69,9 +70,9 @@ object Relational {
   def regionRevenue(li: DataFrame, orders: DataFrame, customer: DataFrame,
                     supplier: DataFrame, nation: DataFrame, region: DataFrame): DataFrame =
     li.join(orders, col("l_orderkey") === col("o_orderkey"))
-      .join(Exec.broadcastIfSmallBytes(customer),
+      .join(customer,
         col("o_custkey") === col("c_custkey"))
-      .join(Exec.broadcastIfSmallBytes(supplier),
+      .join(supplier,
         col("l_suppkey") === col("s_suppkey") &&
           col("c_nationkey") === col("s_nationkey"))
       .join(broadcast(nation), col("s_nationkey") === col("n_nationkey"))
@@ -236,8 +237,7 @@ object Relational {
     li.groupBy(col("l_partkey"))
       .agg(round(sum(col("l_quantity")), 2).as("total_qty"),
         count(lit(1)).as("n_lines"))
-      .join(Exec.broadcastIfSmallBytes(
-        part.select(col("p_partkey"), col("p_name"), col("p_brand"))),
+      .join(part.select(col("p_partkey"), col("p_name"), col("p_brand")),
         col("l_partkey") === col("p_partkey"))
       .select(col("l_partkey"), col("p_name"), col("p_brand"),
         col("total_qty"), col("n_lines"))
@@ -422,8 +422,7 @@ object Relational {
       .agg((avg(col("l_quantity")) * 0.2).as("qty_thresh"))
     li.join(thresh, Seq("l_partkey"))
       .filter(col("l_quantity") < col("qty_thresh"))
-      .join(Exec.broadcastIfSmallBytes(
-        part.select(col("p_partkey"), col("p_brand"))),
+      .join(part.select(col("p_partkey"), col("p_brand")),
         col("l_partkey") === col("p_partkey"))
       .groupBy(col("p_brand"))
       .agg(count(lit(1)).as("n_lines"),
@@ -901,8 +900,7 @@ object Relational {
       .withColumn("total", sum(col("qty")).over(w))
       .withColumn("rn", row_number().over(wOrd))
       .filter(col("rn") === 1)
-      .join(Exec.broadcastIfSmallBytes(
-        supplier.select(col("s_suppkey"), col("s_name"))),
+      .join(supplier.select(col("s_suppkey"), col("s_name")),
         col("l_suppkey") === col("s_suppkey"))
       .groupBy(col("s_suppkey"), col("s_name"))
       .agg(count(lit(1)).as("n_top_parts"),
@@ -1124,8 +1122,7 @@ object Relational {
   def regressionByNation(li: DataFrame, supplier: DataFrame,
                          nation: DataFrame): DataFrame = {
     def q4(c: Column): Column = floor(c * 10000 + 0.5) / 10000
-    li.join(Exec.broadcastIfSmallBytes(
-        supplier.select(col("s_suppkey"), col("s_nationkey"))),
+    li.join(supplier.select(col("s_suppkey"), col("s_nationkey")),
         col("l_suppkey") === col("s_suppkey"))
       .join(broadcast(nation.select(col("n_nationkey"), col("n_name"))),
         col("s_nationkey") === col("n_nationkey"))
@@ -1550,8 +1547,7 @@ object Relational {
     perPart.crossJoin(broadcast(total))
       .filter(col("cents").cast("decimal(38,0)") * col("n_parts") * 1000L
         > col("total_cents").cast("decimal(38,0)") * multipleMillis)
-      .join(Exec.broadcastIfSmallBytes(
-        part.select(col("p_partkey"), col("p_name"), col("p_type"))),
+      .join(part.select(col("p_partkey"), col("p_name"), col("p_type")),
         col("l_partkey") === col("p_partkey"))
       .select(col("l_partkey"), col("p_name"), col("p_type"),
         round(col("cents").cast("double") / 100.0, 2).as("value"),
@@ -1627,10 +1623,10 @@ object Relational {
     * supplier nation and a customer nation (both directions) by ship year.
     * The NATION dim broadcasts are ≤2 rows each (filtered to the pair
     * first); the derived suppNation/custNation frames are supplier- and
-    * customer-SCALED (~2/25 of each table), so those joins are BYTE-GATED
-    * ([[Exec.broadcastIfSmallBytes]]) — broadcast while they measure under
-    * the cap, shuffle-join past it (an unconditional |customers|-sized
-    * broadcast OOMs the driver at the 100 TB posture). lineitem⋈orders is
+    * customer-SCALED (~2/25 of each table), so those joins carry no hint —
+    * Spark broadcasts them while they are small and shuffle-joins past that
+    * (an unconditional |customers|-sized broadcast OOMs the driver at the
+    * 100 TB posture). lineitem⋈orders is
     * the only mandatory fact-fact shuffle, and the pair predicate
     * `(s=A ∧ c=B) ∨ (s=B ∧ c=A)` is applied post-join on two already-joined
     * dim columns (no cross product — each fact row carries exactly one
@@ -1650,8 +1646,8 @@ object Relational {
       .select(col("c_custkey"), col("n_name").as("cust_nation"))
     li.join(orders.select("o_orderkey", "o_custkey"),
         col("l_orderkey") === col("o_orderkey"))
-      .join(Exec.broadcastIfSmallBytes(suppNation), Seq("l_suppkey"))
-      .join(Exec.broadcastIfSmallBytes(custNation),
+      .join(suppNation, Seq("l_suppkey"))
+      .join(custNation,
         col("o_custkey") === col("c_custkey"))
       .filter(
         (col("supp_nation") === nationA && col("cust_nation") === nationB) ||
@@ -1670,8 +1666,8 @@ object Relational {
     * aggregate (no self-join, no second scan); the part dim is filtered
     * before its (type-selective, unconditionally small) broadcast, while
     * the customer-scaled regionCust and supplier-scaled suppNation frames
-    * are BYTE-GATED ([[Exec.broadcastIfSmallBytes]]) — broadcast only while
-    * they measure under the cap. Cent-quantized BIGINT sums make the
+    * carry no hint — Spark broadcasts them only while they are small
+    * enough. Cent-quantized BIGINT sums make the
     * numerator/denominator exact, so the final ratio is one IEEE divide
     * on both engines.
     */
@@ -1694,9 +1690,9 @@ object Relational {
         col("l_partkey") === col("p_partkey"))
       .join(orders.select("o_orderkey", "o_custkey", "o_orderdate"),
         col("l_orderkey") === col("o_orderkey"))
-      .join(Exec.broadcastIfSmallBytes(regionCust),
+      .join(regionCust,
         col("o_custkey") === col("c_custkey"))
-      .join(Exec.broadcastIfSmallBytes(suppNation), Seq("l_suppkey"))
+      .join(suppNation, Seq("l_suppkey"))
       .select(year(col("o_orderdate")).cast("long").as("o_year"),
         floor(revenue * 100 + 0.5).cast("long").as("cents"),
         col("supp_nation"))
@@ -1724,8 +1720,8 @@ object Relational {
       .join(orders.filter(col("o_orderdate") >= qStart &&
           col("o_orderdate") < qEnd).select("o_orderkey", "o_custkey"),
         col("l_orderkey") === col("o_orderkey"))
-      .join(Exec.broadcastIfSmallBytes(customer.select("c_custkey", "c_name",
-        "c_nationkey", "c_acctbal")), col("o_custkey") === col("c_custkey"))
+      .join(customer.select("c_custkey", "c_name",
+        "c_nationkey", "c_acctbal"), col("o_custkey") === col("c_custkey"))
       .join(broadcast(nation), col("c_nationkey") === col("n_nationkey"))
       .groupBy(col("c_custkey"), col("c_name"), col("n_name"))
       .agg(round(sum(floor(revenue * 100 + 0.5)).cast("double") / 100.0, 2)
@@ -1749,7 +1745,7 @@ object Relational {
       .agg(round(sum(col("l_quantity")), 2).as("total_qty"))
       .filter(col("total_qty") > minQty)
     orders.join(big, col("o_orderkey") === col("l_orderkey"))
-      .join(Exec.broadcastIfSmallBytes(customer.select("c_custkey", "c_name")),
+      .join(customer.select("c_custkey", "c_name"),
         col("o_custkey") === col("c_custkey"))
       .select(col("c_custkey"), col("c_name"), col("o_orderkey"),
         date_format(col("o_orderdate"), "yyyy-MM-dd").as("orderdate"),
@@ -1789,7 +1785,7 @@ object Relational {
     def q4(c: Column): Column = floor(c * 10000 + 0.5) / 10000
     val isPromo = part.select(col("p_partkey"),
       (col("p_type") === "PROMO").as("is_promo"))
-    li.join(Exec.broadcastIfSmallBytes(isPromo),
+    li.join(isPromo,
         col("l_partkey") === col("p_partkey"))
       .groupBy(date_format(date_trunc("month", col("l_shipdate")), "yyyy-MM")
         .as("month"))
@@ -1823,8 +1819,7 @@ object Relational {
     val top = rev.agg(max(col("cents")).as("max_cents"))
     rev.crossJoin(broadcast(top))
       .filter(col("cents") === col("max_cents"))
-      .join(Exec.broadcastIfSmallBytes(
-        supplier.select(col("s_suppkey"), col("s_name"))),
+      .join(supplier.select(col("s_suppkey"), col("s_name")),
         col("l_suppkey") === col("s_suppkey"))
       .select(col("s_suppkey"), col("s_name"),
         (col("cents").cast("double") / 100.0).as("total_revenue"))
@@ -1847,7 +1842,7 @@ object Relational {
     val a1 = arm("Brand#12", 5, 1, 11)
     val a2 = arm("Brand#20", 10, 10, 20)
     val a3 = arm("Brand#24", 15, 20, 30)
-    li.join(Exec.broadcastIfSmallBytes(p),
+    li.join(p,
         col("l_partkey") === col("p_partkey"))
       .filter(a1 || a2 || a3)
       .select(when(a1, 1).when(a2, 2).otherwise(3).as("bracket"),
@@ -1868,7 +1863,7 @@ object Relational {
     * fact rows), ties kept like the real Q2; the Spark side is the
     * window-min rewrite while the oracle keeps the literal correlated
     * scalar subquery — parity proves the rewrite. Supplier/nation/region
-    * dims broadcast (nation/region unconditionally, supplier byte-gated).
+    * dims broadcast (nation/region hinted, supplier by the planner's size).
     * At 100 TB the only wide exchange is the (partkey, suppkey) aggregate,
     * which is the minimal co-key for the semantics.
     */
@@ -1884,12 +1879,11 @@ object Relational {
       .withColumn("min_cents", min(col("cost_cents")).over(wPart))
       .filter(col("cost_cents") === col("min_cents"))
     cheapest
-      .join(Exec.broadcastIfSmallBytes(part
+      .join(part
           .filter(col("p_type") === targetType && col("p_size") <= maxSize)
-          .select(col("p_partkey"), col("p_name"), col("p_size"))),
+          .select(col("p_partkey"), col("p_name"), col("p_size")),
         col("l_partkey") === col("p_partkey"))
-      .join(Exec.broadcastIfSmallBytes(
-          supplier.select("s_suppkey", "s_name", "s_acctbal", "s_nationkey")),
+      .join(supplier.select("s_suppkey", "s_name", "s_acctbal", "s_nationkey"),
         col("l_suppkey") === col("s_suppkey"))
       .join(broadcast(nation), col("s_nationkey") === col("n_nationkey"))
       .join(broadcast(region.filter(col("r_name") === targetRegion)),
@@ -1931,7 +1925,7 @@ object Relational {
     * cost proxy is the part's retail price; profit stays EXACT:
     * floor-cents revenue minus retail-cents × whole units, every term a
     * long. The token-filtered (partkey → retail cents) map and the
-    * supplier→nation map are byte-gated broadcasts; orders contributes
+    * supplier→nation map broadcast by their planned size; orders contributes
     * only (orderkey → year) and joins fact-to-fact on the order key. The
     * name filter shrinks lineitem FIRST (via the broadcast hash join), so
     * the orders join moves only qualifying lines.
@@ -1945,8 +1939,8 @@ object Relational {
     val sn = supplier.select("s_suppkey", "s_nationkey")
     val profitCents = floor(revenue * 100 + 0.5).cast("long") -
       col("retail_cents") * floor(col("l_quantity")).cast("long")
-    li.join(Exec.broadcastIfSmallBytes(p), col("l_partkey") === col("p_partkey"))
-      .join(Exec.broadcastIfSmallBytes(sn), col("l_suppkey") === col("s_suppkey"))
+    li.join(p, col("l_partkey") === col("p_partkey"))
+      .join(sn, col("l_suppkey") === col("s_suppkey"))
       .join(broadcast(nation), col("s_nationkey") === col("n_nationkey"))
       .join(orders.select(col("o_orderkey"),
           year(col("o_orderdate")).cast("long").as("o_year")),
@@ -2000,7 +1994,7 @@ object Relational {
       .select("p_partkey", "p_brand", "p_type", "p_size")
     val flagged = supplier.filter(col("s_acctbal") < 0).select("s_suppkey")
     li.select("l_partkey", "l_suppkey").distinct()
-      .join(Exec.broadcastIfSmallBytes(pdim),
+      .join(pdim,
         col("l_partkey") === col("p_partkey"))
       .join(broadcast(flagged), col("l_suppkey") === col("s_suppkey"),
         "left_anti")
@@ -2027,7 +2021,7 @@ object Relational {
     val p = part.filter(col("p_name").contains(nameToken)).select("p_partkey")
     val pairQty = li.filter(col("l_shipdate") >= s"$year-01-01" &&
         col("l_shipdate") < s"${year.toInt + 1}-01-01")
-      .join(Exec.broadcastIfSmallBytes(p), col("l_partkey") === col("p_partkey"))
+      .join(p, col("l_partkey") === col("p_partkey"))
       .groupBy(col("l_partkey"), col("l_suppkey"))
       .agg(sum(floor(col("l_quantity")).cast("long")).as("pair_qty"))
     val wPart = Window.partitionBy(col("l_partkey"))
@@ -2048,8 +2042,8 @@ object Relational {
     * is the integer cross-multiplication `5·qty·n_lines < part_qty_sum`
     * (quantities are exact whole units in this corpus), so no float
     * average crosses an engine boundary. The brand/size filter shrinks
-    * lineitem FIRST through a byte-gated broadcast of the qualifying part
-    * keys; the per-part statistics ride a window over ONE partkey exchange
+    * lineitem FIRST through a broadcast of the qualifying part keys
+    * (chosen by the planner from the part scan's size); the per-part statistics ride a window over ONE partkey exchange
     * of the already-filtered lines — no second fact scan, no agg-and-join-
     * back, and the window is partitioned (per-part line counts are bounded
     * by order multiplicity, never corpus-sized).
@@ -2061,7 +2055,7 @@ object Relational {
         col("p_size").isin(sizes: _*))
       .select("p_partkey")
     val w = Window.partitionBy(col("l_partkey"))
-    li.join(Exec.broadcastIfSmallBytes(p),
+    li.join(p,
         col("l_partkey") === col("p_partkey"))
       .select(col("l_partkey"),
         floor(col("l_quantity")).cast("long").as("qty"),

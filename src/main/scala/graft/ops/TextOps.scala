@@ -438,9 +438,10 @@ object TextOps {
     * broadcast gate (7.4× wall at 10× data — pass 2 degraded to a second
     * corpus-wide shuffle); the boundary cut keeps the broadcast-filter
     * path at any corpus size that has ≥k repeated n-grams above the tie
-    * floor. Pass 2 re-derives the string shingles and joins the
-    * (count-gated broadcast) candidate set on `hash61(ngram)`, so the
-    * only strings that ever shuffle are candidate n-grams. Counts are
+    * floor. Pass 2 re-derives the string shingles and joins the candidate
+    * set (hinted below the gate; past it, the ~k-row cut is left to AQE) on
+    * `hash61(ngram)`, so the only strings that ever shuffle are candidate
+    * n-grams. Counts are
     * exact modulo 61-bit hash collisions (P ≈ n²/2⁶² — the documented
     * contract of the whole hash family).
     */
@@ -467,11 +468,9 @@ object TextOps {
         // no rows is null, the filter drops all
         val ck = counts.orderBy(col("n_docs").desc).limit(k)
           .agg(min(col("n_docs")).as("ck"))
-        Exec.broadcastIfSmall(
-          counts.crossJoin(broadcast(ck))
-            .filter(col("n_docs") >= col("ck"))
-            .select(col("h"), col("n_docs")),
-          maxBroadcastQualifiers)
+        counts.crossJoin(broadcast(ck))
+          .filter(col("n_docs") >= col("ck"))
+          .select(col("h"), col("n_docs"))
       }
     // pass 2 re-derives string shingles row-at-a-time (transient, CPU-only —
     // they are broadcast-filtered against the qualifier set BEFORE the first
@@ -909,7 +908,7 @@ object TextOps {
     * vocabulary-sized — ≪ corpus, the same reduction argument as the
     * sketch queries — so the `iters` damped-rank rounds run over a
     * metadata-sized frame: per round ONE narrow (dst)-keyed aggregate,
-    * with the rank vector count-gate broadcast against the edge frame
+    * with the rank vector joined against the edge frame
     * ([[GraphOps.pageRank]]'s round shape, plus the weight/wdeg factor).
     * Vocabulary count is a driver scalar (graph metadata, pageRank's
     * contract); output is the top-`topK` words by damped rank scaled to
@@ -932,10 +931,11 @@ object TextOps {
     val wedge = Exec.trackTransient(
       und.groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
         .localCheckpoint())
+    // read by the degree join, the vocabulary count and the rank rounds
     val wdeg = wedge.groupBy(col("src")).agg(sum(col("w")).as("wdeg"))
+      .persist().transform(Exec.trackPersisted)
     val withDeg = Exec.trackTransient(
-      wedge.join(Exec.broadcastIfSmall(wdeg, 4000000L), Seq("src"))
-        .localCheckpoint())
+      wedge.join(wdeg, Seq("src")).localCheckpoint())
     val n = wdeg.count()
     // r17b: the bigram graph is vocabulary-sized metadata once the corpus
     // scan has reduced to weighted edges — under the measured gate the
@@ -954,8 +954,7 @@ object TextOps {
       .withColumn("pr", lit(1.0 / n))
     for (_ <- 1 to iters) {
       ranks = withDeg
-        .join(Exec.broadcastIfSmall(
-          ranks.withColumnRenamed("word", "src"), 4000000L), Seq("src"))
+        .join(ranks.withColumnRenamed("word", "src"), Seq("src"))
         .groupBy(col("dst"))
         .agg(sum(col("w") * col("pr") / col("wdeg")).as("c"))
         .select(col("dst").as("word"),

@@ -545,7 +545,7 @@ object TimeSeriesOps {
     // reduced monthly frame, never the fact table)
     val mstats = monthly.groupBy(col("key"))
       .agg((sum(col("cents")).cast("double") / count(lit(1))).as("xbar"))
-    val centered = monthly.join(Exec.broadcastIfSmallBytes(mstats), Seq("key"))
+    val centered = monthly.join(mstats, Seq("key"))
       .select(col("key"), col("mi"),
         (col("cents").cast("double") - col("xbar")).as("c"))
       .persist()
@@ -560,7 +560,7 @@ object TimeSeriesOps {
         col("c").as("cb")), Seq("key", "mi_prev"))
       .groupBy(col("key"), col("lag_m"))
       .agg(sum(col("ca") * col("cb")).as("num"))
-    val r = nums.join(Exec.broadcastIfSmallBytes(den), Seq("key"))
+    val r = nums.join(den, Seq("key"))
       .select(col("key"), col("lag_m"), q6(col("num") / col("den")).as("r"))
       .groupBy(col("key"))
       .agg(max(when(col("lag_m") === 1, col("r"))).as("r1"),

@@ -536,8 +536,7 @@ object VectorOps {
     * sets onto the corpus scan, so no 64-float payload ever shuffles.
     */
   def annLsh(emb: DataFrame, maxQueryId: Int, k: Int,
-             nTables: Int = 4, planesPerTable: Int = 4,
-             maxBroadcastCandidates: Long = 1000000L): DataFrame = {
+             nTables: Int = 4, planesPerTable: Int = 4): DataFrame = {
     val planes = hyperplanes(nTables * planesPerTable)
     graft.functions.LshBuckets.register(emb.sparkSession,
       planes.map(_.toArray).toArray, planesPerTable)
@@ -552,8 +551,8 @@ object VectorOps {
     val qvecs = emb.filter(col("vec_id") < maxQueryId)
       .select(col("vec_id").as("query_id"), col("embedding").as("q"))
     // query vectors are bounded by maxQueryId (safe to hint); the candidate
-    // set is data-dependent — gate its broadcast on the actual count
-    val pairs = emb.join(Exec.broadcastIfSmall(cand, maxBroadcastCandidates), Seq("vec_id"))
+    // set is data-dependent — AQE broadcasts it from its runtime size
+    val pairs = emb.join(cand, Seq("vec_id"))
       .join(broadcast(qvecs), Seq("query_id"))
       .withColumn("sim", q4(cosineFast(emb, col("q"), col("embedding"))))
     val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("vec_id"))
@@ -631,10 +630,8 @@ object VectorOps {
       .orderBy(col("cell"))
   }
 
-  def ivfAnn(emb: DataFrame, maxQueryId: Int, k: Int, nProbe: Int = 2,
-             maxBroadcastCandidates: Long = 1000000L): DataFrame =
-    ivfAnnFromCandidates(emb, ivfCandidates(emb, maxQueryId, nProbe),
-      maxQueryId, k, maxBroadcastCandidates)
+  def ivfAnn(emb: DataFrame, maxQueryId: Int, k: Int, nProbe: Int = 2): DataFrame =
+    ivfAnnFromCandidates(emb, ivfCandidates(emb, maxQueryId, nProbe), maxQueryId, k)
 
   /** The exact-cosine rerank half of [[ivfAnn]] over a PRE-BUILT candidate
     * set — split out (r17) so [[ivfProbeSweep]] can feed its per-config
@@ -642,13 +639,12 @@ object VectorOps {
     * corpus assignment once more per swept config.
     */
   private def ivfAnnFromCandidates(emb: DataFrame, cand: DataFrame,
-      maxQueryId: Int, k: Int,
-      maxBroadcastCandidates: Long = 1000000L): DataFrame = {
+      maxQueryId: Int, k: Int): DataFrame = {
     val qvecs = emb.filter(col("vec_id") < maxQueryId)
       .select(col("vec_id").as("query_id"), col("embedding").as("q"))
-    // same gate as annLsh: probe fan-out makes the candidate count
-    // data-dependent, so the broadcast hint must be earned, not assumed
-    val pairs = emb.join(Exec.broadcastIfSmall(cand, maxBroadcastCandidates), Seq("vec_id"))
+    // as in annLsh: probe fan-out makes the candidate count data-dependent,
+    // so the candidates carry no hint and AQE sizes them at run time
+    val pairs = emb.join(cand, Seq("vec_id"))
       .join(broadcast(qvecs), Seq("query_id"))
       .withColumn("sim", q4(cosineFast(emb, col("q"), col("embedding"))))
     val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("vec_id"))
@@ -665,7 +661,7 @@ object VectorOps {
     * operator reads before fixing the production probe count, re-run
     * whenever the corpus drifts. One exact pass and one candidate pass
     * per config, all already scale-shaped (cell-bounded candidates,
-    * broadcast-gated); counts exact, recall one division per row.
+    * unhinted); counts exact, recall one division per row.
     */
   def ivfProbeSweep(emb: DataFrame, maxQueryId: Int = 5,
                     k: Int = 5): DataFrame = {
@@ -708,7 +704,7 @@ object VectorOps {
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"), col("rn"))
     val scored = Exec.trackTransient(
-      emb.join(Exec.broadcastIfSmall(cand4, 1000000L), Seq("vec_id"))
+      emb.join(cand4, Seq("vec_id"))
         .join(broadcast(qvecs), Seq("query_id"))
         .withColumn("sim", q4(cosineFast(emb, col("q"), col("embedding"))))
         .select(col("query_id"), col("vec_id"), col("rn"), col("sim"))
@@ -924,11 +920,10 @@ object VectorOps {
     * [[pqRecon]] reconstructions — the full-precision corpus embedding is
     * never touched after encoding, which is the property that lets the
     * scored side live in memory at 100 TB corpus scale. Candidate set is
-    * data-dependent, so its broadcast is count-gated like [[ivfAnn]]'s.
+    * data-dependent, so it carries no broadcast hint, like [[ivfAnn]]'s.
     */
   def ivfPqAnn(emb: DataFrame, maxQueryId: Int, k: Int, nProbe: Int = 2,
                nSub: Int = 8, dim: Int = 64, nCodes: Int = 16,
-               maxBroadcastCandidates: Long = 1000000L,
                memoKey: Option[String] = None): DataFrame = {
     val q6 = (c: Column) => floor(c * 1000000 + 0.5) / 1000000
     val cand = ivfCandidates(emb, maxQueryId, nProbe)
@@ -936,8 +931,7 @@ object VectorOps {
     val qvecs = emb.filter(col("vec_id") < maxQueryId)
       .select(col("vec_id").as("query_id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("q"))
-    val scored = recon.join(Exec.broadcastIfSmall(cand, maxBroadcastCandidates),
-        Seq("vec_id"))
+    val scored = recon.join(cand, Seq("vec_id"))
       .join(broadcast(qvecs), Seq("query_id"))
       .withColumn("adc", q6(call_function("sq_l2", col("q"), col("r"))))
     val w = Window.partitionBy(col("query_id")).orderBy(col("adc"), col("vec_id"))
@@ -1044,11 +1038,11 @@ object VectorOps {
     *     projection per side collects (label, vec_id, embedding, norm) and
     *     the driver scores the label blocks with `DotProduct.compute`.
     *   - otherwise ([[incrementalCosineDistributed]]): the batch side
-    *     (vectors + norms) rides a BYTE-gated broadcast onto the
-    *     label-blocked corpus stream, so the corpus embeddings never shuffle
+    *     (vectors + norms) joins the label-blocked corpus stream; while it
+    *     is small Spark broadcasts it, so the corpus embeddings never shuffle
     *     and per-ingest cost is |batch| × block-occupancy — the corpus² pair
-    *     space is never touched. A batch too large for the gate falls back
-    *     to a label-keyed shuffle join.
+    *     space is never touched. A larger batch takes a label-keyed shuffle
+    *     join.
     */
   def incrementalCosinePairs(corpus: DataFrame, batch: DataFrame,
                              threshold: Double = 0.45): DataFrame =
@@ -1066,10 +1060,9 @@ object VectorOps {
     graft.functions.DotProduct.register(corpus.sparkSession)
     val all = cosinePrep(corpus).withColumn("is_new", lit(false))
       .unionByName(cosinePrep(batch).withColumn("is_new", lit(true)))
-    val probe = Exec.broadcastIfSmallBytes(
-      cosinePrep(batch).select(col("label"),
-        col("vec_id").as("vec_x"), col("embedding").as("e_x"),
-        col("nrm").as("nrm_x")))
+    val probe = cosinePrep(batch).select(col("label"),
+      col("vec_id").as("vec_x"), col("embedding").as("e_x"),
+      col("nrm").as("nrm_x"))
     probe.join(all, Seq("label"))
       .filter(col("vec_x") =!= col("vec_id"))
       .withColumn("sim", q4(try_divide(
@@ -1373,15 +1366,15 @@ object VectorOps {
           sqrt(call_function("dot_product", col("v"), col("v"))))
         .join(assigned, Seq("vec_id"))
         .localCheckpoint())
-    // the neighbor side is count-gate BROADCAST: a cell-keyed shuffle
-    // join has only |cells| distinct keys (10 here), so 32 cores idle on
-    // 10 skewed tasks — broadcasting makes the pair scan map-side and
-    // parallel in the a-side's even partitioning (at production scale
-    // the corpus arrives cell-partitioned and this is a co-partitioned
-    // local join; the census itself stays cell-sized either way)
-    val bSide = Exec.broadcastIfSmall(
-      vecs.select(col("cell"), col("vec_id").as("vv"), col("v").as("vb"),
-        col("nrm").as("nb")), 4000000L)
+    // the neighbor side BROADCASTS while the checkpoint's measured size
+    // allows (unhinted, AQE kept the shuffle join: 21.0 → 27.8 s at sf1):
+    // a cell-keyed shuffle join has only |cells| distinct keys (10 here),
+    // so 32 cores idle on 10 skewed tasks — broadcasting makes the pair
+    // scan map-side and parallel in the a-side's even partitioning (at
+    // production scale the corpus arrives cell-partitioned and this is a
+    // co-partitioned local join; the census itself stays cell-sized)
+    val bSide = Exec.broadcastIfKnownSmall(vecs).select(col("cell"),
+      col("vec_id").as("vv"), col("v").as("vb"), col("nrm").as("nb"))
     // the probe side inherits the source parquet's partition count (ONE
     // file at small SF) — spread it so the map-side pair scan actually
     // uses the cluster; at production scale the scan arrives partitioned

@@ -310,69 +310,74 @@ class PlanGuardSpec extends SparkSpec {
 
   test("partition-layout scan: the partition predicate prunes at planning, not at runtime") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("pg_part").toString
-    try {
-      Tables.orders(spark, sfDir)
-        .withColumn("status", col("o_orderstatus"))
-        .write.mode("overwrite").partitionBy("status").parquet(dir)
-      val pruned = spark.read.parquet(dir).filter(col("status") === "F")
-        .select(col("o_orderkey"))
-      val plan = pruned.queryExecution.executedPlan.toString
-      // the status predicate must appear as a PartitionFilter on the scan —
-      // directory-level pruning, zero I/O for other partitions — and must
-      // NOT survive as a post-scan data Filter
-      assert(plan.contains("PartitionFilters") && plan.contains("status"),
-        s"partition predicate not applied at the directory level:\n$plan")
-      val scanned = pruned.queryExecution.executedPlan.collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-      }
-      assert(scanned.nonEmpty)
-      scanned.foreach { f =>
-        assert(f.partitionFilters.nonEmpty,
-          "scan carries no partition filters — it would read every partition")
-      }
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm); f.delete(); ()
-      }
-      rm(new java.io.File(dir))
+    val dir = tempDir("pg_part").toString
+    Tables.orders(spark, sfDir)
+      .withColumn("status", col("o_orderstatus"))
+      .write.mode("overwrite").partitionBy("status").parquet(dir)
+    val pruned = spark.read.parquet(dir).filter(col("status") === "F")
+      .select(col("o_orderkey"))
+    val plan = pruned.queryExecution.executedPlan.toString
+    // the status predicate must appear as a PartitionFilter on the scan —
+    // directory-level pruning, zero I/O for other partitions — and must
+    // NOT survive as a post-scan data Filter
+    assert(plan.contains("PartitionFilters") && plan.contains("status"),
+      s"partition predicate not applied at the directory level:\n$plan")
+    val scanned = pruned.queryExecution.executedPlan.collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+    }
+    assert(scanned.nonEmpty)
+    scanned.foreach { f =>
+      assert(f.partitionFilters.nonEmpty,
+        "scan carries no partition filters — it would read every partition")
     }
   }
 
-  test("LSH verification broadcast is gated: over the cap the query still runs unhinted") {
-    val docs = Tables.documents(spark, sfDir)
-    // force the gate shut: every candidate count exceeds a cap of 0
-    val gated = graft.ops.DedupOps.minhashLshPairs(docs, maxBroadcastCandidates = 0L)
-    val hinted = graft.ops.DedupOps.minhashLshPairs(docs)
-    // no broadcast HINT on the gated plan's candidate joins (AQE may still
-    // choose broadcast from runtime stats — the point is the mandatory hint
-    // and its OOM risk are gone)
-    val logical = gated.queryExecution.optimizedPlan.toString
-    assert(!logical.contains("strategy=broadcast"),
-      s"gated plan still carries a broadcast hint:\n$logical")
-    // and the results are identical either way
-    val a = gated.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val b = hinted.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(a == b, s"gating changed results: ${(a -- b) ++ (b -- a)}")
+  /** Runs `body` with Spark's size-based broadcasts off (static planner and
+    * AQE), so every unhinted join is a shuffle join. */
+  private def withBroadcastsOff[T](body: => T): T = {
+    val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val old = keys.map(k => k -> spark.conf.getOption(k))
+    keys.foreach(spark.conf.set(_, "-1"))
+    try body
+    finally old.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
-  test("edit-distance profile broadcast is BYTE-gated: a tiny cap closes it, results identical") {
+  test("no LSH candidate join carries a mandatory broadcast hint; shuffle joins give the same pairs") {
     val docs = Tables.documents(spark, sfDir)
-    // a 1-byte cap is always exceeded by the measured cached size — the
-    // wide profile frame must then reach the pair joins UNHINTED
-    val gated = graft.ops.DedupOps.editDistancePairs(docs, maxBroadcastProfileBytes = 1L)
-    val hinted = graft.ops.DedupOps.editDistancePairs(docs)
-    val logical = gated.queryExecution.optimizedPlan.toString
+    // the candidate pair set is data-dependent (a boilerplate-heavy corpus
+    // inflates it without bound), so only Spark's measured size may choose
+    // a broadcast: a hint anywhere in the plan is a mandatory broadcast
+    val pairs = graft.ops.DedupOps.minhashLshPairs(docs)
+    val logical = pairs.queryExecution.optimizedPlan.toString
     assert(!logical.contains("strategy=broadcast"),
-      s"byte-gated plan still carries a broadcast hint:\n$logical")
-    // under the default 128 MiB cap this sf's profile measures small, so
-    // the hint must fire — proves the measurement reads real cached bytes
-    val hintedLogical = hinted.queryExecution.optimizedPlan.toString
-    assert(hintedLogical.contains("strategy=broadcast"),
-      "default byte cap failed to broadcast a tiny profile frame")
-    val a = gated.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
-    val b = hinted.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
-    assert(a == b, s"byte gating changed results: ${(a -- b) ++ (b -- a)}")
+      s"LSH plan carries a broadcast hint:\n$logical")
+    def triples(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val a = triples(pairs)
+    val b = withBroadcastsOff(triples(graft.ops.DedupOps.minhashLshPairs(docs)))
+    assert(a == b, s"join strategy changed results: ${(a -- b) ++ (b -- a)}")
+    assert(a.nonEmpty, "fixture must be non-degenerate")
+  }
+
+  test("edit-distance profile joins plan as broadcasts at this scale; shuffle joins give the same pairs") {
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+    val docs = Tables.documents(spark, sfDir)
+    // the key table is materialized before the verification joins, so the
+    // planner sizes it from its cached bytes: at this scale both profile
+    // joins (key_a, key_b) must broadcast, with no hint in the code
+    val plan = staticPlan(graft.ops.DedupOps.editDistancePairs(docs))
+    val profileBuilds = plan.collect { case j: BroadcastHashJoinExec =>
+      (if (j.buildSide == BuildLeft) j.left else j.right).output.map(_.name)
+    }.flatten.filter(n => n == "key_a" || n == "key_b")
+    assert(profileBuilds.toSet == Set("key_a", "key_b"),
+      s"profile joins did not both broadcast (build-side keys: $profileBuilds):\n$plan")
+    def triples(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
+    val a = triples(graft.ops.DedupOps.editDistancePairs(docs))
+    val b = withBroadcastsOff(triples(graft.ops.DedupOps.editDistancePairs(docs)))
+    assert(a == b, s"join strategy changed results: ${(a -- b) ++ (b -- a)}")
     assert(a.nonEmpty, "fixture must be non-degenerate")
   }
 
@@ -495,8 +500,8 @@ class PlanGuardSpec extends SparkSpec {
 
   test("cross-doc ngrams: strings shuffle only after the hash-qualifier join") {
     // pass 1 (the unbounded hash count) runs EAGERLY inside
-    // broadcastIfSmall's count gate, so its narrow exchange lives in that
-    // earlier job; this plan must show the qualifier join, and no exchange
+    // crossDocNgrams' own qualifier count, so its narrow exchange lives in
+    // that earlier job; this plan must show the qualifier join, and no exchange
     // here may carry the raw corpus text/token columns — the only strings
     // allowed to move are post-qualification n-grams
     val plan = staticPlan(SparkEntry.queries("txt_crossdoc_ngrams")(spark, sfDir))
@@ -654,7 +659,7 @@ class PlanGuardSpec extends SparkSpec {
     val small = graft.silver.SilverTransform.silver(spark, payload(2, 3, 24), "t", "raw/x.json")
     val smallPlan = staticPlan(small)
     assert(shuffles(smallPlan).isEmpty, s"small silver write must not shuffle:\n$smallPlan")
-    val dir = java.nio.file.Files.createTempDirectory("silver_small")
+    val dir = tempDir("silver_small")
     small.write.mode("overwrite").parquet(dir.toString)
     val files = dir.toFile.listFiles().map(_.getName).filter(_.endsWith(".parquet"))
     assert(files.length == 1, s"expected one parquet file, got ${files.toSeq}")

@@ -38,7 +38,7 @@ class IngestSpec extends SparkSpec {
   test("E0 end-to-end: wrap -> land -> silver pipeline consumes the wrapper") {
     val wrapped = Ingest.wrap(payload, "prc_hicp_midx",
       Seq("geo" -> "LU", "coicop" -> "CP00"), "2026-01-01T00:00:00+00:00")
-    val root = java.nio.file.Files.createTempDirectory("raw").toString
+    val root = tempDir("raw").toString
     val path = Ingest.land(spark, root, "prc_hicp_midx", "LU", "CP00",
       "20260101_000000", wrapped)
     assert(path.endsWith("geo=LU/coicop=CP00/ts=20260101_000000.json"))
@@ -61,7 +61,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("land: path separators and '..' in dataset, geo, coicop or ts are rejected") {
-    val root = java.nio.file.Files.createTempDirectory("raw").toString
+    val root = tempDir("raw").toString
     def land(dataset: String = "d", geo: String = "LU", coicop: String = "CP00",
              ts: String = "t") = Ingest.land(spark, root, dataset, geo, coicop, ts, "{}")
     Seq(() => land(geo = "../../escape"), () => land(coicop = "CP/00"),

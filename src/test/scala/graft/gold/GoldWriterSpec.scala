@@ -14,7 +14,7 @@ class GoldWriterSpec extends SparkSpec {
     }
 
   test("G5: dynamic partition overwrite replaces only the written series") {
-    val dir = Files.createTempDirectory("gold").toString
+    val dir = tempDir("gold").toString
     val cols = Seq("time", "geo", "coicop", "unit", "value")
     GoldWriter.writeGold(
       (series("LU", 1, 2) ++ series("DE", 3, 4)).toDF(cols: _*), dir,
@@ -29,7 +29,7 @@ class GoldWriterSpec extends SparkSpec {
   }
 
   test("Q8+G1: PASS report opens the gate; FAIL report blocks it") {
-    val dir = Files.createTempDirectory("reports").toString
+    val dir = tempDir("reports").toString
     val pass = Report(passed = true, Seq(CheckResult("x", passed = true, Map())), Map("rows" -> "4"))
     val p = GoldWriter.writeReport(spark, dir, pass, "20260101_000000", "processed/a.parquet")
     assert(p.contains("_PASS"))
@@ -41,7 +41,7 @@ class GoldWriterSpec extends SparkSpec {
   }
 
   test("G1: the gate reads the report's verdict, not a _PASS in its path") {
-    val dir = Files.createTempDirectory("gate").toString + "/reports_PASS_archive"
+    val dir = tempDir("gate").toString + "/reports_PASS_archive"
     val fail = Report(passed = false, Seq(CheckResult("x", passed = false, Map())), Map())
     val p = GoldWriter.writeReport(spark, dir, fail, "20260103_000000", "processed/c.parquet")
     assert(p.contains("_PASS"), "the directory name holds _PASS")
@@ -49,7 +49,7 @@ class GoldWriterSpec extends SparkSpec {
   }
 
   test("SRC5: latestPath resolves the most recently modified object") {
-    val dir = Files.createTempDirectory("blobs").toString
+    val dir = tempDir("blobs").toString
     val f1 = new java.io.File(dir, "ts=20260101.json")
     val f2 = new java.io.File(dir, "ts=20260102.json")
     Files.writeString(f1.toPath, "a"); Files.writeString(f2.toPath, "b")

@@ -134,7 +134,7 @@ class QualityChecksSpec extends SparkSpec {
       "gap" -> payload(times, values.updated(20, Double.NaN).updated(21, Double.NaN),
         sparse = true))
     val failed = shapes.map { case (name, p) =>
-      val dir = java.nio.file.Files.createTempDirectory(s"qc_$name").toString
+      val dir = tempDir(s"qc_$name").toString
       SilverTransform.silver(spark, p, "2026-01-01T00:00:00Z", "raw/x.json")
         .write.mode("overwrite").parquet(dir)
       name -> failing(runSilver(spark.read.parquet(dir)))

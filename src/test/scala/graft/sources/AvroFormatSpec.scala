@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
 import java.sql.{Date, Timestamp}
 
 import org.apache.spark.sql.Row
@@ -12,7 +11,7 @@ class AvroFormatSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
   private def tmp(name: String): String =
-    Files.createTempDirectory(s"graft-avro-$name").toString
+    tempDir(s"graft-avro-$name").toString
 
   test("Avro round-trip is lossless on the documents table across parallel part files") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet").repartition(4)

@@ -9,7 +9,7 @@ class FileFormatsSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
   private def tmp(name: String): String =
-    Files.createTempDirectory(s"graft-ff-$name").toString
+    tempDir(s"graft-ff-$name").toString
 
   test("CSV round-trip preserves free text (quotes, delimiters) and longs") {
     import spark.implicits._

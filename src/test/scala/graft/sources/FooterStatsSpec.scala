@@ -21,7 +21,7 @@ class FooterStatsSpec extends SparkSpec {
   }
 
   test("footer stats reproduce the exact per-bucket envelope and row count") {
-    val out = java.nio.file.Files.createTempDirectory("footer_spec").toString
+    val out = tempDir("footer_spec").toString
     val res = FooterStats
       .dateBucketSkipStats(mkOrders(600), out, "1992-09-01", "1993-01-31")
       .collect()
@@ -49,7 +49,7 @@ class FooterStatsSpec extends SparkSpec {
     // independent footer walk with parquet-hadoop: total row count across
     // all bucket files must equal the operator's footer-derived total AND
     // the input size — proving the numbers are committed metadata
-    val out = java.nio.file.Files.createTempDirectory("footer_spec2").toString
+    val out = tempDir("footer_spec2").toString
     val res = FooterStats
       .dateBucketSkipStats(mkOrders(250), out, "1992-01-01", "1992-02-01")
       .agg(sum(col("n_rows"))).collect()(0).getLong(0)

@@ -1,7 +1,5 @@
 package graft.stream
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.ops.DedupOps
@@ -30,7 +28,7 @@ class BloomStreamSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val corpus = docs.filter(col("doc_id") % 10 =!= 0)
     val batchAll = docs.filter(col("doc_id") % 10 === 0)
-    val tmp = Files.createTempDirectory("bloom_stream").toString
+    val tmp = tempDir("bloom_stream").toString
     BloomStream.seedIndex(corpus, s"$tmp/index", m, k)
     val mem = MemoryStream[(Long, String)]
     val q = BloomStream.run(
@@ -84,7 +82,7 @@ class BloomStreamSpec extends SparkSpec {
   test("replaying a bloom micro-batch is idempotent at both crash points") {
     val corpus = docs.filter(col("doc_id") % 10 =!= 0)
     val batch = docs.filter(col("doc_id") % 10 === 0).limit(40)
-    val tmp = Files.createTempDirectory("bloom_replay").toString
+    val tmp = tempDir("bloom_replay").toString
     BloomStream.seedIndex(corpus, s"$tmp/index", m, k)
     BloomStream.processBatch(batch.toDF(), 0L, s"$tmp/index", s"$tmp/out", m, k)
     def snapshot() = spark.read.parquet(s"$tmp/out")

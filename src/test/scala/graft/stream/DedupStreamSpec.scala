@@ -1,7 +1,5 @@
 package graft.stream
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
@@ -47,7 +45,7 @@ class DedupStreamSpec extends SparkSpec {
     val rows = batchAll.select("doc_id", "text").collect()
       .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
     branches.foreach { case (name, branch) =>
-      val tmp = Files.createTempDirectory("dedup_stream").toString
+      val tmp = tempDir("dedup_stream").toString
       DedupStream.seedIndex(corpus, s"$tmp/index")
       val mem = MemoryStream[(Long, String)]
       val q = mem.toDF().toDF("doc_id", "text").writeStream
@@ -74,7 +72,7 @@ class DedupStreamSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val corpus = docs.filter(col("doc_id") % 10 =!= 0)
     val batch = docs.filter(col("doc_id") % 10 === 0)
-    val tmp = Files.createTempDirectory("dedup_run").toString
+    val tmp = tempDir("dedup_run").toString
     DedupStream.seedIndex(corpus, s"$tmp/index")
     val mem = MemoryStream[(Long, String)]
     val q = DedupStream.run(mem.toDF().toDF("doc_id", "text"),
@@ -90,7 +88,7 @@ class DedupStreamSpec extends SparkSpec {
     val corpus = docs.filter(col("doc_id") % 10 =!= 0)
     val batch = docs.filter(col("doc_id") % 10 === 0).limit(40)
     branches.foreach { case (name, branch) =>
-      val tmp = Files.createTempDirectory("dedup_replay").toString
+      val tmp = tempDir("dedup_replay").toString
       DedupStream.seedIndex(corpus, s"$tmp/index")
       branch(batch.toDF(), 0L, s"$tmp/index", s"$tmp/pairs")
       val first = triples(spark.read.parquet(s"$tmp/pairs"))
@@ -120,7 +118,7 @@ class DedupStreamSpec extends SparkSpec {
     * returns, per branch, the sorted rows of the three partitions written. */
   private def bothBranches(corpus: DataFrame, batch: DataFrame): Seq[Seq[Seq[String]]] =
     branches.map { case (_, branch) =>
-      val tmp = Files.createTempDirectory("dedup_parity").toString
+      val tmp = tempDir("dedup_parity").toString
       DedupStream.seedIndex(corpus, s"$tmp/index")
       branch(batch, 7L, s"$tmp/index", s"$tmp/pairs")
       Seq(s"$tmp/pairs/src_batch=7", s"$tmp/index/bands/src_batch=7",
@@ -169,7 +167,7 @@ class DedupStreamSpec extends SparkSpec {
     val long = textDocs((1 to 3).map(d => (800000L + d) -> words(s"d${d}w", 0 until 20000)): _*)
     assert(Exec.collectInternalIfSmall(DedupStream.batchFeatures(long, 32, 8), 256L << 10).isEmpty,
       "three 20k-token documents exceed a 256 KiB budget")
-    val tmp = Files.createTempDirectory("dedup_wide").toString
+    val tmp = tempDir("dedup_wide").toString
     DedupStream.seedIndex(corpus, s"$tmp/index")
     val nullId = Seq(Some(800004L) -> words("a", 0 until 20), None -> words("b", 0 until 20))
       .toDF("doc_id", "text")

@@ -127,16 +127,16 @@ class EventStreamSpec extends SparkSpec {
   }
 
   test("foreachBatch idempotent sink: replay overwrites partitions, no duplicates") {
-    val out = java.nio.file.Files.createTempDirectory("gold_stream").toString
+    val out = tempDir("gold_stream").toString
     def runOnce(cp: String): Unit = {
       val q = EventStream.idempotentHourlySink(EventStream.source(spark, sfDir), out, cp)
       q.processAllAvailable(); q.stop()
     }
     // two independent runs (fresh checkpoints) simulate a full replay of the
     // same source into the same sink path
-    runOnce(java.nio.file.Files.createTempDirectory("cp1").toString)
+    runOnce(tempDir("cp1").toString)
     val afterFirst = spark.read.parquet(out).count()
-    runOnce(java.nio.file.Files.createTempDirectory("cp2").toString)
+    runOnce(tempDir("cp2").toString)
     val afterReplay = spark.read.parquet(out).count()
     assert(afterFirst == batchEvents.count())
     assert(afterReplay == afterFirst, "replay must overwrite, not append")
@@ -152,8 +152,8 @@ class EventStreamSpec extends SparkSpec {
     */
   private def crashThenRestart(writeMode: String): (Long, Long, Long) = {
     import org.apache.spark.sql.streaming.StreamingQueryException
-    val out = java.nio.file.Files.createTempDirectory(s"gold_crash_$writeMode").toString
-    val cp = java.nio.file.Files.createTempDirectory(s"cp_crash_$writeMode").toString
+    val out = tempDir(s"gold_crash_$writeMode").toString
+    val cp = tempDir(s"cp_crash_$writeMode").toString
     val crash = new java.util.concurrent.atomic.AtomicBoolean(true)
     def start() = EventStream.withHourColumn(EventStream.source(spark, sfDir))
       .writeStream

@@ -1,7 +1,5 @@
 package graft.stream
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -25,7 +23,7 @@ class IvfStreamSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val corpus = emb.filter(col("vec_id") % 5 =!= 0)
     val batchAll = emb.filter(col("vec_id") % 5 === 0)
-    val tmp = Files.createTempDirectory("ivf_stream").toString
+    val tmp = tempDir("ivf_stream").toString
     IvfStream.seedIndex(corpus, s"$tmp/index")
     val mem = MemoryStream[(Long, Seq[Float])]
     val q = IvfStream.run(
@@ -74,7 +72,7 @@ class IvfStreamSpec extends SparkSpec {
   test("replaying an IVF maintenance batch is idempotent") {
     val corpus = emb.filter(col("vec_id") % 5 =!= 0)
     val batch = emb.filter(col("vec_id") % 5 === 0).limit(40)
-    val tmp = Files.createTempDirectory("ivf_replay").toString
+    val tmp = tempDir("ivf_replay").toString
     IvfStream.seedIndex(corpus, s"$tmp/index")
     IvfStream.processBatch(batch.toDF(), 0L, s"$tmp/index")
     def snapshot() = (

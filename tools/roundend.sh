@@ -8,8 +8,9 @@
 #      (>1.3x warm regression on any tracked query fails; pass --update
 #      via UPDATE_PERF=1 to refresh the artifact after it passes)
 #   4. repo benchmark smoke: short untraced hicp_series and corpus_ingest
-#      runs, each also with SPARK_GRAFT_DRIVER_GATE=off, whose per-op checks
-#      and end-of-run delta identity must all pass ("correct": true) —
+#      runs, each also with SPARK_GRAFT_DRIVER_GATE=off, and one analytics_mix
+#      run, whose per-op checks and end-of-run delta identity must all pass
+#      ("correct": true) —
 #      catches a wrong small-input fast path, and a broken distributed
 #      branch behind it (silver's global sort, the one-action quality gate
 #      and the streamed JDBC load on hicp_series)
@@ -48,7 +49,7 @@ else
   sbt -batch "runMain graft.MicroBench --gate"
 fi
 
-echo "== 4/5 benchmark smoke (hicp_series and corpus_ingest through both branches) =="
+echo "== 4/5 benchmark smoke (hicp_series and corpus_ingest through both branches, analytics_mix) =="
 smoke() {  # smoke <label> <workload> [ENV=VALUE ...]: the run must be correct
   local label="$1" workload="$2"; shift 2
   local bench
@@ -63,6 +64,7 @@ smoke hicp_series hicp_series
 smoke "hicp_series (SPARK_GRAFT_DRIVER_GATE=off)" hicp_series SPARK_GRAFT_DRIVER_GATE=off
 smoke corpus_ingest corpus_ingest
 smoke "corpus_ingest (SPARK_GRAFT_DRIVER_GATE=off)" corpus_ingest SPARK_GRAFT_DRIVER_GATE=off
+smoke analytics_mix analytics_mix
 
 echo "== 5/5 driver-artifact hygiene =="
 dirty="$(git status --porcelain -- 'BENCH_*.json' 'CORRECTNESS_*.json' \
