@@ -146,8 +146,9 @@ object DedupOps {
         greatest(col("doc_a"), col("doc_b")).as("doc_b"), col("lang"))
       .distinct()
     // verification attaches the sorted hash arrays by joining the
-    // candidate list onto the shingled table — when Spark broadcasts the
-    // candidates, the arrays never shuffle at all
+    // candidate list onto the shingled table. When the planner broadcasts
+    // the candidates, the arrays never shuffle; when AQE converts the join
+    // at run time, the array side has already been shuffle-written
     val sets = base.select(col("doc_id"), col("sh"))
     candidates
       .join(sets.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
@@ -321,9 +322,10 @@ object DedupOps {
     // modulo negligible 64-bit collisions; shingle_hashes already dedups)
     val sets = withSig.select(col("doc_id"), col("hs").as("hset"))
     // the candidate pair list is normally orders of magnitude smaller than
-    // the shingle-set table, and AQE broadcasts it onto both set joins from
-    // its runtime size. It carries NO hint: a degenerate corpus can make
-    // the pair set arbitrarily large, and then the joins stay shuffles.
+    // the shingle-set table; Spark broadcasts it onto both set joins while
+    // it is small (when only AQE's runtime conversion does, the set side is
+    // shuffle-written first). It carries NO hint: a degenerate corpus can
+    // make the pair set arbitrarily large, and then the joins stay shuffles.
     val repPairs = candidates
       .join(sets.select(col("doc_id").as("doc_a"), col("hset").as("h_a")), Seq("doc_a"))
       .join(sets.select(col("doc_id").as("doc_b"), col("hset").as("h_b")), Seq("doc_b"))
@@ -501,7 +503,8 @@ object DedupOps {
       posexplode(expr(s"band_hashes(sig, $bands, $rowsPerBand)"))
         .as(Seq("band", "band_key")))
     // PROBE: batch bands against the full index. The batch side is the
-    // small one; Spark broadcasts it while it is small enough.
+    // small one; Spark broadcasts it while it is small enough (when only
+    // AQE's runtime conversion does, the index side is shuffle-written first).
     // new-new pairs arrive in both orientations; normalize + distinct.
     val batchBands = banded(withSig.filter(col("is_new")))
     val candidates = batchBands
@@ -950,7 +953,7 @@ object DedupOps {
         "quadratic; consider a longer key or a smaller maxDist")
     // the per-doc key column for verification: a key row is ~80 B,
     // candidates can be orders of magnitude more pairs. `keys` is
-    // materialized (counted above), so Spark plans from its real size:
+    // materialized (counted above), so the planner sizes it up front:
     // broadcast keys mean nothing wide ever enters an exchange; too large,
     // the joins are shuffles (narrow pairs move, each key row moves once)
     val prof = keys.select(col("doc_id"), col("key"))
@@ -1232,7 +1235,8 @@ object DedupOps {
     * operator in DedupOpsSpec).
     *
     * Scale shape: the corpus contributes ONE linear scan, and its windows
-    * NEVER shuffle — the batch's distinct hash set (broadcast while small)
+    * NEVER shuffle — the batch's distinct hash set (materialized, and
+    * broadcast while its measured size is small)
     * semi-join-filters the corpus window stream map-side, so only hashes
     * the batch can actually match reach the occurrence-count exchange (a
     * first cut aggregated ALL corpus hashes and paid a corpus-wide
@@ -1257,8 +1261,12 @@ object DedupOps {
     // probe-set pushdown: a corpus hash the batch never produces cannot
     // change any batch window's coverage — drop it BEFORE the aggregate.
     // The set is often past AQE's runtime threshold yet small enough to
-    // broadcast (unhinted it shuffled the corpus: 9.5 → 17.1 s at sf1)
-    val probeSet = Exec.broadcastIfKnownSmall(batchWins.select(col("h")).distinct())
+    // broadcast (unhinted it shuffled the corpus: 9.5 → 17.1 s at sf1), and
+    // rolling_hashes emits one hash per character, past any static
+    // estimate — so it is materialized (the set the join would compute
+    // anyway) and broadcast on its measured size
+    val probeSet = Exec.broadcastIfKnownSmall(Exec.trackTransient(
+      batchWins.select(col("h")).distinct().localCheckpoint()))
     val index = wins(corpus)
       .join(probeSet, Seq("h"), "left_semi")
       .groupBy(col("h")).agg(count(lit(1)).as("n_corpus"))

@@ -19,19 +19,23 @@ import org.apache.spark.unsafe.Platform
   * every other side goes into the join bare, and Spark picks the strategy:
   * the planner from a scan's static size, AQE from a computed side's
   * runtime size. [[broadcastIfKnownSmall]] covers the computed sides that
-  * measured slower that way. */
+  * measured slower that way, from the measured size of a side the family
+  * materializes anyway. */
 object Exec {
 
-  /** `df`, hinted `broadcast` when its known size is at most 128 MiB: the
-    * broadcast decision for a computed join side that is usually small but
-    * may be past AQE's 10 MiB runtime threshold. The size is what is known
-    * without running anything: the [[measuredBytes]] of a materialized
-    * frame, else the optimizer's estimate. It runs no Spark job. */
-  def broadcastIfKnownSmall(df: DataFrame): DataFrame = {
-    val bytes = measuredBytes(df).map(BigInt(_))
-      .getOrElse(df.queryExecution.optimizedPlan.stats.sizeInBytes)
-    if (bytes <= (128L << 20)) broadcast(df) else df
-  }
+  /** Largest side the families hint `broadcast` on a size they measured
+    * (the random-walk adjacency estimate, [[broadcastIfKnownSmall]]). */
+  private[ops] val MaxBroadcastBytes: Long = 128L << 20
+
+  /** `df`, hinted `broadcast` when it is a materialized frame whose
+    * [[measuredBytes]] are at most [[MaxBroadcastBytes]]: the broadcast
+    * decision for a computed join side that is usually small but may be
+    * past AQE's 10 MiB runtime threshold. Runs no Spark job. A frame that
+    * is not materialized is returned unhinted: the optimizer's estimate
+    * misses row-multiplying generators (it gives a `posexplode` its
+    * input's row count), so it never forces a broadcast. */
+  def broadcastIfKnownSmall(df: DataFrame): DataFrame =
+    if (measuredBytes(df).exists(_ <= MaxBroadcastBytes)) broadcast(df) else df
 
   /** A frame over the persisted `df`'s cached relation itself, for reading
     * one cache from both arms of a self-join. Joining a persisted frame with
@@ -57,12 +61,13 @@ object Exec {
 
   /** Measured bytes of a MATERIALIZED frame: a `localCheckpoint` frame
     * reports the sum of its RDD blocks' memory + disk sizes from the block
-    * manager; a cacheManager-persisted frame reports its in-memory
-    * relation's accumulated batch stats (actual bytes, not an optimizer
-    * estimate — the caller materializes before gating). None when the frame
-    * is neither (callers fall back to their row gate alone) — never an
-    * optimizer ESTIMATE, which would let a mis-estimated frame through a
-    * memory gate. */
+    * manager; a cacheManager-persisted frame whose every partition is
+    * cached reports its in-memory relation's accumulated batch stats
+    * (actual bytes — the caller materializes before gating). None
+    * otherwise, including a persisted frame not yet computed, whose
+    * relation stats are still the optimizer's estimate (callers fall back
+    * to their row gate alone) — never an optimizer ESTIMATE, which would
+    * let a mis-estimated frame through a memory gate. */
   def measuredBytes(df: DataFrame): Option[Long] =
     df.queryExecution.logical match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
@@ -71,7 +76,8 @@ object Exec {
           .map(i => i.memSize + i.diskSize)
       case _ =>
         df.queryExecution.withCachedData match {
-          case im: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
+          case im: org.apache.spark.sql.execution.columnar.InMemoryRelation
+              if im.cacheBuilder.isCachedColumnBuffersLoaded =>
             Some(im.stats.sizeInBytes.toLong)
           case _ => None
         }

@@ -2299,7 +2299,7 @@ object GraphOps {
         .agg(sort_array(collect_list(col("nb"))).as("nbs"))
         .coalesce(8)
         .localCheckpoint())
-    // byte-gated (128 MiB), not unconditional: adjacency rows carry full
+    // byte-gated, not unconditional: adjacency rows carry full
     // neighbor arrays, so a large edge frame would blow past the broadcast
     // limit — past the gate the hop joins degrade to shuffles (r14 advisor
     // item). The estimate is one narrow agg over the already-checkpointed
@@ -2320,7 +2320,7 @@ object GraphOps {
       return randomWalkDriver(adj, walkLen)
     val approxBytes = sz.getLong(0) * 8L + sz.getLong(1) * 24L
     val adjCur = adj.withColumnRenamed("x", "cur")
-    val bAdj = if (approxBytes <= (128L << 20))
+    val bAdj = if (approxBytes <= Exec.MaxBroadcastBytes)
       broadcast(adjCur) else adjCur
     var frontier = adj.select(col("x").as("seed"), col("x").as("cur"))
     val visits = scala.collection.mutable.ListBuffer(

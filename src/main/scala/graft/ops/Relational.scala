@@ -1776,9 +1776,9 @@ object Relational {
 
   /** TPC-H Q14-shaped promo revenue share by ship month: of each month's
     * part revenue, the fraction from PROMO-type parts. One fact scan; the
-    * |parts|-sized (partkey → is_promo) map is BYTE-GATED (broadcast while
-    * it measures small, shuffle-joined past the cap — this round's
-    * discipline for customer/part-scaled "dims"). The share is a
+    * |parts|-sized (partkey → is_promo) map carries no hint: Spark
+    * broadcasts it while it is small and shuffle-joins it past that, as
+    * for the other customer/part-scaled "dims". The share is a
     * conditional-sum ratio of exact cent longs inside ONE aggregate.
     */
   def promoShare(li: DataFrame, part: DataFrame): DataFrame = {

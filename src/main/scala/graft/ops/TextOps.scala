@@ -439,11 +439,11 @@ object TextOps {
     * corpus-wide shuffle); the boundary cut keeps the broadcast-filter
     * path at any corpus size that has ≥k repeated n-grams above the tie
     * floor. Pass 2 re-derives the string shingles and joins the candidate
-    * set (hinted below the gate; past it, the ~k-row cut is left to AQE) on
-    * `hash61(ngram)`, so the only strings that ever shuffle are candidate
-    * n-grams. Counts are
-    * exact modulo 61-bit hash collisions (P ≈ n²/2⁶² — the documented
-    * contract of the whole hash family).
+    * set on `hash61(ngram)`, broadcast below the gate and, past it, the cut
+    * materialized and broadcast on its measured size, so the only strings
+    * that ever shuffle are candidate n-grams. Counts are exact modulo
+    * 61-bit hash collisions (P ≈ n²/2⁶² — the documented contract of the
+    * whole hash family).
     */
   def crossDocNgrams(docs: DataFrame, n: Int = 5, minDocs: Int = 2,
                      k: Int = 20,
@@ -468,9 +468,14 @@ object TextOps {
         // no rows is null, the filter drops all
         val ck = counts.orderBy(col("n_docs").desc).limit(k)
           .agg(min(col("n_docs")).as("ck"))
-        counts.crossJoin(broadcast(ck))
-          .filter(col("n_docs") >= col("ck"))
-          .select(col("h"), col("n_docs"))
+        // materialized: the cut is ~k rows plus ties, but its static
+        // estimate is that of all of `counts`, which would plan pass 2 as
+        // a shuffle of the corpus strings
+        Exec.broadcastIfKnownSmall(Exec.trackTransient(
+          counts.crossJoin(broadcast(ck))
+            .filter(col("n_docs") >= col("ck"))
+            .select(col("h"), col("n_docs"))
+            .localCheckpoint()))
       }
     // pass 2 re-derives string shingles row-at-a-time (transient, CPU-only —
     // they are broadcast-filtered against the qualifier set BEFORE the first

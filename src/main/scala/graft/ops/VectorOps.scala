@@ -1039,8 +1039,10 @@ object VectorOps {
     *     the driver scores the label blocks with `DotProduct.compute`.
     *   - otherwise ([[incrementalCosineDistributed]]): the batch side
     *     (vectors + norms) joins the label-blocked corpus stream; while it
-    *     is small Spark broadcasts it, so the corpus embeddings never shuffle
-    *     and per-ingest cost is |batch| × block-occupancy — the corpus² pair
+    *     is small Spark broadcasts it (a broadcast planned up front leaves
+    *     the corpus embeddings unshuffled; one AQE converts at run time
+    *     follows their shuffle write) and per-ingest cost is
+    *     |batch| × block-occupancy — the corpus² pair
     *     space is never touched. A larger batch takes a label-keyed shuffle
     *     join.
     */

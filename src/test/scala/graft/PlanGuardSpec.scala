@@ -519,6 +519,34 @@ class PlanGuardSpec extends SparkSpec {
     }
   }
 
+  test("cross-doc ngrams past the qualifier gate: the cut broadcasts, top-k unchanged") {
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+    val docs = Tables.documents(spark, sfDir)
+    // a zero gate forces the boundary-cut branch: the cut is materialized
+    // and broadcast on its measured size, so pass 2 joins map-side and no
+    // corpus-scale string stream reaches a shuffle before the join
+    val cut = graft.ops.TextOps.crossDocNgrams(docs, maxBroadcastQualifiers = 0L)
+    val plan = staticPlan(cut)
+    assert(plan.collect { case j: SortMergeJoinExec => j }.isEmpty,
+      s"the cut's join is a shuffle join:\n$plan")
+    assert(plan.collect { case j: BroadcastHashJoinExec => j }
+      .exists(_.output.exists(_.name == "n_docs")),
+      s"the cut's join is not a broadcast:\n$plan")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    val full = rows(graft.ops.TextOps.crossDocNgrams(docs))
+    assert(rows(cut) == full, "the boundary cut changed the top-k")
+    assert(full.nonEmpty, "fixture must be non-degenerate")
+  }
+
+  test("incremental substring spans: the batch probe set broadcasts on its measured size") {
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    val plan = staticPlan(SparkEntry.queries("dedup_incremental_substr")(spark, sfDir))
+    assert(plan.collect { case j: BroadcastHashJoinExec if j.joinType == LeftSemi => j }
+      .nonEmpty, s"the corpus windows do not semi-join a broadcast probe set:\n$plan")
+  }
+
   test("z-order stats: pure aggregation plan - no joins, at most agg+sort exchanges") {
     val plan = staticPlan(SparkEntry.queries("store_zorder_stats")(spark, sfDir))
     val exchanges = plan.collect {

@@ -135,6 +135,28 @@ class ExecReleaseSpec extends SparkSpec {
     Exec.releaseAll(spark)
   }
 
+  test("broadcastIfKnownSmall hints only a frame whose bytes are measured") {
+    import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
+    import org.apache.spark.sql.functions.{col, expr, posexplode}
+    def hinted(df: org.apache.spark.sql.DataFrame) =
+      Exec.broadcastIfKnownSmall(df).queryExecution.analyzed.isInstanceOf[ResolvedHint]
+    // a generator multiplies rows past the optimizer's estimate: no measured
+    // size, no hint, however small the estimate reads
+    val exploded = spark.range(100).select(
+      posexplode(expr("sequence(1, 1000)")).as(Seq("pos", "h"))).select(col("h"))
+    assert(!hinted(exploded), "an unmaterialized frame was hinted from its estimate")
+    // persisted but not yet computed: its relation stats are still an estimate
+    val p = spark.range(1000).toDF("a").persist()
+    assert(Exec.measuredBytes(p).isEmpty, "a not-yet-computed cache reported bytes")
+    assert(!hinted(p), "a not-yet-computed cache was hinted")
+    p.count()
+    assert(hinted(p), "a small computed cache was not hinted")
+    p.unpersist()
+    // a small materialized checkpoint is hinted from its block bytes
+    assert(hinted(spark.range(1000).toDF("a").localCheckpoint()))
+    Exec.releaseAll(spark)
+  }
+
   test("collectIfSmall: every row up to the small-input cap, None one row above it") {
     val cap = Exec.SmallInputRows
     assert(Exec.collectIfSmall(spark.range(cap).toDF()).map(_.length).contains(cap.toInt))
