@@ -119,13 +119,21 @@ object Bench {
     // The stdout line above is size-capped (the driver keeps only a 2000-char
     // tail), so when the registry outgrows the budget it keeps the SLOWEST
     // queries and counts the rest as "omitted". The COMPLETE per-query map —
-    // every registered query at millisecond resolution — always lands in a
-    // sibling artifact for regression tracking of the fast half too.
-    val fullOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json")
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get(fullOut),
-      render(3).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case e: Throwable => System.err.println(s"bench full-map write failed: $e") }
+    // every timed query at millisecond resolution — lands in a sibling
+    // artifact for regression tracking of the fast half too:
+    // SPARK_GRAFT_BENCH_OUT, or BENCH_FULL.json for a full-registry run. A
+    // run restricted to named queries writes no file unless
+    // SPARK_GRAFT_BENCH_OUT names one (it must not replace the committed
+    // full-registry map with a subset); it prints the full map instead.
+    val full = render(3)
+    sys.env.get("SPARK_GRAFT_BENCH_OUT").orElse(
+        if (args.nonEmpty) None else Some("BENCH_FULL.json")) match {
+      case Some(fullOut) =>
+        try java.nio.file.Files.write(java.nio.file.Paths.get(fullOut),
+          full.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        catch { case e: Throwable => System.err.println(s"bench full-map write failed: $e") }
+      case None => if (full != line) println(full)
+    }
     spark.stop()
   }
 }

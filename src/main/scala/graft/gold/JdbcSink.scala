@@ -100,7 +100,7 @@ object JdbcSink {
     */
   def loadSeries(df: DataFrame, cfg: JdbcConfig,
                  geo: String, coicop: String, unit: String): Unit =
-    Exec.collectIfSmall(df) match {
+    Exec.collectIfSmall(df, Exec.SmallInputRows) match {
       case Some(rows) => loadRows(df.schema, rows.iterator, cfg, geo, coicop, unit)
       case None => loadStreamed(df, cfg, geo, coicop, unit)
     }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.SimHash61
@@ -548,8 +548,7 @@ object DedupOps {
     * dedup groups, embedding-cosine pairs, …).
     */
   def connectedComponents(pairs: DataFrame, maxIters: Int = 20,
-                          reliableCheckpointDir: Option[String] = None,
-                          maxDriverEdges: Long = 4000000L): DataFrame = {
+                          reliableCheckpointDir: Option[String] = None): DataFrame = {
     // lineage cut per round: localCheckpoint is fast but executor-loss-
     // fragile; a reliable dir swaps in checkpoint() — same constant-size
     // plans, resilient to executor loss on a long-running cluster job
@@ -559,18 +558,15 @@ object DedupOps {
     def cut(df: DataFrame): DataFrame =
       if (reliableCheckpointDir.isDefined) df.checkpoint()
       else df.localCheckpoint()
-    // r17: the pair list is materialized ONCE up front — the count below is
-    // the gate statistic for the driver-resident path, and both branches
-    // reread the cached pairs instead of recomputing their (possibly
-    // expensive) generation subtree
+    // r17: the pair list is persisted ONCE up front — the driver gate's
+    // job materializes it, and the distributed branch rereads the cached
+    // pairs instead of recomputing their (possibly expensive) generation
+    // subtree
     val und = pairs.select(col("doc_a"), col("doc_b"))
       .persist().transform(Exec.trackPersisted)
-    val nPairs = und.count()
-    // r18: byte-priced gate (verdict item 5) — the row cap alone assumed a
-    // row width; the measured cached bytes must also fit the driver budget
-    if (Exec.fitsDriverCollect(und, nPairs, maxDriverEdges)
-        && reliableCheckpointDir.isEmpty)
-      return connectedComponentsDriver(und)
+    val collected =
+      if (reliableCheckpointDir.isEmpty) Exec.collectIfSmall(und, Exec.DriverLoopRows) else None
+    if (collected.isDefined) return connectedComponentsDriver(pairs.sparkSession, collected.get)
     val undirected = und
     val bothWays = undirected
       .union(undirected.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
@@ -651,8 +647,8 @@ object DedupOps {
     * bounded-metadata doctrine (r17 coreness / SCC) applied to the dedup
     * component pass: the near-dup pair graph is the OUTPUT of a banded +
     * verified candidate generation, orders of magnitude smaller than the
-    * corpus, and once materialized (the caller persists + counts it) it is
-    * metadata. One collect, one in-memory union–find, and the
+    * corpus, and once materialized it is metadata. The driver gate's one
+    * collect, one in-memory union–find, and the
     * (node, min-member label) assignment comes back as a |V|-row frame —
     * replacing ~O(log diameter) pointer-jump rounds of 2 joins + 1
     * checkpoint + 1 convergence collect each (almost pure driver-loop
@@ -660,13 +656,13 @@ object DedupOps {
     * cluster_id = min node id of the component — union–find's
     * representative is remapped to the component min explicitly, so the
     * assignment is definitionally identical (pinned by the CC parity spec
-    * in DedupOpsSpec). Past the `maxDriverEdges` gate (or with a reliable
+    * in DedupOpsSpec). Past the driver gate (or with a reliable
     * checkpoint dir, i.e. a long-running cluster job that wants
     * executor-loss resilience) the distributed pointer-jump loop runs
     * unchanged.
     */
-  private def connectedComponentsDriver(und: DataFrame): DataFrame = {
-    val rows = und.collect()
+  private def connectedComponentsDriver(spark: SparkSession,
+      rows: Array[Row]): DataFrame = {
     val idx = new java.util.HashMap[Long, Integer]()
     val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
     def id(x: Long): Int = {
@@ -701,7 +697,6 @@ object DedupOps {
       if (ids(i) < minId(r)) minId(r) = ids(i)
       i += 1
     }
-    val spark = und.sparkSession
     import spark.implicits._
     spark.createDataset(
         (0 until n).map(j => (ids(j), minId(find(j)))))

@@ -13,6 +13,15 @@ import org.apache.spark.unsafe.Platform
 
 /** Execution-shape helpers shared by the operator families.
   *
+  * Every driver-resident fast path decides by one gate,
+  * [[collectInternalIfSmall]] (or [[collectIfSmall]]): one bounded job that
+  * is also the collect the driver branch needs. Its row cap is one of two
+  * named constants, [[SmallInputRows]] for the medallion and corpus paths
+  * and [[DriverLoopRows]] for the iterative operator loops. Where the size
+  * is known without a job (a cube's cell count, a parameter-bounded
+  * shortlist) the decision is [[smallInput]]. `SPARK_GRAFT_DRIVER_GATE=off`
+  * forces every distributed branch.
+  *
   * No helper here runs a job to choose a join strategy. The families hint
   * `broadcast` where a side is small by construction (a filtered dimension,
   * a one-row scalar) or was already counted for the family's own loop;
@@ -48,14 +57,11 @@ object Exec {
       df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
       df.queryExecution.withCachedData, org.apache.spark.sql.Encoders.row(df.schema))
 
-  /** Default byte budget for a driver-resident collect gate
-    * ([[fitsDriverCollect]]): 1/16 of the driver heap, capped at 256 MiB.
-    * The measurement below is the MATERIALIZED block size (deserialized
-    * MEMORY_AND_DISK blocks, SizeEstimator-priced); the collected Array[Row]
-    * plus any boxed index the driver loop builds runs a small constant
-    * factor larger, which the 1/16 margin absorbs — on the default 8 g
-    * driver the budget is 256 MiB of measured blocks, order 1 GB of driver
-    * objects worst-case, comfortably inside the heap. */
+  /** Byte budget of the driver gate ([[collectInternalIfSmall]]): 1/16 of
+    * the driver heap, capped at 256 MiB, priced on the rows' binary
+    * (`UnsafeRow`) size. The decoded rows plus any boxed index a driver
+    * loop builds run a small constant factor larger, which the 1/16 margin
+    * absorbs. */
   val DefaultDriverCollectBytes: Long =
     math.min(256L << 20, Runtime.getRuntime.maxMemory / 16)
 
@@ -63,11 +69,10 @@ object Exec {
     * reports the sum of its RDD blocks' memory + disk sizes from the block
     * manager; a cacheManager-persisted frame whose every partition is
     * cached reports its in-memory relation's accumulated batch stats
-    * (actual bytes — the caller materializes before gating). None
-    * otherwise, including a persisted frame not yet computed, whose
-    * relation stats are still the optimizer's estimate (callers fall back
-    * to their row gate alone) — never an optimizer ESTIMATE, which would
-    * let a mis-estimated frame through a memory gate. */
+    * (actual bytes). None otherwise, including a persisted frame not yet
+    * computed, whose relation stats are still the optimizer's estimate —
+    * never an optimizer ESTIMATE, which would let a mis-estimated frame
+    * into a broadcast. */
   def measuredBytes(df: DataFrame): Option[Long] =
     df.queryExecution.logical match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
@@ -83,51 +88,46 @@ object Exec {
         }
     }
 
-  /** The r18 driver-collect gate (r17 verdict item 5): every driver-resident
-    * fast path used to gate on a ROW count alone (`maxDriverEdges = 4M`),
-    * silently assuming a row width — 4M three-long rows is ~100 MB of data
-    * but order 0.5–1 GB of driver Row objects. The gate now ALSO prices the
-    * frame's MEASURED bytes: `rows` must fit the caller's row cap, and when
-    * the gated frame is a materialized checkpoint its block bytes must fit
-    * [[DefaultDriverCollectBytes]]. Width-proof: a frame of wide rows (fat
-    * arrays, long strings) trips the byte leg long before the row leg.
-    * Callers already have `rows` in hand (the gate statistic doubled as a
-    * materialization count), so the byte leg adds no job — it reads the
-    * block manager's accounting of blocks the count just materialized. */
-  def fitsDriverCollect(df: DataFrame, rows: Long, maxRows: Long,
-      maxBytes: Long = DefaultDriverCollectBytes): Boolean =
-    !driverGateOff && rows <= maxRows &&
-      measuredBytes(df).forall(_ <= maxBytes)
+  /** Kill-switch for every driver-resident fast path: with
+    * `SPARK_GRAFT_DRIVER_GATE=off` every gate answers "distributed" — for
+    * drivers smaller than [[DefaultDriverCollectBytes]] assumes, and to run
+    * the distributed branches at inputs the gates would keep on the driver.
+    * [[distributedOnly]] sets it for a block of code. */
+  private val distributed =
+    new scala.util.DynamicVariable[Boolean](
+      sys.env.get("SPARK_GRAFT_DRIVER_GATE").exists(_.equalsIgnoreCase("off")))
 
-  /** Operational kill-switch for every driver-resident fast path: set
-    * `SPARK_GRAFT_DRIVER_GATE=off` and all [[fitsDriverCollect]] gates
-    * answer false, forcing the distributed branches unconditionally — for
-    * cluster deployments whose drivers are smaller than the default budget
-    * assumes (the r17 advisor's ask), and for honest measurement of the
-    * distributed paths at SFs where the gates would otherwise engage (the
-    * committed sf1 distributed-branch A/B). Default: gates on. The
-    * small-input gates [[smallInput]] and [[collectIfSmall]] obey it too. */
-  private val driverGateOff: Boolean =
-    sys.env.get("SPARK_GRAFT_DRIVER_GATE").exists(_.equalsIgnoreCase("off"))
+  /** `body` with every gate answering "distributed", as under
+    * `SPARK_GRAFT_DRIVER_GATE=off` (the parity specs' distributed runs). */
+  private[graft] def distributedOnly[A](body: => A): A =
+    distributed.withValue(true)(body)
 
   /** Row cap of the small-input paths through the medallion (one-partition
-    * silver sort, driver-side quality gate, collected JDBC rows). A
-    * single series is a few hundred rows; there every Spark stage, query and
-    * commit is fixed overhead, while above the cap the distributed plans
-    * keep their scaling. */
+    * silver sort, driver-side quality gate, collected JDBC rows) and the
+    * corpus batch paths. A single series is a few hundred rows; there every
+    * Spark stage, query and commit is fixed overhead, while above the cap
+    * the distributed plans keep their scaling. */
   val SmallInputRows: Long = 100000L
 
-  /** True when an input known to hold `rows` rows takes a small-input path
-    * (false under `SPARK_GRAFT_DRIVER_GATE=off`). */
-  def smallInput(rows: Long): Boolean = !driverGateOff && rows <= SmallInputRows
+  /** Row cap of the driver-resident iterative loops (graph rounds, the
+    * dedup union-find, the time-series recursions, TextRank, MMR): their
+    * input is bounded metadata once the data-sized work has run, and each
+    * distributed round is a few Spark jobs of fixed latency. */
+  val DriverLoopRows: Long = 4000000L
 
-  /** The collect-based small-input gate: ONE bounded job returns every row
-    * of `df` when it has at most [[SmallInputRows]] of them AND they fit
-    * [[DefaultDriverCollectBytes]], otherwise None and the caller runs its
-    * distributed branch. Callers project `df` to the columns they need
-    * first. Always None under `SPARK_GRAFT_DRIVER_GATE=off`. */
-  def collectIfSmall(df: DataFrame): Option[Array[Row]] =
-    collectInternalIfSmall(df).map { rows =>
+  /** True when an input known to hold `rows` rows takes its driver path:
+    * the gate for a size known without a job (false under
+    * `SPARK_GRAFT_DRIVER_GATE=off`). */
+  def smallInput(rows: Long, maxRows: Long): Boolean =
+    !distributed.value && rows <= maxRows
+
+  /** The driver gate: ONE bounded job returns every row of `df` when it
+    * has at most `maxRows` of them AND they fit [[DefaultDriverCollectBytes]],
+    * otherwise None and the caller runs its distributed branch. Callers
+    * project `df` to the columns they need first. Always None under
+    * `SPARK_GRAFT_DRIVER_GATE=off`. */
+  def collectIfSmall(df: DataFrame, maxRows: Long): Option[Array[Row]] =
+    collectInternalIfSmall(df, maxRows).map { rows =>
       val fromRow = ExpressionEncoder(df.schema).resolveAndBind().createDeserializer()
       rows.map(fromRow)
     }
@@ -137,23 +137,23 @@ object Exec {
     * byte equality) and arrays as `ArrayData` (what the native kernels such
     * as `DotProduct.compute` take) exactly as the distributed plan sees them.
     *
-    * Bounded before anything reaches the driver, and width-proof like
-    * [[fitsDriverCollect]]: each of the plan's P partitions serializes its
-    * rows as length-prefixed `UnsafeRow` bytes and stops, shipping nothing,
-    * at the first row past its share — `SmallInputRows / P` rows (rounded
-    * up) or `maxBytes / P` bytes. So the job computes at most about
-    * [[SmallInputRows]] rows of `df` and the driver receives at most
+    * Bounded before anything reaches the driver, and width-proof: each of
+    * the plan's P partitions serializes its rows as length-prefixed
+    * `UnsafeRow` bytes and stops, shipping nothing, at the first row past
+    * its share — `maxRows / P` rows (rounded up) or `maxBytes / P` bytes.
+    * So the job computes at most about `maxRows` rows of `df` (a cached
+    * input fills its cache partitions whole) and the driver receives at most
     * `maxBytes` whatever the input's size, and a few very wide rows (long
     * texts, fat arrays) fall back although the row cap would pass them. An
     * input near either cap whose rows crowd one partition also falls back.
     * A plan that is already a local relation is read without a job. */
-  def collectInternalIfSmall(df: DataFrame,
+  def collectInternalIfSmall(df: DataFrame, maxRows: Long,
       maxBytes: Long = DefaultDriverCollectBytes): Option[Array[InternalRow]] =
-    if (driverGateOff) None
+    if (distributed.value) None
     else {
       val qe = df.queryExecution
       val schema = df.schema
-      def fits(rows: Int, bytes: Long) = rows <= SmallInputRows && bytes <= maxBytes
+      def fits(rows: Int, bytes: Long) = rows <= maxRows && bytes <= maxBytes
       qe.executedPlan match {
         case local: LocalTableScanExec =>
           val rows = local.executeCollect()
@@ -167,7 +167,7 @@ object Exec {
           val parts = SQLExecution.withNewExecutionId(qe, Some("collectIfSmall")) {
             val rdd = plan.execute()
             val p = math.max(1, rdd.getNumPartitions)
-            val (rowShare, byteShare) = ((SmallInputRows + p - 1) / p, maxBytes / p)
+            val (rowShare, byteShare) = ((maxRows + p - 1) / p, maxBytes / p)
             rdd.mapPartitions { it =>
               Iterator.single(boundedPartition(it, schema, rowShare, byteShare))
             }.collect()
@@ -206,9 +206,9 @@ object Exec {
   }
 
   /** The rows of one [[boundedPartition]] chunk, read in place. */
-  private def decodeRows(chunk: Array[Byte], numFields: Int): Seq[InternalRow] = {
+  private def decodeRows(chunk: Array[Byte], numFields: Int): Array[InternalRow] = {
     val in = java.nio.ByteBuffer.wrap(chunk)
-    val rows = Seq.newBuilder[InternalRow]
+    val rows = Array.newBuilder[InternalRow]
     while (in.hasRemaining) {
       val size = in.getInt()
       val row = new UnsafeRow(numFields)

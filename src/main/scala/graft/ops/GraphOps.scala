@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Distributed graph analytics beyond connected components
@@ -317,8 +317,7 @@ object GraphOps {
 
   def pageRank(edges: DataFrame, iters: Int = 3, damping: Double = 0.85,
                topK: Int = 25, maxBroadcastRanks: Long = 4000000L,
-               memoKey: Option[String] = None,
-               maxDriverEdges: Long = 4000000L): DataFrame = {
+               memoKey: Option[String] = None): DataFrame = {
     val (withDeg, degFrame, nNodes) =
       resolveDegreeBuild(edges, memoKey,
         () => buildDegreeFrames(edges, maxBroadcastRanks, memoKey))
@@ -329,9 +328,10 @@ object GraphOps {
     // groupBy(dst) does; only the final rank_scaled is quantized, as in
     // the plan (PageRank driver parity spec; oracle at sf0.01/sf0.1).
     // The degree build + edge dedup stay distributed/memoized above.
-    if (Exec.fitsDriverCollect(withDeg, withDeg.count(), maxDriverEdges))
-      return pageRankDriver(withDeg, nNodes, iters, damping, topK,
-        teleportSeedMod = None)
+    val collected = Exec.collectIfSmall(withDeg.select(col("src"), col("dst"), col("deg")),
+      Exec.DriverLoopRows)
+    if (collected.isDefined) return pageRankDriver(edges.sparkSession, collected.get,
+      nNodes, iters, damping, topK, teleportSeedMod = None)
     var ranks = degFrame.select(col("src").as("node"))
       .withColumn("pr", lit(1.0 / nNodes))
     // the rank vector is ≤ |V| rows of (long, double) against |E| edge
@@ -360,17 +360,17 @@ object GraphOps {
   }
 
   /** The in-memory power iterations behind [[pageRank]] /
-    * [[personalizedPageRank]]'s driver gate — see the gate comments. One
-    * collect of the checkpointed degree-joined directed frame; per round,
+    * [[personalizedPageRank]]'s driver gate — see the gate comments. Over
+    * the collected (src, dst, deg) rows of the degree-joined directed
+    * frame; per round,
     * per-dst Σ pr/deg in edge order, then the damped update (uniform
     * teleport and rank-vector drop-out for plain PR; seed teleport and a
     * total vector for PPR). Output quantization and (rank desc, node asc)
     * top-k exactly as the distributed plan.
     */
-  private def pageRankDriver(withDeg: DataFrame, nNodes: Long, iters: Int,
-      damping: Double, topK: Int,
+  private def pageRankDriver(spark: SparkSession, rows: Array[Row], nNodes: Long,
+      iters: Int, damping: Double, topK: Int,
       teleportSeedMod: Option[Long]): DataFrame = {
-    val rows = withDeg.select(col("src"), col("dst"), col("deg")).collect()
     val m = rows.length
     val idx = new java.util.HashMap[Long, Integer]()
     val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -441,7 +441,6 @@ object GraphOps {
       .filter(r => teleport.isEmpty || r._2 > 0)
       .sortBy { case (nd, rs) => (-rs, nd) }
       .take(topK)
-    val spark = withDeg.sparkSession
     import spark.implicits._
     spark.createDataset(out).toDF("node", "rank_scaled")
       .orderBy(col("rank_scaled").desc, col("node"))
@@ -485,17 +484,17 @@ object GraphOps {
                            iters: Int = 3, damping: Double = 0.85,
                            topK: Int = 25,
                            maxBroadcastRanks: Long = 4000000L,
-                           memoKey: Option[String] = None,
-                           maxDriverEdges: Long = 4000000L): DataFrame = {
+                           memoKey: Option[String] = None): DataFrame = {
     val (withDeg, degFrame, nNodes) =
       resolveDegreeBuild(edges, memoKey,
         () => buildDegreeFrames(edges, maxBroadcastRanks, memoKey))
     // r17b: same driver gate as [[pageRank]]; the teleport variant keeps
     // every node in the vector each round (the left-join + coalesce
     // contract) and filters rank_scaled > 0 at the end.
-    if (Exec.fitsDriverCollect(withDeg, withDeg.count(), maxDriverEdges))
-      return pageRankDriver(withDeg, nNodes, iters, damping, topK,
-        teleportSeedMod = Some(seedMod))
+    val collected = Exec.collectIfSmall(withDeg.select(col("src"), col("dst"), col("deg")),
+      Exec.DriverLoopRows)
+    if (collected.isDefined) return pageRankDriver(edges.sparkSession, collected.get,
+      nNodes, iters, damping, topK, teleportSeedMod = Some(seedMod))
     val seeds = degFrame.filter(col("src") % seedMod === 0)
     val nSeeds = seeds.count()
     require(nSeeds > 0, s"personalizedPageRank: no seeds at mod $seedMod")
@@ -581,8 +580,7 @@ object GraphOps {
   private[graft] def kCoreWithRounds(edges: DataFrame, k: Int, rounds: Int = 5,
             maxBroadcastSurvivors: Long = 4000000L,
             convergeToFixpoint: Boolean = false,
-            memoKey: Option[String] = None,
-            maxDriverEdges: Long = 4000000L): (DataFrame, Int) = {
+            memoKey: Option[String] = None): (DataFrame, Int) = {
     def degreesOf(e: DataFrame): DataFrame =
       e.select(col("a").as("x")).union(e.select(col("b").as("x")))
         .groupBy(col("x")).agg(count(lit(1)).as("dg"))
@@ -603,8 +601,9 @@ object GraphOps {
     // budget / convergeToFixpoint control, the same count-unchanged early
     // exit. All-integer arithmetic — bit-exact (kCore driver parity
     // spec). Past the gate the distributed peel below runs unchanged.
-    if (Exec.fitsDriverCollect(e, e.count(), maxDriverEdges))
-      return kCoreDriver(e, k, rounds, convergeToFixpoint)
+    val collected = Exec.collectIfSmall(e.select(col("a"), col("b")), Exec.DriverLoopRows)
+    if (collected.isDefined)
+      return kCoreDriver(edges.sparkSession, collected.get, k, rounds, convergeToFixpoint)
     // r18 — DELTA peel (guide §2: only changed nodes re-aggregate). The
     // old loop re-aggregated degrees over the FULL surviving edge list and
     // rewrote it with two semi-joins every round — O(|E|) shuffled rows per
@@ -676,9 +675,8 @@ object GraphOps {
     * the gate comment in [[kCoreWithRounds]]. Same loop: per round, degree
     * census over the live edges, simultaneous drop of sub-k nodes, early
     * exit when the survivor count repeats (the set only shrinks). */
-  private def kCoreDriver(eDf: DataFrame, k: Int, rounds: Int,
-                          convergeToFixpoint: Boolean): (DataFrame, Int) = {
-    val rows = eDf.select(col("a"), col("b")).collect()
+  private def kCoreDriver(spark: SparkSession, rows: Array[Row], k: Int,
+      rounds: Int, convergeToFixpoint: Boolean): (DataFrame, Int) = {
     val idx = new java.util.HashMap[Long, Integer]()
     val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
     def id(x: Long): Int = {
@@ -737,7 +735,6 @@ object GraphOps {
       }
       j += 1
     }
-    val spark = eDf.sparkSession
     import spark.implicits._
     import scala.jdk.CollectionConverters._
     val hist = spark.createDataset(
@@ -792,8 +789,7 @@ object GraphOps {
     kTrussWithRounds(edges, k, rounds, maxBroadcastEdges)._1
 
   private[graft] def kTrussWithRounds(edges: DataFrame, k: Int,
-      rounds: Int = 3, maxBroadcastEdges: Long = 4000000L,
-      maxDriverEdges: Long = 4000000L)
+      rounds: Int = 3, maxBroadcastEdges: Long = 4000000L)
       : (DataFrame, Int) = {
     require(k >= 3, s"kTruss: k must be >= 3, got $k")
     def supportOf(e: DataFrame): DataFrame = {
@@ -811,9 +807,9 @@ object GraphOps {
     // support = |N(a) ∩ N(b)| over the live subgraph per round, the same
     // simultaneous sub-(k−2) drop, the same edge-count early exit, all
     // exact integers (kTruss driver parity spec; oracle at both SFs). The
-    // upstream edge construction stays distributed (paid by the count).
-    if (Exec.fitsDriverCollect(e, e.count(), maxDriverEdges))
-      return kTrussDriver(e, k, rounds)
+    // upstream edge construction stays distributed (paid by the gate).
+    val collected = Exec.collectIfSmall(e.select(col("a"), col("b")), Exec.DriverLoopRows)
+    if (collected.isDefined) return kTrussDriver(edges.sparkSession, collected.get, k, rounds)
     var prevEdges = -1L
     var roundsRun = 0
     var converged = false
@@ -852,9 +848,8 @@ object GraphOps {
     * live edge, simultaneous drop of sub-(k−2)-support edges, edge-count
     * early exit; final histogram over edges with support ≥ 1 (the
     * join-then-group contract — triangle-free edges emit no row). */
-  private def kTrussDriver(eDf: DataFrame, k: Int,
+  private def kTrussDriver(spark: SparkSession, rows: Array[Row], k: Int,
                            rounds: Int): (DataFrame, Int) = {
-    val rows = eDf.select(col("a"), col("b")).collect()
     val idx = new java.util.HashMap[Long, Integer]()
     val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
     def id(x: Long): Int = {
@@ -940,7 +935,6 @@ object GraphOps {
       }
       i += 1
     }
-    val spark = eDf.sparkSession
     import spark.implicits._
     import scala.jdk.CollectionConverters._
     val hist = spark.createDataset(
@@ -1366,8 +1360,7 @@ object GraphOps {
     * measure).
     */
   def hyperballHarmonic(und: DataFrame, rounds: Int = 3,
-                        memoKey: Option[String] = None,
-                        maxDriverEdges: Long = 4000000L): DataFrame = {
+                        memoKey: Option[String] = None): DataFrame = {
     val (e, dir) = undirectedShared(und, memoKey)
     // r17b: the register rounds are exact-arithmetic metadata work once
     // the edge dedup has run — register init is a 32-bit md5 slice
@@ -1377,8 +1370,8 @@ object GraphOps {
     // 4dp-floored estimate is bit-identical to the distributed plan
     // (HyperBall driver parity spec; oracle at sf0.01/sf0.1). Past the
     // gate the wide-register distributed rounds below run unchanged.
-    if (Exec.fitsDriverCollect(e, e.count(), maxDriverEdges))
-      return hyperballDriver(e, rounds)
+    val collected = Exec.collectIfSmall(e.select(col("a"), col("b")), Exec.DriverLoopRows)
+    if (collected.isDefined) return hyperballDriver(und.sparkSession, collected.get, rounds)
     val est = expr(
       """CASE WHEN 0.673D * 256D / (s + (16D - npres)) <= 40D AND npres < 16
         |  THEN 16D * ln(16D / (16D - npres))
@@ -1452,8 +1445,8 @@ object GraphOps {
     * matching the wide form's NULLs); per round each node takes the
     * register-wise max of itself and its neighbors; the estimate replays
     * the exact CASE expression over npres and the dyadic Σ2^−mr. */
-  private def hyperballDriver(eDf: DataFrame, rounds: Int): DataFrame = {
-    val rows = eDf.select(col("a"), col("b")).collect()
+  private def hyperballDriver(spark: SparkSession, rows: Array[Row],
+      rounds: Int): DataFrame = {
     val m2 = rows.length * 2
     val idx = new java.util.HashMap[Long, Integer]()
     val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -1522,7 +1515,6 @@ object GraphOps {
       while (i < nV) { balls(i)(r) = estimate(regs(i)); i += 1 }
       r += 1
     }
-    val spark = eDf.sparkSession
     val outRows = new java.util.ArrayList[org.apache.spark.sql.Row]()
     (0 until nV).sortBy(ids(_)).foreach { j =>
       var harmonic = 0.0
@@ -1581,8 +1573,7 @@ object GraphOps {
     * per half-step to cut the iterative lineage.
     */
   def hitsBounded(li: DataFrame, n: Int = 2000,
-                  memoKey: Option[String] = None,
-                  maxDriverEdges: Long = 4000000L): DataFrame = {
+                  memoKey: Option[String] = None): DataFrame = {
     def q6(c: Column): Column = floor(c * 1000000 + 0.5) / 1000000
     // r17: the bipartite edge dedup rides the directed-frame memo (the
     // kcoreMemo contract — one full-shuffle distinct per session)
@@ -1599,8 +1590,8 @@ object GraphOps {
     // normalization (pinned by the HITS parity spec; oracle-verified at
     // sf0.01/sf0.1). Past the gate the distributed half-steps below run
     // unchanged.
-    if (Exec.fitsDriverCollect(e, e.count(), maxDriverEdges))
-      return hitsDriver(e)
+    val collected = Exec.collectIfSmall(e.select(col("u"), col("v")), Exec.DriverLoopRows)
+    if (collected.isDefined) return hitsDriver(li.sparkSession, collected.get)
     val h0 = e.select(col("u")).distinct().withColumn("h", lit(1.0))
     // r18: the half-step checkpoints are LAZY — no per-step convergence
     // collect exists to piggyback on, so the final sort materializes the
@@ -1639,9 +1630,8 @@ object GraphOps {
     * and floor-quantizes to 6 dp — term-for-term the distributed
     * expressions.
     */
-  private def hitsDriver(e: DataFrame): DataFrame = {
+  private def hitsDriver(spark: SparkSession, rows: Array[Row]): DataFrame = {
     def q6(x: Double): Double = math.floor(x * 1000000 + 0.5) / 1000000
-    val rows = e.select(col("u"), col("v")).collect()
     val m = rows.length
     val us = new Array[Long](m); val vs = new Array[Long](m)
     var i = 0
@@ -1679,7 +1669,6 @@ object GraphOps {
       mp.keySet().toArray(new Array[java.lang.Long](0))
         .map(_.longValue()).sorted
         .map(k => (side, k, mp.get(k).doubleValue())).toSeq
-    val spark = e.sparkSession
     import spark.implicits._
     spark.createDataset(rowsOf("auth", a2) ++ rowsOf("hub", h2))
       .toDF("side", "node", "score")
@@ -1709,8 +1698,7 @@ object GraphOps {
     * collect, state linear in reached (seed, node) pairs.
     */
   def betweennessBounded(edges: DataFrame, seedMod: Long = 500L,
-                         memoKey: Option[String] = None,
-                         maxDriverEdges: Long = 4000000L): DataFrame = {
+                         memoKey: Option[String] = None): DataFrame = {
     def q6(c: Column): Column = floor(c * 1000000 + 0.5) / 1000000
     val (e, dir) = undirectedShared(edges, memoKey)
     // r17b: the mod-n edge construction bounds the graph, so once the
@@ -1722,8 +1710,9 @@ object GraphOps {
     // q6-floored δ arithmetic (pinned by the Brandes parity spec;
     // oracle-verified at sf0.01/sf0.1). Past the gate, the distributed
     // plan below runs unchanged — including the warm-BFS reuse.
-    if (Exec.fitsDriverCollect(e, e.count(), maxDriverEdges))
-      return betweennessDriver(e, seedMod)
+    val collected = Exec.collectIfSmall(e.select(col("a"), col("b")), Exec.DriverLoopRows)
+    if (collected.isDefined)
+      return betweennessDriver(edges.sparkSession, collected.get, seedMod)
     // r17: when the session has ALREADY materialized the family's bounded
     // BFS (closeness/harmonic share it under the same memo key), its
     // dist ≤ k slices are exactly l0 ∪ … ∪ lk — reuse them as the forward
@@ -1807,9 +1796,9 @@ object GraphOps {
     * per-node bc = q6(Σ over seed contributions), seeds accumulated in
     * ascending order.
     */
-  private def betweennessDriver(eDf: DataFrame, seedMod: Long): DataFrame = {
+  private def betweennessDriver(spark: SparkSession, rows: Array[Row],
+      seedMod: Long): DataFrame = {
     def q6(x: Double): Double = math.floor(x * 1000000 + 0.5) / 1000000
-    val rows = eDf.select(col("a"), col("b")).collect()
     val m2 = rows.length * 2
     // dense index + CSR (the sccAssignAuto layout — primitive arrays, no
     // boxed lookups on the per-edge hot path)
@@ -1893,7 +1882,6 @@ object GraphOps {
         if (any) { nContribs(v) += 1L; bcSum(v) += q6(acc) }
       }
     }
-    val spark = eDf.sparkSession
     import spark.implicits._
     spark.createDataset(
         (0 until nV).filter(nContribs(_) > 0L).sortBy(ids(_))
@@ -1904,7 +1892,6 @@ object GraphOps {
 
   def bfsLayers(edges: DataFrame, seedMod: Long = 137L, rounds: Int = 4,
                 maxBroadcastFrontier: Long = 4000000L,
-                maxDriverEdges: Long = 4000000L,
                 memoKey: Option[String] = None): DataFrame = {
     val (e, dir) = undirectedShared(edges, memoKey)
     // r17b: bounded-metadata gate (the betweennessDriver doctrine) — the
@@ -1914,8 +1901,9 @@ object GraphOps {
     // the collected CSR. All-integer output (counts, id sums, min/max) —
     // bit-exact (BFS-layers driver parity spec). Past the gate the
     // distributed rounds below run unchanged.
-    if (Exec.fitsDriverCollect(e, e.count(), maxDriverEdges))
-      return bfsLayersDriver(e, seedMod, rounds)
+    val collected = Exec.collectIfSmall(e.select(col("a"), col("b")), Exec.DriverLoopRows)
+    if (collected.isDefined)
+      return bfsLayersDriver(edges.sparkSession, collected.get, seedMod, rounds)
     // r18: ONE blocking job per round — each layer rides a LAZY
     // localCheckpoint materialized by its own frontier count (which the
     // broadcast gate needs anyway), and the visited set is a cheap union
@@ -1964,9 +1952,8 @@ object GraphOps {
     * the collected undirected edges, seeds = node % seedMod == 0 at dist 0,
     * `rounds` expansion levels, unreached nodes at dist −1; per-dist
     * integer census (count, id sum, min, max). */
-  private def bfsLayersDriver(eDf: DataFrame, seedMod: Long,
+  private def bfsLayersDriver(spark: SparkSession, rows: Array[Row], seedMod: Long,
                               rounds: Int): DataFrame = {
-    val rows = eDf.select(col("a"), col("b")).collect()
     val m2 = rows.length * 2
     val idx = new java.util.HashMap[Long, Integer]()
     val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -2026,7 +2013,6 @@ object GraphOps {
           math.max(cur._4, nd)))
       j += 1
     }
-    val spark = eDf.sparkSession
     import spark.implicits._
     import scala.jdk.CollectionConverters._
     spark.createDataset(
@@ -2092,7 +2078,6 @@ object GraphOps {
   }
 
   private[graft] def corenessValues(edges: DataFrame, maxRounds: Int = 48,
-      maxDriverEntries: Long = 8000000L,
       memoKey: Option[String] = None): DataFrame = {
     def buildAdj(): DataFrame = {
       // the 3-way-union edge dedup is the expensive part — r18: ride the
@@ -2118,19 +2103,15 @@ object GraphOps {
         corenessMemo.getOrElseUpdate(fullKey, buildAdj())
       case None => Exec.trackTransient(buildAdj())
     }
-    // one row: (total adjacency entries = 2|E|, node count) — the gate
-    // statistic for the driver-resident fixpoint (coalesce: NULL on empty)
-    val szRow = adj.agg(
-      coalesce(sum(size(col("nbs"))), lit(0L)).cast("long").as("entries"),
-      count(lit(1)).as("nodes")).head()
-    val (entries, nNodes) = (szRow.getLong(0), szRow.getLong(1))
     def hindexOf(vals: String): String =
       s"""aggregate(
          |  zip_with(reverse(array_sort($vals)),
          |    sequence(1, size($vals)),
          |    (v, i) -> least(v, CAST(i AS BIGINT))),
          |  CAST(0 AS BIGINT), (acc, t) -> greatest(acc, t))""".stripMargin
-    if (!Exec.fitsDriverCollect(adj, entries, maxDriverEntries)) {
+    val collected =
+      Exec.collectIfSmall(adj.select(col("x"), col("nbs")), Exec.DriverLoopRows)
+    if (collected.isEmpty) {
       // past the metadata gate: narrow (node, value) shuffle rounds with
       // DataFrame-resident values, joined on the NODE id directly.
       //
@@ -2153,8 +2134,13 @@ object GraphOps {
       // frame rides a LAZY localCheckpoint materialized by the next
       // round's count, so the old per-round eager-checkpoint + separate
       // checksum-collect pair collapses into one action.
+      // `chg` flags the nodes whose value the last round changed: the next
+      // round reads them from this checkpoint, not from the round's
+      // persisted delta, whose cached plan would nest every earlier
+      // round's (the driver's live heap then grew each round, and a 4 GB
+      // heap ran out at round 12 of 20 at sf0.01)
       var h = adj
-        .select(col("x"), size(col("nbs")).cast("long").as("hv"))
+        .select(col("x"), size(col("nbs")).cast("long").as("hv"), lit(true).as("chg"))
         .localCheckpoint(false)
       Exec.trackTransient(h)
       // round 0: every node is "changed" (full first recompute, as before)
@@ -2191,11 +2177,12 @@ object GraphOps {
         if (nChanged == 0L) converged = true
         else {
           val nh = h.join(delta.select(col("x")), Seq("x"), "left_anti")
-            .union(delta.select(col("x"), col("nhv").as("hv")))
+            .select(col("x"), col("hv"), lit(false).as("chg"))
+            .union(delta.select(col("x"), col("nhv").as("hv"), lit(true).as("chg")))
             .localCheckpoint(false)
           Exec.trackTransient(nh)
           h = nh
-          changed = delta.select(col("x"))
+          changed = h.filter(col("chg")).select(col("x"))
           round += 1
         }
       }
@@ -2203,16 +2190,16 @@ object GraphOps {
     } else {
       // DRIVER-RESIDENT fixpoint (r17 — the kmeansLloyd bounded-metadata
       // doctrine extended to the whole loop): the adjacency here is
-      // bounded by construction (≤ 3n nodes from the mod-n edge builder;
-      // `entries` = 2|E| is measured, gated, and ~16 MB at the default
-      // cap), so ONE collect brings it down and the 33-odd h-index rounds
+      // bounded by construction (≤ 3n nodes from the mod-n edge builder,
+      // its neighbour arrays priced by the gate's byte budget), so the
+      // gate's ONE collect brings it down and the 33-odd h-index rounds
       // run as in-memory integer counting passes — exact, and free of the
       // per-round plan-build + literal-serialize + collect cycle that made
       // the old literal-array loop pay ~0.4 s/round at sf0.1 (measured
       // 16.2 s official; the fixpoint math is identical, so the histogram
       // is bit-identical). The data-sized work — edge dedup + adjacency
-      // groupBy — stays fully distributed above the gate statistic.
-      val rows = adj.select(col("x"), col("nbs")).collect()
+      // groupBy — stays fully distributed above the gate.
+      val rows = collected.get
       val n = rows.length
       val ids = new Array[Long](n)
       val idx = new java.util.HashMap[Long, Int](n * 2)
@@ -2290,8 +2277,7 @@ object GraphOps {
 
   private[graft] def randomWalkCensusEdges(und: DataFrame,
                                            walkLen: Int,
-                                           memoKey: Option[String] = None,
-                                           maxDriverEntries: Long = 8000000L): DataFrame = {
+                                           memoKey: Option[String] = None): DataFrame = {
     val (_, d0) = undirectedShared(und, memoKey)
     val dir = d0.select(col("src").as("x"), col("dst").as("nb"))
     val adj = Exec.trackTransient(
@@ -2299,25 +2285,25 @@ object GraphOps {
         .agg(sort_array(collect_list(col("nb"))).as("nbs"))
         .coalesce(8)
         .localCheckpoint())
+    // r17b: under the driver gate the walks run driver-resident — the hop
+    // hash is pure 64-bit integer arithmetic (Knuth multiply + xor-shift
+    // over pre-reduced ids), replicated literally over the SAME sorted
+    // neighbor arrays, so every hop lands on the same neighbor and the
+    // visit census is bit-identical (random-walk driver parity spec;
+    // oracle at sf0.01/sf0.1). Past the gate the broadcast-join hop chain
+    // below runs unchanged.
+    val collected = Exec.collectIfSmall(adj.select(col("x"), col("nbs")), Exec.DriverLoopRows)
+    if (collected.isDefined) return randomWalkDriver(und.sparkSession, collected.get, walkLen)
     // byte-gated, not unconditional: adjacency rows carry full
     // neighbor arrays, so a large edge frame would blow past the broadcast
     // limit — past the gate the hop joins degrade to shuffles (r14 advisor
     // item). The estimate is one narrow agg over the already-checkpointed
-    // frame, which the driver gate below reads too (a persist+count pass
-    // re-materializes the wide array rows: measured +4 s at sf0.1)
+    // frame (a persist+count pass re-materializes the wide array rows:
+    // measured +4 s at sf0.1)
     // coalesce: sum over an empty adjacency is NULL, and getLong would NPE
     val sz = adj.agg(
       coalesce(sum(size(col("nbs"))), lit(0L)).cast("long").as("entries"),
       count(lit(1)).as("nodes")).head()
-    // r17b: under the corenessValues entries gate the walks run
-    // driver-resident — the hop hash is pure 64-bit integer arithmetic
-    // (Knuth multiply + xor-shift over pre-reduced ids), replicated
-    // literally over the SAME sorted neighbor arrays, so every hop lands
-    // on the same neighbor and the visit census is bit-identical (random-
-    // walk driver parity spec; oracle at sf0.01/sf0.1). Past the gate the
-    // broadcast-join hop chain below runs unchanged.
-    if (Exec.fitsDriverCollect(adj, sz.getLong(0), maxDriverEntries))
-      return randomWalkDriver(adj, walkLen)
     val approxBytes = sz.getLong(0) * 8L + sz.getLong(1) * 24L
     val adjCur = adj.withColumnRenamed("x", "cur")
     val bAdj = if (approxBytes <= Exec.MaxBroadcastBytes)
@@ -2345,8 +2331,8 @@ object GraphOps {
     * = nbs[(m ^ (m >> 13)) mod degree] with
     * m = (cur mod 1000003)·2654435761 + step·40503 + (seed mod 1000003) —
     * the exact SQL hop expression in 64-bit longs. */
-  private def randomWalkDriver(adj: DataFrame, walkLen: Int): DataFrame = {
-    val rows = adj.select(col("x"), col("nbs")).collect()
+  private def randomWalkDriver(spark: SparkSession, rows: Array[Row],
+      walkLen: Int): DataFrame = {
     val n = rows.length
     val ids = new Array[Long](n)
     val idx = new java.util.HashMap[Long, Integer](n * 2)
@@ -2379,7 +2365,6 @@ object GraphOps {
       }
       i += 1
     }
-    val spark = adj.sparkSession
     import spark.implicits._
     spark.createDataset(
         visits.keySet().toArray(new Array[java.lang.Long](0))
@@ -2629,15 +2614,12 @@ object GraphOps {
     * every member is an ancestor of every other, so the pivot IS the
     * least member; Tarjan + per-component min reproduces the assignment
     * exactly (pinned by SccDriverParitySpec in GraphOpsSpec). Past the
-    * `maxDriverEdges` gate the distributed FW-BW peel runs unchanged.
+    * driver gate the distributed FW-BW peel runs unchanged.
     */
-  private[graft] def sccAssignAuto(edges0: DataFrame,
-      maxDriverEdges: Long = 4000000L): DataFrame = {
-    val e = edges0
-    val m = e.count()
-    if (!Exec.fitsDriverCollect(e, m, maxDriverEdges)) sccAssignWithRounds(e)._1
-    else {
-      val rows = e.select(col("src"), col("dst")).collect()
+  private[graft] def sccAssignAuto(e: DataFrame): DataFrame =
+    Exec.collectIfSmall(e.select(col("src"), col("dst")), Exec.DriverLoopRows) match {
+    case None => sccAssignWithRounds(e)._1
+    case Some(rows) =>
       // dense index over node ids
       val idx = new java.util.HashMap[Long, java.lang.Integer]()
       val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -2722,13 +2704,12 @@ object GraphOps {
         if (ids(i) < minId(comp(i))) minId(comp(i)) = ids(i)
         i += 1
       }
-      val spark = edges0.sparkSession
+      val spark = e.sparkSession
       import spark.implicits._
       spark.createDataset(
         (0 until nV).map(j => (ids(j), minId(comp(j))))
       ).toDF("node", "scc_id")
     }
-  }
 
   /** Driver-facing SCC census over [[directedCyclicEdges]]: one row per
     * component (scc_id = least member), ordered by id. */

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
@@ -161,6 +161,7 @@ object TextOps {
   /** Global token frequency, top-k (explode → count → top-k). The explode
     * fan-out is bounded by total token count; the aggregate is map-side
     * combined before the single shuffle on token.
+    * Building the frame runs the [[sourceTokenCounts]] checkpoint job.
     */
   def tokenFrequency(docs: DataFrame, k: Int,
                      memoKey: Option[String] = None): DataFrame =
@@ -177,6 +178,7 @@ object TextOps {
     * distributed: no global sort, no skew on the limit). The streaming twin
     * (Misra–Gries within partitions, merged) trades exactness for one pass;
     * this is the exact batch form.
+    * Building the frame runs the [[sourceTokenCounts]] checkpoint job.
     */
   def heavyHitters(docs: DataFrame, supportPct: Double,
                    memoKey: Option[String] = None): DataFrame = {
@@ -715,6 +717,7 @@ object TextOps {
     * are exact, the dominant token is a `min(struct(-n, token))` argmax
     * (ties to the lexicographically smallest). One shuffle on token, one
     * on dimension — both vocabulary-sized.
+    * Building the frame runs the [[sourceTokenCounts]] checkpoint job.
     */
   def featureHashing(docs: DataFrame, dims: Int = 64,
                      memoKey: Option[String] = None): DataFrame = {
@@ -921,8 +924,7 @@ object TextOps {
     * space on both engines.
     */
   def textrankKeywords(docs: DataFrame, iters: Int = 3,
-                       damping: Double = 0.85, topK: Int = 20,
-                       maxDriverEdges: Long = 4000000L): DataFrame = {
+                       damping: Double = 0.85, topK: Int = 20): DataFrame = {
     val bg = docs
       .withColumn("toks", tokens(col("text")))
       .filter(size(col("toks")) >= 2)
@@ -950,11 +952,10 @@ object TextOps {
     // top-k SELECTION still happens in Spark (orderBy desc + word tie +
     // limit) so string collation semantics are untouched. Parity spec pins
     // driver == distributed; oracle at both SFs.
-    // r18: byte-priced gate (verdict item 5) — the collected frame is
-    // withDeg (same row count as wedge), so its measured checkpoint bytes
-    // must fit the driver budget alongside the row cap
-    if (Exec.fitsDriverCollect(withDeg, wedge.count(), maxDriverEdges))
-      return textrankDriver(withDeg, n, iters, damping, topK)
+    val collected = Exec.collectIfSmall(
+      withDeg.select(col("src"), col("dst"), col("w"), col("wdeg")), Exec.DriverLoopRows)
+    if (collected.isDefined)
+      return textrankDriver(docs.sparkSession, collected.get, n, iters, damping, topK)
     var ranks = wdeg.select(col("src").as("word"))
       .withColumn("pr", lit(1.0 / n))
     for (_ <- 1 to iters) {
@@ -973,10 +974,8 @@ object TextOps {
   }
 
   /** The in-memory damped-rank rounds behind [[textrankKeywords]]' gate. */
-  private def textrankDriver(withDeg: DataFrame, n: Long, iters: Int,
-                             damping: Double, topK: Int): DataFrame = {
-    val rows = withDeg.select(col("src"), col("dst"), col("w"), col("wdeg"))
-      .collect()
+  private def textrankDriver(spark: SparkSession, rows: Array[Row], n: Long,
+      iters: Int, damping: Double, topK: Int): DataFrame = {
     val m = rows.length
     val idx = new java.util.HashMap[String, Integer]()
     val words = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -1015,7 +1014,6 @@ object TextOps {
       }
       pr = next; present = hasIn; it += 1
     }
-    val spark = withDeg.sparkSession
     import spark.implicits._
     spark.createDataset(
         (0 until nV).filter(present(_)).map(j => (words(j),
@@ -1034,6 +1032,7 @@ object TextOps {
     * so it must NEVER funnel through one unpartitioned window partition;
     * the rank window that follows runs over the ≤k-row post-limit frame
     * (whitelisted bounded window), and the regression is one tiny aggregate.
+    * Building the frame runs the [[sourceTokenCounts]] checkpoint job.
     */
   def zipfFit(docs: DataFrame, k: Int = 100,
               memoKey: Option[String] = None): DataFrame = {
@@ -2125,7 +2124,7 @@ object TextOps {
     val typed = Seq("doc_id" -> LongType, "text" -> StringType, "source" -> StringType)
       .forall { case (c, t) => fields.get(c).exists(_.dataType == t) }
     if (!typed) return None
-    Exec.collectInternalIfSmall(pipelineFeatures(docs, n)).flatMap { rows =>
+    Exec.collectInternalIfSmall(pipelineFeatures(docs, n), Exec.SmallInputRows).flatMap { rows =>
       val ids = rows.iterator.filterNot(_.isNullAt(0)).map(_.getLong(0)).toSet
       if (ids.size != rows.length || rows.exists(_.isNullAt(2))) None
       else Some(pipelineLocal(docs, rows, fields("doc_id").nullable, keepBp,
@@ -2211,6 +2210,7 @@ object TextOps {
     * run over the ≤max(ks)-row post-limit frame (whitelisted bounded
     * window); totals come from one partial-aggregable corpus aggregate,
     * and the coverage ratios are single divisions of exact longs.
+    * Building the frame runs the [[sourceTokenCounts]] checkpoint job.
     */
   def oovRate(docs: DataFrame, ks: Seq[Int] = Seq(5, 10, 20),
               memoKey: Option[String] = None): DataFrame = {
@@ -2357,6 +2357,7 @@ object TextOps {
     * every exchange carries (source, token, count) rows. Per-token terms
     * ride exact integer ratios; the final sum is doubles of uniform
     * magnitude under q4 flooring (the knPerplexity doctrine).
+    * Building the frame runs the [[sourceTokenCounts]] checkpoint job.
     */
   def jsDivergence(docs: DataFrame,
                    memoKey: Option[String] = None): DataFrame = {

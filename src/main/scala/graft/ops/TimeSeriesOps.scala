@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -224,8 +224,7 @@ object TimeSeriesOps {
     * level-1 picks, and windows partitioned by (key, segment) over
     * ≤|months| rows — millions of independent series decompose identically.
     */
-  def binsegChangepoints(li: DataFrame,
-                         maxDriverRows: Long = 2000000L): DataFrame = {
+  def binsegChangepoints(li: DataFrame): DataFrame = {
     def q4(c: Column): Column = floor(c * 10000 + 0.5) / 10000
     val monthly = li
       .groupBy(col("l_returnflag").as("key"),
@@ -243,12 +242,11 @@ object TimeSeriesOps {
     // one lineitem aggregate — stays distributed either way. Past the
     // gate (a pathological month×key explosion) the distributed plan
     // below runs unchanged.
-    // r18: byte-priced gate (verdict item 5) — measured cached bytes must
-    // fit the driver budget alongside the row cap
-    if (Exec.fitsDriverCollect(monthly, monthly.count(), maxDriverRows)) {
-      val out = binsegDriver(monthly)
+    val collected = Exec.collectIfSmall(monthly.select(col("key"),
+      date_format(col("month"), "yyyy-MM-dd").as("m"), col("qty")), Exec.DriverLoopRows)
+    if (collected.isDefined) {
       monthly.unpersist(false)
-      return out
+      return binsegDriver(li.sparkSession, collected.get)
     }
     val wOrd = Window.partitionBy(col("key")).orderBy(col("month"))
     val wCum = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -313,11 +311,7 @@ object TimeSeriesOps {
     * cp1 join). Quantization: floor((|stat|/len)·10⁴ + 0.5)/10⁴ — the
     * same IEEE expression as the distributed q4.
     */
-  private def binsegDriver(monthly: DataFrame): DataFrame = {
-    val collected = monthly
-      .select(col("key"), date_format(col("month"), "yyyy-MM-dd").as("m"),
-        col("qty"))
-      .collect()
+  private def binsegDriver(spark: SparkSession, collected: Array[Row]): DataFrame = {
     val byKey = scala.collection.mutable.TreeMap
       .empty[String, scala.collection.mutable.ArrayBuffer[(String, Long)]]
     collected.foreach { r =>
@@ -390,7 +384,7 @@ object TimeSeriesOps {
         org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField("max_cusum2b",
         org.apache.spark.sql.types.DoubleType)))
-    monthly.sparkSession.createDataFrame(rows, schema).orderBy(col("key"))
+    spark.createDataFrame(rows, schema).orderBy(col("key"))
   }
 
   /** Seasonal-baseline anomaly screen: each (key, month)'s quantity versus
@@ -518,8 +512,7 @@ object TimeSeriesOps {
     * arithmetic — millions of series PACF in one pass, no window, no
     * collect.
     */
-  def pacfMonthly(li: DataFrame,
-                  maxDriverRows: Long = 2000000L): DataFrame = {
+  def pacfMonthly(li: DataFrame): DataFrame = {
     def q4(c: Column): Column = floor(c * 10000 + 0.5) / 10000
     def q6(c: Column): Column = floor(c * 1000000 + 0.5) / 1000000
     val monthly = li
@@ -535,11 +528,11 @@ object TimeSeriesOps {
     // run driver-resident with the same left-to-right double arithmetic
     // and the same q6/q4 floors (PACF driver parity spec; oracle at
     // sf0.01/sf0.1). The fact-table aggregate stays distributed.
-    // r18: byte-priced gate (verdict item 5)
-    if (Exec.fitsDriverCollect(monthly, monthly.count(), maxDriverRows)) {
-      val out = pacfDriver(monthly)
+    val collected = Exec.collectIfSmall(monthly.select(col("key"), col("mi"), col("cents")),
+      Exec.DriverLoopRows)
+    if (collected.isDefined) {
       monthly.unpersist(false)
-      return out
+      return pacfDriver(li.sparkSession, collected.get)
     }
     // full-series mean + centered denominator (two narrow passes over the
     // reduced monthly frame, never the fact table)
@@ -595,11 +588,9 @@ object TimeSeriesOps {
     * long sum, centered c = cents − xbar, r_k = q6(Σ c_t·c_{t−k} / Σ c²)
     * (lag pairs matched on month index, accumulated in ascending-mi
     * order), then the same p11..p44 formulas and q4 floors. */
-  private def pacfDriver(monthly: DataFrame): DataFrame = {
+  private def pacfDriver(spark: SparkSession, collected: Array[Row]): DataFrame = {
     def q4(x: Double): Double = math.floor(x * 10000 + 0.5) / 10000
     def q6(x: Double): Double = math.floor(x * 1000000 + 0.5) / 1000000
-    val collected = monthly.select(col("key"), col("mi"), col("cents"))
-      .collect()
     val byKey = scala.collection.mutable.TreeMap
       .empty[String, scala.collection.mutable.ArrayBuffer[(Int, Long)]]
     collected.foreach { r =>
@@ -647,7 +638,6 @@ object TimeSeriesOps {
       out += ((key, 3, q4(p33)))
       out += ((key, 4, q4(p44)))
     }
-    val spark = monthly.sparkSession
     import spark.implicits._
     spark.createDataset(out.toSeq).toDF("key", "lag_m", "pacf")
       .orderBy(col("key"), col("lag_m"))

@@ -260,8 +260,7 @@ object VectorOps {
     */
   def mmrRerank(emb: DataFrame, maxQueryId: Int = 5, k: Int = 5,
                 pool: Int = 50, lambda: Double = 0.7,
-                queryEmb: Option[DataFrame] = None,
-                maxDriverShortlist: Long = 4000000L): DataFrame = {
+                queryEmb: Option[DataFrame] = None): DataFrame = {
     // queryEmb: draw the query vectors from a DIFFERENT frame than the
     // retrieval pool (the composed pipeline retrieves over the DEDUPED
     // index with queries from the raw set — a query must not disappear
@@ -301,7 +300,8 @@ object VectorOps {
     // Arithmetic is replicated term-for-term (same IEEE double expression,
     // same floor-quantize, same (score desc, vec_id asc) tie-break), so
     // the selection is bit-identical — pinned by the MMR parity spec.
-    if (maxQueryId.toLong * pool.toLong * pool.toLong <= maxDriverShortlist)
+    // The bound is known without a job, so it is the whole gate.
+    if (Exec.smallInput(maxQueryId.toLong * pool.toLong * pool.toLong, Exec.DriverLoopRows))
       return mmrGreedyDriver(slim, pp, k, lambda)
     var selected: DataFrame = null
     for (r <- 1 to k) {
@@ -1114,8 +1114,8 @@ object VectorOps {
     }
     graft.functions.DotProduct.register(corpus.sparkSession)
     for {
-      probe <- Exec.collectInternalIfSmall(cosinePrep(batch))
-      stored <- Exec.collectInternalIfSmall(cosinePrep(corpus))
+      probe <- Exec.collectInternalIfSmall(cosinePrep(batch), Exec.SmallInputRows)
+      stored <- Exec.collectInternalIfSmall(cosinePrep(corpus), Exec.SmallInputRows)
     } yield {
       // rows without a label, id or embedding never join, match or score
       def scored(rows: Array[InternalRow]) =

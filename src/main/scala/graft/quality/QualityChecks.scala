@@ -361,7 +361,7 @@ object QualityChecks {
                 timeCol: String, valueCol: String, groupCols: Seq[String]): Report =
     withRequired(df, requiredCols) { q1 =>
       driverProbe(df, requiredCols, keyCols, timeCol, valueCol, groupCols)
-        .flatMap(p => graft.ops.Exec.collectIfSmall(p).map(
+        .flatMap(p => graft.ops.Exec.collectIfSmall(p, graft.ops.Exec.SmallInputRows).map(
           reportFromRows(p, _, q1, requiredCols, keyCols, timeCol, valueCol, groupCols)))
         .getOrElse(distributedReport(df, q1, requiredCols, keyCols, timeCol, valueCol, groupCols))
     }

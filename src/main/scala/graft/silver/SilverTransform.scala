@@ -81,7 +81,7 @@ object SilverTransform {
         tidy.withColumn("time", parseTimeCode(col("time")))
       else tidy
     val sorted =
-      if (Exec.smallInput(cube.n)) sortSeriesLocal(project(timed))
+      if (Exec.smallInput(cube.n, Exec.SmallInputRows)) sortSeriesLocal(project(timed))
       else sortSeries(project(timed))
     withLineage(sorted, processedAtUtc, rawBlob)
   }

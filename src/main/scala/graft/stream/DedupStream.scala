@@ -169,9 +169,12 @@ object DedupStream {
       batch.schema.find(_.name == c).exists(_.dataType == t)
     }
     def lookup(df: => DataFrame, keys: Seq[Row]): Option[Array[InternalRow]] =
-      if (keys.isEmpty) Some(Array.empty) else Exec.collectInternalIfSmall(df)
+      if (keys.isEmpty) Some(Array.empty)
+      else Exec.collectInternalIfSmall(df, Exec.SmallInputRows)
     val written = for {
-      rows <- if (typed) Exec.collectInternalIfSmall(batchFeatures(batch.toDF(), k, bands))
+      rows <-
+        if (typed)
+          Exec.collectInternalIfSmall(batchFeatures(batch.toDF(), k, bands), Exec.SmallInputRows)
         else None
       if !rows.exists(_.isNullAt(0))
       sets = rows.map(r => (r.getLong(0), r.getArray(1)))

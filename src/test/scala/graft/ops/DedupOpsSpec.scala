@@ -171,12 +171,12 @@ class DedupOpsSpec extends SparkSpec {
 
   test("connected components: exceeding maxIters fails loudly instead of splitting components") {
     // a 6-node path needs ~5 propagation rounds; cap at 2 must throw, not
-    // silently report several clusters (maxDriverEdges = 0 forces the
+    // silently report several clusters (distributedOnly forces the
     // distributed pointer-jump path — the driver union–find has no rounds)
     val path = (0L until 5L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     intercept[IllegalArgumentException] {
-      DedupOps.connectedComponents(path, maxIters = 2, maxDriverEdges = 0L)
-        .collect()
+      Exec.distributedOnly(DedupOps.connectedComponents(path, maxIters = 2)
+        .collect())
     }
   }
 
@@ -192,8 +192,8 @@ class DedupOpsSpec extends SparkSpec {
     ).toDF("doc_a", "doc_b")
     val driver = DedupOps.connectedComponents(pairs)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    val dist = DedupOps.connectedComponents(pairs, maxDriverEdges = 0L)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
+    val dist = Exec.distributedOnly(DedupOps.connectedComponents(pairs)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet)
     assert(driver == dist, s"driver=$driver dist=$dist")
     assert(driver.filter(_._1 < 20L).forall(_._2 == 1L))
   }

@@ -112,26 +112,89 @@ class ExecReleaseSpec extends SparkSpec {
     Exec.releaseAll(spark)
   }
 
-  test("fitsDriverCollect: byte leg reads measured checkpoint/cache bytes " +
-    "and vetoes wide frames the row cap alone would admit (r18)") {
+  test("driver gate: measured bytes, row and byte legs at an explicit cap") {
     import spark.implicits._
     // checkpoint-backed frame: block-manager bytes
     val ck = (1 to 1000).map(i => (i.toLong, i.toLong)).toDF("a", "b")
       .localCheckpoint()
     val ckBytes = Exec.measuredBytes(ck)
     assert(ckBytes.exists(_ > 0), s"checkpoint bytes not measured: $ckBytes")
-    assert(Exec.fitsDriverCollect(ck, 1000L, 4000000L))
+    assert(Exec.collectInternalIfSmall(ck, Exec.DriverLoopRows).map(_.length)
+      .contains(1000))
     // a tiny byte budget vetoes the collect even though rows fit the cap
-    assert(!Exec.fitsDriverCollect(ck, 1000L, 4000000L, maxBytes = 1L))
+    assert(Exec.collectInternalIfSmall(ck, Exec.DriverLoopRows, maxBytes = 1L).isEmpty)
     // the row cap still vetoes on its own
-    assert(!Exec.fitsDriverCollect(ck, 1000L, 10L))
+    assert(Exec.collectInternalIfSmall(ck, 10L).isEmpty)
     // persisted frame: in-memory relation stats
     val p = (1 to 1000).map(i => (i.toLong, "x" * 50)).toDF("a", "s").persist()
     p.count()
     val pBytes = Exec.measuredBytes(p)
     assert(pBytes.exists(_ > 0), s"cached bytes not measured: $pBytes")
-    assert(!Exec.fitsDriverCollect(p, 1000L, 4000000L, maxBytes = 100L))
+    assert(Exec.collectInternalIfSmall(p, Exec.DriverLoopRows, maxBytes = 100L).isEmpty)
     p.unpersist()
+    Exec.releaseAll(spark)
+  }
+
+  test("driver gate: DriverLoopRows admits a frame above SmallInputRows") {
+    val rows = 2 * Exec.SmallInputRows
+    val df = spark.range(0, rows, 1, 4).toDF()
+    assert(Exec.collectInternalIfSmall(df, Exec.SmallInputRows).isEmpty)
+    val got = Exec.collectInternalIfSmall(df, Exec.DriverLoopRows)
+    assert(got.map(_.map(_.getLong(0)).toSeq).contains(0L until rows))
+  }
+
+  test("driver gate: the gate and the driver collect are one Spark job") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val markerProp = "graft.spec.marker"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    @volatile var markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(markerProp) != null)) markerSeen.countDown()
+        else jobs.incrementAndGet()
+    }
+    // the listener bus is async but ordered: once a marker job's start
+    // arrives, every job started before it has been counted
+    def drain(): Unit = {
+      markerSeen = new java.util.concurrent.CountDownLatch(1)
+      sc.setLocalProperty(markerProp, "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(markerProp, null)
+      assert(markerSeen.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    }
+    def jobsOf[A](body: => A): (A, Int) = {
+      drain(); jobs.set(0)
+      val out = body
+      drain()
+      (out, jobs.get)
+    }
+    // a checkpointed input is read by a job (a local relation is not)
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 4L))
+      .toDF("src", "dst").localCheckpoint()
+    val li = Seq(10.0, 10.0, 10.0, 90.0, 90.0, 90.0).zipWithIndex.map { case (q, i) =>
+      ("A", java.sql.Timestamp.valueOf(f"2024-${i + 1}%02d-15 00:00:00"), q)
+    }.toDF("l_returnflag", "l_shipdate", "l_quantity")
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+      df.collect().map(_.toSeq).toSeq
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    // without AQE each action is one job, whatever shuffles it runs
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (scc, sccJobs) = jobsOf(GraphOps.sccAssignAuto(edges))
+      assert(sccJobs == 1, s"sccAssignAuto ran $sccJobs jobs before its result")
+      val (binseg, binsegJobs) = jobsOf(TimeSeriesOps.binsegChangepoints(li))
+      assert(binsegJobs == 1, s"binsegChangepoints ran $binsegJobs jobs before its result")
+      assert(rows(scc).sortBy(_.head.asInstanceOf[Long]) ==
+        Exec.distributedOnly(rows(GraphOps.sccAssignAuto(edges)))
+          .sortBy(_.head.asInstanceOf[Long]))
+      assert(rows(binseg) ==
+        Exec.distributedOnly(rows(TimeSeriesOps.binsegChangepoints(li))))
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    }
     Exec.releaseAll(spark)
   }
 
@@ -159,14 +222,14 @@ class ExecReleaseSpec extends SparkSpec {
 
   test("collectIfSmall: every row up to the small-input cap, None one row above it") {
     val cap = Exec.SmallInputRows
-    assert(Exec.collectIfSmall(spark.range(cap).toDF()).map(_.length).contains(cap.toInt))
-    assert(Exec.collectIfSmall(spark.range(cap + 1).toDF()).isEmpty)
+    assert(Exec.collectIfSmall(spark.range(cap).toDF(), cap).map(_.length).contains(cap.toInt))
+    assert(Exec.collectIfSmall(spark.range(cap + 1).toDF(), cap).isEmpty)
   }
   test("collectIfSmall: the byte leg declines a few very wide rows the row leg admits") {
     val wide = spark.range(3).toDF()
       .select(org.apache.spark.sql.functions.expr("repeat('x', 100000)").as("s"))
-    assert(Exec.collectInternalIfSmall(wide, maxBytes = 200000L).isEmpty)
-    assert(Exec.collectIfSmall(wide).map(_.map(_.getString(0).length).toSeq)
+    assert(Exec.collectInternalIfSmall(wide, Exec.SmallInputRows, maxBytes = 200000L).isEmpty)
+    assert(Exec.collectIfSmall(wide, Exec.SmallInputRows).map(_.map(_.getString(0).length).toSeq)
       .contains(Seq(100000, 100000, 100000)))
   }
 
@@ -185,12 +248,12 @@ class ExecReleaseSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      assert(Exec.collectInternalIfSmall(wide, budget).isEmpty)
+      assert(Exec.collectInternalIfSmall(wide, Exec.SmallInputRows, budget).isEmpty)
       // the job's end event follows its tasks' on the listener bus
       assert(done.await(30, java.util.concurrent.TimeUnit.SECONDS))
       assert(shipped.get <= budget, s"the driver received ${shipped.get} bytes")
     } finally spark.sparkContext.removeSparkListener(listener)
-    assert(Exec.collectInternalIfSmall(wide).map(_.length).contains(64))
+    assert(Exec.collectInternalIfSmall(wide, Exec.SmallInputRows).map(_.length).contains(64))
   }
 
   test("collectIfSmall: above the row cap the job computes about the cap's rows, not the input's") {
@@ -199,7 +262,7 @@ class ExecReleaseSpec extends SparkSpec {
     val counted = org.apache.spark.sql.functions.udf { (id: Long) => computed.add(1); id }
     val big = spark.range(0, 4 * cap, 1, 4).toDF().select(counted(
       org.apache.spark.sql.functions.col("id")).as("id"))
-    assert(Exec.collectInternalIfSmall(big).isEmpty)
+    assert(Exec.collectInternalIfSmall(big, cap).isEmpty)
     // each of the 4 partitions stops at the first row past its quarter
     assert(computed.value <= cap + 4, s"computed ${computed.value} rows")
   }

@@ -456,8 +456,8 @@ class GraphOpsSpec extends SparkSpec {
     val fast = GraphOps.corenessValues(edges).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     graft.ops.Exec.releaseAll(spark)
-    val slow = GraphOps.corenessValues(edges, maxDriverEntries = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val slow = Exec.distributedOnly(GraphOps.corenessValues(edges)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
     graft.ops.Exec.releaseAll(spark)
     assert(fast == slow, s"fast=$fast slow=$slow")
   }
@@ -494,17 +494,20 @@ class GraphOpsSpec extends SparkSpec {
     }
     try {
       jobs.set(0)
-      val (hist, rounds) = GraphOps.kCoreWithRounds(edges, k = 2,
-        convergeToFixpoint = true, maxDriverEdges = 0L)
-      hist.collect()
+      val rounds = Exec.distributedOnly {
+        val (hist, rounds) = GraphOps.kCoreWithRounds(edges, k = 2,
+          convergeToFixpoint = true)
+        hist.collect()
+        rounds
+      }
       val kcoreJobs = settled()
-      // rounds+1 loop aggregates + per-round broadcast builds + gate count
+      // rounds+1 loop aggregates + per-round broadcast builds + gate job
       // + final collect + AQE stage jobs; old shape measured ~3-4x this
       assert(kcoreJobs <= 6 * (rounds + 2),
         s"kCore submitted $kcoreJobs jobs for $rounds rounds")
       graft.ops.Exec.releaseAll(spark)
       jobs.set(0)
-      GraphOps.corenessValues(edges, maxDriverEntries = 0L).collect()
+      Exec.distributedOnly(GraphOps.corenessValues(edges).collect())
       val corenessJobs = settled()
       assert(corenessJobs <= 60,
         s"coreness submitted $corenessJobs jobs")
@@ -555,8 +558,8 @@ class GraphOpsSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fast == slow, s"fast=$fast slow=$slow")
     // past the gate the distributed peel must be the one that runs
-    val gated = GraphOps.sccAssignAuto(edges, maxDriverEdges = 1L).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val gated = Exec.distributedOnly(GraphOps.sccAssignAuto(edges).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap)
     assert(gated == slow, s"gated=$gated slow=$slow")
   }
 
@@ -566,20 +569,20 @@ class GraphOpsSpec extends SparkSpec {
     val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L), (0L, 4L), (4L, 5L),
       (5L, 3L), (3L, 6L), (6L, 7L), (2L, 500L), (500L, 8L), (8L, 9L))
       .toDF("a", "b")
-    // maxDriverEdges = 0 pins BOTH calls to the distributed branch — this
+    // distributedOnly pins BOTH calls to the distributed branch — this
     // test is about the warm-BFS reuse inside that branch, not the r17b
     // driver fast path (covered by its own parity test below)
-    val cold = GraphOps.betweennessBounded(edges, maxDriverEdges = 0L)
+    val cold = Exec.distributedOnly(GraphOps.betweennessBounded(edges)
       .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq)
     graft.ops.Exec.releaseAll(spark)
     // closeness under a memo key materializes the shared bounded BFS;
     // betweenness under the SAME key must then take the reuse branch
     val key = Some("spec-warm-bfs")
     GraphOps.closenessCentrality(edges, memoKey = key).collect()
-    val warm = GraphOps.betweennessBounded(edges, memoKey = key,
-        maxDriverEdges = 0L).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
+    val warm = Exec.distributedOnly(GraphOps.betweennessBounded(edges, memoKey = key)
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq)
     graft.ops.Exec.releaseAll(spark)
     assert(warm == cold, s"warm=$warm cold=$cold")
   }
@@ -594,16 +597,20 @@ class GraphOpsSpec extends SparkSpec {
     val (fastDf, fastRounds) = GraphOps.kCoreWithRounds(g, k = 2,
       convergeToFixpoint = true)
     val fast = fastDf.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val (slowDf, slowRounds) = GraphOps.kCoreWithRounds(g, k = 2,
-      convergeToFixpoint = true, maxDriverEdges = 0L)
-    val slow = slowDf.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val (slow, slowRounds) = Exec.distributedOnly {
+      val (slowDf, slowRounds) = GraphOps.kCoreWithRounds(g, k = 2,
+        convergeToFixpoint = true)
+      (slowDf.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq, slowRounds)
+    }
     assert(fast == slow, s"fast=$fast slow=$slow")
     assert(fastRounds == slowRounds, s"rounds: $fastRounds vs $slowRounds")
     // bounded-budget variant must agree too (early-exit parity)
     val (fb, fbr) = GraphOps.kCoreWithRounds(g, k = 2, rounds = 2)
-    val (sb, sbr) = GraphOps.kCoreWithRounds(g, k = 2, rounds = 2,
-      maxDriverEdges = 0L)
-    assert(fb.collect().toSeq.map(_.toSeq) == sb.collect().toSeq.map(_.toSeq))
+    val (sb, sbr) = Exec.distributedOnly {
+      val (sb, sbr) = GraphOps.kCoreWithRounds(g, k = 2, rounds = 2)
+      (sb.collect().toSeq.map(_.toSeq), sbr)
+    }
+    assert(fb.collect().toSeq.map(_.toSeq) == sb)
     assert(fbr == sbr)
   }
 
@@ -616,9 +623,8 @@ class GraphOpsSpec extends SparkSpec {
     val fast = GraphOps.bfsLayers(edges, seedMod = 20L, rounds = 2)
       .collect().map(_.toSeq).toSeq
     graft.ops.Exec.releaseAll(spark)
-    val slow = GraphOps.bfsLayers(edges, seedMod = 20L, rounds = 2,
-        maxDriverEdges = 0L)
-      .collect().map(_.toSeq).toSeq
+    val slow = Exec.distributedOnly(GraphOps.bfsLayers(edges, seedMod = 20L, rounds = 2)
+      .collect().map(_.toSeq).toSeq)
     graft.ops.Exec.releaseAll(spark)
     assert(fast == slow, s"fast=$fast slow=$slow")
   }
@@ -635,9 +641,10 @@ class GraphOpsSpec extends SparkSpec {
     val (fd, fr) = GraphOps.kTrussWithRounds(g, k = 4, rounds = 3)
     val fast = fd.collect().map(_.toSeq).toSeq
     graft.ops.Exec.releaseAll(spark)
-    val (sd, sr) = GraphOps.kTrussWithRounds(g, k = 4, rounds = 3,
-      maxDriverEdges = 0L)
-    val slow = sd.collect().map(_.toSeq).toSeq
+    val (slow, sr) = Exec.distributedOnly {
+      val (sd, sr) = GraphOps.kTrussWithRounds(g, k = 4, rounds = 3)
+      (sd.collect().map(_.toSeq).toSeq, sr)
+    }
     graft.ops.Exec.releaseAll(spark)
     assert(fast == slow, s"fast=$fast slow=$slow")
     assert(fr == sr, s"rounds: $fr vs $sr")
@@ -652,8 +659,8 @@ class GraphOpsSpec extends SparkSpec {
     val fast = GraphOps.hyperballHarmonic(und).collect()
       .map(_.toSeq).toSeq
     graft.ops.Exec.releaseAll(spark)
-    val slow = GraphOps.hyperballHarmonic(und, maxDriverEdges = 0L)
-      .collect().map(_.toSeq).toSeq
+    val slow = Exec.distributedOnly(GraphOps.hyperballHarmonic(und)
+      .collect().map(_.toSeq).toSeq)
     graft.ops.Exec.releaseAll(spark)
     assert(fast == slow, s"fast=$fast slow=$slow")
   }
@@ -671,13 +678,12 @@ class GraphOpsSpec extends SparkSpec {
       graft.ops.Exec.releaseAll(spark); r
     }
     val prFast = run(GraphOps.pageRank(edges, topK = 20))
-    val prSlow = run(GraphOps.pageRank(edges, topK = 20,
-      maxDriverEdges = 0L))
+    val prSlow = Exec.distributedOnly(run(GraphOps.pageRank(edges, topK = 20)))
     assert(prFast == prSlow, s"pr fast=$prFast slow=$prSlow")
     val pprFast = run(GraphOps.personalizedPageRank(edges, seedMod = 3L,
       topK = 20))
-    val pprSlow = run(GraphOps.personalizedPageRank(edges, seedMod = 3L,
-      topK = 20, maxDriverEdges = 0L))
+    val pprSlow = Exec.distributedOnly(run(GraphOps.personalizedPageRank(edges,
+      seedMod = 3L, topK = 20)))
     assert(pprFast == pprSlow, s"ppr fast=$pprFast slow=$pprSlow")
   }
 
@@ -691,9 +697,8 @@ class GraphOpsSpec extends SparkSpec {
     val fast = GraphOps.randomWalkCensusEdges(und, walkLen = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     graft.ops.Exec.releaseAll(spark)
-    val slow = GraphOps.randomWalkCensusEdges(und, walkLen = 8,
-        maxDriverEntries = 0L)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val slow = Exec.distributedOnly(GraphOps.randomWalkCensusEdges(und, walkLen = 8)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq)
     graft.ops.Exec.releaseAll(spark)
     assert(fast == slow, s"fast=$fast slow=$slow")
   }
@@ -722,9 +727,9 @@ class GraphOpsSpec extends SparkSpec {
     val fast = GraphOps.betweennessBounded(edges).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
     graft.ops.Exec.releaseAll(spark)
-    val slow = GraphOps.betweennessBounded(edges, maxDriverEdges = 0L)
+    val slow = Exec.distributedOnly(GraphOps.betweennessBounded(edges)
       .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq)
     graft.ops.Exec.releaseAll(spark)
     assert(fast == slow, s"fast=$fast slow=$slow")
   }
@@ -739,9 +744,9 @@ class GraphOpsSpec extends SparkSpec {
     val fast = GraphOps.hitsBounded(li, n = 10).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
     graft.ops.Exec.releaseAll(spark)
-    val slow = GraphOps.hitsBounded(li, n = 10, maxDriverEdges = 0L)
+    val slow = Exec.distributedOnly(GraphOps.hitsBounded(li, n = 10)
       .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
+      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sorted.toSeq)
     graft.ops.Exec.releaseAll(spark)
     assert(fast == slow, s"fast=$fast slow=$slow")
   }

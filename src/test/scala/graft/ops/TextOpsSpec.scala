@@ -634,8 +634,8 @@ class TextOpsSpec extends SparkSpec {
     val fast = TextOps.textrankKeywords(docs).collect()
       .map(r => (r.getString(0), r.getDouble(1))).toSeq
     graft.ops.Exec.releaseAll(spark)
-    val slow = TextOps.textrankKeywords(docs, maxDriverEdges = 0L).collect()
-      .map(r => (r.getString(0), r.getDouble(1))).toSeq
+    val slow = Exec.distributedOnly(TextOps.textrankKeywords(docs).collect()
+      .map(r => (r.getString(0), r.getDouble(1))).toSeq)
     graft.ops.Exec.releaseAll(spark)
     assert(fast == slow, s"fast=$fast slow=$slow")
   }
@@ -866,7 +866,7 @@ class TextOpsSpec extends SparkSpec {
     assert(TextOps.pipelineE2E(withNull).collect().toSeq == pipelineBranches(withNull)._2.collect().toSeq)
     val long = pipelineDocs((1 to 3).map(d =>
       (d.toLong, (0 until 30000).map(i => s"d${d}w$i").mkString(" "), "src0")): _*)
-    assert(Exec.collectInternalIfSmall(TextOps.pipelineFeatures(long, 5), 512L << 10).isEmpty,
+    assert(Exec.collectInternalIfSmall(TextOps.pipelineFeatures(long, 5), Exec.SmallInputRows, 512L << 10).isEmpty,
       "three 30k-token documents exceed a 512 KiB budget")
     assert(pipelineBranches(long)._1.isDefined, "the default budget holds them")
   }

@@ -114,8 +114,8 @@ class TimeSeriesOpsSpec extends SparkSpec {
     def norm(r: org.apache.spark.sql.Row): Seq[Any] =
       (0 until r.length).map(i => if (r.isNullAt(i)) null else r.get(i))
     val fast = TimeSeriesOps.binsegChangepoints(df).collect().map(norm).toSeq
-    val slow = TimeSeriesOps.binsegChangepoints(df, maxDriverRows = 0L)
-      .collect().map(norm).toSeq
+    val slow = Exec.distributedOnly(TimeSeriesOps.binsegChangepoints(df)
+      .collect().map(norm).toSeq)
     assert(fast == slow, s"fast=$fast slow=$slow")
     assert(fast.exists(r => r.head == "B" && r(5) == null && r(6) == null),
       s"length-1 segment must carry null cp2a: $fast")
@@ -136,8 +136,8 @@ class TimeSeriesOpsSpec extends SparkSpec {
     val df = rows.toDF("l_returnflag", "l_shipdate", "l_extendedprice")
     val fast = TimeSeriesOps.pacfMonthly(df).collect()
       .map(r => (r.getString(0), r.getInt(1), r.getDouble(2))).toSeq
-    val slow = TimeSeriesOps.pacfMonthly(df, maxDriverRows = 0L).collect()
-      .map(r => (r.getString(0), r.getInt(1), r.getDouble(2))).toSeq
+    val slow = Exec.distributedOnly(TimeSeriesOps.pacfMonthly(df).collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getDouble(2))).toSeq)
     assert(fast == slow, s"fast=$fast slow=$slow")
   }
 

@@ -577,10 +577,10 @@ class VectorOpsSpec extends SparkSpec {
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
       .toSeq
-    val slow = VectorOps.mmrRerank(emb, maxQueryId = 3, k = 4, pool = 10,
-        maxDriverShortlist = 0L).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
-      .toSeq
+    val slow = Exec.distributedOnly(
+      VectorOps.mmrRerank(emb, maxQueryId = 3, k = 4, pool = 10).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
+        .toSeq)
     assert(fast == slow, s"fast=$fast slow=$slow")
   }
 
@@ -655,7 +655,7 @@ class VectorOpsSpec extends SparkSpec {
 
   test("incremental cosine dedup: a batch of a few very wide vectors takes the distributed branch") {
     val wide = vectors((1 to 3).map(i => (i.toLong, 0, Seq.fill(50000)(i.toFloat))): _*)
-    assert(Exec.collectInternalIfSmall(VectorOps.cosinePrep(wide), 256L << 10).isEmpty,
+    assert(Exec.collectInternalIfSmall(VectorOps.cosinePrep(wide), Exec.SmallInputRows, 256L << 10).isEmpty,
       "three 50k-dimension vectors exceed a 256 KiB budget")
     assert(cosineBranches(wide, wide)._1.isDefined, "the default budget holds them")
   }

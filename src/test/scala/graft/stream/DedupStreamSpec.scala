@@ -165,7 +165,7 @@ class DedupStreamSpec extends SparkSpec {
   test("a batch of a few very long documents falls back to the distributed branch") {
     val corpus = docs.filter(col("doc_id") % 10 =!= 0).select("doc_id", "text")
     val long = textDocs((1 to 3).map(d => (800000L + d) -> words(s"d${d}w", 0 until 20000)): _*)
-    assert(Exec.collectInternalIfSmall(DedupStream.batchFeatures(long, 32, 8), 256L << 10).isEmpty,
+    assert(Exec.collectInternalIfSmall(DedupStream.batchFeatures(long, 32, 8), Exec.SmallInputRows, 256L << 10).isEmpty,
       "three 20k-token documents exceed a 256 KiB budget")
     val tmp = tempDir("dedup_wide").toString
     DedupStream.seedIndex(corpus, s"$tmp/index")

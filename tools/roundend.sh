@@ -3,7 +3,10 @@
 # commit. Run from the repo root. Driver-side tooling only.
 #
 #   1. unit + property + plan-guard specs
-#   2. full Verify dump at sf0.01 + DuckDB oracle compare (the driver's gate)
+#   2. full Verify dump at sf0.01 + DuckDB oracle compare (the driver's gate),
+#      then the queries behind the driver-loop gates again with
+#      SPARK_GRAFT_DRIVER_GATE=off, so their distributed branches meet the
+#      oracle too (at sf0.01 every one of them takes its driver branch)
 #   3. MicroBench warm-median perf gate vs the committed MICROBENCH.json
 #      (>1.3x warm regression on any tracked query fails; pass --update
 #      via UPDATE_PERF=1 to refresh the artifact after it passes)
@@ -41,6 +44,16 @@ sbt -batch test
 echo "== 2/5 correctness gate (sf0.01) =="
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/roundend_verify"
 python3 tools/selfcheck.py /tmp/roundend_verify /root/testdata/sf0.01
+# every registry query that reaches an Exec.DriverLoopRows gate
+gated=dedup_clusters,dedup_keep_best,graph_betweenness,graph_bfs_layers
+gated+=,graph_coreness,graph_hits,graph_hyperball,graph_kcore,graph_ktruss
+gated+=,graph_pagerank,graph_ppr,graph_random_walks,graph_scc
+gated+=,ts_binseg_changepoints,ts_pacf,txt_textrank_keywords,vec_mmr_rerank
+gated+=,vec_pipeline_e2e
+rm -rf /tmp/roundend_verify_off
+SPARK_GRAFT_DRIVER_GATE=off sbt -batch \
+  "runMain graft.Verify /root/testdata/sf0.01 /tmp/roundend_verify_off $gated"
+python3 tools/selfcheck.py /tmp/roundend_verify_off /root/testdata/sf0.01 "$gated"
 
 echo "== 3/5 perf gate (warm medians, sf0.1) =="
 if [[ "${UPDATE_PERF:-0}" == "1" ]]; then

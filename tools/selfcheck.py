@@ -1,7 +1,10 @@
 #!/usr/bin/env python3
 """Local stand-in for the driver's correctness gate.
 
-Usage: python3 tools/selfcheck.py <outDir-from-Verify> <sfDir>
+Usage: python3 tools/selfcheck.py <outDir-from-Verify> <sfDir> [q1,q2,...]
+
+With a query list (the filter a partial `graft.Verify` dump was given),
+only those queries are compared, and each must have a result and an oracle.
 
 Loads each <outDir>/<name>/ parquet (Spark result), runs the matching SQL from
 <outDir>/oracle_sql.json in DuckDB over the sfDir parquet tables, and compares:
@@ -91,14 +94,21 @@ def compare(name, spark_df, duck_df):
 
 def main():
     out_dir, sf_dir = sys.argv[1], sys.argv[2]
+    only = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
     oracles = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
+    if only is not None:
+        missing = only - oracles.keys()
+        if missing:
+            print(f"FAIL no oracle for {sorted(missing)}"); sys.exit(1)
+        oracles = {k: v for k, v in oracles.items() if k in only}
     con = duckdb.connect()
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM parquet_scan('{p}')")
     n_pass = n_fail = n_noracle = 0
-    result_dirs = sorted(d for d in glob.glob(os.path.join(out_dir, "*")) if os.path.isdir(d))
+    result_dirs = sorted(d for d in glob.glob(os.path.join(out_dir, "*"))
+                         if os.path.isdir(d) and (only is None or os.path.basename(d) in only))
     for rd in result_dirs:
         name = os.path.basename(rd)
         files = glob.glob(os.path.join(rd, "*.parquet"))
