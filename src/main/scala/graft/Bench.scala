@@ -12,28 +12,12 @@ package graft
   * repeat-timing estimator for the engine's own cost, robust to transient
   * box load from whatever else shares the machine (run-to-run noise on a
   * busy host reached 35× on sub-second queries; the min of two passes
-  * bounds it). The cache is cleared between measurements, so every rep is
-  * a cold-cache run of the full query including its parquet scans — reps
-  * never reuse another rep's pinned intermediates.
-  *
-  * Exception, by design: SESSION-SCOPED memoized frames (the graph
-  * queries' oriented-edge frame, the dedup family's verified LSH pair
-  * graph; r17 extended the same contract to the shared lineitem edge
-  * dedups, the closeness/harmonic BFS, the LPA labels, the BPE tokenizer
-  * model, and the PQ reconstruction) are localCheckpoint'ed and
-  * deliberately survive the cache clear WITHIN a pass — a session running
-  * those query families back to back materializes the shared frame once,
-  * which is exactly how a production pipeline runs them. The FIRST query
-  * touching a family pays the materialization inside its measured time;
-  * the family's total is what the bench reports honestly.
-  *
-  * r18 (the r17 verdict's measurement-shadow fix): memos are EVICTED
-  * BETWEEN PASSES — each pass is treated as a fresh session, so the
-  * min-of-passes estimator always contains every family's shared build
-  * exactly once (in its first-touch query). Under the old protocol the
-  * build landed only in pass 1 and `min` picked pass 2, dropping the
-  * shared-build cost from every reported number. The COLD single-query
-  * costs live in MICROBENCH.json (MicroBench evicts memos between reps).
+  * bounds it). `Exec.clearPinned` runs after every query, releasing the
+  * cache and every checkpoint the query tracked, so every rep is a
+  * cold-cache run of the full query including its parquet scans and its
+  * own intermediate builds — no query reuses another query's frames.
+  * `Exec.releaseAll` also runs at each pass boundary, sweeping any
+  * persisted block a query left untracked.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -57,9 +41,7 @@ object Bench {
 
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt
     val timings = (1 to passes).map { _ =>
-      // pass boundary = session boundary: evict every session-scoped memo
-      // so EACH pass pays each family's shared build once, in the family's
-      // first-touch query — min-of-passes then always carries the build
+      // pass boundary: sweep every persisted block a query left untracked
       graft.ops.Exec.releaseAll(spark)
       names.map { name =>
         val t0 = System.nanoTime()

@@ -129,8 +129,8 @@ object MicroBench {
 
     val timings = names.map { n =>
       val secs = (1 to reps).map { _ =>
-        // between-queries contract: drop pinned plans AND memoized
-        // checkpoint frames so every rep pays the query's true cost
+        // between-queries contract: drop pinned plans and checkpoint
+        // frames so every rep pays the query's true cost
         graft.ops.Exec.releaseAll(spark)
         val t0 = System.nanoTime()
         SparkEntry.queries(n)(spark, sfDir).collect()

@@ -1609,8 +1609,7 @@ object SparkEntry {
     Seq(
       Q("graph_triangles",
         (s, d) => graft.ops.GraphOps.triangleCount(
-          graft.ops.GraphOps.lineitemEdges(lineitem(s, d), 60),
-          memoKey = Some(s"$d#60")),
+          graft.ops.GraphOps.lineitemEdges(lineitem(s, d), 60)),
         Some(s"""WITH $duckEdges
                 |SELECT (SELECT count(DISTINCT x) FROM nodes) AS n_nodes,
                 |  (SELECT count(*) FROM edges) AS n_edges,
@@ -1618,8 +1617,7 @@ object SparkEntry {
 
       Q("graph_triangle_nodes",
         (s, d) => graft.ops.GraphOps.topTriangleNodes(
-          graft.ops.GraphOps.lineitemEdges(lineitem(s, d), 60), 15,
-          memoKey = Some(s"$d#60")),
+          graft.ops.GraphOps.lineitemEdges(lineitem(s, d), 60), 15),
         Some(s"""WITH $duckEdges,
                 |credits AS (
                 |  SELECT apex AS node FROM tri
@@ -1639,8 +1637,7 @@ object SparkEntry {
       // orientation-independent per-node credits
       Q("graph_clustering_coeff",
         (s, d) => graft.ops.GraphOps.clusteringCoefficients(
-          graft.ops.GraphOps.sampledTriEdges(lineitem(s, d)),
-          memoKey = Some(s"$d#cctri")),
+          graft.ops.GraphOps.sampledTriEdges(lineitem(s, d))),
         Some(s"""WITH edges AS MATERIALIZED (
                 |  SELECT DISTINCT least(u, v) AS a, greatest(u, v) AS b FROM (
                 |    SELECT l_orderkey % 5000 AS u, l_partkey % 5000 + 5000 AS v,
@@ -1730,8 +1727,7 @@ object SparkEntry {
       // N-scaled and 1e-6-floor-quantized BEFORE the ordering/cut.
       Q("graph_pagerank",
         (s, d) => graft.ops.GraphOps.pageRank(
-          graft.ops.GraphOps.lineitemEdges(lineitem(s, d), 500),
-          memoKey = Some(s"$d#li500")),
+          graft.ops.GraphOps.lineitemEdges(lineitem(s, d), 500)),
         Some {
           val iters = (1 to 3).map { i =>
             s"""r$i AS MATERIALIZED (
@@ -1759,11 +1755,10 @@ object SparkEntry {
         }),
 
       // personalized PageRank: restart mass on the node%100==0 seed set;
-      // same memoized degree build as graph_pagerank (shared memo key)
+      // same degree build as graph_pagerank
       Q("graph_ppr",
         (s, d) => graft.ops.GraphOps.personalizedPageRank(
-          graft.ops.GraphOps.lineitemEdges(lineitem(s, d), 500),
-          memoKey = Some(s"$d#li500")),
+          graft.ops.GraphOps.lineitemEdges(lineitem(s, d), 500)),
         Some {
           val iters = (1 to 3).map { i =>
             s"""r$i AS MATERIALIZED (
@@ -1804,8 +1799,7 @@ object SparkEntry {
       // graph; oracle unrolls the identical 5 peel rounds
       Q("graph_kcore",
         (s, d) => graft.ops.GraphOps.kCore(
-          graft.ops.GraphOps.orderPartEdges(lineitem(s, d), 1000), k = 4,
-          memoKey = Some(s"$d#kcore1000")),
+          graft.ops.GraphOps.orderPartEdges(lineitem(s, d), 1000), k = 4),
         Some {
           // each round references e{i-1} three times and k_i twice; DuckDB
           // INLINES plain CTEs, so without MATERIALIZED the 5-round unroll
@@ -1842,7 +1836,7 @@ object SparkEntry {
       Q("graph_bfs_layers",
         (s, d) => graft.ops.GraphOps.bfsLayers(
           graft.ops.GraphOps.lineitemEdges(lineitem(s, d), 500),
-          seedMod = 137L, rounds = 4, memoKey = Some(s"$d#li500")),
+          seedMod = 137L, rounds = 4),
         Some {
           val layers = (1 to 4).map { r =>
             s"""l$r AS MATERIALIZED (
@@ -1882,8 +1876,7 @@ object SparkEntry {
       // instead of collapsing to one label
       Q("graph_lpa_communities",
         (s, d) => graft.ops.GraphOps.labelPropagation(
-          graft.ops.GraphOps.lineitemEdges(lineitem(s, d), 2000), rounds = 2,
-          memoKey = Some(s"$d#li2000")),
+          graft.ops.GraphOps.lineitemEdges(lineitem(s, d), 2000), rounds = 2),
         Some(s"""WITH ${lpaCtes(2000)}
                 |SELECT label AS community, count(*) AS n_nodes,
                 |  min(node) AS min_node, max(node) AS max_node,
@@ -1895,8 +1888,7 @@ object SparkEntry {
       // value, q_total divides the exact integer sum
       Q("graph_modularity",
         (s, d) => graft.ops.GraphOps.modularity(
-          graft.ops.GraphOps.lineitemEdges(lineitem(s, d), 2000), rounds = 2,
-          memoKey = Some(s"$d#li2000")),
+          graft.ops.GraphOps.lineitemEdges(lineitem(s, d), 2000), rounds = 2),
         Some(s"""WITH ${lpaCtes(2000)},
                 |mm AS (SELECT count(*) AS m FROM edges),
                 |deg AS (SELECT node, count(*) AS deg FROM (
@@ -1929,8 +1921,7 @@ object SparkEntry {
       // integer division per seed
       Q("graph_closeness",
         (s, d) => graft.ops.GraphOps.closenessCentrality(
-          graft.ops.GraphOps.lineitemEdges(lineitem(s, d), 2000),
-          memoKey = Some(s"$d#li2000")),
+          graft.ops.GraphOps.lineitemEdges(lineitem(s, d), 2000)),
         Some(s"""WITH ${bfsCtes(2000, 500)}
                 |SELECT seed, count(*) AS n_reached,
                 |  CAST(sum(dist) AS BIGINT) AS dist_sum,
@@ -1945,8 +1936,7 @@ object SparkEntry {
       // exact integer 6/d (lcm(1..3)), one long sum, one final division
       Q("graph_harmonic",
         (s, d) => graft.ops.GraphOps.harmonicCentrality(
-          graft.ops.GraphOps.lineitemEdges(lineitem(s, d), 2000),
-          memoKey = Some(s"$d#li2000")),
+          graft.ops.GraphOps.lineitemEdges(lineitem(s, d), 2000)),
         Some(s"""WITH ${bfsCtes(2000, 500)}
                 |SELECT seed, count(*) AS n_reached,
                 |  floor(CAST(sum(6 // dist) AS DOUBLE) / 6
@@ -1963,8 +1953,7 @@ object SparkEntry {
       // quantized values.
       Q("graph_hyperball",
         (s, d) => graft.ops.GraphOps.hyperballHarmonic(
-          graft.ops.GraphOps.lineitemEdges(lineitem(s, d), 2000),
-          memoKey = Some(s"$d#li2000")),
+          graft.ops.GraphOps.lineitemEdges(lineitem(s, d), 2000)),
         Some {
           val estSql = (s: String, np: String) =>
             s"""CASE WHEN 0.673::DOUBLE * 256::DOUBLE / ($s + (16::DOUBLE - $np)) <= 40::DOUBLE
@@ -2015,8 +2004,7 @@ object SparkEntry {
       // directed order->part graph, L1-normalized + 6dp-quantized per
       // half-step so both engines recurse on identical doubles
       Q("graph_hits",
-        (s, d) => graft.ops.GraphOps.hitsBounded(lineitem(s, d), 2000,
-          memoKey = Some(s"$d#hits2000")),
+        (s, d) => graft.ops.GraphOps.hitsBounded(lineitem(s, d), 2000),
         Some("""WITH e AS MATERIALIZED (
                 |  SELECT DISTINCT l_orderkey % 2000 AS u,
                 |    l_partkey % 2000 + 2000 AS v FROM lineitem),
@@ -2050,8 +2038,7 @@ object SparkEntry {
       // pseudo-random permutation both engines replay; oracle unrolls the
       // 8 hops over the same adjacency arrays
       Q("graph_random_walks",
-        (s, d) => graft.ops.GraphOps.randomWalkCensus(lineitem(s, d), 2000,
-          memoKey = Some(s"$d#li2000")),
+        (s, d) => graft.ops.GraphOps.randomWalkCensus(lineitem(s, d), 2000),
         Some {
           val steps = (1 to 8).map { i =>
             s"""w$i AS MATERIALIZED (
@@ -2085,8 +2072,7 @@ object SparkEntry {
       // SFs — density saturates the mod-2000 graph, so rounds plateau) —
       // extra rounds past the fixpoint are no-ops
       Q("graph_coreness",
-        (s, d) => graft.ops.GraphOps.corenessHistogram(lineitem(s, d), 2000,
-          memoKey = Some(s"$d#li2000")),
+        (s, d) => graft.ops.GraphOps.corenessHistogram(lineitem(s, d), 2000),
         Some {
           val rounds = (1 to 48).map { i =>
             s"""h$i AS MATERIALIZED (
@@ -2112,8 +2098,7 @@ object SparkEntry {
       // pairs, feed-forward triangles, min-rotation 3-cycles — instance
       // counts (not exclusive triad classes), all exact integers
       Q("graph_triad_census",
-        (s, d) => graft.ops.GraphOps.triadCensus(lineitem(s, d), 2000,
-          memoKey = Some(s"$d#dcyc2000")),
+        (s, d) => graft.ops.GraphOps.triadCensus(lineitem(s, d), 2000),
         Some("""WITH e AS MATERIALIZED (
                |  SELECT DISTINCT l_orderkey % 2000 AS src,
                |    l_partkey % 2000 AS dst
@@ -2149,8 +2134,7 @@ object SparkEntry {
       // is a completely independent formulation — recursive-CTE transitive
       // closure, scc_id(v) = least mutually-reachable node
       Q("graph_scc",
-        (s, d) => graft.ops.GraphOps.sccSummary(lineitem(s, d), 2000,
-          memoKey = Some(s"$d#dcyc2000")),
+        (s, d) => graft.ops.GraphOps.sccSummary(lineitem(s, d), 2000),
         Some("""WITH RECURSIVE e AS (
                |  SELECT DISTINCT l_orderkey % 2000 AS src,
                |    l_partkey % 2000 AS dst
@@ -2178,8 +2162,7 @@ object SparkEntry {
       // doubles (the ts_pacf trick)
       Q("graph_betweenness",
         (s, d) => graft.ops.GraphOps.betweennessBounded(
-          graft.ops.GraphOps.lineitemEdges(lineitem(s, d), 2000),
-          memoKey = Some(s"$d#li2000")),
+          graft.ops.GraphOps.lineitemEdges(lineitem(s, d), 2000)),
         Some(s"""WITH ${edgesCte(2000)},
                 |dir AS MATERIALIZED (
                 |  SELECT a AS src, b AS dst FROM edges
@@ -2313,8 +2296,7 @@ object SparkEntry {
 
       Q("graph_assortativity",
         (s, d) => graft.ops.GraphOps.degreeAssortativity(
-          graft.ops.GraphOps.lineitemEdges(lineitem(s, d), 500),
-          memoKey = Some(s"$d#li500")),
+          graft.ops.GraphOps.lineitemEdges(lineitem(s, d), 500)),
         Some(s"""WITH ${edgesCte(500)},
                 |dir AS MATERIALIZED (
                 |  SELECT a AS src, b AS dst FROM edges
@@ -3789,8 +3771,7 @@ object SparkEntry {
     // census pass for all columns
     Q("qc_outlier_iqr",
       (s, d) => QualityChecks.iqrOutliers(lineitem(s, d),
-        Seq("l_discount", "l_extendedprice", "l_quantity", "l_tax"),
-        memoKey = Some(d)),
+        Seq("l_discount", "l_extendedprice", "l_quantity", "l_tax")),
       Some {
         val cols = Seq("l_discount", "l_extendedprice", "l_quantity", "l_tax")
         val qsel = cols.map(c =>
@@ -3831,7 +3812,7 @@ object SparkEntry {
       // census scan counts both fence sets (was two iqrOutliers legs =
       // four fact-table passes); identical value expressions, same output
       (s, d) => QualityChecks.iqrApproxAudit(lineitem(s, d),
-        Seq("l_extendedprice", "l_quantity"), memoKey = Some(d)),
+        Seq("l_extendedprice", "l_quantity")),
       Some("""WITH q AS (SELECT
              |    quantile_cont(l_extendedprice, 0.25) AS q1_p,
              |    quantile_cont(l_extendedprice, 0.75) AS q3_p,
@@ -5985,7 +5966,7 @@ object SparkEntry {
               |FROM documents GROUP BY lang ORDER BY lang""".stripMargin)),
 
     Q("txt_token_freq",
-      (s, d) => TextOps.tokenFrequency(documents(s, d), 20, memoKey = Some(d)),
+      (s, d) => TextOps.tokenFrequency(documents(s, d), 20),
       Some(s"""SELECT token, count(*) AS n
               |FROM (SELECT unnest($DuckToks) AS token FROM documents)
               |GROUP BY token ORDER BY n DESC, token LIMIT 20""".stripMargin)),
@@ -6100,7 +6081,7 @@ object SparkEntry {
     // exact φ-frequent heavy hitters: output bounded by 100/φ rows at ANY
     // corpus size (support threshold, not a global-sort top-k)
     Q("txt_heavy_hitters",
-      (s, d) => TextOps.heavyHitters(documents(s, d), 0.5, memoKey = Some(d)),
+      (s, d) => TextOps.heavyHitters(documents(s, d), 0.5),
       Some(s"""WITH toks AS (SELECT unnest($DuckToks) AS token FROM documents),
               |c AS (SELECT token, count(*) AS n FROM toks GROUP BY 1),
               |t AS (SELECT count(*) AS total FROM toks)
@@ -6333,7 +6314,7 @@ object SparkEntry {
     // counting via list_zip, argmax by (cnt DESC, pair ASC), greedy
     // left-to-right merge via list_reduce over space-joined symbols
     Q("txt_bpe_merges",
-      (s, d) => TextOps.bpeMerges(documents(s, d), memoKey = Some(s"$d#bpe")),
+      (s, d) => TextOps.bpeMerges(documents(s, d)),
       Some {
         val rounds = (1 to 5).map { r =>
           s"""p$r AS (
@@ -6373,7 +6354,7 @@ object SparkEntry {
     // symbol with its frequency-weighted count — the oracle replays the
     // full training unroll and tallies the final segmentation
     Q("txt_bpe_vocab",
-      (s, d) => TextOps.bpeVocab(documents(s, d), memoKey = Some(s"$d#bpe")),
+      (s, d) => TextOps.bpeVocab(documents(s, d)),
       Some {
         val rounds = (1 to 5).map { r =>
           s"""p$r AS (
@@ -6412,7 +6393,7 @@ object SparkEntry {
     // fingerprints the full word-ordered segmentation — one flipped merge
     // boundary anywhere in any document breaks the hash
     Q("txt_bpe_encode",
-      (s, d) => TextOps.bpeEncode(documents(s, d), memoKey = Some(s"$d#bpe")),
+      (s, d) => TextOps.bpeEncode(documents(s, d)),
       Some {
         s"""$BpeEncodePrefix,
            |t AS (SELECT doc_id, $DuckToks AS toks FROM documents),
@@ -6435,7 +6416,7 @@ object SparkEntry {
     // tokenizer-equity readout): shared BPE encode core, language-grain
     // rollup of exact word/subword/char counts
     Q("txt_fertility_by_lang",
-      (s, d) => TextOps.fertilityByLang(documents(s, d), memoKey = Some(s"$d#bpe")),
+      (s, d) => TextOps.fertilityByLang(documents(s, d)),
       Some {
         s"""$BpeEncodePrefix,
            |t AS (SELECT doc_id, lang, $DuckToks AS toks FROM documents),
@@ -6755,7 +6736,7 @@ object SparkEntry {
     // hash doctrine), distinct-token + occupancy per slot, dominant token
     // via the min(struct) argmax
     Q("txt_feature_hashing",
-      (s, d) => TextOps.featureHashing(documents(s, d), memoKey = Some(d)),
+      (s, d) => TextOps.featureHashing(documents(s, d)),
       Some(s"""WITH toks AS (SELECT unnest($DuckToks) AS token FROM documents),
               |pt AS (
               |  SELECT token, count(*) AS n,
@@ -6963,7 +6944,7 @@ object SparkEntry {
 
     // Zipf fit: OLS of ln(freq) ~ ln(rank) over the top-100 tokens
     Q("txt_zipf",
-      (s, d) => TextOps.zipfFit(documents(s, d), memoKey = Some(d)),
+      (s, d) => TextOps.zipfFit(documents(s, d)),
       Some(s"""WITH f AS (SELECT unnest($DuckToks) AS token FROM documents),
               |g AS (SELECT token, count(*) AS n FROM f GROUP BY 1),
               |r AS (SELECT token, n,
@@ -7023,7 +7004,7 @@ object SparkEntry {
     // distributions — terms share one full-outer token join; a token
     // missing from one side flows through the same expression with q = 0
     Q("txt_js_divergence",
-      (s, d) => TextOps.jsDivergence(documents(s, d), memoKey = Some(d)),
+      (s, d) => TextOps.jsDivergence(documents(s, d)),
       Some(s"""WITH tok AS (
               |  SELECT source, unnest($DuckToks) AS token FROM documents),
               |c AS (SELECT source, token, count(*) AS n FROM tok GROUP BY 1, 2),
@@ -7119,7 +7100,7 @@ object SparkEntry {
     // vocabulary-coverage / OOV curve: exact cumulative occurrence sums at
     // frequency ranks 5/10/20 (the fixture vocabulary is ~31 words), single-division ratios
     Q("txt_oov_rate",
-      (s, d) => TextOps.oovRate(documents(s, d), memoKey = Some(d)),
+      (s, d) => TextOps.oovRate(documents(s, d)),
       Some(s"""WITH f AS (
               |  SELECT word, count(*) AS f FROM (
               |    SELECT unnest($DuckToks) AS word FROM documents)
@@ -7351,7 +7332,7 @@ object SparkEntry {
               |ORDER BY doc_a, doc_b""".stripMargin)),
 
     Q("dedup_minhash_lsh",
-      (s, d) => DedupOps.minhashLshPairs(documents(s, d), memoKey = Some(d)),
+      (s, d) => DedupOps.minhashLshPairs(documents(s, d)),
       Some(s"""$duckLshCtes
               |SELECT doc_a, doc_b,
               |  round(CAST(inter AS DOUBLE) / (na + nb - inter), 4) AS jaccard
@@ -7437,7 +7418,7 @@ object SparkEntry {
     // degree distribution of the near-dup graph: the boilerplate/mega-
     // cluster early-warning diagnostic, over the same verified pair set
     Q("dedup_degree_hist",
-      (s, d) => DedupOps.nearDupDegreeHist(documents(s, d), memoKey = Some(d)),
+      (s, d) => DedupOps.nearDupDegreeHist(documents(s, d)),
       Some(s"""$duckLshCtes,
               |edges AS (
               |  SELECT doc_a, doc_b FROM j
@@ -7454,7 +7435,7 @@ object SparkEntry {
     // min-label propagation; DuckDB replays it with a recursive CTE
     // (min reachable id == component min, survivor = component min itself)
     Q("dedup_clusters",
-      (s, d) => DedupOps.nearDupClusters(documents(s, d), memoKey = Some(d)),
+      (s, d) => DedupOps.nearDupClusters(documents(s, d)),
       Some("WITH RECURSIVE " + duckLshCtes.stripPrefix("WITH ") +
         s""",
            |pairs AS (
@@ -7475,7 +7456,7 @@ object SparkEntry {
     // lowest id), price the dropped members/characters — the decision a
     // dedup pipeline ships, over the same recursive-CTE components
     Q("dedup_keep_best",
-      (s, d) => DedupOps.keepBestResolution(documents(s, d), memoKey = Some(d)),
+      (s, d) => DedupOps.keepBestResolution(documents(s, d)),
       Some("WITH RECURSIVE " + duckLshCtes.stripPrefix("WITH ") +
         s""",
            |pairs AS (
@@ -9233,8 +9214,7 @@ object SparkEntry {
     // distance quantized before argmin/ranking so both engines rank
     // identically
     Q("vec_pq_adc",
-      (s, d) => VectorOps.pqAdcTopK(embeddings(s, d), maxQueryId = 5, k = 5,
-        memoKey = Some(s"$d#pq")),
+      (s, d) => VectorOps.pqAdcTopK(embeddings(s, d), maxQueryId = 5, k = 5),
       Some(s"""WITH e AS (SELECT vec_id, $DuckVec AS v FROM embeddings),
               |ms AS (SELECT unnest(range(0, 8)) AS m),
               |vs AS (SELECT vec_id, m, v[m * 8 + 1:m * 8 + 8] AS vsub
@@ -9291,8 +9271,7 @@ object SparkEntry {
     // are scored, PQ bounds WHAT is read per vector; the oracle replays
     // coarse assignment + codebook training + ADC scoring end to end
     Q("vec_ivfpq_ann",
-      (s, d) => VectorOps.ivfPqAnn(embeddings(s, d), maxQueryId = 5, k = 5,
-        memoKey = Some(s"$d#pq")),
+      (s, d) => VectorOps.ivfPqAnn(embeddings(s, d), maxQueryId = 5, k = 5),
       Some(s"""WITH flat AS (
               |  SELECT vec_id,
               |    CAST(unnest(range(len(embedding))) AS INTEGER) AS pos,

@@ -21,8 +21,8 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // operators pin small reused intermediates and memoize checkpointed
-      // frames; don't let 160+ queries' worth accumulate in one session
+      // operators pin small reused intermediates and checkpoint frames;
+      // don't let 160+ queries' worth accumulate in one session
       graft.ops.Exec.releaseAll(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

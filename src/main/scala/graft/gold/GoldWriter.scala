@@ -118,10 +118,35 @@ object GoldWriter {
     try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
   }
 
-  private def readString(spark: SparkSession, path: String): String = {
-    val f = fs(spark, path)
+  private def readString(f: FileSystem, path: String): String = {
     val in = f.open(new Path(path))
     try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
+  }
+
+  /** The file system of the `LATEST.json` pointer: without a checksum
+    * sidecar, so replacing the pointer is one rename, not two. */
+  private def pointerFs(spark: SparkSession, dir: String): FileSystem =
+    fs(spark, dir) match {
+      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+      case f => f
+    }
+
+  /** Replace `path` with `body` by writing a temp file in the same
+    * directory and renaming it over `path`, so a concurrent reader sees the
+    * old content or the new, never an empty or partial file. A POSIX
+    * rename replaces the target atomically; on a store whose rename refuses
+    * an existing target (HDFS) the target is deleted first, and a reader
+    * there can find no pointer for that moment. */
+  private def replaceString(spark: SparkSession, path: String, body: String): Unit = {
+    val f = pointerFs(spark, path)
+    val target = new Path(path)
+    val tmp = new Path(target.getParent, s".${target.getName}.${java.util.UUID.randomUUID}.tmp")
+    val out = f.create(tmp, false)
+    try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    if (!f.rename(tmp, target)) {
+      f.delete(target, false)
+      if (!f.rename(tmp, target)) throw new java.io.IOException(s"cannot replace $path")
+    }
   }
 
   private def esc(s: String): String =
@@ -137,8 +162,9 @@ object GoldWriter {
     m.map { case (k, v) => s""""${esc(k)}": "${esc(v)}"""" }.mkString("{", ", ", "}")
 
   /** Q8: write the quality report as `ts=<ts>_{PASS|FAIL}.json` plus a
-    * `LATEST.json` pointer (`check_hicp_quality.py:135–158`). Returns the
-    * report path.
+    * `LATEST.json` pointer (`check_hicp_quality.py:135–158`), the pointer
+    * replaced by a rename so [[requirePass]] never reads a partial one.
+    * Returns the report path.
     */
   def writeReport(spark: SparkSession, reportDir: String, report: Report,
                   ts: String, processedBlob: String): String = {
@@ -151,7 +177,7 @@ object GoldWriter {
          |            "summary": ${jsonObj(report.summary)}}}""".stripMargin
     val reportPath = s"$reportDir/ts=$ts${report.gateSuffix}.json"
     writeString(spark, reportPath, body)
-    writeString(spark, s"$reportDir/LATEST.json",
+    replaceString(spark, s"$reportDir/LATEST.json",
       jsonObj(Map("latest_report" -> reportPath)))
     reportPath
   }
@@ -161,10 +187,11 @@ object GoldWriter {
     * verdict (`report.passed`) is true; its file name is not trusted.
     */
   def requirePass(spark: SparkSession, reportDir: String): String = {
-    val path = Option(json.readTree(readString(spark, s"$reportDir/LATEST.json"))
+    val pointer = s"$reportDir/LATEST.json"
+    val path = Option(json.readTree(readString(pointerFs(spark, pointer), pointer))
         .get("latest_report")).filter(_.isTextual).map(_.asText)
       .getOrElse(throw new IllegalStateException("LATEST.json has no latest_report"))
-    val verdict = json.readTree(readString(spark, path)).path("report").path("passed")
+    val verdict = json.readTree(readString(fs(spark, path), path)).path("report").path("passed")
     if (!verdict.isBoolean || !verdict.booleanValue)
       throw new IllegalStateException(s"quality gate: latest report is not PASS: $path")
     path

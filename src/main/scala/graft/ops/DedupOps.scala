@@ -235,39 +235,19 @@ object DedupOps {
     * engines see identical buckets.
     */
   def minhashLshPairs(docs: DataFrame, k: Int = 32, bands: Int = 8,
-                      threshold: Double = 0.5,
-                      memoKey: Option[String] = None): DataFrame =
-    minhashPairsMemo(docs, k, bands, threshold, memoKey)
+                      threshold: Double = 0.5): DataFrame =
+    verifiedPairs(docs, k, bands, threshold)
       .orderBy(col("doc_a"), col("doc_b"))
 
-  /** Session-scoped memo of the VERIFIED pair set: the pair list, the
-    * degree diagnostic, and the clustering pass all consume the same LSH
-    * pair graph, and a session running several of them (the bench, a real
-    * dedup pipeline that checks the degree histogram before clustering)
-    * should generate+verify candidates once. The memoized frame is narrow
-    * (two longs + a double) and `localCheckpoint`ed, so it survives
-    * `Exec.clearPinned`; keyed by applicationId + caller key + params so a
-    * different corpus or banding never aliases.
+  /** The VERIFIED pair set that the pair list, the degree diagnostic and
+    * the clustering pass consume: narrow (two longs + a double),
+    * `localCheckpoint`ed and tracked for release at the next
+    * [[Exec.clearPinned]].
     */
-  private val pairMemo = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
-  Exec.registerMemoEvictor("dedup") { () =>
-    pairMemo.values.foreach(Exec.unpersistCheckpointed)
-    pairMemo.clear()
-  }
-
-  private def minhashPairsMemo(docs: DataFrame, k: Int, bands: Int,
-                               threshold: Double, memoKey: Option[String]): DataFrame =
-    memoKey match {
-      case None =>
-        minhashLshPairsUnsorted(docs, k, bands, threshold)
-      case Some(mk) =>
-        val full = docs.sparkSession.sparkContext.applicationId +
-          s"#$mk#$k#$bands#$threshold"
-        pairMemo.getOrElseUpdate(full,
-          minhashLshPairsUnsorted(docs, k, bands, threshold)
-            .localCheckpoint())
-    }
+  private def verifiedPairs(docs: DataFrame, k: Int, bands: Int,
+                            threshold: Double): DataFrame =
+    Exec.trackTransient(
+      minhashLshPairsUnsorted(docs, k, bands, threshold).localCheckpoint())
 
   /** Same pair set without the final global sort — for consumers (like the
     * clustering pass) that only need the edges, not a presentation order.
@@ -713,10 +693,8 @@ object DedupOps {
     * converges in a handful of passes at any corpus size.
     */
   def nearDupClusters(docs: DataFrame, k: Int = 32, bands: Int = 8,
-                      threshold: Double = 0.5, maxIters: Int = 20,
-                      memoKey: Option[String] = None): DataFrame =
-    connectedComponents(
-      minhashPairsMemo(docs, k, bands, threshold, memoKey), maxIters)
+                      threshold: Double = 0.5, maxIters: Int = 20): DataFrame =
+    connectedComponents(verifiedPairs(docs, k, bands, threshold), maxIters)
 
   /** Cluster RESOLUTION policy — the decision the dedup pipeline actually
     * ships: per near-dup component, which copy SURVIVES. The naive policy
@@ -726,13 +704,12 @@ object DedupOps {
     * and prices the decision: members dropped and characters freed per
     * cluster. One (doc_id)-keyed join of the component labels onto the
     * doc stats and one cluster-keyed aggregate with a min-struct argmax;
-    * everything integer-exact. Scale: rides the memoized pair graph +
+    * everything integer-exact. Scale: rides the checkpointed pair graph +
     * pointer-jumping components; this pass adds two narrow exchanges.
     */
   def keepBestResolution(docs: DataFrame, k: Int = 32, bands: Int = 8,
-                         threshold: Double = 0.5,
-                         memoKey: Option[String] = None): DataFrame = {
-    val cc = nearDupClusters(docs, k, bands, threshold, memoKey = memoKey)
+                         threshold: Double = 0.5): DataFrame = {
+    val cc = nearDupClusters(docs, k, bands, threshold)
     cc.join(docs.select(col("doc_id"), col("n_chars")), Seq("doc_id"))
       .groupBy(col("cluster_id"))
       .agg(count(lit(1)).as("n_members"),
@@ -752,9 +729,8 @@ object DedupOps {
     * One explode of the edge list + two counts; scales like the pair set.
     */
   def nearDupDegreeHist(docs: DataFrame, k: Int = 32, bands: Int = 8,
-                        threshold: Double = 0.5,
-                        memoKey: Option[String] = None): DataFrame =
-    minhashPairsMemo(docs, k, bands, threshold, memoKey)
+                        threshold: Double = 0.5): DataFrame =
+    verifiedPairs(docs, k, bands, threshold)
       .select(explode(array(col("doc_a"), col("doc_b"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("degree"))
       .groupBy(col("degree")).agg(count(lit(1)).as("n_nodes"))

@@ -49,8 +49,9 @@ object Exec {
   /** A frame over the persisted `df`'s cached relation itself, for reading
     * one cache from both arms of a self-join. Joining a persisted frame with
     * a frame derived from it gives the second arm's leaf fresh attribute ids;
-    * a `localCheckpoint` leaf (the family memos) does not canonicalize them
-    * away, so that arm misses the cache and recomputes `df`. Copies of the
+    * a `localCheckpoint` leaf (the families' checkpointed inputs) does not
+    * canonicalize them away, so that arm misses the cache and recomputes
+    * `df`. Copies of the
     * cached relation share one cache however their ids are renewed. */
   def cachedScan(df: DataFrame): DataFrame =
     new org.apache.spark.sql.classic.Dataset[Row](
@@ -256,17 +257,20 @@ object Exec {
       .drop("__gr_pid", "__gr_lrank", "__gr_off")
   }
 
-  /** Release every frame the operator family pinned with `persist()`.
+  /** Release every frame the operator families pinned for the last query:
+    * the cacheManager's `persist()` entries and every tracked
+    * `localCheckpoint` ([[trackTransient]], [[trackPersisted]]).
     *
-    * The dedup/text operators cache small intermediate frames (hashed
-    * shingle sets, signatures, per-user stage times) that are read by two or
-    * more downstream joins of the SAME query — the persist is load-bearing
-    * there, and the returned DataFrame is lazy, so the operator itself has
-    * no point at which it could safely unpersist. In a session that runs
-    * MANY queries back to back (the bench, the verify dump, a notebook),
-    * those pins accumulate; call this between queries to drop them. Single-
-    * query applications never need it — executor storage is reclaimed when
-    * the session ends.
+    * Operators cache or checkpoint intermediate frames (hashed shingle
+    * sets, signatures, deduplicated edge lists, token counts) that two or
+    * more downstream reads of the SAME query share — the pin is
+    * load-bearing there, and the returned DataFrame is lazy, so the
+    * operator itself has no point at which it could safely release it. In
+    * a session that runs MANY queries back to back (the bench, the verify
+    * dump, a notebook), those pins accumulate; call this after each query
+    * has run to drop them. No frame outlives it: the next query rebuilds
+    * what it reads from its inputs. Single-query applications never need
+    * it — executor storage is reclaimed when the session ends.
     */
   def clearPinned(spark: org.apache.spark.sql.SparkSession): Unit = {
     spark.sharedState.cacheManager.clearCache()
@@ -274,16 +278,14 @@ object Exec {
   }
 
   /** Registry of per-call `localCheckpoint` frames that must outlive their
-    * operator's return (the returned DataFrame reads them lazily) but are
-    * NOT session-scoped memos: PCA heads, BFS layer frames, CC label
-    * frames. They live outside the cacheManager, so without this registry
-    * a bench-mode session (clearPinned between queries, never releaseAll)
+    * operator's return (the returned DataFrame reads them lazily): PCA
+    * heads, BFS layer frames, CC label frames, deduplicated edge lists.
+    * They live outside the cacheManager, so without this registry a
+    * bench-mode session (clearPinned between queries, never releaseAll)
     * pins their blocks for the application lifetime. Operators register
     * the surviving frames here; [[clearPinned]] drains the registry AFTER
     * the query has executed (the bench/verify loops clear between
-    * queries), so the blocks live exactly one query. Memoized frames
-    * (orientMemo, pairMemo, …) deliberately do NOT go through here — they
-    * are meant to stay warm across clearPinned calls.
+    * queries), so the blocks live exactly one query.
     */
   private val transientCheckpoints =
     new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
@@ -326,19 +328,6 @@ object Exec {
     }
   }
 
-  /** Operator families with session-scoped memo maps (GraphOps, DedupOps)
-    * register an evictor here at object init. The maps hold
-    * `localCheckpoint`ed frames, which live OUTSIDE the cacheManager —
-    * [[clearPinned]] deliberately leaves them warm (the bench reuses them
-    * across passes), so without an eviction path they pin executor blocks
-    * for the application lifetime.
-    */
-  private val memoEvictors =
-    scala.collection.concurrent.TrieMap.empty[String, () => Unit]
-
-  def registerMemoEvictor(name: String)(f: () => Unit): Unit =
-    memoEvictors.put(name, () => f())
-
   /** Drop the RDD blocks behind a `localCheckpoint`ed frame. After this the
     * frame is dead (localCheckpoint truncates lineage, so the blocks ARE the
     * data) — callers must also drop every reference to it.
@@ -349,15 +338,12 @@ object Exec {
       case _ => ()
     }
 
-  /** Full between-queries cleanup: memo maps, pinned plans, and every
-    * persisted RDD block (the sweep catches localCheckpoint blocks that
-    * [[clearPinned]]'s cacheManager clear cannot see). The long-lived-
-    * session entry points that run MANY unrelated queries (Verify, a
-    * notebook loop) call this; the bench intentionally calls only
-    * [[clearPinned]] so its per-query memos stay warm across passes.
+  /** Full between-queries cleanup: [[clearPinned]], then every persisted
+    * RDD block in the session (the sweep also catches `localCheckpoint`
+    * blocks an operator left untracked). Verify and MicroBench call this
+    * before each query, the bench at each pass boundary.
     */
   def releaseAll(spark: org.apache.spark.sql.SparkSession): Unit = {
-    memoEvictors.values.foreach(f => f())
     clearPinned(spark)
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
   }

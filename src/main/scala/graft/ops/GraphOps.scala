@@ -38,143 +38,47 @@ object GraphOps {
         greatest(col("u"), col("v")).as("b"))
       .distinct()
 
-  /** Session-scoped memo for the degree-oriented edge frame: both triangle
-    * queries derive the SAME orientation from the same edge list, and a
-    * session running them back to back (the bench, a notebook) should pay
-    * for it once. The memoized frames are `localCheckpoint`ed — an eager
-    * RDD-level materialization that (unlike `persist` entries) survives
-    * `Exec.clearPinned`'s cacheManager clear — and keyed by applicationId
-    * so a new session never sees a stale frame from a stopped one. One
-    * entry per (session, edge-list key); bounded and small (narrow long
-    * pairs), so no eviction is needed.
+  /** The undirected edge list every undirected operator reads: `edges`
+    * checkpointed (the 3-way-union dedup upstream runs once per query),
+    * plus its both-direction (src, dst) frame. The checkpoint is tracked
+    * for release at the next [[Exec.clearPinned]].
     */
-  private val orientMemo =
-    scala.collection.concurrent.TrieMap.empty[String, (DataFrame, DataFrame)]
-
-  Exec.registerMemoEvictor("graph") { () =>
-    orientMemo.values.foreach { case (o, d) =>
-      Exec.unpersistCheckpointed(o); Exec.unpersistCheckpointed(d)
-    }
-    orientMemo.clear()
-    prMemo.values.foreach { case (wd, dg, _) =>
-      Exec.unpersistCheckpointed(wd); Exec.unpersistCheckpointed(dg)
-    }
-    prMemo.clear()
-    kcoreMemo.values.foreach(Exec.unpersistCheckpointed)
-    kcoreMemo.clear()
-    corenessMemo.values.foreach(Exec.unpersistCheckpointed)
-    corenessMemo.clear()
-    edgeMemo.values.foreach { case (e, d) =>
-      Exec.unpersistCheckpointed(e); Exec.unpersistCheckpointed(d)
-    }
-    edgeMemo.clear()
-    bfsMemo.values.foreach(Exec.unpersistCheckpointed)
-    bfsMemo.clear()
-    lpaMemo.values.foreach(Exec.unpersistCheckpointed)
-    lpaMemo.clear()
-    dirEdgeMemo.values.foreach(Exec.unpersistCheckpointed)
-    dirEdgeMemo.clear()
+  private[graft] def undirectedShared(edges: DataFrame): (DataFrame, DataFrame) = {
+    // only `e` holds blocks: the both-direction twin is a cheap union
+    // VIEW over the checkpointed edges (two in-memory scans, no shuffle)
+    // — checkpointing it too paid a second materialization for nothing
+    // (measured +0.5–0.8 s standalone on lpa/modularity)
+    val e = Exec.trackTransient(edges.localCheckpoint())
+    val d = e.select(col("a").as("src"), col("b").as("dst"))
+      .union(e.select(col("b").as("src"), col("a").as("dst")))
+    (e, d)
   }
-
-  /** Session-scoped memo for a SHARED undirected edge frame and its
-    * both-direction twin — the r17 extension of the [[orientMemo]]
-    * contract one level down the build chain: seven registry queries
-    * (LPA, modularity, closeness, harmonic, HyperBall, betweenness,
-    * random walks, coreness) derive the SAME `lineitemEdges(li, 2000)`
-    * list, and each was re-paying the 3-way-union edge dedup — the
-    * data-sized shuffle of the whole family. Same hygiene as every memo
-    * here: checkpointed narrow long pairs, keyed by applicationId + a
-    * caller key that must identify data + builder params, evicted with
-    * the family evictor. First-touch query pays the build inside its
-    * measured time.
-    */
-  private val edgeMemo =
-    scala.collection.concurrent.TrieMap.empty[String, (DataFrame, DataFrame)]
-
-  /** Session-scoped memo for the per-seed bounded-BFS visited frame
-    * shared by closeness and harmonic centrality (identical seeds,
-    * rounds, and edges — the two queries are two aggregates over ONE
-    * BFS). */
-  private val bfsMemo =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
-  /** Session-scoped memo for the final LPA label assignment shared by
-    * the community census and the modularity score. */
-  private val lpaMemo =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
-  /** The (edges, dir) pair behind [[edgeMemo]]: checkpointed undirected
-    * list plus its both-direction (src, dst) frame. Un-memoized calls
-    * register both for the between-query drain.
-    */
-  private[graft] def undirectedShared(edges: DataFrame,
-      memoKey: Option[String]): (DataFrame, DataFrame) = {
-    def build(): (DataFrame, DataFrame) = {
-      // only `e` holds blocks: the both-direction twin is a cheap union
-      // VIEW over the checkpointed edges (two in-memory scans, no shuffle)
-      // — checkpointing it too paid a second materialization for nothing
-      // (measured +0.5–0.8 s standalone on lpa/modularity)
-      val e = edges.localCheckpoint()
-      val d = e.select(col("a").as("src"), col("b").as("dst"))
-        .union(e.select(col("b").as("src"), col("a").as("dst")))
-      (e, d)
-    }
-    memoKey match {
-      case None =>
-        val (e, d) = build()
-        Exec.trackTransient(e)
-        (e, d)
-      case Some(k) =>
-        val fullKey =
-          edges.sparkSession.sparkContext.applicationId + "#edges#" + k
-        edgeMemo.getOrElseUpdate(fullKey, build())
-    }
-  }
-
-  /** Session-scoped memo for coreness' index-space adjacency (same
-    * rationale and hygiene as [[orientMemo]]). */
-  private val corenessMemo =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
 
   /** Degree-ordered orientation: each undirected edge directed from its
     * lower-degree endpoint (ties: lower id), which bounds every wedge-join
     * fan-out by O(sqrt(|E|)) per node instead of the max raw degree — the
     * difference between a skew-killed and a scalable self-join on a
     * power-law graph (the node-iterator orientation of Suri &
-    * Vassilvitskii's MR model). Returns (oriented(src,dst), degrees(x,deg)).
-    * With `memoKey` set, the pair is materialized once per session and
-    * shared across queries; without it, `oriented` is pinned with persist
-    * (released via Exec.clearPinned).
+    * Vassilvitskii's MR model). Returns (oriented(src,dst), degrees(x,deg)),
+    * both checkpointed and tracked for release at the next
+    * [[Exec.clearPinned]].
     */
-  def orientedWithDegrees(edges: DataFrame,
-                          memoKey: Option[String] = None): (DataFrame, DataFrame) = {
-    def build(): (DataFrame, DataFrame) = {
-      val nodes = edges.select(col("a").as("x"))
-        .union(edges.select(col("b").as("x")))
-      val degrees = nodes.groupBy(col("x")).agg(count(lit(1)).as("deg"))
-      val oriented = edges
-        .join(degrees.select(col("x").as("a"), col("deg").as("deg_a")), Seq("a"))
-        .join(degrees.select(col("x").as("b"), col("deg").as("deg_b")), Seq("b"))
-        .select(
-          when(col("deg_a") < col("deg_b")
-            || (col("deg_a") === col("deg_b") && col("a") < col("b")),
-            struct(col("a").as("src"), col("b").as("dst")))
-            .otherwise(struct(col("b").as("src"), col("a").as("dst")))
-            .as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      (oriented, degrees)
-    }
-    memoKey match {
-      case None =>
-        val (o, d) = build()
-        (o.persist(), d)
-      case Some(k) =>
-        val fullKey = edges.sparkSession.sparkContext.applicationId + "#" + k
-        orientMemo.getOrElseUpdate(fullKey, {
-          val (o, d) = build()
-          (o.localCheckpoint(), d.localCheckpoint())
-        })
-    }
+  def orientedWithDegrees(edges: DataFrame): (DataFrame, DataFrame) = {
+    val nodes = edges.select(col("a").as("x"))
+      .union(edges.select(col("b").as("x")))
+    val degrees = nodes.groupBy(col("x")).agg(count(lit(1)).as("deg"))
+    val oriented = edges
+      .join(degrees.select(col("x").as("a"), col("deg").as("deg_a")), Seq("a"))
+      .join(degrees.select(col("x").as("b"), col("deg").as("deg_b")), Seq("b"))
+      .select(
+        when(col("deg_a") < col("deg_b")
+          || (col("deg_a") === col("deg_b") && col("a") < col("b")),
+          struct(col("a").as("src"), col("b").as("dst")))
+          .otherwise(struct(col("b").as("src"), col("a").as("dst")))
+          .as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+    (Exec.trackTransient(oriented.localCheckpoint()),
+      Exec.trackTransient(degrees.localCheckpoint()))
   }
 
   /** The oriented-wedge triangle core shared by both queries: wedges at the
@@ -196,8 +100,8 @@ object GraphOps {
     * joins on narrow long keys; no state beyond the (src, dst) pairs.
     * Output: one row — node count, edge count, triangle count.
     */
-  def triangleCount(edges: DataFrame, memoKey: Option[String] = None): DataFrame = {
-    val (oriented, _) = orientedWithDegrees(edges, memoKey)
+  def triangleCount(edges: DataFrame): DataFrame = {
+    val (oriented, _) = orientedWithDegrees(edges)
     val nodes = edges.select(col("a").as("x"))
       .union(edges.select(col("b").as("x")))
     closedWedges(oriented).agg(count(lit(1)).as("n_triangles"))
@@ -212,9 +116,8 @@ object GraphOps {
     * Same oriented-wedge plan as [[triangleCount]], but each closed wedge
     * credits all three corners before the top-k cut.
     */
-  def topTriangleNodes(edges: DataFrame, topK: Int,
-                       memoKey: Option[String] = None): DataFrame = {
-    val (oriented, degrees) = orientedWithDegrees(edges, memoKey)
+  def topTriangleNodes(edges: DataFrame, topK: Int): DataFrame = {
+    val (oriented, degrees) = orientedWithDegrees(edges)
     val triangles = closedWedges(oriented)
     val credits = triangles.select(col("apex").as("node"))
       .union(triangles.select(col("w1").as("node")))
@@ -238,9 +141,8 @@ object GraphOps {
     * 10-bucket cc histogram plus the exact mean numerator/denominator
     * integers — constant-width verification at any graph size.
     */
-  def clusteringCoefficients(edges: DataFrame,
-                             memoKey: Option[String] = None): DataFrame = {
-    val (oriented, degrees) = orientedWithDegrees(edges, memoKey)
+  def clusteringCoefficients(edges: DataFrame): DataFrame = {
+    val (oriented, degrees) = orientedWithDegrees(edges)
     val triangles = closedWedges(oriented)
     val credits = triangles.select(col("apex").as("node"))
       .union(triangles.select(col("w1").as("node")))
@@ -273,61 +175,45 @@ object GraphOps {
     * of an undirected graph has out-degree ≥ 1, so there is no dangling
     * mass and the damping term is exact. Node count is a single driver
     * scalar (graph metadata, same contract as the CC convergence scalar).
-    * With `memoKey`, the degree-annotated edge frame is materialized once
-    * per session and shared across repeat runs (the [[orientMemo]]
-    * contract); the per-round rank vector is count-gate broadcast so a
-    * round's only exchange is the narrow per-dst partial-agg merge.
+    * The per-round rank vector is count-gate broadcast so a round's only
+    * exchange is the narrow per-dst partial-agg merge.
     *
     * Output: top-`topK` nodes by damped rank, scaled by N (mean = 1.0) and
     * floor-quantized at 1e-6 so the cross-engine comparison and the
     * ordering are both done in quantized space.
     */
-  /** Session-scoped memo for PageRank's degree-annotated directed edge
-    * frame (same contract and lifetime as [[orientMemo]]). */
-  private val prMemo =
-    scala.collection.concurrent.TrieMap.empty[String, (DataFrame, DataFrame, Long)]
-
-  /** The (degree-joined edges, degrees, |V|) build shared — BY CODE, not
-    * just by memo key — between [[pageRank]] and [[personalizedPageRank]]:
-    * the two queries memoize under the same key, so a drift between two
-    * copies would let whichever ran first poison the other. Checkpoint the
-    * directed frame FIRST: it feeds both the degree count and the
-    * edge-degree join, and without the cut the upstream edge dedup (a full
-    * shuffle over the raw incidence list) would run twice. Checkpointed
-    * frames report unknown stats, so the |V|-row degree side is hinted
-    * explicitly (count-gated) or the build join sorts |E|. The
-    * intermediate directed frame is dead once degs/wd materialize — its
-    * blocks drop immediately (it is not in the memo tuple, so the evictor
-    * would never see it).
+  /** The (degree-joined edges, degrees, |V|) build shared — by code —
+    * between [[pageRank]] and [[personalizedPageRank]]. The directed frame
+    * reads the checkpointed undirected list ([[undirectedShared]]), so the
+    * upstream edge dedup (a full shuffle over the raw incidence list) runs
+    * once although it feeds both the degree count and the edge-degree
+    * join. Checkpointed frames report unknown stats, so the |V|-row degree
+    * side is hinted explicitly (count-gated) or the build join sorts |E|.
+    * Both checkpoints are tracked for release at the next
+    * [[Exec.clearPinned]].
     */
-  private def buildDegreeFrames(edges: DataFrame, maxBroadcastRanks: Long,
-      memoKey: Option[String] = None): (DataFrame, DataFrame, Long) = {
-    // r17: the directed frame rides the family-shared [[edgeMemo]], so the
-    // upstream edge dedup is paid once per session across every consumer
-    // of the same edge list (pagerank, ppr, bfs layers, assortativity)
-    val (_, directed) = undirectedShared(edges, memoKey)
-    val degs = directed.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
+  private def buildDegreeFrames(edges: DataFrame,
+      maxBroadcastRanks: Long): (DataFrame, DataFrame, Long) = {
+    val (_, directed) = undirectedShared(edges)
+    val degs = Exec.trackTransient(
+      directed.groupBy(col("src")).agg(count(lit(1)).as("deg")).localCheckpoint())
     val n = degs.count()
-    val wd = directed.join(
+    val wd = Exec.trackTransient(directed.join(
       if (n <= maxBroadcastRanks) broadcast(degs) else degs, Seq("src"))
-      .localCheckpoint()
+      .localCheckpoint())
     (wd, degs, n)
   }
 
   def pageRank(edges: DataFrame, iters: Int = 3, damping: Double = 0.85,
-               topK: Int = 25, maxBroadcastRanks: Long = 4000000L,
-               memoKey: Option[String] = None): DataFrame = {
-    val (withDeg, degFrame, nNodes) =
-      resolveDegreeBuild(edges, memoKey,
-        () => buildDegreeFrames(edges, maxBroadcastRanks, memoKey))
+               topK: Int = 25, maxBroadcastRanks: Long = 4000000L): DataFrame = {
+    val (withDeg, degFrame, nNodes) = buildDegreeFrames(edges, maxBroadcastRanks)
     // r17b: under the edge gate the power iterations run driver-resident
     // over the collected degree-joined frame — the same per-dst
     // Σ pr/deg accumulation and (1−d)/n + d·c update, nodes without
     // in-edges dropping out of the vector after each round exactly as the
     // groupBy(dst) does; only the final rank_scaled is quantized, as in
     // the plan (PageRank driver parity spec; oracle at sf0.01/sf0.1).
-    // The degree build + edge dedup stay distributed/memoized above.
+    // The degree build + edge dedup stay distributed above.
     val collected = Exec.collectIfSmall(withDeg.select(col("src"), col("dst"), col("deg")),
       Exec.DriverLoopRows)
     if (collected.isDefined) return pageRankDriver(edges.sparkSession, collected.get,
@@ -446,23 +332,6 @@ object GraphOps {
       .orderBy(col("rank_scaled").desc, col("node"))
   }
 
-  /** Memo-or-track resolution for the (degree-joined edges, degrees, |V|)
-    * build shared by [[pageRank]] and [[personalizedPageRank]]: un-memoized
-    * calls register their surviving frames for the between-query drain;
-    * memoized calls go through [[prMemo]] (whose evictor releases them).
-    */
-  private def resolveDegreeBuild(edges: DataFrame, memoKey: Option[String],
-      build: () => (DataFrame, DataFrame, Long)): (DataFrame, DataFrame, Long) =
-    memoKey match {
-      case None =>
-        val (wd, dg, n) = build()
-        Exec.trackTransient(wd); Exec.trackTransient(dg)
-        (wd, dg, n)
-      case Some(k) =>
-        val fullKey = edges.sparkSession.sparkContext.applicationId + "#" + k
-        prMemo.getOrElseUpdate(fullKey, build())
-    }
-
   /** Personalized PageRank — random walk with restart to a SEED set instead
     * of the uniform vector: pr₀ = 1_S/|S|, and each round teleports back to
     * the seeds,
@@ -472,7 +341,7 @@ object GraphOps {
     * This is the similarity/recommendation primitive (nodes ranked by
     * proximity to the seed community). Seeds are the deterministic
     * `node % seedMod == 0` subset (the closeness-centrality convention).
-    * Plan shape is identical to [[pageRank]] — the same memoized
+    * Plan shape is identical to [[pageRank]] — the same
     * degree-joined edge build, a count-gated broadcast rank vector, one
     * narrow per-dst aggregate per round — so the scale posture carries
     * over unchanged; the only addition is a broadcast seed-indicator join
@@ -483,11 +352,8 @@ object GraphOps {
   def personalizedPageRank(edges: DataFrame, seedMod: Long = 100L,
                            iters: Int = 3, damping: Double = 0.85,
                            topK: Int = 25,
-                           maxBroadcastRanks: Long = 4000000L,
-                           memoKey: Option[String] = None): DataFrame = {
-    val (withDeg, degFrame, nNodes) =
-      resolveDegreeBuild(edges, memoKey,
-        () => buildDegreeFrames(edges, maxBroadcastRanks, memoKey))
+                           maxBroadcastRanks: Long = 4000000L): DataFrame = {
+    val (withDeg, degFrame, nNodes) = buildDegreeFrames(edges, maxBroadcastRanks)
     // r17b: same driver gate as [[pageRank]]; the teleport variant keeps
     // every node in the vector each round (the left-join + coalesce
     // contract) and filters rank_scaled > 0 at the end.
@@ -540,13 +406,6 @@ object GraphOps {
         ((col("l_partkey") % nParts) * 2 + 1).as("b"))
       .distinct()
 
-  /** Session-scoped memo for k-core's checkpointed input edge frame (same
-    * contract and lifetime as [[orientMemo]]): the edge derivation upstream
-    * (e.g. [[orderPartEdges]]' full-shuffle `distinct`) is paid once per
-    * session instead of once per run. */
-  private val kcoreMemo =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
   /** k-core peel: rounds of "drop every node with degree < k, keep only
     * edges between survivors" — the degeneracy screen a near-dup or
     * interaction graph gets before community work (a node outside the
@@ -570,28 +429,20 @@ object GraphOps {
     */
   def kCore(edges: DataFrame, k: Int, rounds: Int = 5,
             maxBroadcastSurvivors: Long = 4000000L,
-            convergeToFixpoint: Boolean = false,
-            memoKey: Option[String] = None): DataFrame =
-    kCoreWithRounds(edges, k, rounds, maxBroadcastSurvivors,
-      convergeToFixpoint, memoKey)._1
+            convergeToFixpoint: Boolean = false): DataFrame =
+    kCoreWithRounds(edges, k, rounds, maxBroadcastSurvivors, convergeToFixpoint)._1
 
   /** [[kCore]] plus the number of peel rounds actually EXECUTED (early-exit
     * visible to specs): `(histogram, roundsRun)`. */
   private[graft] def kCoreWithRounds(edges: DataFrame, k: Int, rounds: Int = 5,
             maxBroadcastSurvivors: Long = 4000000L,
-            convergeToFixpoint: Boolean = false,
-            memoKey: Option[String] = None): (DataFrame, Int) = {
+            convergeToFixpoint: Boolean = false): (DataFrame, Int) = {
     def degreesOf(e: DataFrame): DataFrame =
       e.select(col("a").as("x")).union(e.select(col("b").as("x")))
         .groupBy(col("x")).agg(count(lit(1)).as("dg"))
-    // non-memoized input checkpoints ride the between-query drain (r18,
-    // advisor item: the driver-path early return used to leak them)
-    var e = memoKey match {
-      case None => Exec.trackTransient(edges.localCheckpoint())
-      case Some(mk) =>
-        val fullKey = edges.sparkSession.sparkContext.applicationId + "#" + mk
-        kcoreMemo.getOrElseUpdate(fullKey, edges.localCheckpoint())
-    }
+    // the input checkpoint rides the between-query drain, so the
+    // driver-path early return below cannot leak it
+    var e = Exec.trackTransient(edges.localCheckpoint())
     // r17b: once the distributed distinct has produced the checkpointed
     // edge list it is bounded metadata (the orderPartEdges construction
     // caps the bucket side at nParts) — under the measured gate the peel
@@ -955,10 +806,9 @@ object GraphOps {
     * keyed on single longs + one corr fold; nothing wider than (long,
     * long) crosses an exchange.
     */
-  def degreeAssortativity(edges: DataFrame,
-                          memoKey: Option[String] = None): DataFrame = {
+  def degreeAssortativity(edges: DataFrame): DataFrame = {
     def q4(c: Column): Column = floor(c * 10000 + 0.5) / 10000
-    val (_, dir) = undirectedShared(edges, memoKey)
+    val (_, dir) = undirectedShared(edges)
     val degs = dir.groupBy(col("src").as("x")).agg(count(lit(1)).as("deg"))
     dir
       .join(degs.select(col("x").as("src"), col("deg").as("deg_src")), Seq("src"))
@@ -993,59 +843,41 @@ object GraphOps {
     * (dst-keyed) join plus two narrow aggregates per round, nothing wider
     * than (long, long) in any exchange.
     */
-  def labelPropagation(edges: DataFrame, rounds: Int = 2,
-                       memoKey: Option[String] = None): DataFrame =
-    lpaLabels(edges, rounds, memoKey).groupBy(col("label").as("community"))
+  def labelPropagation(edges: DataFrame, rounds: Int = 2): DataFrame =
+    lpaLabels(undirectedShared(edges)._2, rounds).groupBy(col("label").as("community"))
       .agg(count(lit(1)).as("n_nodes"), min(col("node")).as("min_node"),
         max(col("node")).as("max_node"), sum(col("node")).as("node_sum"))
       .orderBy(col("community"))
 
   /** The (node, label) assignment [[labelPropagation]] censuses and
     * [[modularity]] scores — the final labels after `rounds`
-    * deterministic LPA rounds, as a checkpointed frame registered for
+    * deterministic LPA rounds over the both-direction edge frame `dir`
+    * ([[undirectedShared]]), as a checkpointed frame registered for
     * between-query release.
     */
-  private[graft] def lpaLabels(edges: DataFrame, rounds: Int,
-      memoKey: Option[String] = None): DataFrame = {
-    def build(): DataFrame = {
-      // r18: intermediate rounds ride LAZY localCheckpoints (no per-round
-      // collect exists to piggyback on), the FINAL round's checkpoint is
-      // eager — one blocking job materializes the whole chain instead of
-      // one per round, each round's blocks still cache at its checkpoint
-      // boundary. Intermediates ride the between-query drain; the
-      // returned checkpoint owns its own blocks (memo hygiene unchanged).
-      val (_, dir) = undirectedShared(edges, memoKey)
-      var labels = Exec.trackTransient(
-        dir.select(col("src").as("node")).distinct()
-          .withColumn("label", col("node"))
-          .localCheckpoint(false))
-      for (r <- 1 to rounds) {
-        val prev = labels
-        val step = dir
-          .join(prev.select(col("node").as("dst"), col("label").as("nl")),
-            Seq("dst"))
-          .groupBy(col("src").as("node"), col("nl"))
-          .agg(count(lit(1)).as("c"))
-          .groupBy(col("node"))
-          .agg(min(struct((-col("c")).as("negc"), col("nl").as("l"))).as("m"))
-          .select(col("node"), col("m.l").as("label"))
-        labels =
-          if (r == rounds) step.localCheckpoint()
-          else Exec.trackTransient(step.localCheckpoint(false))
-      }
-      labels
+  private[graft] def lpaLabels(dir: DataFrame, rounds: Int): DataFrame = {
+    // r18: intermediate rounds ride LAZY localCheckpoints (no per-round
+    // collect exists to piggyback on), the FINAL round's checkpoint is
+    // eager — one blocking job materializes the whole chain instead of
+    // one per round, each round's blocks still cache at its checkpoint
+    // boundary. Every round rides the between-query drain.
+    var labels = Exec.trackTransient(
+      dir.select(col("src").as("node")).distinct()
+        .withColumn("label", col("node"))
+        .localCheckpoint(false))
+    for (r <- 1 to rounds) {
+      val prev = labels
+      val step = dir
+        .join(prev.select(col("node").as("dst"), col("label").as("nl")),
+          Seq("dst"))
+        .groupBy(col("src").as("node"), col("nl"))
+        .agg(count(lit(1)).as("c"))
+        .groupBy(col("node"))
+        .agg(min(struct((-col("c")).as("negc"), col("nl").as("l"))).as("m"))
+        .select(col("node"), col("m.l").as("label"))
+      labels = Exec.trackTransient(step.localCheckpoint(r == rounds)) // eager last
     }
-    // r17: the final assignment is memoized (keyed data + rounds) — the
-    // community census and the modularity score are two aggregates over
-    // ONE label frame, and a session running both should label once
-    memoKey match {
-      case None =>
-        val l = build(); Exec.trackTransient(l); l
-      case Some(k) =>
-        val fullKey =
-          edges.sparkSession.sparkContext.applicationId + s"#lpa#$k#$rounds"
-        lpaMemo.getOrElseUpdate(fullKey, build())
-    }
+    labels
   }
 
   /** Newman modularity of the LPA partition — the "did the communities
@@ -1063,14 +895,13 @@ object GraphOps {
     * than two longs in any exchange, and the scalar m/Σ frames ride as
     * 1-row broadcasts.
     */
-  def modularity(edges: DataFrame, rounds: Int = 2,
-                 memoKey: Option[String] = None): DataFrame = {
-    val (e, _) = undirectedShared(edges, memoKey)
+  def modularity(edges: DataFrame, rounds: Int = 2): DataFrame = {
+    val (e, dir) = undirectedShared(edges)
     // the |V|-row label frame joins the |E|-row edge list three times; it
     // is an eager checkpoint, so all three read one materialization, and
     // Spark broadcasts it from its size (hash joins on the narrow
     // (long, long) keys when it is too large)
-    val labels = lpaLabels(e, rounds, memoKey)
+    val labels = lpaLabels(dir, rounds)
     val mRow = e.agg(count(lit(1)).as("m"))
     val deg = e.select(col("a").as("node"))
       .union(e.select(col("b").as("node")))
@@ -1256,64 +1087,49 @@ object GraphOps {
     * hygiene as documented on the closeness loop; the returned frame is
     * transient-tracked.
     */
-  private def seededBfs(edges: DataFrame, seedMod: Long,
-                        rounds: Int, memoKey: Option[String] = None): DataFrame = {
-    def build(): DataFrame = {
-      // shape note (r18): two rewrites were measured and REJECTED here
-      // (guide §1 empirical loop). (a) Fully LAZY per-layer checkpoints
-      // materialized by one final action: 2.3× SLOWER (closeness
-      // first-touch 3.9 → 10.5 s) — each round's anti-join references
-      // every earlier layer and deferred lazy-checkpoint finalization
-      // recomputes multi-referenced rounds through their original
-      // lineage. (b) Eager per-LAYER checkpoints with the visited set as
-      // a union view + one final union checkpoint: head-to-head same-JVM
-      // A/B read old 2.39–2.70 s vs layered 2.53–3.10 s over 3 reps —
-      // the saved visited re-unions (3 bounded rounds, |visited| ≈ 50k
-      // rows at sf0.1) don't pay for the extra final materialization.
-      val (_, dir) = undirectedShared(edges, memoKey)
-      var visited = dir.select(col("src").as("node")).distinct()
-        .filter(col("node") % seedMod === 0)
-        .select(col("node").as("seed"), col("node"), lit(0).as("dist"))
-        .localCheckpoint()
-      var frontier = visited.select(col("seed"), col("node"))
-      var prevNext: DataFrame = null
-      for (r <- 1 to rounds) {
-        val next = dir
-          .join(frontier.withColumnRenamed("node", "src"), Seq("src"))
-          .select(col("seed"), col("dst").as("node")).distinct()
-          .join(visited.select(col("seed"), col("node")),
-            Seq("seed", "node"), "left_anti")
-          .withColumn("dist", lit(r))
-          .localCheckpoint() // eager: materialized before the release below
-        // round r-1's layer frame was only alive as this round's frontier —
-        // the expansion above just consumed it (the bfsLayers hygiene)
-        if (prevNext != null) Exec.unpersistCheckpointed(prevNext)
-        prevNext = next
-        val prev = visited
-        visited = prev.union(next).localCheckpoint()
-        Exec.unpersistCheckpointed(prev)
-        frontier = next.select(col("seed"), col("node"))
-      }
+  private def seededBfs(edges: DataFrame, seedMod: Long, rounds: Int): DataFrame = {
+    // shape note (r18): two rewrites were measured and REJECTED here
+    // (guide §1 empirical loop). (a) Fully LAZY per-layer checkpoints
+    // materialized by one final action: 2.3× SLOWER (closeness
+    // first-touch 3.9 → 10.5 s) — each round's anti-join references
+    // every earlier layer and deferred lazy-checkpoint finalization
+    // recomputes multi-referenced rounds through their original
+    // lineage. (b) Eager per-LAYER checkpoints with the visited set as
+    // a union view + one final union checkpoint: head-to-head same-JVM
+    // A/B read old 2.39–2.70 s vs layered 2.53–3.10 s over 3 reps —
+    // the saved visited re-unions (3 bounded rounds, |visited| ≈ 50k
+    // rows at sf0.1) don't pay for the extra final materialization.
+    val (_, dir) = undirectedShared(edges)
+    var visited = dir.select(col("src").as("node")).distinct()
+      .filter(col("node") % seedMod === 0)
+      .select(col("node").as("seed"), col("node"), lit(0).as("dist"))
+      .localCheckpoint()
+    var frontier = visited.select(col("seed"), col("node"))
+    var prevNext: DataFrame = null
+    for (r <- 1 to rounds) {
+      val next = dir
+        .join(frontier.withColumnRenamed("node", "src"), Seq("src"))
+        .select(col("seed"), col("dst").as("node")).distinct()
+        .join(visited.select(col("seed"), col("node")),
+          Seq("seed", "node"), "left_anti")
+        .withColumn("dist", lit(r))
+        .localCheckpoint() // eager: materialized before the release below
+      // round r-1's layer frame was only alive as this round's frontier —
+      // the expansion above just consumed it (the bfsLayers hygiene)
       if (prevNext != null) Exec.unpersistCheckpointed(prevNext)
-      visited
+      prevNext = next
+      val prev = visited
+      visited = prev.union(next).localCheckpoint()
+      Exec.unpersistCheckpointed(prev)
+      frontier = next.select(col("seed"), col("node"))
     }
-    // r17: memoized (keyed data + seedMod + rounds) — closeness and
-    // harmonic centrality are two aggregates over the SAME bounded BFS,
-    // so a session running both expands it once
-    memoKey match {
-      case None =>
-        val v = build(); Exec.trackTransient(v); v
-      case Some(k) =>
-        val fullKey = edges.sparkSession.sparkContext.applicationId +
-          s"#bfs#$k#$seedMod#$rounds"
-        bfsMemo.getOrElseUpdate(fullKey, build())
-    }
+    if (prevNext != null) Exec.unpersistCheckpointed(prevNext)
+    Exec.trackTransient(visited)
   }
 
   def closenessCentrality(edges: DataFrame, seedMod: Long = 500L,
-                          rounds: Int = 3,
-                          memoKey: Option[String] = None): DataFrame =
-    seededBfs(edges, seedMod, rounds, memoKey).groupBy(col("seed"))
+                          rounds: Int = 3): DataFrame =
+    seededBfs(edges, seedMod, rounds).groupBy(col("seed"))
       .agg(count(lit(1)).as("n_reached"),
         sum(col("dist")).as("dist_sum"),
         max(col("dist")).as("ecc_capped"))
@@ -1359,9 +1175,8 @@ object GraphOps {
     * telescope, and clamping would hide sketch noise the census exists to
     * measure).
     */
-  def hyperballHarmonic(und: DataFrame, rounds: Int = 3,
-                        memoKey: Option[String] = None): DataFrame = {
-    val (e, dir) = undirectedShared(und, memoKey)
+  def hyperballHarmonic(und: DataFrame, rounds: Int = 3): DataFrame = {
+    val (e, dir) = undirectedShared(und)
     // r17b: the register rounds are exact-arithmetic metadata work once
     // the edge dedup has run — register init is a 32-bit md5 slice
     // (replicated bit-for-bit via MessageDigest), the per-round update is
@@ -1538,14 +1353,13 @@ object GraphOps {
   }
 
   def harmonicCentrality(edges: DataFrame, seedMod: Long = 500L,
-                         rounds: Int = 3,
-                         memoKey: Option[String] = None): DataFrame = {
+                         rounds: Int = 3): DataFrame = {
     val lcm = (1 to rounds).foldLeft(1L) { (acc, k) =>
       @annotation.tailrec
       def gcd(a: Long, b: Long): Long = if (b == 0) a else gcd(b, a % b)
       acc / gcd(acc, k) * k
     }
-    seededBfs(edges, seedMod, rounds, memoKey)
+    seededBfs(edges, seedMod, rounds)
       .filter(col("dist") > 0)
       .groupBy(col("seed"))
       .agg(count(lit(1)).as("n_reached"),
@@ -1572,15 +1386,13 @@ object GraphOps {
     * [[pageRank]] plan with a side alternation; score frames checkpoint
     * per half-step to cut the iterative lineage.
     */
-  def hitsBounded(li: DataFrame, n: Int = 2000,
-                  memoKey: Option[String] = None): DataFrame = {
+  def hitsBounded(li: DataFrame, n: Int = 2000): DataFrame = {
     def q6(c: Column): Column = floor(c * 1000000 + 0.5) / 1000000
-    // r17: the bipartite edge dedup rides the directed-frame memo (the
-    // kcoreMemo contract — one full-shuffle distinct per session)
+    // the bipartite edge dedup (one full-shuffle distinct) is checkpointed
     val e = directedShared(li
       .select((col("l_orderkey") % n).as("u"),
         (col("l_partkey") % n + n).as("v"))
-      .distinct(), memoKey)
+      .distinct())
     // r17b: the mod-n construction bounds the bipartite graph (≤ 2n nodes,
     // ≤ n² edges), so once the distributed distinct has run the edge list
     // is metadata — under the measured gate the four mutual-reinforcement
@@ -1697,10 +1509,9 @@ object GraphOps {
     * seededBfs plan plus one reverse join per level; no window, no
     * collect, state linear in reached (seed, node) pairs.
     */
-  def betweennessBounded(edges: DataFrame, seedMod: Long = 500L,
-                         memoKey: Option[String] = None): DataFrame = {
+  def betweennessBounded(edges: DataFrame, seedMod: Long = 500L): DataFrame = {
     def q6(c: Column): Column = floor(c * 1000000 + 0.5) / 1000000
-    val (e, dir) = undirectedShared(edges, memoKey)
+    val (e, dir) = undirectedShared(edges)
     // r17b: the mod-n edge construction bounds the graph, so once the
     // distributed dedup has produced the checkpointed undirected list it
     // is metadata — under the measured gate the whole 3-level forward
@@ -1709,40 +1520,24 @@ object GraphOps {
     // runs driver-resident with the SAME per-level exact-integer σ and
     // q6-floored δ arithmetic (pinned by the Brandes parity spec;
     // oracle-verified at sf0.01/sf0.1). Past the gate, the distributed
-    // plan below runs unchanged — including the warm-BFS reuse.
+    // plan below runs unchanged.
     val collected = Exec.collectIfSmall(e.select(col("a"), col("b")), Exec.DriverLoopRows)
     if (collected.isDefined)
       return betweennessDriver(edges.sparkSession, collected.get, seedMod)
-    // r17: when the session has ALREADY materialized the family's bounded
-    // BFS (closeness/harmonic share it under the same memo key), its
-    // dist ≤ k slices are exactly l0 ∪ … ∪ lk — reuse them as the forward
-    // anti-join visited sets instead of re-unioning + checkpointing the
-    // levels. A cold session keeps the self-contained union path (building
-    // the full BFS only for its visited sets costs MORE than the unions —
-    // measured 7.5 s vs 5.2 s standalone).
-    val warmBfs = memoKey.flatMap(k => bfsMemo.get(
-      edges.sparkSession.sparkContext.applicationId + s"#bfs#$k#$seedMod#3"))
-    val l0 = warmBfs match {
-      case Some(bfs) =>
-        bfs.filter(col("dist") === 0).select(col("seed"), col("node"))
-      case None =>
-        dir.select(col("src").as("node")).distinct()
-          .filter(col("node") % seedMod === 0)
-          .select(col("node").as("seed"), col("node"))
-    }
+    // the forward anti-join visited sets are unions of the levels
+    // (building the full seeded BFS only for its visited sets costs MORE
+    // than the unions — measured 7.5 s vs 5.2 s standalone)
+    val l0 = dir.select(col("src").as("node")).distinct()
+      .filter(col("node") % seedMod === 0)
+      .select(col("node").as("seed"), col("node"))
     // r18: the level/visited checkpoints are LAZY — the forward/backward
     // passes have no per-level collect to piggyback on, so the final
     // aggregate materializes the whole 3-level DAG in ONE job (was ~5
     // eager checkpoint jobs of round latency); each level still caches at
     // its checkpoint boundary and is reused by the anti-joins and the
     // backward pass from those cached blocks.
-    def visUpTo(k: Int, levels: => DataFrame): DataFrame = warmBfs match {
-      case Some(bfs) =>
-        bfs.filter(col("dist") <= k).select(col("seed"), col("node"))
-      case None =>
-        if (k == 0) l0
-        else Exec.trackTransient(levels.localCheckpoint(false))
-    }
+    def visUpTo(k: Int, levels: => DataFrame): DataFrame =
+      if (k == 0) l0 else Exec.trackTransient(levels.localCheckpoint(false))
     // forward: exact shortest-path counts per level (anti-join against the
     // visited union keeps only first-reached = shortest)
     def expand(frontier: DataFrame, visited: DataFrame): DataFrame =
@@ -1891,9 +1686,8 @@ object GraphOps {
   }
 
   def bfsLayers(edges: DataFrame, seedMod: Long = 137L, rounds: Int = 4,
-                maxBroadcastFrontier: Long = 4000000L,
-                memoKey: Option[String] = None): DataFrame = {
-    val (e, dir) = undirectedShared(edges, memoKey)
+                maxBroadcastFrontier: Long = 4000000L): DataFrame = {
+    val (e, dir) = undirectedShared(edges)
     // r17b: bounded-metadata gate (the betweennessDriver doctrine) — the
     // per-round semi-join + distinct + anti-join + eager checkpoint cycle
     // is almost pure round latency once the edge dedup has run; under the
@@ -2077,32 +1871,14 @@ object GraphOps {
     0L
   }
 
-  private[graft] def corenessValues(edges: DataFrame, maxRounds: Int = 48,
-      memoKey: Option[String] = None): DataFrame = {
-    def buildAdj(): DataFrame = {
-      // the 3-way-union edge dedup is the expensive part — r18: ride the
-      // FAMILY-shared [[edgeMemo]] (keyed `memoKey`) instead of
-      // re-deduplicating privately: every li2000 query materializes the
-      // same checkpointed edge list once per session, and coreness'
-      // both-direction view is a cheap union over it (exactly
-      // [[corenessDirected]] modulo column names). Standalone cost is
-      // unchanged (one dedup either way); in a session that already ran a
-      // family member the build collapses to the adjacency groupBy alone.
-      val (_, d) = undirectedShared(edges, memoKey)
-      val dir = d.select(col("src").as("x"), col("dst").as("nb"))
-      // materialized once; every h-index round after reads only this
-      corenessAdjacency(dir).localCheckpoint()
-    }
-    // session memo (opt-in by key): the fixpoint loop's input is rebuilt
-    // once per session, not once per rep (the bench's first touching query
-    // pays the materialization honestly)
-    val adj = memoKey match {
-      case Some(k) =>
-        val fullKey =
-          edges.sparkSession.sparkContext.applicationId + "#corenessAdj#" + k
-        corenessMemo.getOrElseUpdate(fullKey, buildAdj())
-      case None => Exec.trackTransient(buildAdj())
-    }
+  private[graft] def corenessValues(edges: DataFrame, maxRounds: Int = 48): DataFrame = {
+    // the 3-way-union edge dedup is the expensive part: it is checkpointed
+    // once ([[undirectedShared]]), and coreness' both-direction view is a
+    // cheap union over it (exactly [[corenessDirected]] modulo column names)
+    val (_, d) = undirectedShared(edges)
+    val dir = d.select(col("src").as("x"), col("dst").as("nb"))
+    // materialized once; every h-index round after reads only this
+    val adj = Exec.trackTransient(corenessAdjacency(dir).localCheckpoint())
     def hindexOf(vals: String): String =
       s"""aggregate(
          |  zip_with(reverse(array_sort($vals)),
@@ -2239,17 +2015,9 @@ object GraphOps {
     }
   }
 
-  /** Driver-facing coreness histogram over [[lineitemEdges]]. The memo
-    * key MUST identify the data (callers pass the sf dir) — a bare
-    * per-session key would hand a warm-up's adjacency to the measured SF.
-    * The edge dedup itself rides the family-shared [[edgeMemo]] (r17), so
-    * the other `lineitemEdges(li, n)` consumers and this build pay it once.
-    */
-  def corenessHistogram(li: DataFrame, n: Int = 2000,
-                        memoKey: Option[String] = None): DataFrame = {
-    val (e, _) = undirectedShared(lineitemEdges(li, n), memoKey)
-    corenessValues(e, memoKey = memoKey)
-  }
+  /** Driver-facing coreness histogram over [[lineitemEdges]]. */
+  def corenessHistogram(li: DataFrame, n: Int = 2000): DataFrame =
+    corenessValues(lineitemEdges(li, n))
       .groupBy(col("hv").as("coreness"))
       .agg(count(lit(1)).as("n_nodes"))
       .orderBy(col("coreness"))
@@ -2271,14 +2039,11 @@ object GraphOps {
     * holds with frontier ∝ walks, not edges.
     */
   def randomWalkCensus(li: DataFrame, n: Int = 2000,
-                       walkLen: Int = 8,
-                       memoKey: Option[String] = None): DataFrame =
-    randomWalkCensusEdges(lineitemEdges(li, n), walkLen, memoKey)
+                       walkLen: Int = 8): DataFrame =
+    randomWalkCensusEdges(lineitemEdges(li, n), walkLen)
 
-  private[graft] def randomWalkCensusEdges(und: DataFrame,
-                                           walkLen: Int,
-                                           memoKey: Option[String] = None): DataFrame = {
-    val (_, d0) = undirectedShared(und, memoKey)
+  private[graft] def randomWalkCensusEdges(und: DataFrame, walkLen: Int): DataFrame = {
+    val (_, d0) = undirectedShared(und)
     val dir = d0.select(col("src").as("x"), col("dst").as("nb"))
     val adj = Exec.trackTransient(
       dir.groupBy(col("x"))
@@ -2386,23 +2151,11 @@ object GraphOps {
       .filter(col("src") =!= col("dst"))
       .distinct()
 
-  /** Session-scoped memo for a checkpointed DIRECTED edge frame (src, dst)
-    * — [[directedCyclicEdges]] is derived identically by the SCC census
-    * and the triad census, so the full-shuffle distinct is paid once per
-    * session (r17; the [[edgeMemo]] contract for the directed builders).
-    */
-  private val dirEdgeMemo =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
-  private[graft] def directedShared(edges: DataFrame,
-      memoKey: Option[String]): DataFrame =
-    memoKey match {
-      case None => Exec.trackTransient(edges.localCheckpoint())
-      case Some(k) =>
-        val fullKey =
-          edges.sparkSession.sparkContext.applicationId + "#diredges#" + k
-        dirEdgeMemo.getOrElseUpdate(fullKey, edges.localCheckpoint())
-    }
+  /** A DIRECTED edge frame (src, dst) checkpointed, so the full-shuffle
+    * distinct upstream (e.g. [[directedCyclicEdges]]) runs once per query;
+    * tracked for release at the next [[Exec.clearPinned]]. */
+  private[graft] def directedShared(edges: DataFrame): DataFrame =
+    Exec.trackTransient(edges.localCheckpoint())
 
   /** Directed TRIAD census over [[directedCyclicEdges]] — the motif
     * profile that separates hierarchy from feedback in a directed graph:
@@ -2414,13 +2167,11 @@ object GraphOps {
     * frame — the standard relational triangle shape, no adjacency
     * collection. Ratios are floor-quantized; all counts exact.
     */
-  def triadCensus(li: DataFrame, n: Int = 2000,
-                  memoKey: Option[String] = None): DataFrame =
-    triadCensusEdges(directedCyclicEdges(li, n), memoKey)
+  def triadCensus(li: DataFrame, n: Int = 2000): DataFrame =
+    triadCensusEdges(directedCyclicEdges(li, n))
 
-  private[graft] def triadCensusEdges(edges0: DataFrame,
-      memoKey: Option[String] = None): DataFrame = {
-    val e = directedShared(edges0, memoKey)
+  private[graft] def triadCensusEdges(edges0: DataFrame): DataFrame = {
+    val e = directedShared(edges0)
     val edges = e.agg(count(lit(1)).as("n_edges"))
     val recip = e.as("x")
       .join(e.as("y"), col("x.src") === col("y.dst")
@@ -2713,10 +2464,8 @@ object GraphOps {
 
   /** Driver-facing SCC census over [[directedCyclicEdges]]: one row per
     * component (scc_id = least member), ordered by id. */
-  def sccSummary(li: DataFrame, n: Int = 2000,
-                 memoKey: Option[String] = None): DataFrame = {
-    val assign = sccAssignAuto(
-      directedShared(directedCyclicEdges(li, n), memoKey))
+  def sccSummary(li: DataFrame, n: Int = 2000): DataFrame = {
+    val assign = sccAssignAuto(directedShared(directedCyclicEdges(li, n)))
     assign.groupBy(col("scc_id"))
       .agg(count(lit(1)).as("n_members"))
       .orderBy(col("scc_id"))

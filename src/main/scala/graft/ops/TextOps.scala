@@ -17,79 +17,31 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object TextOps {
 
-  /** Session-scoped memo for the trained BPE model — (merge table, final
-    * segmented word-frequency frame) — and the derived distinct-word
-    * segmentation table (r17, the [[graft.ops.DedupOps]] pairMemo
-    * contract): four registry queries (txt_bpe_merges / _vocab / _encode /
-    * fertility) train the SAME `rounds`-merge tokenizer on the same
-    * corpus, and a session running them back to back should train once.
-    * Frames are `localCheckpoint`ed (they survive `Exec.clearPinned`),
-    * keyed by applicationId + caller key (must identify data) + rounds,
-    * evicted with the family evictor. First-touch query pays training
-    * inside its measured time.
-    */
-  private val bpeTrainMemo =
-    scala.collection.concurrent.TrieMap.empty[String, (DataFrame, DataFrame)]
-  private val bpeSegMemo =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
-  /** Session memo for the exact (source, token, n) count table (r17b):
-    * six registry queries (token frequency, heavy hitters, feature
-    * hashing, Zipf fit, JS divergence, OOV curve) reduce the same corpus
-    * explode to token counts — the data-sized shuffle of the family. The
-    * memoized frame is VOCABULARY-sized (never the token stream), global
-    * counts are exact integer rollups of the per-source counts, and the
-    * usual memo hygiene applies: applicationId + data-dir key, first-touch
-    * query pays the build, evicted with the family evictor. */
-  private val tokenCountMemo =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
-  Exec.registerMemoEvictor("text") { () =>
-    bpeTrainMemo.values.foreach { case (m, c) =>
-      Exec.unpersistCheckpointed(m); Exec.unpersistCheckpointed(c)
-    }
-    bpeTrainMemo.clear()
-    bpeSegMemo.values.foreach(Exec.unpersistCheckpointed)
-    bpeSegMemo.clear()
-    tokenCountMemo.values.foreach(Exec.unpersistCheckpointed)
-    tokenCountMemo.clear()
-  }
-
-  /** The memoized (source, token, n) table — see [[tokenCountMemo]].
+  /** The exact (source, token, n) count table that six operators (token
+    * frequency, heavy hitters, feature hashing, Zipf fit, JS divergence,
+    * OOV curve) reduce: VOCABULARY-sized (never the token stream), so
+    * global counts are exact integer rollups of the per-source counts.
     *
-    * NOTE (r18, advisor): the build ends in an EAGER `localCheckpoint`, so
-    * constructing any consumer frame (tokenFrequency, zipfFit, oovRate,
-    * jsDivergence, featureHashing, heavyHitters) runs a Spark job at
-    * DataFrame-construction time, not at first action — deliberate for the
-    * registry (the memo must own its blocks), but library callers should
-    * expect the count materialization up front. */
-  private[graft] def sourceTokenCounts(docs: DataFrame,
-      memoKey: Option[String]): DataFrame = {
+    * NOTE: the build ends in an EAGER `localCheckpoint` (tracked for
+    * release at the next [[Exec.clearPinned]]), so constructing any
+    * consumer frame runs a Spark job at DataFrame-construction time, not
+    * at first action. */
+  private[graft] def sourceTokenCounts(docs: DataFrame): DataFrame = {
     // tolerate source-less frames (library callers, spec fixtures): a
     // constant source yields the same global rollups, and the one consumer
     // that reads sources (jsDivergence) always receives the full table
     val srcCol =
       if (docs.columns.contains("source")) col("source")
       else lit("_").as("source")
-    def build(): DataFrame = docs
+    Exec.trackTransient(docs
       .select(srcCol, explode(tokens(col("text"))).as("token"))
       .groupBy(col("source"), col("token")).agg(count(lit(1)).as("n"))
-      .localCheckpoint()
-    memoKey match {
-      case None => Exec.trackTransient(build())
-      case Some(k) =>
-        val fullKey =
-          docs.sparkSession.sparkContext.applicationId + "#toksrc#" + k
-        tokenCountMemo.getOrElseUpdate(fullKey, build())
-    }
+      .localCheckpoint())
   }
 
-  /** Global (token, n) counts as an exact rollup of [[sourceTokenCounts]]
-    * — one vocabulary-sized aggregate instead of a corpus explode when the
-    * memo is warm. */
-  private def globalTokenCounts(docs: DataFrame,
-      memoKey: Option[String]): DataFrame =
-    sourceTokenCounts(docs, memoKey)
+  /** Global (token, n) counts as an exact rollup of [[sourceTokenCounts]]. */
+  private def globalTokenCounts(docs: DataFrame): DataFrame =
+    sourceTokenCounts(docs)
       .groupBy(col("token")).agg(sum(col("n")).as("n"))
 
   /** Whitespace-collapsed, trimmed, lowercased text — the canonical form all
@@ -163,9 +115,8 @@ object TextOps {
     * combined before the single shuffle on token.
     * Building the frame runs the [[sourceTokenCounts]] checkpoint job.
     */
-  def tokenFrequency(docs: DataFrame, k: Int,
-                     memoKey: Option[String] = None): DataFrame =
-    globalTokenCounts(docs, memoKey)
+  def tokenFrequency(docs: DataFrame, k: Int): DataFrame =
+    globalTokenCounts(docs)
       .orderBy(col("n").desc, col("token"))
       .limit(k)
 
@@ -180,13 +131,11 @@ object TextOps {
     * this is the exact batch form.
     * Building the frame runs the [[sourceTokenCounts]] checkpoint job.
     */
-  def heavyHitters(docs: DataFrame, supportPct: Double,
-                   memoKey: Option[String] = None): DataFrame = {
-    // r17b: the token counts ride the family memo (vocabulary-sized rollup
-    // of the per-source counts — exact integers); the persist is still
-    // load-bearing for the two downstream reads and released under the
-    // Exec.clearPinned contract.
-    val counts = Exec.cachedScan(globalTokenCounts(docs, memoKey)
+  def heavyHitters(docs: DataFrame, supportPct: Double): DataFrame = {
+    // the token counts are a vocabulary-sized rollup of the per-source
+    // counts (exact integers); the persist is load-bearing for the two
+    // downstream reads and released under the Exec.clearPinned contract.
+    val counts = Exec.cachedScan(globalTokenCounts(docs)
       .persist().transform(Exec.trackPersisted))
     val total = counts.agg(sum(col("n")).as("total"))
     counts.crossJoin(broadcast(total))
@@ -719,9 +668,8 @@ object TextOps {
     * on dimension — both vocabulary-sized.
     * Building the frame runs the [[sourceTokenCounts]] checkpoint job.
     */
-  def featureHashing(docs: DataFrame, dims: Int = 64,
-                     memoKey: Option[String] = None): DataFrame = {
-    val perTok = globalTokenCounts(docs, memoKey)
+  def featureHashing(docs: DataFrame, dims: Int = 64): DataFrame = {
+    val perTok = globalTokenCounts(docs)
       .withColumn("dim", expr(
         s"CAST(conv(substring(md5(token), 1, 8), 16, 10) AS BIGINT) % $dims"))
     perTok.groupBy(col("dim"))
@@ -1034,9 +982,8 @@ object TextOps {
     * (whitelisted bounded window), and the regression is one tiny aggregate.
     * Building the frame runs the [[sourceTokenCounts]] checkpoint job.
     */
-  def zipfFit(docs: DataFrame, k: Int = 100,
-              memoKey: Option[String] = None): DataFrame = {
-    val freq = globalTokenCounts(docs, memoKey)
+  def zipfFit(docs: DataFrame, k: Int = 100): DataFrame = {
+    val freq = globalTokenCounts(docs)
     val topk = freq.orderBy(col("n").desc, col("token")).limit(k)
     val w = Window.orderBy(col("n").desc, col("token")) // bounded: ≤k rows post-limit
     topk.withColumn("rank", row_number().over(w))
@@ -1386,9 +1333,8 @@ object TextOps {
     * exactly by the oracle's `list_reduce` over space-joined symbols
     * (symbols contain no spaces: words come from whitespace tokenization).
     */
-  def bpeMerges(docs: DataFrame, rounds: Int = 5,
-                memoKey: Option[String] = None): DataFrame =
-    bpeTrain(docs, rounds, memoKey)._1
+  def bpeMerges(docs: DataFrame, rounds: Int = 5): DataFrame =
+    bpeTrain(docs, rounds)._1
 
   /** The subword VOCABULARY after `rounds` BPE merges: every symbol left in
     * the segmented corpus with its frequency-weighted occurrence count —
@@ -1397,9 +1343,8 @@ object TextOps {
     * pass + vocabulary-sized rounds as [[bpeMerges]]; the final tally is
     * one narrow (symbol, freq) aggregate.
     */
-  def bpeVocab(docs: DataFrame, rounds: Int = 5, topK: Int = 30,
-               memoKey: Option[String] = None): DataFrame =
-    bpeTrain(docs, rounds, memoKey)._2
+  def bpeVocab(docs: DataFrame, rounds: Int = 5, topK: Int = 30): DataFrame =
+    bpeTrain(docs, rounds)._2
       .select(explode(col("syms")).as("sym"), col("freq"))
       .groupBy(col("sym")).agg(sum(col("freq")).as("n"))
       .orderBy(col("n").desc, col("sym"))
@@ -1457,9 +1402,8 @@ object TextOps {
     * health metric), and an md5 fingerprint of the full word-ordered
     * segmentation, so one flipped merge boundary anywhere fails the hash.
     */
-  def bpeEncode(docs: DataFrame, rounds: Int = 5,
-                memoKey: Option[String] = None): DataFrame = {
-    val vocab = bpeSegTable(docs, rounds, memoKey)
+  def bpeEncode(docs: DataFrame, rounds: Int = 5): DataFrame = {
+    val vocab = bpeSegTable(docs, rounds)
     docs
       .select(col("doc_id"), posexplode(tokens(col("text"))).as(Seq("pos", "word")))
       .filter(length(col("word")) > 0)
@@ -1479,22 +1423,11 @@ object TextOps {
     * of [[bpeEncode]] and [[fertilityByLang]]: Zipfian corpora make the
     * vocabulary orders of magnitude smaller than the token stream, so
     * segmentation runs once per distinct word and joins back to occurrences
-    * (AQE broadcasts the vocabulary side when it fits).
+    * (AQE broadcasts the vocabulary side when it fits). Checkpointed and
+    * tracked for release at the next [[Exec.clearPinned]].
     */
-  private def bpeSegTable(docs: DataFrame, rounds: Int,
-      memoKey: Option[String] = None): DataFrame =
-    memoKey match {
-      case None => bpeSegBuild(docs, rounds, memoKey)
-      case Some(k) =>
-        val fullKey = docs.sparkSession.sparkContext.applicationId +
-          s"#bpeSeg#$k#$rounds"
-        bpeSegMemo.getOrElseUpdate(fullKey,
-          bpeSegBuild(docs, rounds, memoKey).localCheckpoint())
-    }
-
-  private def bpeSegBuild(docs: DataFrame, rounds: Int,
-      memoKey: Option[String]): DataFrame = {
-    val mtab = bpeTrain(docs, rounds, memoKey)._1
+  private def bpeSegTable(docs: DataFrame, rounds: Int): DataFrame = {
+    val mtab = bpeTrain(docs, rounds)._1
       .agg(sort_array(collect_list(struct(col("round"), col("p1"), col("p2"))))
         .as("marr"))
     val chars = docs
@@ -1521,6 +1454,8 @@ object TextOps {
            |  syms)""".stripMargin))
     }.select(col("word"), concat_ws("|", col("syms")).as("seg"),
       size(col("syms")).as("nsub"))
+      .localCheckpoint()
+      .transform(Exec.trackTransient)
   }
 
   /** Tokenizer fertility / compression census per language — THE tokenizer
@@ -1535,9 +1470,8 @@ object TextOps {
     * touched once, the vocabulary join broadcasts, and the final exchange
     * is |languages| rows.
     */
-  def fertilityByLang(docs: DataFrame, rounds: Int = 5,
-                      memoKey: Option[String] = None): DataFrame = {
-    val vocab = bpeSegTable(docs, rounds, memoKey)
+  def fertilityByLang(docs: DataFrame, rounds: Int = 5): DataFrame = {
+    val vocab = bpeSegTable(docs, rounds)
     docs
       .select(col("doc_id"), col("lang"), explode(tokens(col("text"))).as("word"))
       .filter(length(col("word")) > 0)
@@ -1660,23 +1594,15 @@ object TextOps {
   }
 
   /** Shared BPE training loop: returns (merge table, final segmented
-    * word-frequency frame). See [[bpeMerges]] for the scale shape.
+    * word-frequency frame), both eagerly checkpointed, so the merge table
+    * owns its blocks instead of reading the per-round frames, and tracked
+    * for release at the next [[Exec.clearPinned]]. See
+    * [[bpeMerges]] for the scale shape.
     */
-  private def bpeTrain(docs: DataFrame, rounds: Int,
-      memoKey: Option[String] = None): (DataFrame, DataFrame) =
-    memoKey match {
-      case None => bpeTrainBuild(docs, rounds)
-      case Some(k) =>
-        val fullKey = docs.sparkSession.sparkContext.applicationId +
-          s"#bpeTrain#$k#$rounds"
-        bpeTrainMemo.getOrElseUpdate(fullKey, {
-          val (m, c) = bpeTrainBuild(docs, rounds)
-          // eager re-checkpoint: the lazy merge table reads per-round
-          // frames that are registered for the between-query drain — the
-          // memoized copies must own their blocks outright
-          (m.localCheckpoint(), c.localCheckpoint())
-        })
-    }
+  private def bpeTrain(docs: DataFrame, rounds: Int): (DataFrame, DataFrame) = {
+    val (m, c) = bpeTrainBuild(docs, rounds)
+    (Exec.trackTransient(m.localCheckpoint()), Exec.trackTransient(c.localCheckpoint()))
+  }
 
   private def bpeTrainBuild(docs: DataFrame, rounds: Int): (DataFrame, DataFrame) = {
     var cur = docs
@@ -2212,9 +2138,8 @@ object TextOps {
     * and the coverage ratios are single divisions of exact longs.
     * Building the frame runs the [[sourceTokenCounts]] checkpoint job.
     */
-  def oovRate(docs: DataFrame, ks: Seq[Int] = Seq(5, 10, 20),
-              memoKey: Option[String] = None): DataFrame = {
-    val freq = globalTokenCounts(docs, memoKey)
+  def oovRate(docs: DataFrame, ks: Seq[Int] = Seq(5, 10, 20)): DataFrame = {
+    val freq = globalTokenCounts(docs)
       .select(col("token").as("word"), col("n").as("f"))
     val top = freq.orderBy(col("f").desc, col("word")).limit(ks.max)
     val w = Window.orderBy(col("f").desc, col("word")) // bounded: ≤max(ks) rows post-limit
@@ -2359,12 +2284,10 @@ object TextOps {
     * magnitude under q4 flooring (the knPerplexity doctrine).
     * Building the frame runs the [[sourceTokenCounts]] checkpoint job.
     */
-  def jsDivergence(docs: DataFrame,
-                   memoKey: Option[String] = None): DataFrame = {
+  def jsDivergence(docs: DataFrame): DataFrame = {
     def q4(c: Column): Column = floor(c * 10000 + 0.5) / 10000
-    // r17b: the (source, token, n) table IS the family memo frame — the
-    // checkpoint serves the three reads below directly
-    val counts = sourceTokenCounts(docs, memoKey)
+    // the (source, token, n) checkpoint serves the three reads below
+    val counts = sourceTokenCounts(docs)
     val totals = counts.groupBy(col("source")).agg(sum(col("n")).as("tot"))
     val srcs = totals.select(col("source"))
     val pairs = srcs.select(col("source").as("sa"))

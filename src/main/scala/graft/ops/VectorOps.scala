@@ -18,21 +18,6 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType, S
   */
 object VectorOps {
 
-  /** Session-scoped memo for the PQ train/encode/reconstruct frame
-    * (r17, the [[graft.ops.DedupOps]] pairMemo contract): the ADC scorer
-    * and the IVF-PQ composition both reconstruct the SAME codebook
-    * encoding, and a session running both should train/encode once.
-    * Checkpointed, keyed by applicationId + caller key + params, evicted
-    * with the family evictor; first-touch query pays inside its time.
-    */
-  private val pqMemo =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
-  Exec.registerMemoEvictor("vector") { () =>
-    pqMemo.values.foreach(Exec.unpersistCheckpointed)
-    pqMemo.clear()
-  }
-
   /** Sum of element-wise products in double precision (sequential fold —
     * deterministic order).
     */
@@ -831,20 +816,11 @@ object VectorOps {
     * or ranking, ties broken by id — engine-stable end to end.
     *
     * Split as [[pqRecon]] (train/encode/reconstruct, shared with
-    * [[ivfPqAnn]]) + the all-candidates scoring pass below.
+    * [[ivfPqAnn]]) + the all-candidates scoring pass below. The
+    * (vec_id, r) reconstructions are checkpointed and tracked for release
+    * at the next [[Exec.clearPinned]].
     */
   private def pqRecon(emb: DataFrame, nSub: Int, dim: Int,
-                      nCodes: Int, memoKey: Option[String] = None): DataFrame =
-    memoKey match {
-      case None => pqReconBuild(emb, nSub, dim, nCodes)
-      case Some(k) =>
-        val fullKey = emb.sparkSession.sparkContext.applicationId +
-          s"#pqRecon#$k#$nSub#$dim#$nCodes"
-        pqMemo.getOrElseUpdate(fullKey,
-          pqReconBuild(emb, nSub, dim, nCodes).localCheckpoint())
-    }
-
-  private def pqReconBuild(emb: DataFrame, nSub: Int, dim: Int,
                       nCodes: Int): DataFrame = {
     graft.functions.SqL2.register(emb.sparkSession)
     val subDim = dim / nSub
@@ -893,13 +869,14 @@ object VectorOps {
     codes.groupBy(col("vec_id"))
       .agg(expr("flatten(transform(array_sort(collect_list(struct(m, sub))), s -> s.sub))")
         .as("r"))
+      .localCheckpoint()
+      .transform(Exec.trackTransient)
   }
 
   def pqAdcTopK(emb: DataFrame, maxQueryId: Int, k: Int,
-                nSub: Int = 8, dim: Int = 64, nCodes: Int = 16,
-                memoKey: Option[String] = None): DataFrame = {
+                nSub: Int = 8, dim: Int = 64, nCodes: Int = 16): DataFrame = {
     val q6 = (c: Column) => floor(c * 1000000 + 0.5) / 1000000
-    val recon = pqRecon(emb, nSub, dim, nCodes, memoKey)
+    val recon = pqRecon(emb, nSub, dim, nCodes)
     val qvecs = emb.filter(col("vec_id") < maxQueryId)
       .select(col("vec_id").as("query_id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("q"))
@@ -923,11 +900,10 @@ object VectorOps {
     * data-dependent, so it carries no broadcast hint, like [[ivfAnn]]'s.
     */
   def ivfPqAnn(emb: DataFrame, maxQueryId: Int, k: Int, nProbe: Int = 2,
-               nSub: Int = 8, dim: Int = 64, nCodes: Int = 16,
-               memoKey: Option[String] = None): DataFrame = {
+               nSub: Int = 8, dim: Int = 64, nCodes: Int = 16): DataFrame = {
     val q6 = (c: Column) => floor(c * 1000000 + 0.5) / 1000000
     val cand = ivfCandidates(emb, maxQueryId, nProbe)
-    val recon = pqRecon(emb, nSub, dim, nCodes, memoKey)
+    val recon = pqRecon(emb, nSub, dim, nCodes)
     val qvecs = emb.filter(col("vec_id") < maxQueryId)
       .select(col("vec_id").as("query_id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("q"))

@@ -20,25 +20,6 @@ import org.apache.spark.sql.types._
   */
 object QualityChecks {
 
-  /** Session-scoped memo for the EXACT quartile row shared by
-    * `qc_outlier_iqr` and `qc_outlier_iqr_approx` (r17b): the exact
-    * `percentile` aggregate merges a map of every distinct value into one
-    * final buffer — the measured dominant cost of both queries — and both
-    * compute THE SAME four-column quartiles over the same fact table. The
-    * memo follows the GraphOps/DedupOps contract: a localCheckpoint'ed
-    * 1-row frame keyed by applicationId + caller data key + column list,
-    * first-touch query pays the build inside its measured time, evicted by
-    * the family evictor (Verify/MicroBench call releaseAll between
-    * queries, so floors and oracle runs stay cold and self-contained).
-    */
-  private val quartileMemo =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
-  graft.ops.Exec.registerMemoEvictor("quality") { () =>
-    quartileMemo.values.foreach(graft.ops.Exec.unpersistCheckpointed)
-    quartileMemo.clear()
-  }
-
   /** Q1: required-column set difference (`check_hicp_quality.py:57–60`).
     * Schema metadata only — no job.
     */
@@ -579,62 +560,23 @@ object QualityChecks {
     * because it IS the exact-vs-approx agreement audit, which is why its
     * bench cost ≈ exact + approx, not approx alone.
     */
-  private def quartileKey(spark: org.apache.spark.sql.SparkSession,
-                          dataKey: String, c: String): String =
-    spark.sparkContext.applicationId + "#exactQuartiles#" + dataKey + "#" + c
-
-  /** The exact-quartile 1-row frame (q1_c, q3_c per requested column),
-    * memoized PER COLUMN — the two registered consumers audit overlapping
-    * but unequal column sets, so the memo unit is the column: whichever
-    * query runs first pays one aggregate for its columns; the second pays
-    * one aggregate for only the still-missing columns (or none). Un-keyed
-    * calls build without memoizing. The per-column slices are 1-row
-    * localCheckpoints — microsecond jobs off the already-materialized row. */
-  private def exactQuartiles(df: DataFrame, cols: Seq[String],
-                             memoKey: Option[String]): DataFrame = {
-    def buildFor(cs: Seq[String]): DataFrame = df
-      .agg(expr(s"percentile(${cs.head}, array(0.25D, 0.75D))")
-          .as(s"qq_${cs.head}"),
-        cs.tail.map(c =>
+  /** The exact-quartile 1-row frame (q1_c, q3_c per requested column): one
+    * aggregate, checkpointed (both fence reads below use the row) and
+    * tracked for release at the next [[graft.ops.Exec.clearPinned]]. */
+  private def exactQuartiles(df: DataFrame, cols: Seq[String]): DataFrame =
+    graft.ops.Exec.trackTransient(df
+      .agg(expr(s"percentile(${cols.head}, array(0.25D, 0.75D))")
+          .as(s"qq_${cols.head}"),
+        cols.tail.map(c =>
           expr(s"percentile($c, array(0.25D, 0.75D))").as(s"qq_$c")): _*)
-      .select(cs.flatMap(c => Seq(
+      .select(cols.flatMap(c => Seq(
         expr(s"element_at(qq_$c, 1)").as(s"q1_$c"),
         expr(s"element_at(qq_$c, 2)").as(s"q3_$c"))): _*)
-    memoKey match {
-      case Some(k) =>
-        val spark = df.sparkSession
-        val missing = cols.filterNot(c =>
-          quartileMemo.contains(quartileKey(spark, k, c)))
-        if (missing.nonEmpty) {
-          val built = buildFor(missing).localCheckpoint()
-          missing.foreach(c => quartileMemo.put(quartileKey(spark, k, c),
-            built.select(col(s"q1_$c"), col(s"q3_$c")).localCheckpoint()))
-          graft.ops.Exec.unpersistCheckpointed(built)
-        }
-        cols.map(c => quartileMemo(quartileKey(spark, k, c)))
-          .reduce(_.crossJoin(_))
-      case None => buildFor(cols)
-    }
-  }
-
-  /** Store already-materialized per-column exact-quartile rows under the
-    * memo key (the audit's fused aggregate computes them anyway — shares
-    * them forward to the sibling exact query). */
-  private def offerExactQuartiles(spark: org.apache.spark.sql.SparkSession,
-                                  memoKey: Option[String], cols: Seq[String],
-                                  fusedRow: DataFrame): Unit =
-    memoKey.foreach { k =>
-      cols.foreach { c =>
-        if (!quartileMemo.contains(quartileKey(spark, k, c)))
-          quartileMemo.put(quartileKey(spark, k, c),
-            fusedRow.select(col(s"q1_$c"), col(s"q3_$c")).localCheckpoint())
-      }
-    }
+      .localCheckpoint())
 
   def iqrOutliers(df: DataFrame, cols: Seq[String],
                   useApprox: Boolean = false,
-                  accuracy: Int = 10000,
-                  memoKey: Option[String] = None): DataFrame = {
+                  accuracy: Int = 10000): DataFrame = {
     def q4(c: Column): Column = floor(c * 10000 + 0.5) / 10000
     // ONE percentile buffer per column (the array form), not one per
     // quantile: the buffer is a map of every distinct value, so doubling
@@ -648,7 +590,7 @@ object QualityChecks {
           .select(cols.flatMap(c => Seq(
             expr(s"element_at(qq_$c, 1)").as(s"q1_$c"),
             expr(s"element_at(qq_$c, 2)").as(s"q3_$c"))): _*)
-      } else exactQuartiles(df, cols, memoKey)
+      } else exactQuartiles(df, cols)
     def lo(c: String): Column =
       col(s"q1_$c") - (col(s"q3_$c") - col(s"q1_$c")) * 1.5
     def hi(c: String): Column =
@@ -682,50 +624,21 @@ object QualityChecks {
     * proven by the oracle hash at every SF.
     */
   def iqrApproxAudit(df: DataFrame, cols: Seq[String],
-                     accuracy: Int = 10000,
-                     memoKey: Option[String] = None): DataFrame = {
+                     accuracy: Int = 10000): DataFrame = {
     def q4(c: Column): Column = floor(c * 10000 + 0.5) / 10000
-    def approxOnly(): DataFrame = {
-      val aggs = cols.map(c =>
-        expr(s"cast(approx_percentile($c, array(0.25D, 0.75D)," +
-          s" $accuracy) as array<double>)").as(s"aq_$c"))
-      df.agg(aggs.head, aggs.tail: _*)
-        .select(cols.flatMap(c => Seq(
-          expr(s"element_at(aq_$c, 1)").as(s"a1_$c"),
-          expr(s"element_at(aq_$c, 2)").as(s"a3_$c"))): _*)
-    }
-    def fused(): DataFrame = {
-      val aggs =
-        cols.map(c => expr(s"percentile($c, array(0.25D, 0.75D))").as(s"eq_$c")) ++
-        cols.map(c => expr(s"cast(approx_percentile($c, array(0.25D, 0.75D)," +
-          s" $accuracy) as array<double>)").as(s"aq_$c"))
-      df.agg(aggs.head, aggs.tail: _*)
-        .select(cols.flatMap(c => Seq(
-          expr(s"element_at(eq_$c, 1)").as(s"q1_$c"),
-          expr(s"element_at(eq_$c, 2)").as(s"q3_$c"),
-          expr(s"element_at(aq_$c, 1)").as(s"a1_$c"),
-          expr(s"element_at(aq_$c, 2)").as(s"a3_$c"))): _*)
-    }
-    // r17b: the exact half rides the session quartile memo. Warm (the
-    // sibling exact query already paid the single-buffer percentile merge):
-    // only the mergeable GK sketch aggregate runs, crossJoined onto the
-    // memoized exact row — both are 1-row frames. Cold: the r17 fused
-    // aggregate runs exactly as before (same floor), is checkpointed (1
-    // row), and its exact slice seeds the memo for the sibling. Values are
-    // identical either way — the quartiles don't depend on which aggregate
-    // carried the buffers.
-    val spark = df.sparkSession
-    val allWarm = memoKey.exists(k =>
-      cols.forall(c => quartileMemo.contains(quartileKey(spark, k, c))))
-    val q =
-      if (allWarm) exactQuartiles(df, cols, memoKey).crossJoin(approxOnly())
-      else if (memoKey.isDefined) {
-        // ck lives exactly this query (transient drain); the per-column
-        // memo slices are independent checkpoints that stay warm
-        val ck = graft.ops.Exec.trackTransient(fused().localCheckpoint())
-        offerExactQuartiles(spark, memoKey, cols, ck)
-        ck
-      } else fused()
+    // the fused 1-row quartile frame is checkpointed (both fence reads
+    // below use it) and lives exactly this query (transient drain)
+    val aggs =
+      cols.map(c => expr(s"percentile($c, array(0.25D, 0.75D))").as(s"eq_$c")) ++
+      cols.map(c => expr(s"cast(approx_percentile($c, array(0.25D, 0.75D)," +
+        s" $accuracy) as array<double>)").as(s"aq_$c"))
+    val q = graft.ops.Exec.trackTransient(df.agg(aggs.head, aggs.tail: _*)
+      .select(cols.flatMap(c => Seq(
+        expr(s"element_at(eq_$c, 1)").as(s"q1_$c"),
+        expr(s"element_at(eq_$c, 2)").as(s"q3_$c"),
+        expr(s"element_at(aq_$c, 1)").as(s"a1_$c"),
+        expr(s"element_at(aq_$c, 2)").as(s"a3_$c"))): _*)
+      .localCheckpoint())
     def lo(q1: String, q3: String): Column =
       col(q1) - (col(q3) - col(q1)) * 1.5
     def hi(q1: String, q3: String): Column =

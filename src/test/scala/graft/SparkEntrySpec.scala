@@ -24,7 +24,7 @@ class SparkEntrySpec extends SparkSpec {
     // between-queries contract (Exec.releaseAll after each query) and
     // asserts NO query leaves a cached plan or pinned RDD block behind the
     // cleaner — i.e. every operator-internal persist()/localCheckpoint is
-    // either memo-evictable or visible to the releaseAll sweep. An operator
+    // visible to the releaseAll sweep. An operator
     // whose pin escapes both paths (an unregistered checkpoint held by a
     // field, say) fails here by name.
     val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>

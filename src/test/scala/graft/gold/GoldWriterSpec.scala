@@ -40,6 +40,28 @@ class GoldWriterSpec extends SparkSpec {
     intercept[IllegalStateException] { GoldWriter.requirePass(spark, dir) }
   }
 
+  test("G1: the gate never reads a partial pointer while reports are written") {
+    val dir = tempDir("pointer").toString
+    val pass = Report(passed = true, Seq(CheckResult("x", passed = true, Map())), Map())
+    GoldWriter.writeReport(spark, dir, pass, "20260104_000000", "processed/d.parquet")
+    val writes = 300
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val writer = new Thread(() =>
+      try (1 to writes).foreach { i =>
+        GoldWriter.writeReport(spark, dir, pass, f"20260105_$i%06d", "processed/e.parquet")
+      } catch { case e: Exception => failures.add(s"writer: $e") })
+    var reads = 0
+    writer.start()
+    while (writer.isAlive || reads == 0) {
+      try GoldWriter.requirePass(spark, dir)
+      catch { case e: Exception => failures.add(s"${e.getClass.getSimpleName}: ${e.getMessage}") }
+      reads += 1
+    }
+    writer.join()
+    assert(failures.isEmpty,
+      s"${failures.size} of $reads reads failed, e.g. ${failures.peek()}")
+  }
+
   test("G1: the gate reads the report's verdict, not a _PASS in its path") {
     val dir = tempDir("gate").toString + "/reports_PASS_archive"
     val fail = Report(passed = false, Seq(CheckResult("x", passed = false, Map())), Map())

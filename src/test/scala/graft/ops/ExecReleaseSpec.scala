@@ -2,45 +2,45 @@ package graft.ops
 
 import graft.SparkSpec
 
-/** Lifecycle guard for the session-scoped memos: operator families memoize
-  * `localCheckpoint`ed frames (GraphOps orient/pagerank/kcore, DedupOps LSH
-  * pairs), which live OUTSIDE the cacheManager — so `clearPinned` alone would
-  * retain their executor blocks for the application lifetime. `releaseAll`
-  * must evict the memo maps AND drop every persisted block, or a long-lived
-  * session (Verify's 160+ queries, a notebook) leaks storage round over round.
+/** Lifecycle guard for the frames operators pin for one query: each
+  * family `localCheckpoint`s or persists the intermediates its returned
+  * (lazy) frame reads — deduplicated edge lists, oriented edges, degree
+  * frames, verified LSH pairs, the BPE model, quartile rows. Checkpoints
+  * live OUTSIDE the cacheManager, so each must be tracked: `clearPinned`
+  * after a query releases every one of them, and `releaseAll` also sweeps
+  * any block left untracked, or a long-lived session (Verify's 300+
+  * queries, the bench, a notebook) leaks storage query over query.
   */
 class ExecReleaseSpec extends SparkSpec {
 
-  test("releaseAll evicts memoized checkpoint frames: zero persistent RDDs survive") {
+  test("clearPinned alone releases the shared-build operators' checkpoints") {
     import spark.implicits._
+    Exec.releaseAll(spark) // clean slate
     val edges = (1 to 400)
       .map(i => (i.toLong, 1000L + (i % 60).toLong))
       .toDF("a", "b")
-
-    // populate all three GraphOps memo maps, the DedupOps pair memo, and
-    // per-query persist() pins
-    GraphOps.kCore(edges, 2, rounds = 3, memoKey = Some("leak-spec")).collect()
-    GraphOps.triangleCount(edges, memoKey = Some("leak-spec")).collect()
-    GraphOps.pageRank(edges, iters = 1, memoKey = Some("leak-spec")).collect()
+    GraphOps.kCore(edges, 2, rounds = 3).collect()
+    GraphOps.triangleCount(edges).collect()
+    GraphOps.pageRank(edges, iters = 1).collect()
     val docs = Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta theta"),
       (2L, "alpha beta gamma delta epsilon zeta eta theta"),
       (3L, "one two three four five six seven eight"))
       .toDF("doc_id", "text")
-    DedupOps.minhashLshPairs(docs, memoKey = Some("leak-spec")).collect()
-
+    DedupOps.minhashLshPairs(docs).collect()
+    TextOps.bpeEncode(docs, rounds = 3).collect()
+    val facts = (1 to 50).map(i => (i.toDouble, (i * 7 % 13).toDouble)).toDF("x", "y")
+    graft.quality.QualityChecks.iqrApproxAudit(facts, Seq("x", "y")).collect()
     assert(spark.sparkContext.getPersistentRDDs.nonEmpty,
-      "fixture should have left memoized checkpoint blocks pinned")
+      "fixture should have left checkpoint blocks pinned")
 
-    Exec.releaseAll(spark)
+    Exec.clearPinned(spark)
     val leaked = spark.sparkContext.getPersistentRDDs
     assert(leaked.isEmpty,
-      s"leaked RDD blocks after releaseAll: ids=${leaked.keys.toSeq.sorted}")
-
-    // memos were evicted, not just unpersisted: a re-run rebuilds and still answers
-    val again = GraphOps.triangleCount(edges, memoKey = Some("leak-spec")).collect()
-    assert(again.nonEmpty, "post-eviction re-run must rebuild the memo and succeed")
-    Exec.releaseAll(spark)
+      s"leaked RDD blocks after clearPinned: ids=${leaked.keys.toSeq.sorted}")
+    // nothing outlives the query: a re-run rebuilds and still answers
+    assert(GraphOps.triangleCount(edges).collect().nonEmpty)
+    Exec.clearPinned(spark)
   }
 
   test("late-round operators' checkpoints and pins are fully swept by releaseAll") {
@@ -70,7 +70,7 @@ class ExecReleaseSpec extends SparkSpec {
     Exec.releaseAll(spark) // clean slate
     // every operator family whose per-call localCheckpoint frames outlive the
     // call (the returned query reads them lazily): PCA heads, BFS layers,
-    // CC labels, BPE vocab rounds, perplexity per-doc, pageRank non-memo
+    // CC labels, BPE vocab rounds, perplexity per-doc, pageRank degree frames
     val emb = (0 until 40)
       .map(i => (i.toLong, Seq.tabulate(4)(j => (i * (j + 1)).toFloat / 7f), i % 3))
       .toDF("vec_id", "embedding", "label")
@@ -83,13 +83,13 @@ class ExecReleaseSpec extends SparkSpec {
       .toDF("doc_id", "text")
     TextOps.perplexityBuckets(docs).collect()
     TextOps.bpeEncode(docs, rounds = 3).collect()
-    DedupOps.nearDupClusters(docs).collect() // CC labels, no memoKey
+    DedupOps.nearDupClusters(docs).collect() // CC labels
     val edges = (1 to 200).map(i => (i.toLong, 1000L + (i % 40).toLong)).toDF("a", "b")
     GraphOps.bfsLayers(edges, seedMod = 10L, rounds = 2).collect()
-    GraphOps.pageRank(edges, iters = 2).collect() // memoKey = None
+    GraphOps.pageRank(edges, iters = 2).collect()
     GraphOps.degreeAssortativity(edges).collect()
     // bench-mode between-query cleanup: cacheManager clear + transient drain,
-    // NO releaseAll — memoized frames would survive (none were made here)
+    // NO releaseAll
     Exec.clearPinned(spark)
     val leaked = spark.sparkContext.getPersistentRDDs
     assert(leaked.isEmpty,

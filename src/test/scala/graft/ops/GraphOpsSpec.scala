@@ -563,30 +563,6 @@ class GraphOpsSpec extends SparkSpec {
     assert(gated == slow, s"gated=$gated slow=$slow")
   }
 
-  test("betweenness: warm-BFS reuse path (memo populated by closeness) " +
-    "matches the cold self-contained path exactly") {
-    import spark.implicits._
-    val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L), (0L, 4L), (4L, 5L),
-      (5L, 3L), (3L, 6L), (6L, 7L), (2L, 500L), (500L, 8L), (8L, 9L))
-      .toDF("a", "b")
-    // distributedOnly pins BOTH calls to the distributed branch — this
-    // test is about the warm-BFS reuse inside that branch, not the r17b
-    // driver fast path (covered by its own parity test below)
-    val cold = Exec.distributedOnly(GraphOps.betweennessBounded(edges)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq)
-    graft.ops.Exec.releaseAll(spark)
-    // closeness under a memo key materializes the shared bounded BFS;
-    // betweenness under the SAME key must then take the reuse branch
-    val key = Some("spec-warm-bfs")
-    GraphOps.closenessCentrality(edges, memoKey = key).collect()
-    val warm = Exec.distributedOnly(GraphOps.betweennessBounded(edges, memoKey = key)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq)
-    graft.ops.Exec.releaseAll(spark)
-    assert(warm == cold, s"warm=$warm cold=$cold")
-  }
-
   test("kCore: driver-resident peel matches the distributed rounds exactly, " +
     "including roundsRun (r17b bounded-metadata fast path)") {
     import spark.implicits._

@@ -640,8 +640,7 @@ class TextOpsSpec extends SparkSpec {
     assert(fast == slow, s"fast=$fast slow=$slow")
   }
 
-  test("token-count memo: all six consumers agree warm == cold and the " +
-    "global rollup equals a direct count (r17b)") {
+  test("token counts: six consumers give the same rows after clearPinned") {
     val docs = Seq(
       (1L, "src0", "alpha beta alpha gamma"),
       (2L, "src1", "beta beta delta"),
@@ -651,23 +650,32 @@ class TextOpsSpec extends SparkSpec {
     def norm(rs: Array[org.apache.spark.sql.Row]): Seq[Seq[Any]] =
       rs.map(r => (0 until r.length)
         .map(i => if (r.isNullAt(i)) null else r.get(i))).toSeq
-    val key = Some("spec-tok-memo")
     graft.ops.Exec.releaseAll(spark)
-    val runs: Seq[(String, Option[String] => Array[org.apache.spark.sql.Row])] = Seq(
-      ("tokenFrequency", mk => TextOps.tokenFrequency(docs, 5, mk).collect()),
-      ("heavyHitters", mk => TextOps.heavyHitters(docs, 10.0, mk).collect()),
-      ("featureHashing", mk => TextOps.featureHashing(docs, 8, mk).collect()),
-      ("zipfFit", mk => TextOps.zipfFit(docs, 5, mk).collect()),
-      ("jsDivergence", mk => TextOps.jsDivergence(docs, mk).collect()),
-      ("oovRate", mk => TextOps.oovRate(docs, Seq(2, 4), mk).collect()))
+    val runs: Seq[(String, () => Array[org.apache.spark.sql.Row])] = Seq(
+      ("tokenFrequency", () => TextOps.tokenFrequency(docs, 5).collect()),
+      ("heavyHitters", () => TextOps.heavyHitters(docs, 10.0).collect()),
+      ("featureHashing", () => TextOps.featureHashing(docs, 8).collect()),
+      ("zipfFit", () => TextOps.zipfFit(docs, 5).collect()),
+      ("jsDivergence", () => TextOps.jsDivergence(docs).collect()),
+      ("oovRate", () => TextOps.oovRate(docs, Seq(2, 4)).collect()))
     runs.foreach { case (name, f) =>
-      val warm = norm(f(key)) // first call seeds, later calls ride the memo
-      graft.ops.Exec.clearPinned(spark) // between-query contract, memo stays
-      val cold = norm(f(None))
+      val first = norm(f())
+      graft.ops.Exec.clearPinned(spark) // the between-query contract
+      assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+        s"$name: clearPinned left RDD blocks pinned")
+      val again = norm(f())
       graft.ops.Exec.clearPinned(spark)
-      assert(warm == cold, s"$name: warm=$warm cold=$cold")
+      assert(again == first, s"$name: again=$again first=$first")
     }
-    graft.ops.Exec.releaseAll(spark)
+    // the global rollup of the per-source counts equals a direct count
+    val direct = docs.select(explode(TextOps.tokens(col("text"))).as("token"))
+      .groupBy(col("token")).count()
+      .orderBy(col("count").desc, col("token")).limit(5).collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq
+    val rolled = TextOps.tokenFrequency(docs, 5).collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq
+    graft.ops.Exec.clearPinned(spark)
+    assert(rolled == direct, s"rollup=$rolled direct=$direct")
   }
 
   test("unigram LM: textbook corpus — char coverage, whole-word dominance") {

@@ -344,39 +344,6 @@ class QualityChecksSpec extends SparkSpec {
     assert(got.getLong(7) == xs.count(_ > hi).toLong, s"above: $got")
   }
 
-  test("iqr quartile memo: warm paths equal cold paths in BOTH query orders " +
-    "(r17b per-column exact-quartile sharing)") {
-    import spark.implicits._
-    val df = ((1 to 50).map(_.toDouble) ++ Seq(-100.0, 500.0))
-      .map(x => (x, x * 2 + 1))
-      .toDF("a", "b")
-    def norm(rs: Array[org.apache.spark.sql.Row]): Seq[Seq[Any]] =
-      rs.map(r => (0 until r.length)
-        .map(i => if (r.isNullAt(i)) null else r.get(i))).toSeq
-    // cold references (no memo key)
-    val iqrCold = norm(QualityChecks.iqrOutliers(df, Seq("a", "b")).collect())
-    val audCold = norm(QualityChecks.iqrApproxAudit(df, Seq("b")).collect())
-    // order 1: exact query first (memoizes a, b), audit rides warm b
-    graft.ops.Exec.releaseAll(spark)
-    val k1 = Some("spec-iqr-memo-1")
-    val iqr1 = norm(QualityChecks.iqrOutliers(df, Seq("a", "b"),
-      memoKey = k1).collect())
-    val aud1 = norm(QualityChecks.iqrApproxAudit(df, Seq("b"),
-      memoKey = k1).collect())
-    // order 2: audit first (fused seeds b), exact query builds only a
-    graft.ops.Exec.releaseAll(spark)
-    val k2 = Some("spec-iqr-memo-2")
-    val aud2 = norm(QualityChecks.iqrApproxAudit(df, Seq("b"),
-      memoKey = k2).collect())
-    val iqr2 = norm(QualityChecks.iqrOutliers(df, Seq("a", "b"),
-      memoKey = k2).collect())
-    graft.ops.Exec.releaseAll(spark)
-    assert(iqr1 == iqrCold && iqr2 == iqrCold,
-      s"iqr: cold=$iqrCold o1=$iqr1 o2=$iqr2")
-    assert(aud1 == audCold && aud2 == audCold,
-      s"audit: cold=$audCold o1=$aud1 o2=$aud2")
-  }
-
   test("chi2: proportional table scores exactly 0, zero cells are present and counted") {
     import spark.implicits._
     // proportional: p(x,y) = p(x)p(y) exactly → every contrib 0
