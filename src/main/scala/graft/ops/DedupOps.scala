@@ -93,16 +93,15 @@ object DedupOps {
   def ngramJaccardPairs(docs: DataFrame, bucketWidth: Int = 16,
                         threshold: Double = 0.5): DataFrame = {
     graft.functions.MinHashFunctions.register(docs.sparkSession)
-    val base = docs
+    // both the candidate pass and the verification join read this — cache
+    // so tokenize+shingle runs once (at cluster scale: checkpoint/write
+    // the shingled table)
+    val base = Exec.pin(docs
       .withColumn("toks", TextOps.tokens(col("text")))
       .withColumn("sh", expr("shingle_hashes(toks, 3)"))
       .filter(size(col("sh")) > 0)
       .withColumn("bucket", (col("n_chars") / bucketWidth).cast("long"))
-      .select(col("doc_id"), col("lang"), col("bucket"), col("sh"))
-      // both the candidate pass and the verification join read this — cache
-      // so tokenize+shingle runs once (at cluster scale: checkpoint/write
-      // the shingled table)
-      .persist().transform(Exec.trackPersisted)
+      .select(col("doc_id"), col("lang"), col("bucket"), col("sh")))
     // candidate generation runs entirely on NARROW columns — (doc_id, lang,
     // bucket, |sh|, one prefix hash per row) — so no shingle array ever
     // enters the length-band exchange (the same arrays-stay-home shape as
@@ -177,12 +176,11 @@ object DedupOps {
     */
   def containmentPairs(docs: DataFrame, threshold: Double = 0.8): DataFrame = {
     graft.functions.MinHashFunctions.register(docs.sparkSession)
-    val base = docs
+    val base = Exec.pin(docs
       .withColumn("toks", TextOps.tokens(col("text")))
       .withColumn("sh", expr("shingle_hashes(toks, 3)"))
       .filter(size(col("sh")) > 0)
-      .select(col("doc_id"), col("lang"), col("source"), col("sh"))
-      .persist().transform(Exec.trackPersisted)
+      .select(col("doc_id"), col("lang"), col("source"), col("sh")))
     // Prefix-filtered candidates (lossless, output unchanged): C(A,B) =
     // |A∩B| / min ≥ t needs overlap ≥ ⌈t·|A|⌉ for the SMALLER set A, so
     // under the arrays' hash order A's first |A| − ⌈t·|A|⌉ + 1 elements
@@ -246,8 +244,8 @@ object DedupOps {
     */
   private def verifiedPairs(docs: DataFrame, k: Int, bands: Int,
                             threshold: Double): DataFrame =
-    Exec.trackTransient(
-      minhashLshPairsUnsorted(docs, k, bands, threshold).localCheckpoint())
+    Exec.checkpoint(
+      minhashLshPairsUnsorted(docs, k, bands, threshold))
 
   /** Same pair set without the final global sort — for consumers (like the
     * clustering pass) that only need the edges, not a presentation order.
@@ -272,11 +270,10 @@ object DedupOps {
     val toksOf = TextOps.tokens(col("text"))
     // shingle_hashes(toks, 3) is empty iff size(toks) < 3 — same corpus
     // filter as the signature pipeline below, applied before fingerprinting
-    val members = docs.filter(size(toksOf) >= 3)
-      .select(col("doc_id"), TextOps.fingerprint(col("text")).as("fp"))
-      .persist().transform(Exec.trackPersisted)
+    val members = Exec.pin(docs.filter(size(toksOf) >= 3)
+      .select(col("doc_id"), TextOps.fingerprint(col("text")).as("fp")))
     val reps = members.groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
-    val withSig = docs
+    val withSig = Exec.pin(docs
       .join(reps.select(col("doc_id")), Seq("doc_id"))
       .withColumn("toks", toksOf)
       .withColumn("hs", expr("shingle_hashes(toks, 3)"))
@@ -284,8 +281,7 @@ object DedupOps {
       .withColumn("sig", expr(s"minhash_sig(hs, $k)"))
       // referenced by both the band explode and the verification join —
       // cache so the signature pipeline runs once (tiny: ids + hashes only)
-      .select(col("doc_id"), col("hs"), col("sig"))
-      .persist().transform(Exec.trackPersisted)
+      .select(col("doc_id"), col("hs"), col("sig")))
     // candidate generation on (doc_id, band hash) ONLY — the wide shingle
     // arrays stay out of the band shuffle and the pair-dedup shuffle
     val banded = withSig.select(
@@ -360,13 +356,12 @@ object DedupOps {
                      threshold: Double = 0.5): DataFrame = {
     val spark = docs.sparkSession
     graft.functions.MinHashFunctions.register(spark)
-    val withSig = docs
+    val withSig = Exec.pin(docs
       .withColumn("toks", TextOps.tokens(col("text")))
       .withColumn("hs", expr("shingle_hashes(toks, 3)"))
       .filter(size(col("hs")) > 0)
       .withColumn("sig", expr(s"minhash_sig(hs, $k)"))
-      .select(col("doc_id"), col("hs"), col("sig"))
-      .persist().transform(Exec.trackPersisted)
+      .select(col("doc_id"), col("hs"), col("sig")))
     def candidates(bands: Int): DataFrame = {
       val rpb = k / bands
       val banded = withSig.select(col("doc_id"),
@@ -388,8 +383,8 @@ object DedupOps {
     // list joins the sets unhinted, as in the production pair generator.
     // the r=2 candidate set is BOTH the verification input and one of the
     // swept configs — materialize it once (r17; it was band-joined twice)
-    val candRef = Exec.trackTransient(candidates(k / 2).localCheckpoint())
-    val truth = Exec.trackTransient(
+    val candRef = Exec.checkpoint(candidates(k / 2))
+    val truth = Exec.checkpoint(
       candRef
       .join(sets.select(col("doc_id").as("doc_a"), col("hset").as("h_a")), Seq("doc_a"))
       .join(sets.select(col("doc_id").as("doc_b"), col("hset").as("h_b")), Seq("doc_b"))
@@ -397,8 +392,7 @@ object DedupOps {
       .withColumn("inter", expr("sorted_intersect_count(h_a, h_b)"))
       .filter(col("inter").cast("double")
         / (size(col("h_a")) + size(col("h_b")) - col("inter")) >= threshold)
-      .select(col("doc_a"), col("doc_b"))
-      .localCheckpoint())
+      .select(col("doc_a"), col("doc_b")))
     val configs = Seq(k, k / 2, k / 3, k / 4).distinct.filter(k % _ == 0)
     val nTruth = truth.count()
     // r18 (guide §2.4 — remove shuffles outright): the remaining configs'
@@ -476,8 +470,7 @@ object DedupOps {
       .withColumn("sig", expr(s"minhash_sig(hs, $k)"))
       .select(col("doc_id"), col("hs"), col("sig"), lit(isNew).as("is_new"))
     // one signature pass per side; both read twice (bands + verification)
-    val withSig = sigs(corpus, isNew = false).union(sigs(batch, isNew = true))
-      .persist().transform(Exec.trackPersisted)
+    val withSig = Exec.pin(sigs(corpus, isNew = false).union(sigs(batch, isNew = true)))
     def banded(side: DataFrame): DataFrame = side.select(
       col("doc_id"), col("is_new"),
       posexplode(expr(s"band_hashes(sig, $bands, $rowsPerBand)"))
@@ -527,25 +520,13 @@ object DedupOps {
     * block behind [[nearDupClusters]] — usable over any pair source (exact
     * dedup groups, embedding-cosine pairs, …).
     */
-  def connectedComponents(pairs: DataFrame, maxIters: Int = 20,
-                          reliableCheckpointDir: Option[String] = None): DataFrame = {
-    // lineage cut per round: localCheckpoint is fast but executor-loss-
-    // fragile; a reliable dir swaps in checkpoint() — same constant-size
-    // plans, resilient to executor loss on a long-running cluster job
-    reliableCheckpointDir.foreach { d =>
-      pairs.sparkSession.sparkContext.setCheckpointDir(d)
-    }
-    def cut(df: DataFrame): DataFrame =
-      if (reliableCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
+  def connectedComponents(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
     // r17: the pair list is persisted ONCE up front — the driver gate's
     // job materializes it, and the distributed branch rereads the cached
     // pairs instead of recomputing their (possibly expensive) generation
     // subtree
-    val und = pairs.select(col("doc_a"), col("doc_b"))
-      .persist().transform(Exec.trackPersisted)
-    val collected =
-      if (reliableCheckpointDir.isEmpty) Exec.collectIfSmall(und, Exec.DriverLoopRows) else None
+    val und = Exec.pin(pairs.select(col("doc_a"), col("doc_b")))
+    val collected = Exec.collectIfSmall(und, Exec.DriverLoopRows)
     if (collected.isDefined) return connectedComponentsDriver(pairs.sparkSession, collected.get)
     val undirected = und
     val bothWays = undirected
@@ -556,14 +537,13 @@ object DedupOps {
     // Spark constraint-rewrite defect — LogicalRDD constraints keep the
     // pre-checkpoint attribute ids; the self-loop form sidesteps the Union
     // node entirely.) One distinct over node ids, materialized once.
-    val edges = bothWays
+    val edges = Exec.pin(bothWays
       .union(bothWays.select(col("doc_a")).distinct()
-        .select(col("doc_a"), col("doc_a").as("doc_b")))
-      .persist().transform(Exec.trackPersisted)
+        .select(col("doc_a"), col("doc_a").as("doc_b"))))
     // seed with each node's one-hop minimum (self-loops put the node itself
     // in its neighbor set) — what the first propagation round would produce
     // from identity labels, for one aggregation instead of a loop round
-    var labels = cut(edges.groupBy(col("doc_a"))
+    var labels = Exec.checkpoint(edges.groupBy(col("doc_a"))
       .agg(min(col("doc_b")).as("label"))
       .select(col("doc_a").as("node"), col("label")))
     // labels only ever DECREASE elementwise, so the exact label sum is a
@@ -581,17 +561,16 @@ object DedupOps {
       // an exponential — so hop needs only a lazy persist (computed once
       // inside the prop job, read from cache on the second join side), and
       // each round materializes exactly ONE eager checkpoint, not two.
-      val hop = edges.as("e")
+      val hop = Exec.pin(edges.as("e")
         .join(labels.as("l"), col("e.doc_a") === col("l.node"))
         .select(col("e.doc_b").as("node"), col("l.label").as("label"))
-        .groupBy(col("node")).agg(min(col("label")).as("label"))
-        .persist().transform(Exec.trackPersisted)
+        .groupBy(col("node")).agg(min(col("label")).as("label")))
       // pointer jump: shortcut each node to its label's current label.
       // Every label IS a node of the graph (it is the min id reached so
       // far), so the self-join is total, and labels only ever decrease —
       // the shortcut is semantics-preserving and squares per-round reach,
       // giving O(log diameter) rounds.
-      val prop = cut(hop.as("a")
+      val prop = Exec.checkpoint(hop.as("a")
         .join(hop.as("b"), col("a.label") === col("b.node"))
         .select(col("a.node").as("node"), col("b.label").as("label")))
       hop.unpersist(false)
@@ -613,9 +592,8 @@ object DedupOps {
       s"connectedComponents did not converge within $maxIters iterations — " +
         "component diameter exceeds the cap; raise maxIters")
     edges.unpersist(false)
-    // the returned frame reads the final label checkpoint lazily — release
-    // it at the next between-query clearPinned, not never
-    Exec.trackTransient(labels)
+    // the returned frame reads the final label checkpoint lazily; the
+    // caller's clearPinned releases it
     labels
       .select(col("node").as("doc_id"), col("label").as("cluster_id"),
         (col("node") === col("label")).as("is_survivor"))
@@ -636,10 +614,8 @@ object DedupOps {
     * cluster_id = min node id of the component — union–find's
     * representative is remapped to the component min explicitly, so the
     * assignment is definitionally identical (pinned by the CC parity spec
-    * in DedupOpsSpec). Past the driver gate (or with a reliable
-    * checkpoint dir, i.e. a long-running cluster job that wants
-    * executor-loss resilience) the distributed pointer-jump loop runs
-    * unchanged.
+    * in DedupOpsSpec). Past the driver gate the distributed pointer-jump
+    * loop runs unchanged.
     */
   private def connectedComponentsDriver(spark: SparkSession,
       rows: Array[Row]): DataFrame = {
@@ -776,18 +752,16 @@ object DedupOps {
     // banding + hamming verification run over one representative per
     // normalized text; members re-expand at the end (within-group hamming
     // is 0 by identity, cross-group pairs inherit the rep hamming).
-    val members = docs
-      .select(col("doc_id"), TextOps.fingerprint(col("text")).as("fp"))
-      .persist().transform(Exec.trackPersisted)
+    val members = Exec.pin(docs
+      .select(col("doc_id"), TextOps.fingerprint(col("text")).as("fp")))
     val reps = members.groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
-    val sigs = docs
+    // both sides of the band self-join read this — cache so the corpus is
+    // tokenized + hashed once (tiny: two longs per doc)
+    val sigs = Exec.pin(docs
       .join(reps.select(col("doc_id")), Seq("doc_id"))
       .withColumn("toks", TextOps.tokens(col("text")))
       .withColumn("sig", expr("simhash61(toks)"))
-      .select(col("doc_id"), col("sig"))
-      // both sides of the band self-join read this — cache so the corpus is
-      // tokenized + hashed once (tiny: two longs per doc)
-      .persist().transform(Exec.trackPersisted)
+      .select(col("doc_id"), col("sig")))
     val banded = sigs.select(col("doc_id"), col("sig"),
       posexplode(expr(
         "transform(sequence(0, 3), b -> (shiftright(sig, b * 16) & 65535))"))
@@ -860,21 +834,18 @@ object DedupOps {
     */
   def editDistancePairs(docs: DataFrame, keyLen: Int = 64,
                         maxDist: Int = 4): DataFrame = {
-    val keyed = docs
+    val keyed = Exec.pin(docs
       .select(col("doc_id"), col("lang"),
-        rpad(substring(col("text"), 1, keyLen), keyLen, " ").as("key"))
-      .persist().transform(Exec.trackPersisted)
+        rpad(substring(col("text"), 1, keyLen), keyLen, " ").as("key")))
     // rep = min doc id per identical (lang, key) group; reps are globally
     // unique (a doc belongs to exactly one group)
-    val mem = keyed
+    val mem = Exec.pin(keyed
       .join(keyed.groupBy(col("lang"), col("key"))
         .agg(min(col("doc_id")).as("rep")), Seq("lang", "key"))
-      .select(col("rep"), col("doc_id"), col("lang"))
-      .persist().transform(Exec.trackPersisted)
-    val keys = keyed
+      .select(col("rep"), col("doc_id"), col("lang")))
+    val keys = Exec.pin(keyed
       .join(mem.filter(col("doc_id") === col("rep"))
-        .select(col("doc_id")), Seq("doc_id"), "left_semi")
-      .persist().transform(Exec.trackPersisted)
+        .select(col("doc_id")), Seq("doc_id"), "left_semi"))
     // Pass-Join segment layout: maxDist+1 contiguous segments covering the
     // key, longer segments first (64 = 13+13+13+13+12 at the defaults).
     // Static literal bounds ⇒ plain substring columns, fully codegen'd.
@@ -911,7 +882,7 @@ object DedupOps {
     // materialize the narrow pair list once: the count instruments the
     // candidate cardinality (the logged quadratic-drift gate) and the
     // verification join below re-reads the same materialization
-    val cand = Exec.trackTransient(candidates.localCheckpoint())
+    val cand = Exec.checkpoint(candidates)
     val nCand = cand.count()
     val nReps = keys.count()
     val log = org.slf4j.LoggerFactory.getLogger(getClass)
@@ -1023,12 +994,10 @@ object DedupOps {
                      mBits: Int = 1 << 20, k: Int = 3): DataFrame = {
     require(Integer.bitCount(mBits) == 1,
       "mBits must be a power of two (keeps bits_set/m IEEE-exact)")
-    val bits = Exec.trackTransient(
-      bloomPositions(corpus, mBits, k).select(col("bit")).distinct()
-        .localCheckpoint())
-    val judged = Exec.trackTransient(
-      bloomJudge(bits, bloomKeys(corpus), batch, mBits, k)
-        .localCheckpoint())
+    val bits = Exec.checkpoint(
+      bloomPositions(corpus, mBits, k).select(col("bit")).distinct())
+    val judged = Exec.checkpoint(
+      bloomJudge(bits, bloomKeys(corpus), batch, mBits, k))
     val stats = judged.agg(
       count(lit(1)).as("n_batch"),
       sum(when(col("pass"), 1L).otherwise(0L)).as("n_candidates"),
@@ -1122,7 +1091,7 @@ object DedupOps {
     graft.functions.RollingHash.register(docs.sparkSession)
     graft.functions.MinHashFunctions.register(docs.sparkSession)
     val nPart = docs.sparkSession.sparkContext.defaultParallelism
-    val perDoc = Exec.trackTransient(docs
+    val perDoc = Exec.checkpoint(docs
       .repartition(nPart, col("doc_id"))
       .select(col("doc_id"), col("text"),
         expr(s"""filter(transform(rolling_hashes(text, $L),
@@ -1137,8 +1106,7 @@ object DedupOps {
         size(col("chunks")).cast("long").as("nc"),
         length(col("text")).cast("long").as("bytes"),
         expr("array_max(transform(chunks, c -> length(c)))").as("maxlen"),
-        expr("transform(chunks, c -> hash61(c))").as("fps"))
-      .localCheckpoint())
+        expr("transform(chunks, c -> hash61(c))").as("fps")))
     val base = perDoc.agg(
       countDistinct(col("doc_id")).as("n_docs"),
       sum(col("nc")).as("n_chunks"),
@@ -1228,7 +1196,7 @@ object DedupOps {
       .select(col("doc_id"),
         posexplode(expr(s"rolling_hashes(text, $L)")).as(Seq("pos", "h")))
     // probe + coverage both read the batch windows — pin one pass
-    val batchWins = wins(batch).persist().transform(Exec.trackPersisted)
+    val batchWins = Exec.pin(wins(batch))
     // probe-set pushdown: a corpus hash the batch never produces cannot
     // change any batch window's coverage — drop it BEFORE the aggregate.
     // The set is often past AQE's runtime threshold yet small enough to
@@ -1236,8 +1204,8 @@ object DedupOps {
     // rolling_hashes emits one hash per character, past any static
     // estimate — so it is materialized (the set the join would compute
     // anyway) and broadcast on its measured size
-    val probeSet = Exec.broadcastIfKnownSmall(Exec.trackTransient(
-      batchWins.select(col("h")).distinct().localCheckpoint()))
+    val probeSet = Exec.broadcastIfKnownSmall(Exec.checkpoint(
+      batchWins.select(col("h")).distinct()))
     val index = wins(corpus)
       .join(probeSet, Seq("h"), "left_semi")
       .groupBy(col("h")).agg(count(lit(1)).as("n_corpus"))

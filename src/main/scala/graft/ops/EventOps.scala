@@ -231,10 +231,9 @@ object EventOps {
     // one narrow scan of the source: only funnel-stage events, only the
     // three columns the funnel reads — at 100 TB the stage filter is the
     // pushed-down predicate and everything downstream is per-user-sized
-    val narrow = events
+    val narrow = Exec.pin(events
       .filter(col("event_type").isin(stages: _*))
-      .select(col("user_id"), col("event_type"), col("ts_ns"))
-      .persist()
+      .select(col("user_id"), col("event_type"), col("ts_ns")))
     // each stage frame is read TWICE (the next stage's join + its own
     // count), and stage k's plan nests every earlier stage's — persist each
     // so the chain executes once per stage instead of O(K²) times. Session
@@ -251,7 +250,7 @@ object EventOps {
               .filter(col("ts_ns") > col(s"t$i"))
               .groupBy(col("user_id")).agg(min(col("ts_ns")).as(s"t${i + 1}"))
         }
-        reached.persist() :: acc
+        Exec.pin(reached) :: acc
     }.reverse
     perStage.zipWithIndex
       .map { case (df, i) => df.agg(count(lit(1)).as(s"n_stage${i + 1}")) }
@@ -335,25 +334,23 @@ object EventOps {
     * empirical share is one exact-integer division.
     */
   def markovStationary(events: DataFrame, iters: Int = 3): DataFrame = {
-    val trans = Exec.trackTransient(
+    val trans = Exec.checkpoint(
       markovTransitions(events)
-        .select(col("from_type"), col("to_type"), col("p"))
-        .localCheckpoint())
+        .select(col("from_type"), col("to_type"), col("p")))
     val states = trans.select(col("from_type").as("state")).distinct()
     val nStates = states.count()
     var pi = states.withColumn("pi", lit(1.0 / nStates))
     var prevPi: DataFrame = null
     for (_ <- 1 to iters) {
-      val next = trans
+      // eager: prior round's frame is dead once this lands
+      val next = Exec.checkpoint(trans
         .join(pi.withColumnRenamed("state", "from_type"), Seq("from_type"))
         .groupBy(col("to_type").as("state"))
-        .agg(sum(col("p") * col("pi")).as("pi"))
-        .localCheckpoint() // eager: prior round's frame is dead once this lands
+        .agg(sum(col("p") * col("pi")).as("pi")))
       if (prevPi != null) Exec.unpersistCheckpointed(prevPi)
       prevPi = next
       pi = next
     }
-    Exec.trackTransient(pi)
     val share = events.groupBy(col("event_type").as("state"))
       .agg(count(lit(1)).as("cnt"))
     val total = share.agg(sum(col("cnt")).as("total"))
@@ -468,9 +465,8 @@ object EventOps {
     * that sketch.
     */
   def stickiness(events: DataFrame): DataFrame = {
-    val daily = events
-      .select(to_date(col("ts")).as("day"), col("user_id")).distinct()
-      .persist()
+    val daily = Exec.pin(events
+      .select(to_date(col("ts")).as("day"), col("user_id")).distinct())
     val dau = daily.groupBy(col("day")).agg(count(lit(1)).as("dau"))
     val wau = dau.select(col("day")).as("d")
       .join(daily.as("r"),
@@ -510,7 +506,8 @@ object EventOps {
         |  THEN 256D * ln(256D / (256D - npres))
         |  ELSE (0.7213D / (1D + 1.079D / 256D)) * 65536D / (s + (256D - npres))
         |END""".stripMargin)
-    val daily = events
+    // read by the day spine and the window merge — one raw scan total
+    val daily = Exec.pin(events
       .select(to_date(col("ts")).as("day"),
         col("user_id").cast("string").as("key"))
       .withColumn("h", expr(
@@ -519,9 +516,7 @@ object EventOps {
       .withColumn("w", expr("h % 16777216"))
       .withColumn("rho", expr(
         "CASE WHEN w = 0 THEN 25 ELSE 25 - length(bin(w)) END"))
-      .groupBy(col("day"), col("reg")).agg(max(col("rho")).as("mr"))
-      // read by the day spine and the window merge — one raw scan total
-      .persist()
+      .groupBy(col("day"), col("reg")).agg(max(col("rho")).as("mr")))
     val days = daily.select(col("day")).distinct()
     val merged = days.as("d").join(daily.as("r"),
         col("r.day") <= col("d.day") &&
@@ -728,9 +723,8 @@ object EventOps {
   def quantileSketchRollup(events: DataFrame): DataFrame = {
     graft.functions.HdrSketch.register(events.sparkSession)
     val scale = graft.functions.HdrSketch.Scale
-    val byType = events.groupBy(col("event_type"))
-      .agg(expr("hdr_sketch(value)").as("sk"))
-      .persist() // the typed walk AND the global merge read it
+    val byType = Exec.pin(events.groupBy(col("event_type"))
+      .agg(expr("hdr_sketch(value)").as("sk"))) // the typed walk AND the global merge read it
     val typed = byType
       .select(col("event_type").as("scope"), explode(col("sk")).as("b"))
       .select(col("scope"), col("b.edge").as("edge"), col("b.cnt").as("c"))
@@ -841,8 +835,8 @@ object EventOps {
     def q4(c: Column): Column = floor(c * 10000 + 0.5) / 10000
     val weeks = events.select(col("user_id"),
       expr("(ts_ns div 86400000000000) div 7").as("wk"))
-    val firstWk = weeks.groupBy(col("user_id")).agg(min(col("wk")).as("w0"))
-      .persist() // read by the cohort sizes AND the activity join
+    // read by the cohort sizes AND the activity join
+    val firstWk = Exec.pin(weeks.groupBy(col("user_id")).agg(min(col("wk")).as("w0")))
     val cohorts = firstWk.groupBy(col("w0")).agg(count(lit(1)).as("cohort_size"))
     weeks.distinct()
       .join(firstWk, Seq("user_id"))
@@ -961,12 +955,11 @@ object EventOps {
     * raw event volume.
     */
   def forecastBacktest(events: DataFrame, folds: Int = 7): DataFrame = {
-    val daily = events
+    val daily = Exec.pin(events
       .select(col("event_type"), to_date(col("ts")).as("day"),
         floor(col("value") * 100 + 0.5).cast("long").as("vc"))
       .groupBy(col("event_type"), col("day"))
-      .agg(sum(col("vc")).as("cents"))
-      .persist()
+      .agg(sum(col("vc")).as("cents")))
     val maxDay = daily.agg(max(col("day")).as("dmax"))
     val targets = daily.crossJoin(broadcast(maxDay))
       .filter(col("day") > date_sub(col("dmax"), folds))
@@ -1158,9 +1151,9 @@ object EventOps {
     */
   def mgHeavyHitters(events: DataFrame, k: Int = 1024): DataFrame = {
     graft.functions.MisraGries.register(events.sparkSession)
-    val keyed = events.select(
+    val keyed = Exec.pin(events.select(
       concat(col("user_id").cast("string"), lit(":"), col("event_type"))
-        .as("key")).persist()
+        .as("key")))
     val cands = keyed.agg(expr(s"misra_gries(key, $k)").as("mg"))
       .select(explode(col("mg")).as("e"))
       .select(col("e.key").as("key"))
@@ -1199,7 +1192,8 @@ object EventOps {
     */
   def cupedAbTest(events: DataFrame): DataFrame = {
     val cutoffNs = 1705363200L * 1000000000L // 2024-01-16T00:00Z, mid-window
-    val users = events
+    // read twice (global moments + per-arm); see Exec.clearPinned
+    val users = Exec.pin(events
       .filter(col("event_type") === "purchase")
       .select(col("user_id"),
         expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents"),
@@ -1208,8 +1202,7 @@ object EventOps {
       .agg(
         sum(when(col("ts_ns") < cutoffNs, col("cents")).otherwise(0L)).as("x"),
         sum(when(col("ts_ns") >= cutoffNs, col("cents")).otherwise(0L)).as("y"))
-      .withColumn("arm", (col("user_id") % 2).cast("int"))
-      .persist() // read twice (global moments + per-arm); see Exec.clearPinned
+      .withColumn("arm", (col("user_id") % 2).cast("int")))
     val moments = users.agg(
       count(lit(1)).as("n"),
       sum(col("x")).as("sx"), sum(col("y")).as("sy"),

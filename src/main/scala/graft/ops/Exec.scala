@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
@@ -238,10 +238,9 @@ object Exec {
     * relative `row_number` order would otherwise be nondeterministic.
     */
   def globalRank(df: DataFrame, rankCol: String, sortCols: Column*): DataFrame = {
-    val parted = trackTransient(
+    val parted = checkpoint(
       df.repartitionByRange(sortCols: _*)
-        .withColumn("__gr_pid", spark_partition_id())
-        .localCheckpoint())
+        .withColumn("__gr_pid", spark_partition_id()))
     val offsets = parted.groupBy(col("__gr_pid"))
       .agg(count(lit(1)).as("__gr_cnt"))
       .withColumn("__gr_off",
@@ -257,94 +256,61 @@ object Exec {
       .drop("__gr_pid", "__gr_lrank", "__gr_off")
   }
 
-  /** Release every frame the operator families pinned for the last query:
-    * the cacheManager's `persist()` entries and every tracked
-    * `localCheckpoint` ([[trackTransient]], [[trackPersisted]]).
+  /** The releases of the frames each thread (each client of the session)
+    * pinned with [[pin]] or [[checkpoint]] since its last [[clearPinned]]. */
+  private val pinned = ThreadLocal.withInitial[java.util.ArrayList[() => Unit]](
+    () => new java.util.ArrayList[() => Unit]())
+
+  /** `df.persist()`, registered for release at the calling thread's next
+    * [[clearPinned]]. */
+  def pin[T](df: Dataset[T]): Dataset[T] = {
+    pinned.get.add(() => df.unpersist(false))
+    df.persist()
+  }
+
+  /** `df.localCheckpoint(eager)`, registered for release at the calling
+    * thread's next [[clearPinned]]. */
+  def checkpoint[T](df: Dataset[T], eager: Boolean = true): Dataset[T] = {
+    val cut = df.localCheckpoint(eager)
+    pinned.get.add(() => unpersistCheckpointed(cut))
+    cut
+  }
+
+  /** Release every frame the calling thread pinned ([[pin]],
+    * [[checkpoint]]) since its last call.
     *
-    * Operators cache or checkpoint intermediate frames (hashed shingle
-    * sets, signatures, deduplicated edge lists, token counts) that two or
-    * more downstream reads of the SAME query share — the pin is
-    * load-bearing there, and the returned DataFrame is lazy, so the
-    * operator itself has no point at which it could safely release it. In
-    * a session that runs MANY queries back to back (the bench, the verify
-    * dump, a notebook), those pins accumulate; call this after each query
-    * has run to drop them. No frame outlives it: the next query rebuilds
-    * what it reads from its inputs. Single-query applications never need
-    * it — executor storage is reclaimed when the session ends.
+    * Operators pin intermediate frames (hashed shingle sets, signatures,
+    * deduplicated edge lists, token counts) that two or more downstream
+    * reads of the SAME query share — the pin is load-bearing there, and the
+    * returned DataFrame is lazy, so the operator itself has no point at
+    * which it could safely release it. A client that runs many queries in
+    * one session (the bench, the verify dump, a notebook) calls this after
+    * each query has run; no frame outlives it, and the next query rebuilds
+    * what it reads from its inputs. The pins belong to the thread that
+    * made them, so clients that share a session on their own threads
+    * release only their own frames. A frame an operator already released
+    * inline is released again as a no-op. Single-query applications never
+    * need it — executor storage is reclaimed when the session ends.
     */
   def clearPinned(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sharedState.cacheManager.clearCache()
-    drainTransient()
-  }
-
-  /** Registry of per-call `localCheckpoint` frames that must outlive their
-    * operator's return (the returned DataFrame reads them lazily): PCA
-    * heads, BFS layer frames, CC label frames, deduplicated edge lists.
-    * They live outside the cacheManager, so without this registry a
-    * bench-mode session (clearPinned between queries, never releaseAll)
-    * pins their blocks for the application lifetime. Operators register
-    * the surviving frames here; [[clearPinned]] drains the registry AFTER
-    * the query has executed (the bench/verify loops clear between
-    * queries), so the blocks live exactly one query.
-    */
-  private val transientCheckpoints =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-  /** Register a `localCheckpoint`ed frame for release at the next
-    * [[clearPinned]]/[[releaseAll]]; returns the frame for chaining. */
-  def trackTransient(df: DataFrame): DataFrame = {
-    transientCheckpoints.add(df)
-    df
-  }
-
-  /** Registry of per-call `persist()` frames (r16 advisor): operators pin
-    * small reused intermediates whose returned DataFrame is lazy, so the
-    * operator itself has no safe unpersist point — in a long-lived session
-    * that never calls [[clearPinned]] the pins accumulate. Tracked frames
-    * are explicitly unpersisted at the next drain (cheap no-op when the
-    * cacheManager clear already dropped them). */
-  private val transientPersists =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-  /** Register a `persist()`ed frame for release at the next
-    * [[clearPinned]]/[[releaseAll]]; returns the frame for chaining. */
-  def trackPersisted(df: DataFrame): DataFrame = {
-    transientPersists.add(df)
-    df
-  }
-
-  private def drainTransient(): Unit = {
-    var df = transientCheckpoints.poll()
-    while (df != null) {
-      try unpersistCheckpointed(df)
-      catch { case _: Throwable => () } // a stopped session has no blocks
-      df = transientCheckpoints.poll()
+    val releases = pinned.get
+    releases.forEach { release =>
+      try release()
+      catch { case scala.util.control.NonFatal(_) => () } // a stopped session has no blocks
     }
-    var p = transientPersists.poll()
-    while (p != null) {
-      try p.unpersist(false)
-      catch { case _: Throwable => () }
-      p = transientPersists.poll()
-    }
+    releases.clear()
   }
 
   /** Drop the RDD blocks behind a `localCheckpoint`ed frame. After this the
     * frame is dead (localCheckpoint truncates lineage, so the blocks ARE the
     * data) — callers must also drop every reference to it.
     */
-  def unpersistCheckpointed(df: DataFrame): Unit =
+  def unpersistCheckpointed(df: Dataset[_]): Unit =
     df.queryExecution.logical match {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
       case _ => ()
     }
 
-  /** Full between-queries cleanup: [[clearPinned]], then every persisted
-    * RDD block in the session (the sweep also catches `localCheckpoint`
-    * blocks an operator left untracked). Verify and MicroBench call this
-    * before each query, the bench at each pass boundary.
-    */
-  def releaseAll(spark: org.apache.spark.sql.SparkSession): Unit = {
-    clearPinned(spark)
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-  }
+  /** [[clearPinned]], kept for the callers that still use this name. */
+  def releaseAll(spark: org.apache.spark.sql.SparkSession): Unit = clearPinned(spark)
 }

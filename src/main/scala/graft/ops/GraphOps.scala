@@ -48,7 +48,7 @@ object GraphOps {
     // VIEW over the checkpointed edges (two in-memory scans, no shuffle)
     // — checkpointing it too paid a second materialization for nothing
     // (measured +0.5–0.8 s standalone on lpa/modularity)
-    val e = Exec.trackTransient(edges.localCheckpoint())
+    val e = Exec.checkpoint(edges)
     val d = e.select(col("a").as("src"), col("b").as("dst"))
       .union(e.select(col("b").as("src"), col("a").as("dst")))
     (e, d)
@@ -77,8 +77,8 @@ object GraphOps {
           .otherwise(struct(col("b").as("src"), col("a").as("dst")))
           .as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-    (Exec.trackTransient(oriented.localCheckpoint()),
-      Exec.trackTransient(degrees.localCheckpoint()))
+    (Exec.checkpoint(oriented),
+      Exec.checkpoint(degrees))
   }
 
   /** The oriented-wedge triangle core shared by both queries: wedges at the
@@ -195,12 +195,11 @@ object GraphOps {
   private def buildDegreeFrames(edges: DataFrame,
       maxBroadcastRanks: Long): (DataFrame, DataFrame, Long) = {
     val (_, directed) = undirectedShared(edges)
-    val degs = Exec.trackTransient(
-      directed.groupBy(col("src")).agg(count(lit(1)).as("deg")).localCheckpoint())
+    val degs = Exec.checkpoint(
+      directed.groupBy(col("src")).agg(count(lit(1)).as("deg")))
     val n = degs.count()
-    val wd = Exec.trackTransient(directed.join(
-      if (n <= maxBroadcastRanks) broadcast(degs) else degs, Seq("src"))
-      .localCheckpoint())
+    val wd = Exec.checkpoint(directed.join(
+      if (n <= maxBroadcastRanks) broadcast(degs) else degs, Seq("src")))
     (wd, degs, n)
   }
 
@@ -442,7 +441,7 @@ object GraphOps {
         .groupBy(col("x")).agg(count(lit(1)).as("dg"))
     // the input checkpoint rides the between-query drain, so the
     // driver-path early return below cannot leak it
-    var e = Exec.trackTransient(edges.localCheckpoint())
+    var e = Exec.checkpoint(edges)
     // r17b: once the distributed distinct has produced the checkpointed
     // edge list it is bounded metadata (the orderPartEdges construction
     // caps the bucket side at nParts) — under the measured gate the peel
@@ -472,8 +471,7 @@ object GraphOps {
     // survivor count, same roundsRun — pinned by the kCore parity spec.
     val dirView = e.select(col("a").as("x"), col("b").as("nb"))
       .union(e.select(col("b").as("x"), col("a").as("nb")))
-    var deg = degreesOf(e).localCheckpoint(false)
-    Exec.trackTransient(deg)
+    var deg = Exec.checkpoint(degreesOf(e), eager = false)
     var prevSurvivors = -1L
     var converged = false
     var roundsRun = 0
@@ -505,12 +503,10 @@ object GraphOps {
         val dec = dirView
           .join(dy.withColumnRenamed("x", "nb"), Seq("nb"), "left_semi")
           .groupBy(col("x")).agg(count(lit(1)).as("ddg"))
-        val next = deg.filter(col("dg") >= k)
+        val next = Exec.checkpoint(deg.filter(col("dg") >= k)
           .join(dec, Seq("x"), "left")
           .select(col("x"),
-            (col("dg") - coalesce(col("ddg"), lit(0L))).as("dg"))
-          .localCheckpoint(false)
-        Exec.trackTransient(next)
+            (col("dg") - coalesce(col("ddg"), lit(0L))).as("dg")), eager = false)
         deg = next
         prevSurvivors = nSurvivors
         roundsRun += 1
@@ -653,7 +649,7 @@ object GraphOps {
     }
     // tracked for the between-query drain (r18, advisor item: the
     // driver-path early return used to leak this checkpoint)
-    var e = Exec.trackTransient(edges.localCheckpoint())
+    var e = Exec.checkpoint(edges)
     // r17b: under the measured gate the peel rounds run driver-resident —
     // support = |N(a) ∩ N(b)| over the live subgraph per round, the same
     // simultaneous sub-(k−2) drop, the same edge-count early exit, all
@@ -672,17 +668,15 @@ object GraphOps {
       // by the between-query drain, not mid-loop (lazy checkpoint
       // finalization can lag the first consuming job under AQE, and a
       // deferred finalization recomputes through the original lineage).
-      val kept = Exec.trackPersisted(supportOf(e)
+      val kept = Exec.pin(supportOf(e)
         .filter(col("sup") >= k - 2)
-        .select(col("a"), col("b")).persist())
+        .select(col("a"), col("b")))
       val nKept = kept.count()
       if (nKept == prevEdges) converged = true
       else {
         val keep =
           if (nKept <= maxBroadcastEdges) broadcast(kept) else kept
-        val filtered = e.join(keep, Seq("a", "b"), "left_semi")
-          .localCheckpoint(false)
-        Exec.trackTransient(filtered)
+        val filtered = Exec.checkpoint(e.join(keep, Seq("a", "b"), "left_semi"), eager = false)
         e = filtered
         prevEdges = nKept
         roundsRun += 1
@@ -861,10 +855,9 @@ object GraphOps {
     // eager — one blocking job materializes the whole chain instead of
     // one per round, each round's blocks still cache at its checkpoint
     // boundary. Every round rides the between-query drain.
-    var labels = Exec.trackTransient(
+    var labels = Exec.checkpoint(
       dir.select(col("src").as("node")).distinct()
-        .withColumn("label", col("node"))
-        .localCheckpoint(false))
+        .withColumn("label", col("node")), eager = false)
     for (r <- 1 to rounds) {
       val prev = labels
       val step = dir
@@ -875,7 +868,7 @@ object GraphOps {
         .groupBy(col("node"))
         .agg(min(struct((-col("c")).as("negc"), col("nl").as("l"))).as("m"))
         .select(col("node"), col("m.l").as("label"))
-      labels = Exec.trackTransient(step.localCheckpoint(r == rounds)) // eager last
+      labels = Exec.checkpoint(step, eager = r == rounds) // eager last
     }
     labels
   }
@@ -988,7 +981,7 @@ object GraphOps {
     * Nothing wider than two longs crosses any exchange.
     */
   def jaccardLinkPrediction(edges: DataFrame, k: Int = 25): DataFrame = {
-    val e = Exec.trackTransient(edges.localCheckpoint())
+    val e = Exec.checkpoint(edges)
     val dir = e.select(col("a").as("src"), col("b").as("dst"))
       .union(e.select(col("b").as("src"), col("a").as("dst")))
     val deg = dir.groupBy(col("src")).agg(count(lit(1)).as("deg"))
@@ -1029,7 +1022,7 @@ object GraphOps {
     * nothing wider than two longs and a term integer in any exchange.
     */
   def adamicAdarLinks(edges: DataFrame, k: Int = 25): DataFrame = {
-    val e = Exec.trackTransient(edges.localCheckpoint())
+    val e = Exec.checkpoint(edges)
     val dir = e.select(col("a").as("src"), col("b").as("dst"))
       .union(e.select(col("b").as("src"), col("a").as("dst")))
     val deg = dir.groupBy(col("src")).agg(count(lit(1)).as("deg"))
@@ -1100,31 +1093,29 @@ object GraphOps {
     // the saved visited re-unions (3 bounded rounds, |visited| ≈ 50k
     // rows at sf0.1) don't pay for the extra final materialization.
     val (_, dir) = undirectedShared(edges)
-    var visited = dir.select(col("src").as("node")).distinct()
+    var visited = Exec.checkpoint(dir.select(col("src").as("node")).distinct()
       .filter(col("node") % seedMod === 0)
-      .select(col("node").as("seed"), col("node"), lit(0).as("dist"))
-      .localCheckpoint()
+      .select(col("node").as("seed"), col("node"), lit(0).as("dist")))
     var frontier = visited.select(col("seed"), col("node"))
     var prevNext: DataFrame = null
     for (r <- 1 to rounds) {
-      val next = dir
+      val next = Exec.checkpoint(dir
         .join(frontier.withColumnRenamed("node", "src"), Seq("src"))
         .select(col("seed"), col("dst").as("node")).distinct()
         .join(visited.select(col("seed"), col("node")),
           Seq("seed", "node"), "left_anti")
-        .withColumn("dist", lit(r))
-        .localCheckpoint() // eager: materialized before the release below
+        .withColumn("dist", lit(r))) // eager: materialized before the release below
       // round r-1's layer frame was only alive as this round's frontier —
       // the expansion above just consumed it (the bfsLayers hygiene)
       if (prevNext != null) Exec.unpersistCheckpointed(prevNext)
       prevNext = next
       val prev = visited
-      visited = prev.union(next).localCheckpoint()
+      visited = Exec.checkpoint(prev.union(next))
       Exec.unpersistCheckpointed(prev)
       frontier = next.select(col("seed"), col("node"))
     }
     if (prevNext != null) Exec.unpersistCheckpointed(prevNext)
-    Exec.trackTransient(visited)
+    visited
   }
 
   def closenessCentrality(edges: DataFrame, seedMod: Long = 500L,
@@ -1210,15 +1201,14 @@ object GraphOps {
         .select(col("node"), (floor(est * 10000 + 0.5) / 10000).as(tag))
     }
     // r=0: a node's ball is itself — exactly one register per node
-    var regs = dir.select(col("src").as("node")).distinct()
+    var regs = Exec.checkpoint(dir.select(col("src").as("node")).distinct()
       .withColumn("h", expr("CAST(conv(substring(md5(concat('hb:', " +
         "CAST(node AS STRING))), 1, 8), 16, 10) AS BIGINT)"))
       .withColumn("reg", expr("h div 268435456"))
       .withColumn("mr", expr("CASE WHEN h % 268435456 = 0 THEN 29 " +
         "ELSE 29 - length(bin(h % 268435456)) END"))
       .select(col("node") +:
-        (0 until 16).map(k => when(col("reg") === k, col("mr")).as(s"m$k")): _*)
-      .localCheckpoint(false)
+        (0 until 16).map(k => when(col("reg") === k, col("mr")).as(s"m$k")): _*), eager = false)
     // the balls chain stays LAZY (r17): each b_r is a node-sized estimate
     // over round r's checkpointed register frame, so the chain is 3 cheap
     // hash joins materialized ONCE by the final sort — eager per-round
@@ -1231,19 +1221,16 @@ object GraphOps {
     // the whole round chain in ONE job, with each round's blocks cached
     // at the checkpoint boundary exactly as before (plan depth per round
     // is still one join + one aggregate over a LogicalRDD leaf).
-    Exec.trackTransient(regs)
     var balls = estimate(regs, "b0")
     for (r <- 1 to rounds) {
       // union-with-own before the per-node max: the ball is monotone
-      val next = dir
+      val next = Exec.checkpoint(dir
         .join(regs.withColumnRenamed("node", "src"), Seq("src"))
         .select(col("dst").as("node") +: mCols.map(col): _*)
         .unionByName(regs)
         .groupBy(col("node"))
         .agg(max(col(mCols.head)).as(mCols.head),
-          mCols.tail.map(c => max(col(c)).as(c)): _*)
-        .localCheckpoint(false)
-      Exec.trackTransient(next)
+          mCols.tail.map(c => max(col(c)).as(c)): _*), eager = false)
       balls = balls.join(estimate(next, s"b$r"), Seq("node"))
       regs = next
     }
@@ -1413,16 +1400,14 @@ object GraphOps {
     def authStep(h: DataFrame): DataFrame = {
       val raw = e.join(h, Seq("u")).groupBy(col("v")).agg(sum(col("h")).as("raw"))
       val s = raw.agg(sum(col("raw")).as("s"))
-      Exec.trackTransient(raw.crossJoin(broadcast(s))
-        .select(col("v"), q6(col("raw") / col("s")).as("a"))
-        .localCheckpoint(false))
+      Exec.checkpoint(raw.crossJoin(broadcast(s))
+        .select(col("v"), q6(col("raw") / col("s")).as("a")), eager = false)
     }
     def hubStep(a: DataFrame): DataFrame = {
       val raw = e.join(a, Seq("v")).groupBy(col("u")).agg(sum(col("a")).as("raw"))
       val s = raw.agg(sum(col("raw")).as("s"))
-      Exec.trackTransient(raw.crossJoin(broadcast(s))
-        .select(col("u"), q6(col("raw") / col("s")).as("h"))
-        .localCheckpoint(false))
+      Exec.checkpoint(raw.crossJoin(broadcast(s))
+        .select(col("u"), q6(col("raw") / col("s")).as("h")), eager = false)
     }
     val a1 = authStep(h0)
     val h1 = hubStep(a1)
@@ -1537,16 +1522,15 @@ object GraphOps {
     // its checkpoint boundary and is reused by the anti-joins and the
     // backward pass from those cached blocks.
     def visUpTo(k: Int, levels: => DataFrame): DataFrame =
-      if (k == 0) l0 else Exec.trackTransient(levels.localCheckpoint(false))
+      if (k == 0) l0 else Exec.checkpoint(levels, eager = false)
     // forward: exact shortest-path counts per level (anti-join against the
     // visited union keeps only first-reached = shortest)
     def expand(frontier: DataFrame, visited: DataFrame): DataFrame =
-      Exec.trackTransient(dir
+      Exec.checkpoint(dir
         .join(frontier.withColumnRenamed("node", "src"), Seq("src"))
         .groupBy(col("seed"), col("dst").as("node"))
         .agg(sum(col("sigma")).as("sigma"))
-        .join(visited, Seq("seed", "node"), "left_anti")
-        .localCheckpoint(false))
+        .join(visited, Seq("seed", "node"), "left_anti"), eager = false)
     val l0s = l0.withColumn("sigma", lit(1L))
     val l1 = expand(l0s, visUpTo(0, null))
     val l2 = expand(l1, visUpTo(1,
@@ -1560,12 +1544,11 @@ object GraphOps {
         .join(dir.select(col("src").as("v"), col("dst").as("w")), Seq("v"))
         .join(lw.select(col("seed"), col("node").as("w"),
           col("sigma").as("sw"), col("delta").as("dw")), Seq("seed", "w"))
-    val d2 = Exec.trackTransient(succJoin(l2,
+    val d2 = Exec.checkpoint(succJoin(l2,
         l3.withColumn("delta", lit(0.0)))
       .groupBy(col("seed"), col("v").as("node"))
       .agg(q6(sum(col("sv").cast("double") / col("sw").cast("double")
-        * (lit(1.0) + col("dw")))).as("delta"))
-      .localCheckpoint(false))
+        * (lit(1.0) + col("dw")))).as("delta")), eager = false)
     // L2 nodes with no L3 successor carry δ=0 into the δ1 pass
     val l2d = l2.join(d2, Seq("seed", "node"), "left_outer")
       .select(col("seed"), col("node"), col("sigma"),
@@ -1707,10 +1690,10 @@ object GraphOps {
     // visited-union checkpoint ≈ 4 blocking jobs per round). Layer frames
     // are identical to the old ones; empty tail rounds are skipped — their
     // layers were empty unions, contributing nothing to the census.
-    val allNodes = Exec.trackTransient(
-      dir.select(col("src").as("node")).distinct().localCheckpoint(false))
-    val l0 = Exec.trackTransient(allNodes.filter(col("node") % seedMod === 0)
-      .withColumn("dist", lit(0)).localCheckpoint(false))
+    val allNodes = Exec.checkpoint(
+      dir.select(col("src").as("node")).distinct(), eager = false)
+    val l0 = Exec.checkpoint(allNodes.filter(col("node") % seedMod === 0)
+      .withColumn("dist", lit(0)), eager = false)
     val layers = scala.collection.mutable.ListBuffer[DataFrame](l0)
     var frontierCount = l0.count()
     for (r <- 1 to rounds) {
@@ -1720,12 +1703,11 @@ object GraphOps {
           if (frontierCount <= maxBroadcastFrontier) broadcast(frontier)
           else frontier
         val visitedView = layers.map(_.select(col("node"))).reduce(_ union _)
-        val next = Exec.trackTransient(dir
+        val next = Exec.checkpoint(dir
           .join(f.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
           .select(col("dst").as("node")).distinct()
           .join(visitedView, Seq("node"), "left_anti")
-          .withColumn("dist", lit(r))
-          .localCheckpoint(false))
+          .withColumn("dist", lit(r)), eager = false)
         frontierCount = next.count()
         layers += next
       }
@@ -1878,7 +1860,7 @@ object GraphOps {
     val (_, d) = undirectedShared(edges)
     val dir = d.select(col("src").as("x"), col("dst").as("nb"))
     // materialized once; every h-index round after reads only this
-    val adj = Exec.trackTransient(corenessAdjacency(dir).localCheckpoint())
+    val adj = Exec.checkpoint(corenessAdjacency(dir))
     def hindexOf(vals: String): String =
       s"""aggregate(
          |  zip_with(reverse(array_sort($vals)),
@@ -1915,10 +1897,9 @@ object GraphOps {
       // persisted delta, whose cached plan would nest every earlier
       // round's (the driver's live heap then grew each round, and a 4 GB
       // heap ran out at round 12 of 20 at sf0.01)
-      var h = adj
-        .select(col("x"), size(col("nbs")).cast("long").as("hv"), lit(true).as("chg"))
-        .localCheckpoint(false)
-      Exec.trackTransient(h)
+      var h = Exec.checkpoint(adj
+        .select(col("x"), size(col("nbs")).cast("long").as("hv"), lit(true).as("chg")),
+        eager = false)
       // round 0: every node is "changed" (full first recompute, as before)
       var changed = h.select(col("x"))
       var converged = false
@@ -1938,25 +1919,23 @@ object GraphOps {
           .groupBy(col("x"))
           .agg(collect_list(col("nv")).as("nvs"))
           .select(col("x"), expr(hindexOf("nvs")).as("nhv"))
-        val delta = Exec.trackPersisted(rec.join(h, Seq("x"))
+        val delta = Exec.pin(rec.join(h, Seq("x"))
           .filter(col("nhv") =!= col("hv"))
-          .select(col("x"), col("nhv"))
-          .persist())
+          .select(col("x"), col("nhv")))
         val nChanged = delta.count() // the round's ONE blocking job
         // superseded h/delta frames are NOT released mid-loop: lazy
         // checkpoint finalization can lag the first consuming job (AQE),
         // and a deferred finalization recomputes through the ORIGINAL
         // lineage — every ancestor must stay alive until the query's
-        // final action. The between-query drain (trackTransient /
-        // trackPersisted above) owns the release; per-round state is a
+        // final action. The caller's clearPinned owns the release
+        // (Exec.pin / Exec.checkpoint above); per-round state is a
         // narrow |changed|-row frame, so the retained footprint is small.
         if (nChanged == 0L) converged = true
         else {
-          val nh = h.join(delta.select(col("x")), Seq("x"), "left_anti")
+          val nh = Exec.checkpoint(h.join(delta.select(col("x")), Seq("x"), "left_anti")
             .select(col("x"), col("hv"), lit(false).as("chg"))
-            .union(delta.select(col("x"), col("nhv").as("hv"), lit(true).as("chg")))
-            .localCheckpoint(false)
-          Exec.trackTransient(nh)
+            .union(delta.select(col("x"), col("nhv").as("hv"), lit(true).as("chg"))),
+            eager = false)
           h = nh
           changed = h.filter(col("chg")).select(col("x"))
           round += 1
@@ -2045,11 +2024,10 @@ object GraphOps {
   private[graft] def randomWalkCensusEdges(und: DataFrame, walkLen: Int): DataFrame = {
     val (_, d0) = undirectedShared(und)
     val dir = d0.select(col("src").as("x"), col("dst").as("nb"))
-    val adj = Exec.trackTransient(
+    val adj = Exec.checkpoint(
       dir.groupBy(col("x"))
         .agg(sort_array(collect_list(col("nb"))).as("nbs"))
-        .coalesce(8)
-        .localCheckpoint())
+        .coalesce(8))
     // r17b: under the driver gate the walks run driver-resident — the hop
     // hash is pure 64-bit integer arithmetic (Knuth multiply + xor-shift
     // over pre-reduced ids), replicated literally over the SAME sorted
@@ -2155,7 +2133,7 @@ object GraphOps {
     * distinct upstream (e.g. [[directedCyclicEdges]]) runs once per query;
     * tracked for release at the next [[Exec.clearPinned]]. */
   private[graft] def directedShared(edges: DataFrame): DataFrame =
-    Exec.trackTransient(edges.localCheckpoint())
+    Exec.checkpoint(edges)
 
   /** Directed TRIAD census over [[directedCyclicEdges]] — the motif
     * profile that separates hierarchy from feedback in a directed graph:
@@ -2227,11 +2205,9 @@ object GraphOps {
     // backward step already ends in a count/checksum collect (the fixpoint
     // detector), so that action doubles as the checkpoint materialization
     // and each step costs ONE blocking job instead of two.
-    var edges = edges0.localCheckpoint(false)
-    Exec.trackTransient(edges)
-    var remaining = edges.select(col("src").as("id"))
-      .union(edges.select(col("dst").as("id"))).distinct().localCheckpoint(false)
-    Exec.trackTransient(remaining)
+    var edges = Exec.checkpoint(edges0, eager = false)
+    var remaining = Exec.checkpoint(edges.select(col("src").as("id"))
+      .union(edges.select(col("dst").as("id"))).distinct(), eager = false)
     def gate(df: DataFrame, nRows: Long): DataFrame =
       if (nRows <= maxBroadcastLabels) broadcast(df) else df
     val parts = scala.collection.mutable.ListBuffer.empty[DataFrame]
@@ -2249,28 +2225,22 @@ object GraphOps {
       // (terminates unconditionally: every pass strictly shrinks remCount)
       var trimming = true
       while (trimming && remCount > 0) {
-        val core = edges.select(col("src").as("id")).distinct()
+        val core = Exec.checkpoint(edges.select(col("src").as("id")).distinct()
           .join(edges.select(col("dst").as("id")).distinct(),
-            Seq("id"), "left_semi")
-          .localCheckpoint(false)
-        Exec.trackTransient(core)
+            Seq("id"), "left_semi"), eager = false)
         val coreCount = core.count()
         if (coreCount == remCount) trimming = false
         else {
-          val singles = remaining
+          val singles = Exec.checkpoint(remaining
             .join(gate(core, coreCount), Seq("id"), "left_anti")
-            .select(col("id"), col("id").as("lbl"))
-            .localCheckpoint(false)
-          Exec.trackTransient(singles)
+            .select(col("id"), col("id").as("lbl")), eager = false)
           parts += singles
           remaining = core
-          edges = edges
+          edges = Exec.checkpoint(edges
             .join(gate(core.withColumnRenamed("id", "src"), coreCount),
               Seq("src"), "left_semi")
             .join(gate(core.withColumnRenamed("id", "dst"), coreCount),
-              Seq("dst"), "left_semi")
-            .localCheckpoint(false)
-          Exec.trackTransient(edges)
+              Seq("dst"), "left_semi"), eager = false)
           remCount = coreCount
         }
       }
@@ -2278,8 +2248,7 @@ object GraphOps {
         // everything drained in the trim — no FW-BW round needed
       } else {
       // (1) forward min-label fixpoint: lbl(v) <- min over ancestors
-      var f = remaining.select(col("id"), col("id").as("lbl")).localCheckpoint(false)
-      Exec.trackTransient(f)
+      var f = Exec.checkpoint(remaining.select(col("id"), col("id").as("lbl")), eager = false)
       var checksum = f.agg(sum(col("lbl"))).collect()(0).getLong(0)
       var inner = 0
       var converged = false
@@ -2287,13 +2256,11 @@ object GraphOps {
         if (inner >= maxInner)
           throw new IllegalStateException(
             s"sccAssign: forward pass not converged after $maxInner steps")
-        val nf = edges.join(gate(f.withColumnRenamed("id", "src"), remCount),
+        val nf = Exec.checkpoint(edges.join(gate(f.withColumnRenamed("id", "src"), remCount),
             Seq("src"))
           .select(col("dst").as("id"), col("lbl"))
           .union(f)
-          .groupBy(col("id")).agg(min(col("lbl")).as("lbl"))
-          .localCheckpoint(false)
-        Exec.trackTransient(nf)
+          .groupBy(col("id")).agg(min(col("lbl")).as("lbl")), eager = false)
         val ncs = nf.agg(sum(col("lbl"))).collect()(0).getLong(0)
         // min-label is monotone non-increasing, so the exact-long checksum
         // is stationary iff no label moved
@@ -2301,17 +2268,14 @@ object GraphOps {
         else { f = nf; checksum = ncs; inner += 1 }
       }
       // (2) backward mark within each color class, all pivots at once
-      val eLbl = edges
+      val eLbl = Exec.checkpoint(edges
         .join(gate(f.select(col("id").as("src"), col("lbl").as("slbl")),
           remCount), Seq("src"))
         .join(gate(f.select(col("id").as("dst"), col("lbl").as("dlbl")),
           remCount), Seq("dst"))
         .filter(col("slbl") === col("dlbl"))
-        .select(col("src"), col("dst"), col("slbl").as("lbl"))
-        .localCheckpoint(false)
-      Exec.trackTransient(eLbl)
-      var marked = f.filter(col("id") === col("lbl")).localCheckpoint(false)
-      Exec.trackTransient(marked)
+        .select(col("src"), col("dst"), col("slbl").as("lbl")), eager = false)
+      var marked = Exec.checkpoint(f.filter(col("id") === col("lbl")), eager = false)
       var mCount = marked.count()
       inner = 0
       converged = false
@@ -2319,14 +2283,12 @@ object GraphOps {
         if (inner >= maxInner)
           throw new IllegalStateException(
             s"sccAssign: backward pass not converged after $maxInner steps")
-        val nm = eLbl.join(gate(marked.select(col("id").as("dst"),
+        val nm = Exec.checkpoint(eLbl.join(gate(marked.select(col("id").as("dst"),
               col("lbl").as("mlbl")), mCount), Seq("dst"))
           .filter(col("lbl") === col("mlbl"))
           .select(col("src").as("id"), col("lbl"))
           .union(marked)
-          .distinct()
-          .localCheckpoint(false)
-        Exec.trackTransient(nm)
+          .distinct(), eager = false)
         val nmCount = nm.count()
         if (nmCount == mCount) converged = true
         else { marked = nm; mCount = nmCount; inner += 1 }
@@ -2334,14 +2296,11 @@ object GraphOps {
       parts += marked // (id, lbl) — lbl IS the scc id (the pivot)
       // (3) peel: marked nodes and their incident edges leave the problem
       val mGate = gate(marked.select(col("id")), mCount)
-      remaining = remaining
-        .join(mGate, Seq("id"), "left_anti").localCheckpoint(false)
-      Exec.trackTransient(remaining)
-      edges = edges
+      remaining = Exec.checkpoint(remaining
+        .join(mGate, Seq("id"), "left_anti"), eager = false)
+      edges = Exec.checkpoint(edges
         .join(mGate.withColumnRenamed("id", "src"), Seq("src"), "left_anti")
-        .join(mGate.withColumnRenamed("id", "dst"), Seq("dst"), "left_anti")
-        .localCheckpoint(false)
-      Exec.trackTransient(edges)
+        .join(mGate.withColumnRenamed("id", "dst"), Seq("dst"), "left_anti"), eager = false)
       remCount = remaining.count()
       outer += 1
       }

@@ -905,13 +905,12 @@ object MultimodalOps {
   def imageDHashPairs(docs: DataFrame, maxHamming: Int = 4): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val hashes = docs.select(col("doc_id")).as[Long]
+    val hashes = Exec.pin(docs.select(col("doc_id")).as[Long]
       .mapPartitions(_.map { d =>
         val (h1, h2) = dHashHalves(encodeThumbBmp(d))
         (d, h1, h2)
       })
-      .toDF("doc_id", "h1", "h2")
-      .persist()
+      .toDF("doc_id", "h1", "h2"))
     // five DISJOINT bit slices of ≥11 bits each (mixing h1's top 9 bits
     // with 2 of h2's — a contiguous split would leave one 8-bit band
     // whose 256 keys bucket ~N/256 docs each and go quadratic at sf1:
@@ -1189,13 +1188,12 @@ object MultimodalOps {
   def imagePHashPairs(docs: DataFrame, maxHamming: Int = 4): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val hashes = docs.select(col("doc_id")).as[Long]
+    val hashes = Exec.pin(docs.select(col("doc_id")).as[Long]
       .mapPartitions(_.map { d =>
         val (h1, h2) = pHashHalves(encodeThumbBmp(d))
         (d, h1, h2)
       })
-      .toDF("doc_id", "h1", "h2")
-      .persist()
+      .toDF("doc_id", "h1", "h2"))
     // five DISJOINT slices: h1 bits 0–12 / 13–25 / 26–31 ⊕ h2 bits 0–6,
     // then h2 bits 7–19 / 20–31 (13·4 + 12 = 64); disjointness preserves
     // the pigeonhole bound, ≥12 bits per band keeps buckets thin
@@ -1239,14 +1237,13 @@ object MultimodalOps {
   def imageAHashPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val hashes = docs.select(col("doc_id")).as[Long]
+    // both band sides read this — pin so encode+decode runs once per doc
+    val hashes = Exec.pin(docs.select(col("doc_id")).as[Long]
       .mapPartitions(_.map { d =>
         val (h1, h2) = aHashHalves(encodeThumbBmp(d))
         (d, h1, h2)
       })
-      .toDF("doc_id", "h1", "h2")
-      // both band sides read this — pin so encode+decode runs once per doc
-      .persist()
+      .toDF("doc_id", "h1", "h2"))
     val banded = hashes.select(col("doc_id"), col("h1"), col("h2"),
       posexplode(expr(
         "array(h1 % 65536, h1 div 65536, h2 % 65536, h2 div 65536)"))

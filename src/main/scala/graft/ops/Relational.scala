@@ -840,16 +840,15 @@ object Relational {
   def rfmSegments(orders: DataFrame, useApprox: Boolean = false,
                   accuracy: Int = 10000): DataFrame = {
     val maxDate = orders.agg(max(col("o_orderdate")).as("max_date"))
-    val perCust = orders
+    // both the threshold aggregate and the scoring scan read this — pin
+    // it so the per-customer shuffle runs once, not twice
+    val perCust = Exec.pin(orders
       .groupBy(col("o_custkey"))
       .agg(max(col("o_orderdate")).as("last_order"),
         count(lit(1)).as("frequency"),
         sum(round(col("o_totalprice") * 100).cast("long")).as("cents"))
       .crossJoin(broadcast(maxDate))
-      .withColumn("recency", datediff(col("max_date"), col("last_order")))
-      // both the threshold aggregate and the scoring scan read this — pin
-      // it so the per-customer shuffle runs once, not twice
-      .persist()
+      .withColumn("recency", datediff(col("max_date"), col("last_order"))))
     def pct(c: String): Column =
       if (useApprox)
         expr(s"cast(approx_percentile($c, array(0.25D, 0.5D, 0.75D), $accuracy)" +
@@ -1159,10 +1158,9 @@ object Relational {
       .groupBy(col("price"), col("qty")).agg(min(col("p_partkey")).as("part_id"))
     // range layout on price: partition i's prices all precede i+1's, so the
     // cross-partition carry is a ≤ shuffle.partitions-row prefix-max frame
-    val parted = Exec.trackTransient(
+    val parted = Exec.checkpoint(
       rep.repartitionByRange(col("price"))
-        .withColumn("pid", spark_partition_id())
-        .localCheckpoint())
+        .withColumn("pid", spark_partition_id()))
     val prefix = parted.groupBy(col("pid")).agg(max(col("qty")).as("pm"))
       // bounded: ≤ #partitions rows (one per range partition)
       .withColumn("prevpm", max(col("pm")).over(Window.orderBy(col("pid"))
@@ -1812,10 +1810,10 @@ object Relational {
   def topSupplier(li: DataFrame, supplier: DataFrame,
                   qStart: String = "1996-01-01",
                   qEnd: String = "1996-04-01"): DataFrame = {
-    val rev = li.filter(col("l_shipdate") >= qStart && col("l_shipdate") < qEnd)
+    // read by the scalar max AND the join-back: one fact scan
+    val rev = Exec.pin(li.filter(col("l_shipdate") >= qStart && col("l_shipdate") < qEnd)
       .groupBy(col("l_suppkey"))
-      .agg(sum(floor(revenue * 100 + 0.5).cast("long")).as("cents"))
-      .persist() // read by the scalar max AND the join-back: one fact scan
+      .agg(sum(floor(revenue * 100 + 0.5).cast("long")).as("cents")))
     val top = rev.agg(max(col("cents")).as("max_cents"))
     rev.crossJoin(broadcast(top))
       .filter(col("cents") === col("max_cents"))

@@ -33,10 +33,9 @@ object TextOps {
     val srcCol =
       if (docs.columns.contains("source")) col("source")
       else lit("_").as("source")
-    Exec.trackTransient(docs
+    Exec.checkpoint(docs
       .select(srcCol, explode(tokens(col("text"))).as("token"))
-      .groupBy(col("source"), col("token")).agg(count(lit(1)).as("n"))
-      .localCheckpoint())
+      .groupBy(col("source"), col("token")).agg(count(lit(1)).as("n")))
   }
 
   /** Global (token, n) counts as an exact rollup of [[sourceTokenCounts]]. */
@@ -87,12 +86,11 @@ object TextOps {
     def q4(c: Column): Column = floor(c * 10000 + 0.5) / 10000
     // one fact scan; persisted because the total and the shares both read
     // it (released under the Exec.clearPinned contract like its siblings)
-    val bySrc = docs
+    val bySrc = Exec.pin(docs
       .withColumn("n_tokens", size(tokens(col("text"))))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_tokens").cast("long")).as("n_tokens"))
-      .persist()
+        sum(col("n_tokens").cast("long")).as("n_tokens")))
     val total = bySrc.agg(sum(col("n_tokens")).as("total"))
     val shared = bySrc.crossJoin(broadcast(total))
       .withColumn("p",
@@ -135,8 +133,7 @@ object TextOps {
     // the token counts are a vocabulary-sized rollup of the per-source
     // counts (exact integers); the persist is load-bearing for the two
     // downstream reads and released under the Exec.clearPinned contract.
-    val counts = Exec.cachedScan(globalTokenCounts(docs)
-      .persist().transform(Exec.trackPersisted))
+    val counts = Exec.cachedScan(Exec.pin(globalTokenCounts(docs)))
     val total = counts.agg(sum(col("n")).as("total"))
     counts.crossJoin(broadcast(total))
       .filter(col("n") > col("total") * supportPct / 100.0)
@@ -403,11 +400,10 @@ object TextOps {
     val base = docs.withColumn("toks", tokens(col("text")))
     // pinned: read by the gate count, then by the pass-2 join — and when
     // the boundary cut kicks in, by its probe and filter too
-    val counts = base
+    val counts = Exec.pin(base
       .select(explode(expr(s"shingle_hashes(toks, $n)")).as("h"))
       .groupBy(col("h")).agg(count(lit(1)).as("n_docs"))
-      .filter(col("n_docs") >= minDocs)
-      .persist()
+      .filter(col("n_docs") >= minDocs))
     // ADAPTIVE boundary cut: below the gate the raw set broadcasts as-is
     // (the cut would be pure overhead); past it, cut at c_k instead of
     // degrading to a corpus-wide string shuffle
@@ -422,11 +418,10 @@ object TextOps {
         // materialized: the cut is ~k rows plus ties, but its static
         // estimate is that of all of `counts`, which would plan pass 2 as
         // a shuffle of the corpus strings
-        Exec.broadcastIfKnownSmall(Exec.trackTransient(
+        Exec.broadcastIfKnownSmall(Exec.checkpoint(
           counts.crossJoin(broadcast(ck))
             .filter(col("n_docs") >= col("ck"))
-            .select(col("h"), col("n_docs"))
-            .localCheckpoint()))
+            .select(col("h"), col("n_docs"))))
       }
     // pass 2 re-derives string shingles row-at-a-time (transient, CPU-only —
     // they are broadcast-filtered against the qualifier set BEFORE the first
@@ -585,10 +580,9 @@ object TextOps {
     * scale (the unigram model stays distributed; nothing collects).
     */
   def unigramSurprisal(docs: DataFrame): DataFrame = {
-    val toks = docs
+    val toks = Exec.pin(docs
       .withColumn("toks", tokens(col("text")))
-      .select(col("doc_id"), explode(col("toks")).as("token"))
-      .persist()
+      .select(col("doc_id"), explode(col("toks")).as("token")))
     val model = toks.groupBy(col("token")).agg(count(lit(1)).as("cnt"))
     val total = toks.agg(count(lit(1)).as("n_total"))
     toks.join(model, Seq("token"))
@@ -611,10 +605,9 @@ object TextOps {
     */
   def ngramNovelty(docs: DataFrame, n: Int = 5): DataFrame = {
     graft.functions.MinHashFunctions.register(docs.sparkSession)
-    val grams = docs
+    val grams = Exec.pin(docs
       .withColumn("toks", tokens(col("text")))
-      .select(col("doc_id"), explode(expr(s"shingle_hashes(toks, $n)")).as("h"))
-      .persist()
+      .select(col("doc_id"), explode(expr(s"shingle_hashes(toks, $n)")).as("h")))
     val firstSeen = grams.groupBy(col("h")).agg(min(col("doc_id")).as("first_doc"))
     grams.join(firstSeen, Seq("h"))
       .groupBy(col("doc_id"))
@@ -635,14 +628,13 @@ object TextOps {
     * narrow, and the model stays distributed at corpus scale.
     */
   def bigramSurprisal(docs: DataFrame): DataFrame = {
-    val bi = docs
+    val bi = Exec.pin(docs
       .withColumn("toks", tokens(col("text")))
       .filter(size(col("toks")) >= 2)
       .select(col("doc_id"), explode(expr(
         """transform(sequence(0, size(toks) - 2),
           |  i -> struct(toks[i] AS a, toks[i + 1] AS b))""".stripMargin)).as("bg"))
-      .select(col("doc_id"), col("bg.a").as("a"), col("bg.b").as("b"))
-      .persist()
+      .select(col("doc_id"), col("bg.a").as("a"), col("bg.b").as("b")))
     val prefix = bi.groupBy(col("a")).agg(count(lit(1)).as("ca"))
     val pairs = bi.groupBy(col("a"), col("b")).agg(count(lit(1)).as("cab"))
     bi.join(pairs, Seq("a", "b"))
@@ -762,12 +754,11 @@ object TextOps {
       s"CAST(conv(substring(md5(tok), 1, 8), 16, 10) AS BIGINT) % $dims")
     // one corpus scan; the persist is load-bearing (four downstream reads)
     // and released under the Exec.clearPinned contract like its siblings
-    val db = docs
+    val db = Exec.pin(docs
       .select(col("doc_id"), col("lang"),
         explode(tokens(col("text"))).as("tok"))
       .groupBy(col("doc_id"), col("lang"), bucket.as("b"))
-      .agg(count(lit(1)).as("n"))
-      .persist()
+      .agg(count(lit(1)).as("n")))
     // r18 (guide §6 — one pass instead of three): the raw-LM counts, the
     // target-LM counts, and both smoothing totals are all rollups of the
     // SAME (bucket, lang) grain — ONE groupBy(b) with a conditional sum
@@ -777,10 +768,9 @@ object TextOps {
     // the old filtered sum (0 where the old left join produced NULL, which
     // the +1 smoothing already coalesced to 0); summing the per-bucket
     // longs reproduces both totals exactly.
-    val byBucket = db.groupBy(col("b")).agg(
+    val byBucket = Exec.pin(db.groupBy(col("b")).agg(
       sum(col("n")).as("cr"),
-      sum(when(col("lang") === targetLang, col("n")).otherwise(0L)).as("ct"))
-      .persist().transform(Exec.trackPersisted)
+      sum(when(col("lang") === targetLang, col("n")).otherwise(0L)).as("ct")))
     val totals = byBucket.agg(
       sum(col("ct")).as("t_total"), sum(col("cr")).as("r_total"))
     val lr = byBucket
@@ -827,14 +817,13 @@ object TextOps {
     * fit in a broadcast at 100 TB.
     */
   def knPerplexity(docs: DataFrame, delta: Double = 0.75): DataFrame = {
-    val bi = docs
+    val bi = Exec.pin(docs
       .withColumn("toks", tokens(col("text")))
       .filter(size(col("toks")) >= 2)
       .select(col("doc_id"), explode(expr(
         """transform(sequence(0, size(toks) - 2),
           |  i -> struct(toks[i] AS a, toks[i + 1] AS b))""".stripMargin)).as("p"))
-      .select(col("doc_id"), col("p.a").as("a"), col("p.b").as("b"))
-      .persist()
+      .select(col("doc_id"), col("p.a").as("a"), col("p.b").as("b")))
     val cab = bi.groupBy(col("a"), col("b")).agg(count(lit(1)).as("cab"))
     val ctx = cab.groupBy(col("a"))
       .agg(sum(col("cab")).as("ca"), count(lit(1)).as("n1fwd"))
@@ -883,14 +872,12 @@ object TextOps {
       .filter(col("a") =!= col("b"))
     val und = bg.select(col("a").as("src"), col("b").as("dst"))
       .union(bg.select(col("b").as("src"), col("a").as("dst")))
-    val wedge = Exec.trackTransient(
-      und.groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
-        .localCheckpoint())
+    val wedge = Exec.checkpoint(
+      und.groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w")))
     // read by the degree join, the vocabulary count and the rank rounds
-    val wdeg = wedge.groupBy(col("src")).agg(sum(col("w")).as("wdeg"))
-      .persist().transform(Exec.trackPersisted)
-    val withDeg = Exec.trackTransient(
-      wedge.join(wdeg, Seq("src")).localCheckpoint())
+    val wdeg = Exec.pin(wedge.groupBy(col("src")).agg(sum(col("w")).as("wdeg")))
+    val withDeg = Exec.checkpoint(
+      wedge.join(wdeg, Seq("src")))
     val n = wdeg.count()
     // r17b: the bigram graph is vocabulary-sized metadata once the corpus
     // scan has reduced to weighted edges — under the measured gate the
@@ -1146,12 +1133,11 @@ object TextOps {
     */
   def decontaminationScan(docs: DataFrame, n: Int = 5): DataFrame = {
     graft.functions.MinHashFunctions.register(docs.sparkSession)
-    val base = docs
+    val base = Exec.pin(docs
       .withColumn("toks", tokens(col("text")))
       .withColumn("sh", expr(s"shingle_hashes(toks, $n)"))
       .filter(size(col("sh")) > 0)
-      .select(col("doc_id"), col("lang"), col("sh"))
-      .persist()
+      .select(col("doc_id"), col("lang"), col("sh")))
     val trainHashes = base.filter(col("doc_id") % 2 === 0)
       .select(explode(col("sh")).as("h")).distinct()
     val evalDocs = base.filter(col("doc_id") % 2 === 1)
@@ -1181,12 +1167,11 @@ object TextOps {
     // language) and df (row count per token — (doc, token) rows are unique
     // by construction) derive from this far smaller frame, instead of a
     // full distinct plus two aggregations over the raw exploded tokens.
-    val perDoc = docs
+    val perDoc = Exec.pin(docs
       .withColumn("toks", tokens(col("text")))
       .select(col("doc_id"), col("lang"), explode(col("toks")).as("token"))
       .groupBy(col("doc_id"), col("lang"), col("token"))
-      .agg(count(lit(1)).as("cnt"))
-      .persist()
+      .agg(count(lit(1)).as("cnt")))
     val tf = perDoc.groupBy(col("lang"), col("token")).agg(sum(col("cnt")).as("tf"))
     val df = perDoc.groupBy(col("token")).agg(count(lit(1)).as("df"))
     val total = docs.agg(count(lit(1)).as("n_total"))
@@ -1227,13 +1212,12 @@ object TextOps {
     val ti = qterms.indices
     def tfc(i: Int): Column = col(s"tf_$i")
     val toks = docs.select(col("doc_id"), explode(tokens(col("text"))).as("token"))
-    val perDoc = toks.groupBy(col("doc_id")).agg(
+    // the stats aggregate and the scoring scan both read this: pin it so
+    // the corpus explode+aggregate runs once (it is |docs| numeric rows,
+    // tiny next to the corpus it summarizes)
+    val perDoc = Exec.pin(toks.groupBy(col("doc_id")).agg(
       count(lit(1)).as("dl"),
-      ti.map(i => count(when(col("token") === qterms(i), 1)).as(s"tf_$i")): _*)
-      // the stats aggregate and the scoring scan both read this: pin it so
-      // the corpus explode+aggregate runs once (it is |docs| numeric rows,
-      // tiny next to the corpus it summarizes)
-      .persist()
+      ti.map(i => count(when(col("token") === qterms(i), 1)).as(s"tf_$i")): _*))
     // N counts token-BEARING docs (dl ≥ 1): empty docs can't match and are
     // excluded from avgdl by construction; documented contract, oracle same
     val stats = perDoc.agg(
@@ -1275,15 +1259,13 @@ object TextOps {
     * 100 TB and never needs to.
     */
   def collocationsPmi(docs: DataFrame, minCount: Int = 5, k: Int = 20): DataFrame = {
-    val toks = docs.select(tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= 2)
-      .persist()
-    val bg = toks
+    val toks = Exec.pin(docs.select(tokens(col("text")).as("toks"))
+      .filter(size(col("toks")) >= 2))
+    val bg = Exec.pin(toks
       .withColumn("aa", slice(col("toks"), lit(1), size(col("toks")) - 1))
       .withColumn("bb", slice(col("toks"), lit(2), size(col("toks")) - 1))
       .select(explode(arrays_zip(col("aa"), col("bb"))).as("p"))
-      .select(col("p.aa").as("w1"), col("p.bb").as("w2"))
-      .persist()
+      .select(col("p.aa").as("w1"), col("p.bb").as("w2")))
     val uni = toks.select(explode(col("toks")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("cw"))
     val totals = uni.agg(sum(col("cw")).as("nu"))
@@ -1363,17 +1345,16 @@ object TextOps {
     * pipeline actually tracks.
     */
   def perplexityBuckets(docs: DataFrame): DataFrame = {
-    val toks = docs.withColumn("toks", tokens(col("text")))
-      .select(col("doc_id"), explode(col("toks")).as("token")).persist()
+    val toks = Exec.pin(docs.withColumn("toks", tokens(col("text")))
+      .select(col("doc_id"), explode(col("toks")).as("token")))
     val model = toks.groupBy(col("token")).agg(count(lit(1)).as("cnt"))
     val total = toks.agg(count(lit(1)).as("n_total"))
     // checkpointed: the per-doc frame feeds both the threshold percentiles
     // and the final labeling — without the cut the token join runs twice
-    val perDoc = Exec.trackTransient(toks.join(model, Seq("token"))
+    val perDoc = Exec.checkpoint(toks.join(model, Seq("token"))
       .crossJoin(broadcast(total))
       .groupBy(col("doc_id"))
-      .agg(q4(sum(-log(col("cnt") / col("n_total"))) / count(lit(1))).as("m"))
-      .localCheckpoint())
+      .agg(q4(sum(-log(col("cnt") / col("n_total"))) / count(lit(1))).as("m")))
     val thr = perDoc.agg(expr("percentile(m, 0.33)").as("lo"),
       expr("percentile(m, 0.67)").as("hi"))
     perDoc.crossJoin(broadcast(thr))
@@ -1440,7 +1421,7 @@ object TextOps {
     // learn FEWER than `rounds` merges — under ANSI mode element_at past
     // the short table's end throws, so each round no-ops unless the table
     // actually holds a rank-r merge (the oracle's b.p1 IS NULL branch)
-    (1 to rounds).foldLeft(chars) { (df, r) =>
+    Exec.checkpoint((1 to rounds).foldLeft(chars) { (df, r) =>
       df.withColumn("syms", expr(
         s"""IF(size(marr) >= $r,
            |  aggregate(syms, CAST(array() AS array<string>),
@@ -1453,9 +1434,7 @@ object TextOps {
            |      ELSE concat(acc, array(x)) END),
            |  syms)""".stripMargin))
     }.select(col("word"), concat_ws("|", col("syms")).as("seg"),
-      size(col("syms")).as("nsub"))
-      .localCheckpoint()
-      .transform(Exec.trackTransient)
+      size(col("syms")).as("nsub")))
   }
 
   /** Tokenizer fertility / compression census per language — THE tokenizer
@@ -1601,19 +1580,17 @@ object TextOps {
     */
   private def bpeTrain(docs: DataFrame, rounds: Int): (DataFrame, DataFrame) = {
     val (m, c) = bpeTrainBuild(docs, rounds)
-    (Exec.trackTransient(m.localCheckpoint()), Exec.trackTransient(c.localCheckpoint()))
+    (Exec.checkpoint(m), Exec.checkpoint(c))
   }
 
   private def bpeTrainBuild(docs: DataFrame, rounds: Int): (DataFrame, DataFrame) = {
-    var cur = docs
+    var cur = Exec.checkpoint(docs
       .select(explode(tokens(col("text"))).as("word"))
       .filter(length(col("word")) > 0)
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
       .withColumn("syms",
         expr("transform(sequence(1, length(word)), i -> substring(word, i, 1))"))
-      .select(col("freq"), col("syms"))
-      .localCheckpoint()
-    Exec.trackTransient(cur)
+      .select(col("freq"), col("syms")))
     val merges = (1 to rounds).map { r =>
       val pairs = cur.filter(size(col("syms")) >= 2)
         .withColumn("aa", slice(col("syms"), lit(1), size(col("syms")) - 1))
@@ -1631,7 +1608,7 @@ object TextOps {
       // ~20% (1.20 vs 0.99 s): five extra blocking jobs outweigh
       // recomputing a tiny argmax whose pair scan reads the already-
       // checkpointed `cur`.
-      cur = cur
+      cur = Exec.checkpoint(cur
         .crossJoin(broadcast(best.select(col("p1").as("bp1"), col("p2").as("bp2"))))
         .withColumn("syms", expr(
           """aggregate(syms, CAST(array() AS array<string>),
@@ -1639,13 +1616,11 @@ object TextOps {
             |    WHEN size(acc) > 0 AND element_at(acc, -1) = bp1 AND x = bp2
             |    THEN concat(slice(acc, 1, size(acc) - 1), array(concat(bp1, bp2)))
             |    ELSE concat(acc, array(x)) END)""".stripMargin))
-        .select(col("freq"), col("syms"))
-        .localCheckpoint()
+        .select(col("freq"), col("syms")))
       // every round's frame must OUTLIVE the call (round r's lazy `best`
       // in the merges result reads round r-1's blocks), so superseded
       // frames can't be dropped eagerly here — register each for the
       // between-query drain instead
-      Exec.trackTransient(cur)
       best.filter(col("p1").isNotNull)
         .select(lit(r).as("round"), col("p1"), col("p2"),
           concat(col("p1"), col("p2")).as("merged"), col("cnt"))
@@ -1828,15 +1803,14 @@ object TextOps {
                            dpPartitions: Int): UnigramState = {
     // word-frequency table: the only corpus-wide aggregate (map-side
     // combined; the coalesce touches only the post-shuffle merge)
-    val words = Exec.trackTransient(docs
+    val words = Exec.checkpoint(docs
       .select(explode(tokens(col("text"))).as("word"))
       .filter(length(col("word")).between(1, maxWordLen))
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
-      .coalesce(dpPartitions)
-      .localCheckpoint())
+      .coalesce(dpPartitions))
     // every substring occurrence (word, start i, end j, piece) — feeds
     // candidate counting AND the DP edge lists; (word, i, j) is unique
-    val occ = Exec.trackTransient(words.select(col("word"), col("freq"),
+    val occ = Exec.checkpoint(words.select(col("word"), col("freq"),
         explode(expr(
           s"""flatten(transform(sequence(0, length(word) - 1),
              |  i -> transform(sequence(1, least($maxPieceLen, length(word) - i)),
@@ -1845,24 +1819,21 @@ object TextOps {
           .as("o"))
       .select(col("word"), col("freq"),
         col("o.i").as("i"), col("o.j").as("j"), col("o.piece").as("piece"))
-      .coalesce(dpPartitions)
-      .localCheckpoint())
+      .coalesce(dpPartitions))
     val c0 = occ.groupBy(col("piece")).agg(sum(col("freq")).as("cnt"))
     // initial vocab: top-V candidates by substring mass, plus ALL single
     // chars (coverage: every position must have an outgoing edge)
-    val vocab0 = Exec.trackTransient(
+    val vocab0 = Exec.checkpoint(
       c0.orderBy(col("cnt").desc, col("piece")).limit(vocabSize)
         .unionByName(c0.filter(length(col("piece")) === 1))
-        .dropDuplicates("piece")
-        .localCheckpoint())
+        .dropDuplicates("piece"))
     val c1 = viterbiPieceCounts(occ, vocab0, dpPartitions)
     // prune never-chosen multi-char pieces; single chars stay (coverage)
-    val vocab1 = Exec.trackTransient(
+    val vocab1 = Exec.checkpoint(
       vocab0.select(col("piece"))
         .join(c1, Seq("piece"), "left")
         .filter(col("cnt").isNotNull || length(col("piece")) === 1)
-        .select(col("piece"), coalesce(col("cnt"), lit(0L)).as("cnt"))
-        .localCheckpoint())
+        .select(col("piece"), coalesce(col("cnt"), lit(0L)).as("cnt")))
     UnigramState(occ, c0, vocab0, c1, vocab1)
   }
 
@@ -1940,16 +1911,14 @@ object TextOps {
     */
   private def viterbiPieceCounts(occ: DataFrame, vocab: DataFrame,
                                  dpPartitions: Int): DataFrame = {
-    val out = viterbiSegmented(occ, vocab)
+    val out = Exec.checkpoint(viterbiSegmented(occ, vocab)
       .select(col("freq"), explode(expr(
         """transform(sequence(1, size(cuts) - 1),
           |  k -> substring(word, element_at(cuts, k) + 1,
           |    element_at(cuts, k + 1) - element_at(cuts, k)))""".stripMargin))
         .as("piece"))
       .groupBy(col("piece")).agg(sum(col("freq")).as("cnt"))
-      .coalesce(dpPartitions)
-      .localCheckpoint()
-    Exec.trackTransient(out)
+      .coalesce(dpPartitions))
     out
   }
 
@@ -2007,8 +1976,8 @@ object TextOps {
       filterDecisions(docs).filter(col("keep")).select("doc_id"),
       Seq("doc_id"), "left_semi")
     // 2. exact dedup survivors
-    val d2 = d1.join(DedupOps.exactSurvivors(d1), Seq("doc_id"), "left_semi")
-      .persist() // read by the shingle probe AND the stage-4 filter
+    // read by the shingle probe AND the stage-4 filter
+    val d2 = Exec.pin(d1.join(DedupOps.exactSurvivors(d1), Seq("doc_id"), "left_semi"))
     // 3. decontamination against the held-out eval slice
     val withSh = d2
       .withColumn("toks", tokens(col("text")))

@@ -37,7 +37,7 @@ object TimeSeriesOps {
   def gapFillMonthly(li: DataFrame, maxSuppkey: Int): DataFrame = {
     // read twice (spans + join side) — pin so the fact scan runs once;
     // session runners release via Exec.clearPinned
-    val monthly = monthlySeries(li, maxSuppkey).persist()
+    val monthly = Exec.pin(monthlySeries(li, maxSuppkey))
     val spine = monthly.groupBy(col("l_suppkey"))
       .agg(min(col("month")).as("mn"), max(col("month")).as("mx"))
       .select(col("l_suppkey"),
@@ -158,11 +158,10 @@ object TimeSeriesOps {
     * is engine-deterministic; quantized at 4dp for the oracle compare.
     */
   def yoyChange(li: DataFrame): DataFrame = {
-    val monthly = li
+    val monthly = Exec.pin(li
       .groupBy(col("l_returnflag"),
         to_date(date_trunc("month", col("l_shipdate"))).as("month"))
-      .agg(sum(col("l_quantity")).as("qty"))
-      .persist() // both sides of the month-12 self-join read this
+      .agg(sum(col("l_quantity")).as("qty"))) // both sides of the month-12 self-join read this
     val prev = monthly.select(col("l_returnflag"),
       add_months(col("month"), 12).as("month"), col("qty").as("prev_qty"))
     monthly.join(prev, Seq("l_returnflag", "month"), "left")
@@ -226,11 +225,11 @@ object TimeSeriesOps {
     */
   def binsegChangepoints(li: DataFrame): DataFrame = {
     def q4(c: Column): Column = floor(c * 10000 + 0.5) / 10000
-    val monthly = li
+    // level 1 AND the segment pass both read it
+    val monthly = Exec.pin(li
       .groupBy(col("l_returnflag").as("key"),
         to_date(date_trunc("month", col("l_shipdate"))).as("month"))
-      .agg(sum(col("l_quantity")).cast("long").as("qty"))
-      .persist() // level 1 AND the segment pass both read it
+      .agg(sum(col("l_quantity")).cast("long").as("qty")))
     // r17b: the monthly frame is |keys|·|months| rows — a few hundred at
     // bench scale and bounded metadata at ANY corpus size (months are a
     // calendar, keys a low-cardinality enum); under the measured gate the
@@ -397,11 +396,10 @@ object TimeSeriesOps {
     * the flag between engines.
     */
   def seasonalBaseline(li: DataFrame, devPct: Double = 20.0): DataFrame = {
-    val monthly = li
+    val monthly = Exec.pin(li
       .groupBy(col("l_returnflag").as("key"),
         to_date(date_trunc("month", col("l_shipdate"))).as("month"))
-      .agg(sum(col("l_quantity")).as("qty"))
-      .persist()
+      .agg(sum(col("l_quantity")).as("qty")))
     val baseline = monthly
       .groupBy(col("key"), month(col("month")).as("moy"))
       .agg(avg(col("qty")).as("base_qty"))
@@ -430,12 +428,11 @@ object TimeSeriesOps {
     */
   def acfMonthly(li: DataFrame, maxLag: Int = 6): DataFrame = {
     def q4(c: Column): Column = floor(c * 10000 + 0.5) / 10000
-    val monthly = li
+    val monthly = Exec.pin(li
       .groupBy(col("l_returnflag").as("key"),
         months_between(date_trunc("month", col("l_shipdate")),
           lit("1992-01-01").cast("date")).cast("int").as("mi"))
-      .agg(sum(col("l_extendedprice")).as("v"))
-      .persist()
+      .agg(sum(col("l_extendedprice")).as("v")))
     val lagged = monthly
       .select(col("key"), col("mi"), col("v"),
         explode(sequence(lit(1), lit(maxLag))).as("lag_m"))
@@ -515,13 +512,12 @@ object TimeSeriesOps {
   def pacfMonthly(li: DataFrame): DataFrame = {
     def q4(c: Column): Column = floor(c * 10000 + 0.5) / 10000
     def q6(c: Column): Column = floor(c * 1000000 + 0.5) / 1000000
-    val monthly = li
+    val monthly = Exec.pin(li
       .groupBy(col("l_returnflag").as("key"),
         months_between(date_trunc("month", col("l_shipdate")),
           lit("1992-01-01").cast("date")).cast("int").as("mi"))
       .agg(sum(floor(col("l_extendedprice") * 100 + 0.5).cast("long"))
-        .as("cents"))
-      .persist()
+        .as("cents")))
     // r17b: the binsegChangepoints doctrine — the monthly frame is
     // |keys|·|months| bounded metadata; under the measured gate the ACF
     // numerators/denominator and the unrolled Durbin–Levinson recursion
@@ -538,10 +534,9 @@ object TimeSeriesOps {
     // reduced monthly frame, never the fact table)
     val mstats = monthly.groupBy(col("key"))
       .agg((sum(col("cents")).cast("double") / count(lit(1))).as("xbar"))
-    val centered = monthly.join(mstats, Seq("key"))
+    val centered = Exec.pin(monthly.join(mstats, Seq("key"))
       .select(col("key"), col("mi"),
-        (col("cents").cast("double") - col("xbar")).as("c"))
-      .persist()
+        (col("cents").cast("double") - col("xbar")).as("c")))
     val den = centered.groupBy(col("key"))
       .agg(sum(col("c") * col("c")).as("den"))
     val nums = centered
@@ -734,11 +729,10 @@ object TimeSeriesOps {
   def esdOutliers(orders: DataFrame, threshold: Double = 2.5,
                   rounds: Int = 3): DataFrame = {
     def q4(c: Column): Column = floor(c * 10000 + 0.5) / 10000
-    val monthly = graft.ops.Exec.trackTransient(
+    val monthly = Exec.checkpoint(
       orders.groupBy(col("o_orderpriority").as("g"),
         date_trunc("month", col("o_orderdate")).as("month"))
-      .agg(sum(round(col("o_totalprice")).cast("long")).as("v"))
-      .localCheckpoint())
+      .agg(sum(round(col("o_totalprice")).cast("long")).as("v")))
     var remaining: DataFrame = monthly
     var flagged: DataFrame = null
     for (r <- 1 to rounds) {
@@ -759,12 +753,11 @@ object TimeSeriesOps {
           q4(abs(col("v") * col("n") - col("sx")).cast("double")
             / (col("n").cast("double") * col("sd")))))
       val w = Window.partitionBy(col("g")).orderBy(col("rq").desc, col("month"))
-      val flag = graft.ops.Exec.trackTransient(
+      val flag = Exec.checkpoint(
         scored.withColumn("rn", row_number().over(w))
           .filter(col("rn") === 1 && col("rq") > threshold)
           .select(col("g"), lit(r).as("round"), col("month"), col("v"),
-            col("rq"))
-          .localCheckpoint())
+            col("rq")))
       flagged = if (flagged == null) flag else flagged.unionByName(flag)
       remaining = remaining.join(flag.select(col("g"), col("month")),
         Seq("g", "month"), "left_anti")
@@ -975,7 +968,7 @@ object TimeSeriesOps {
     require(alpha > 0 && alpha < 1 && beta > 0 && beta < 1, "need 0<α,β<1")
     val spark = monthly.sparkSession
     val w = Window.partitionBy(col("g")).orderBy(col("month"))
-    val seq = monthly.withColumn("t", row_number().over(w)).persist()
+    val seq = Exec.pin(monthly.withColumn("t", row_number().over(w)))
     // the length guard lives HERE, fused into the len value every
     // downstream path joins on — guarding the coeff-join key instead would
     // let AQE short-circuit around it: an over-long series empties the
@@ -1174,7 +1167,8 @@ object TimeSeriesOps {
       .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("vc"))
     val w = Window.partitionBy(col("key")).orderBy(col("month"))
     val w11 = w.rowsBetween(-5, 5)
-    val t = monthly
+    // read by the seasonal aggregate AND the final join — one window pass
+    val t = Exec.pin(monthly
       .withColumn("sum11", sum(col("vc")).over(w11))
       .withColumn("cnt11", count(lit(1)).over(w11))
       .withColumn("lag6", lag(col("vc"), 6).over(w))
@@ -1183,9 +1177,7 @@ object TimeSeriesOps {
       .withColumn("trend24",
         when(col("cnt11") === 11, col("sum11") * 2 + col("lag6") + col("lead6")))
       .withColumn("d24", col("vc") * 24 - col("trend24"))
-      .withColumn("phase", month(col("month")))
-      // read by the seasonal aggregate AND the final join — one window pass
-      .persist()
+      .withColumn("phase", month(col("month"))))
     val sp = t.filter(col("trend24").isNotNull)
       .groupBy(col("key"), col("phase"))
       .agg(sum(col("d24")).as("s_num"), count(lit(1)).as("s_cnt"))
@@ -1313,9 +1305,9 @@ object TimeSeriesOps {
   def theilSen(li: DataFrame, maxSuppkey: Int = 10): DataFrame = {
     val q6 = (c: Column) => floor(c * 1000000 + 0.5) / 1000000
     val q4 = (c: Column) => floor(c * 10000 + 0.5) / 10000
-    val idx = rankedSeries(li, maxSuppkey)
-      .select(col("l_suppkey"), col("t"), col("x"))
-      .persist() // three readers (pair sides + residuals); Exec.clearPinned
+    // three readers (pair sides + residuals)
+    val idx = Exec.pin(rankedSeries(li, maxSuppkey)
+      .select(col("l_suppkey"), col("t"), col("x")))
     val pairs = idx.toDF("l_suppkey", "ti", "xi")
       .join(broadcast(idx.toDF("l_suppkey", "tj", "xj")), Seq("l_suppkey"))
       .filter(col("tj") > col("ti"))
@@ -1427,7 +1419,7 @@ object TimeSeriesOps {
     val w = Window.partitionBy(col("g")).orderBy(col("month"))
     // the fold and the month-lookup join both read the series frame: pin
     // it so the corpus aggregate runs once
-    val seq = monthly.withColumn("t", row_number().over(w)).persist()
+    val seq = Exec.pin(monthly.withColumn("t", row_number().over(w)))
     val folded = kalmanStates(seq, maxLen)
     // folded descends from seq, so rename the month-lookup side first (the
     // holtWinters self-join-by-lineage convention)
@@ -1507,7 +1499,7 @@ object TimeSeriesOps {
       .withColumn("x", col("cents").cast("double") / 1e8)
     val w = Window.partitionBy(col("g")).orderBy(col("month"))
     // pinned for the same two-reader reason as kalmanFilter's seq
-    val seq = monthly.withColumn("t", row_number().over(w)).persist()
+    val seq = Exec.pin(monthly.withColumn("t", row_number().over(w)))
     val folded = seq
       .groupBy(col("g"))
       .agg(expr("transform(array_sort(collect_list(struct(t, x))), s -> s.x)")
@@ -1585,12 +1577,11 @@ object TimeSeriesOps {
     val w = Window.partitionBy(col("l_suppkey")).orderBy(col("month"))
     // two readers (calibration ranks + test coverage) — pin the scored
     // frame so the fact scan runs once; released via Exec.clearPinned
-    val scored = monthly
+    val scored = Exec.pin(monthly
       .withColumn("t", row_number().over(w))
       .withColumn("xprev", lag(col("x"), 1).over(w))
       .filter(col("xprev").isNotNull)
-      .withColumn("score", abs(col("x") - col("xprev")))
-      .persist()
+      .withColumn("score", abs(col("x") - col("xprev"))))
     val cal = scored.filter(col("t") % 2 === 0)
     val wKey = Window.partitionBy(col("l_suppkey"))
     val wRank = wKey.orderBy(col("score"), col("month"))

@@ -254,16 +254,15 @@ object VectorOps {
       .select(col("vec_id").as("query_id"), col("embedding").as("q"))
     val wRel = Window.partitionBy(col("query_id"))
       .orderBy(col("simq").desc, col("vec_id"))
-    val poolDf = Exec.trackTransient(
+    val poolDf = Exec.checkpoint(
       emb.join(broadcast(queries), col("vec_id") =!= col("query_id"))
         .withColumn("simq", q4(cosineFast(emb, col("q"), col("embedding"))))
         .withColumn("prank", row_number().over(wRel))
         .filter(col("prank") <= pool)
-        .select(col("query_id"), col("vec_id"), col("simq"), col("embedding"))
-        .localCheckpoint())
+        .select(col("query_id"), col("vec_id"), col("simq"), col("embedding")))
     // shortlist pair sims: pool × pool per query, both sides already
     // shortlist-sized — broadcast one side so no wide exchange forms
-    val pp = Exec.trackTransient(
+    val pp = Exec.checkpoint(
       poolDf.as("l")
         .join(broadcast(poolDf.as("r")),
           col("l.query_id") === col("r.query_id")
@@ -271,8 +270,7 @@ object VectorOps {
         .select(col("l.query_id").as("query_id"),
           col("l.vec_id").as("cand"), col("r.vec_id").as("sel"),
           q4(cosineFast(poolDf, col("l.embedding"), col("r.embedding")))
-            .as("simdd"))
-        .localCheckpoint())
+            .as("simdd")))
     val slim = poolDf.select(col("query_id"), col("vec_id"), col("simq"))
     // r17: the greedy selection loop runs DRIVER-RESIDENT when the
     // shortlist is parameter-bounded metadata — `slim` is ≤ maxQueryId·pool
@@ -311,10 +309,9 @@ object VectorOps {
         .select(col("query_id"), col("vec_id"), lit(r).as("rank"),
           (floor(col("score") * 10000 + 0.5) / 10000).as("mmr_score"))
       val prev = selected
-      selected = (if (prev == null) pick else prev.union(pick)).localCheckpoint()
+      selected = Exec.checkpoint(if (prev == null) pick else prev.union(pick))
       if (prev != null) Exec.unpersistCheckpointed(prev)
     }
-    Exec.trackTransient(selected)
     selected.orderBy(col("query_id"), col("rank"))
   }
 
@@ -651,24 +648,22 @@ object VectorOps {
   def ivfProbeSweep(emb: DataFrame, maxQueryId: Int = 5,
                     k: Int = 5): DataFrame = {
     val spark = emb.sparkSession
-    val exact = Exec.trackTransient(
+    val exact = Exec.checkpoint(
       knnBruteForce(emb, maxQueryId, k)
-        .select(col("query_id"), col("vec_id")).localCheckpoint())
+        .select(col("query_id"), col("vec_id")))
     val nTruth = exact.count()
     // r17: ONE cell-distance pass + ONE corpus assignment feed every swept
     // config — they were previously re-derived per config twice over (once
     // in ivfCandidates, once more inside each ivfAnn call): 6 redundant
     // centroid/distance passes for a 3-point sweep. Identical math — the
     // per-config candidates are the same rows the old path produced.
-    val dists = Exec.trackTransient(
+    val dists = Exec.checkpoint(
       cellDistances(emb).select(
-        col("vec_id"), col("c_label").as("cell"), col("dist"))
-        .localCheckpoint())
-    val assign = Exec.trackTransient(
+        col("vec_id"), col("c_label").as("cell"), col("dist")))
+    val assign = Exec.checkpoint(
       dists.groupBy(col("vec_id"))
         .agg(min(struct(col("dist"), col("cell"))).as("mc"))
-        .select(col("vec_id"), col("mc.cell").as("cell"))
-        .localCheckpoint())
+        .select(col("vec_id"), col("mc.cell").as("cell")))
     val byDist = Window.partitionBy(col("vec_id")).orderBy(col("dist"), col("cell"))
     val ranked = dists.filter(col("vec_id") < maxQueryId)
       .withColumn("rn", row_number().over(byDist))
@@ -688,12 +683,11 @@ object VectorOps {
       .join(assign, Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"), col("rn"))
-    val scored = Exec.trackTransient(
+    val scored = Exec.checkpoint(
       emb.join(cand4, Seq("vec_id"))
         .join(broadcast(qvecs), Seq("query_id"))
         .withColumn("sim", q4(cosineFast(emb, col("q"), col("embedding"))))
-        .select(col("query_id"), col("vec_id"), col("rn"), col("sim"))
-        .localCheckpoint())
+        .select(col("query_id"), col("vec_id"), col("rn"), col("sim")))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("sim").desc, col("vec_id"))
     val rows = Seq(1, 2, 4).map { p =>
@@ -828,10 +822,9 @@ object VectorOps {
     def subspaces(vecCol: String): Column = posexplode(expr(
       s"transform(sequence(0, ${nSub - 1}), m -> slice($vecCol, m * $subDim + 1, $subDim))"))
     // per-(vector, subspace) slices — the train/assign/encode passes all read this
-    val vsub = emb
+    val vsub = Exec.pin(emb
       .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-      .select(col("vec_id"), subspaces("v").as(Seq("m", "vsub")))
-      .persist()
+      .select(col("vec_id"), subspaces("v").as(Seq("m", "vsub"))))
     // k-means codebook, deterministic: seed codes = subvectors of the first
     // nCodes vectors (data-typical, unlike degenerate global means), then ONE
     // Lloyd iteration — assign every subvector to its nearest seed (quantized
@@ -866,11 +859,9 @@ object VectorOps {
       .agg(min(struct(col("d"), col("code"), col("sub"))).as("mc"))
       .select(col("vec_id"), col("m"), col("mc.sub").as("sub"))
     // reconstruction: chosen codebook slices, concatenated in subspace order
-    codes.groupBy(col("vec_id"))
+    Exec.checkpoint(codes.groupBy(col("vec_id"))
       .agg(expr("flatten(transform(array_sort(collect_list(struct(m, sub))), s -> s.sub))")
-        .as("r"))
-      .localCheckpoint()
-      .transform(Exec.trackTransient)
+        .as("r")))
   }
 
   def pqAdcTopK(emb: DataFrame, maxQueryId: Int, k: Int,
@@ -1276,12 +1267,11 @@ object VectorOps {
     */
   def clusterAgreement(emb: DataFrame): DataFrame = {
     // four readers of the tiny confusion matrix — materialize it once
-    val conf = Exec.trackTransient(
+    val conf = Exec.checkpoint(
       cellDistances(emb).groupBy(col("vec_id"), col("true_label"))
         .agg(min(struct(col("dist"), col("c_label"))).as("mc"))
         .groupBy(col("true_label"), col("mc.c_label").as("cell"))
-        .agg(count(lit(1)).as("n"))
-        .localCheckpoint())
+        .agg(count(lit(1)).as("n")))
     val totals = conf.agg(
       sum(expr("n * (n - 1) div 2")).as("pairs_both"),
       sum(col("n")).as("n_vectors"),
@@ -1337,13 +1327,12 @@ object VectorOps {
     // norms HOISTED out of the pair loop (cosineNearDupPairs' lesson):
     // sqrt of the same sequential Σx² fold, so dot/(nrm·nrm) is
     // bit-identical to the fused kernel at 1/3 the per-pair array walks
-    val vecs = Exec.trackTransient(
+    val vecs = Exec.checkpoint(
       emb.select(col("vec_id"),
           expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
         .withColumn("nrm",
           sqrt(call_function("dot_product", col("v"), col("v"))))
-        .join(assigned, Seq("vec_id"))
-        .localCheckpoint())
+        .join(assigned, Seq("vec_id")))
     // the neighbor side BROADCASTS while the checkpoint's measured size
     // allows (unhinted, AQE kept the shuffle join: 21.0 → 27.8 s at sf1):
     // a cell-keyed shuffle join has only |cells| distinct keys (10 here),
@@ -1363,10 +1352,9 @@ object VectorOps {
         q4(call_function("dot_product", col("v"), col("vb"))
           / (col("nrm") * col("nb"))).as("sim"))
     val wK = Window.partitionBy(col("u")).orderBy(col("sim").desc, col("vv"))
-    val knn = Exec.trackTransient(
+    val knn = Exec.checkpoint(
       pairs.withColumn("rn", row_number().over(wK)).filter(col("rn") <= k)
-        .select(col("cell"), col("u"), col("vv"), col("sim"))
-        .localCheckpoint())
+        .select(col("cell"), col("u"), col("vv"), col("sim")))
     val recip = knn.as("a")
       .join(knn.as("b"), col("a.u") === col("b.vv") && col("a.vv") === col("b.u"))
       .groupBy(col("a.cell").as("cell"))
@@ -1512,16 +1500,14 @@ object VectorOps {
     graft.functions.SqL2.register(emb.sparkSession)
     // every selection round re-reads the corpus: pin it so the k rounds
     // pay ONE scan, not k (clearPinned drops it between queries)
-    val corpus = emb.select(col("vec_id"),
-      expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-      .persist()
+    val corpus = Exec.pin(emb.select(col("vec_id"),
+      expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v")))
     def asCenter(df: DataFrame, round: Int, distCol: Column): DataFrame =
       df.select(col("vec_id").cast("int").as("cid"),
         expr("transform(v, x -> floor(x * 10000 + 0.5) / 10000)").as("cvec"),
         lit(round).as("round"), distCol.as("sel_dist"))
-    var sel = Exec.trackTransient(
-      asCenter(corpus.orderBy(col("vec_id")).limit(1), 0, lit(0.0))
-        .localCheckpoint())
+    var sel = Exec.checkpoint(
+      asCenter(corpus.orderBy(col("vec_id")).limit(1), 0, lit(0.0)))
     for (r <- 1 until k) {
       val packed = sel.agg(
         expr("array_sort(collect_list(struct(cid, cvec)))").as("cs"))
@@ -1533,8 +1519,8 @@ object VectorOps {
             |  CAST('Infinity' AS DOUBLE),
             |  (acc, d) -> IF(d < acc, d, acc))""".stripMargin))
         .orderBy(col("mind").desc, col("vec_id")).limit(1)
-      sel = Exec.trackTransient(
-        sel.unionByName(asCenter(next, r, col("mind"))).localCheckpoint())
+      sel = Exec.checkpoint(
+        sel.unionByName(asCenter(next, r, col("mind"))))
     }
     sel
   }
@@ -1596,9 +1582,8 @@ object VectorOps {
     def q4(c: Column): Column = floor(c * 10000 + 0.5) / 10000
     graft.functions.SqL2.register(emb.sparkSession)
     // both inertia passes re-read the corpus: pin it (one scan, two folds)
-    val corpus = emb.select(col("vec_id"),
-      expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-      .persist()
+    val corpus = Exec.pin(emb.select(col("vec_id"),
+      expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v")))
     def inertia(seeds: DataFrame, outCol: String): DataFrame = {
       val packed = seeds.agg(expr("collect_list(cvec)").as("cs"))
       corpus.crossJoin(broadcast(packed))

@@ -176,9 +176,8 @@ object QualityChecks {
     */
   def mutualInfoCells(df: DataFrame, xCol: String, yCol: String): DataFrame = {
     def q4(c: Column): Column = floor(c * 10000 + 0.5) / 10000
-    val joint = df.groupBy(col(xCol).as("x"), col(yCol).as("y"))
-      .agg(count(lit(1)).as("nxy"))
-      .persist()
+    val joint = graft.ops.Exec.pin(df.groupBy(col(xCol).as("x"), col(yCol).as("y"))
+      .agg(count(lit(1)).as("nxy")))
     val mx = joint.groupBy(col("x")).agg(sum(col("nxy")).as("nx"))
     val my = joint.groupBy(col("y")).agg(sum(col("nxy")).as("ny"))
     val total = joint.agg(sum(col("nxy")).as("n"))
@@ -211,9 +210,8 @@ object QualityChecks {
     */
   def chi2Independence(df: DataFrame, xCol: String, yCol: String): DataFrame = {
     def q6(c: Column): Column = floor(c * 1000000 + 0.5) / 1000000
-    val joint = df.groupBy(col(xCol).as("x"), col(yCol).as("y"))
-      .agg(count(lit(1)).as("o"))
-      .persist()
+    val joint = graft.ops.Exec.pin(df.groupBy(col(xCol).as("x"), col(yCol).as("y"))
+      .agg(count(lit(1)).as("o")))
     val mx = joint.groupBy(col("x")).agg(sum(col("o")).as("nx"))
     val my = joint.groupBy(col("y")).agg(sum(col("o")).as("ny"))
     val total = joint.agg(sum(col("o")).as("n"),
@@ -564,15 +562,14 @@ object QualityChecks {
     * aggregate, checkpointed (both fence reads below use the row) and
     * tracked for release at the next [[graft.ops.Exec.clearPinned]]. */
   private def exactQuartiles(df: DataFrame, cols: Seq[String]): DataFrame =
-    graft.ops.Exec.trackTransient(df
+    graft.ops.Exec.checkpoint(df
       .agg(expr(s"percentile(${cols.head}, array(0.25D, 0.75D))")
           .as(s"qq_${cols.head}"),
         cols.tail.map(c =>
           expr(s"percentile($c, array(0.25D, 0.75D))").as(s"qq_$c")): _*)
       .select(cols.flatMap(c => Seq(
         expr(s"element_at(qq_$c, 1)").as(s"q1_$c"),
-        expr(s"element_at(qq_$c, 2)").as(s"q3_$c"))): _*)
-      .localCheckpoint())
+        expr(s"element_at(qq_$c, 2)").as(s"q3_$c"))): _*))
 
   def iqrOutliers(df: DataFrame, cols: Seq[String],
                   useApprox: Boolean = false,
@@ -632,13 +629,12 @@ object QualityChecks {
       cols.map(c => expr(s"percentile($c, array(0.25D, 0.75D))").as(s"eq_$c")) ++
       cols.map(c => expr(s"cast(approx_percentile($c, array(0.25D, 0.75D)," +
         s" $accuracy) as array<double>)").as(s"aq_$c"))
-    val q = graft.ops.Exec.trackTransient(df.agg(aggs.head, aggs.tail: _*)
+    val q = graft.ops.Exec.checkpoint(df.agg(aggs.head, aggs.tail: _*)
       .select(cols.flatMap(c => Seq(
         expr(s"element_at(eq_$c, 1)").as(s"q1_$c"),
         expr(s"element_at(eq_$c, 2)").as(s"q3_$c"),
         expr(s"element_at(aq_$c, 1)").as(s"a1_$c"),
-        expr(s"element_at(aq_$c, 2)").as(s"a3_$c"))): _*)
-      .localCheckpoint())
+        expr(s"element_at(aq_$c, 2)").as(s"a3_$c"))): _*))
     def lo(q1: String, q3: String): Column =
       col(q1) - (col(q3) - col(q1)) * 1.5
     def hi(q1: String, q3: String): Column =

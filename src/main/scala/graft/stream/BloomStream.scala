@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.ops.DedupOps
+import graft.ops.{DedupOps, Exec}
 
 /** Streaming Bloom-gated dedup — the continuous form of
   * [[graft.ops.DedupOps.bloomDedupGate]] and the crawl-frontier shape the
@@ -67,8 +67,7 @@ object BloomStream {
       .filter(col("src_batch") =!= batchId)
     val keys = spark.read.parquet(s"$indexDir/keys")
       .filter(col("src_batch") =!= batchId)
-    val judged = DedupOps.bloomJudge(bits, keys, batch.toDF(), mBits, k)
-      .persist()
+    val judged = Exec.pin(DedupOps.bloomJudge(bits, keys, batch.toDF(), mBits, k))
     writePartition(judged, outDir, batchId)
     writePartition(
       DedupOps.bloomPositions(batch.toDF(), mBits, k)
@@ -88,7 +87,10 @@ object BloomStream {
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        processBatch(batch, batchId, indexDir, outDir, mBits, k)
+        // the batch runs on the stream's thread: release its pins there,
+        // also when it throws
+        try processBatch(batch, batchId, indexDir, outDir, mBits, k)
+        finally Exec.clearPinned(batch.sparkSession)
       }
       .start()
 }

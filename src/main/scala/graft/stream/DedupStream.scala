@@ -93,7 +93,7 @@ object DedupStream {
     */
   def seedIndex(corpus: DataFrame, indexDir: String,
                 k: Int = 32, bands: Int = 8): Unit = {
-    val s = sigs(corpus, k).persist()
+    val s = Exec.pin(sigs(corpus, k))
     writePartition(bandsOf(s, k, bands), s"$indexDir/bands", -1L)
     writePartition(s.select(col("doc_id"), col("hs")), s"$indexDir/sets", -1L)
     s.unpersist()
@@ -115,7 +115,7 @@ object DedupStream {
       indexDir: String, outDir: String, k: Int, bands: Int,
       threshold: Double): Unit = {
     val spark = batch.sparkSession
-    val bs = sigs(batch.toDF(), k).persist()
+    val bs = Exec.pin(sigs(batch.toDF(), k))
     val bBands = bandsOf(bs, k, bands)
     val idxBands = spark.read.parquet(s"$indexDir/bands")
       .filter(col("src_batch") =!= batchId)
@@ -265,7 +265,10 @@ object DedupStream {
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        processBatch(batch, batchId, indexDir, outDir, k, bands, threshold)
+        // the batch runs on the stream's thread: release its pins there,
+        // also when it throws
+        try processBatch(batch, batchId, indexDir, outDir, k, bands, threshold)
+        finally Exec.clearPinned(batch.sparkSession)
       }
       .start()
 }

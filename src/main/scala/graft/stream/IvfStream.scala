@@ -76,7 +76,7 @@ object IvfStream {
   def seedIndex(corpus: DataFrame, indexDir: String): Unit = {
     val cells = cellArrays(corpus)
     cells.write.mode("overwrite").parquet(s"$indexDir/cells")
-    val assigned = assignToCells(corpus, cells).persist()
+    val assigned = graft.ops.Exec.pin(assignToCells(corpus, cells))
     writePartition(assigned, s"$indexDir/assign", -1L)
     writePartition(assigned.groupBy(col("cell")).agg(count(lit(1)).as("n")),
       s"$indexDir/deltas", -1L)
@@ -90,7 +90,7 @@ object IvfStream {
                    indexDir: String): Unit = {
     val spark = batch.sparkSession
     val cells = spark.read.parquet(s"$indexDir/cells")
-    val assigned = assignToCells(batch.toDF(), cells).persist()
+    val assigned = graft.ops.Exec.pin(assignToCells(batch.toDF(), cells))
     writePartition(assigned, s"$indexDir/assign", batchId)
     writePartition(assigned.groupBy(col("cell")).agg(count(lit(1)).as("n")),
       s"$indexDir/deltas", batchId)
@@ -155,7 +155,10 @@ object IvfStream {
     vecs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        processBatch(batch, batchId, indexDir)
+        // the batch runs on the stream's thread: release its pins there,
+        // also when it throws
+        try processBatch(batch, batchId, indexDir)
+        finally graft.ops.Exec.clearPinned(batch.sparkSession)
       }
       .start()
 }

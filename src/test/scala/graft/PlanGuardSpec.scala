@@ -645,7 +645,7 @@ class PlanGuardSpec extends SparkSpec {
     // in the visible tree (a re-derivation from raw text would bring one
     // back), and every cache scan present must share ONE materialized
     // counts frame (the persist over the memo rollup).
-    graft.ops.Exec.releaseAll(spark)
+    graft.ops.Exec.clearPinned(spark)
     val plan = staticPlan(SparkEntry.queries("txt_heavy_hitters")(spark, sfDir))
     val generates = plan.collect {
       case g: org.apache.spark.sql.execution.GenerateExec => g
@@ -664,7 +664,7 @@ class PlanGuardSpec extends SparkSpec {
         s"got ${cacheScans.length} cache scan(s):\n$plan")
     assert(cacheScans.map(s => System.identityHashCode(s.relation.cachedPlan)).distinct.size == 1,
       "all cache scans must share ONE materialized counts frame")
-    graft.ops.Exec.releaseAll(spark)
+    graft.ops.Exec.clearPinned(spark)
   }
 
   test("silver: a small cube sorts in one partition and writes one file; above the cap the global sort stays") {

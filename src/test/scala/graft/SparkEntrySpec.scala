@@ -21,12 +21,11 @@ class SparkEntrySpec extends SparkSpec {
 
   test("every query runs and yields a non-degenerate result at sf0.001") {
     // This sweep doubles as the persist-hygiene audit: it mirrors Verify's
-    // between-queries contract (Exec.releaseAll after each query) and
-    // asserts NO query leaves a cached plan or pinned RDD block behind the
-    // cleaner — i.e. every operator-internal persist()/localCheckpoint is
-    // visible to the releaseAll sweep. An operator
-    // whose pin escapes both paths (an unregistered checkpoint held by a
-    // field, say) fails here by name.
+    // between-queries contract (Exec.clearPinned after each query) and
+    // asserts NO query leaves a cached plan or pinned RDD block behind it
+    // — i.e. every operator-internal pin went through Exec.pin or
+    // Exec.checkpoint. An operator whose pin escapes the registry fails
+    // here by name.
     val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       val run =
         try {
@@ -37,13 +36,13 @@ class SparkEntrySpec extends SparkSpec {
               .contains(name))
             Some(s"$name: 0 rows") else None
         } catch { case e: Throwable => Some(s"$name: ${e.getMessage.take(100)}") }
-      graft.ops.Exec.releaseAll(spark)
+      graft.ops.Exec.clearPinned(spark)
       val pinned = spark.sparkContext.getPersistentRDDs
       val leak =
         if (pinned.nonEmpty)
-          Some(s"$name: ${pinned.size} RDD blocks still pinned after releaseAll")
+          Some(s"$name: ${pinned.size} RDD blocks still pinned after clearPinned")
         else if (!spark.sharedState.cacheManager.isEmpty)
-          Some(s"$name: cached plans survive releaseAll")
+          Some(s"$name: cached plans survive clearPinned")
         else None
       run.toSeq ++ leak.toSeq
     }

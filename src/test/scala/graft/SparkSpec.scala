@@ -8,7 +8,8 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for specs — one session per suite (lazy) — and
-  * temporary directories that are deleted when the suite ends. */
+  * temporary directories that are deleted when the suite ends, after the
+  * frames the suite's tests pinned are released. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
@@ -23,8 +24,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override protected def afterAll(): Unit =
-    try tempDirs.forEach(SparkSpec.deleteRecursively(_))
-    finally super.afterAll()
+    try {
+      graft.ops.Exec.clearPinned(spark) // the frames this suite's tests pinned
+      tempDirs.forEach(SparkSpec.deleteRecursively(_))
+    } finally super.afterAll()
 }
 
 object SparkSpec {

@@ -35,7 +35,7 @@ class StaleInputSpec extends SparkSpec {
         n -> rows
       }.toMap
 
-    graft.ops.Exec.releaseAll(spark)
+    graft.ops.Exec.clearPinned(spark)
     val dir = tempDir("stale-input").toString
     write(dir, lineitem(7, 13), documents("a", Set(1L, 3L, 5L)))
     val before = run(dir)
@@ -44,7 +44,7 @@ class StaleInputSpec extends SparkSpec {
     val fresh = tempDir("stale-input-ref").toString
     write(fresh, lineitem(11, 3), documents("b", Set(13L, 15L, 17L)))
     val reference = run(fresh)
-    graft.ops.Exec.releaseAll(spark)
+    graft.ops.Exec.clearPinned(spark)
 
     names.foreach { n =>
       assert(reference(n).nonEmpty, s"$n: fixture gives no rows")

@@ -151,24 +151,6 @@ class DedupOpsSpec extends SparkSpec {
     assert(DedupOps.connectedComponents(empty).collect().isEmpty)
   }
 
-  test("connected components: reliable checkpoint dir yields the same labels") {
-    // the fault-tolerant path (checkpoint() on a reliable dir instead of
-    // localCheckpoint) must be a pure execution-strategy swap: identical
-    // labels, and checkpoint files actually land in the dir
-    val dir = tempDir("graft-cc-ckpt").toFile
-    val path = (0L until 6L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val local = DedupOps.connectedComponents(path)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val reliable = DedupOps
-      .connectedComponents(path, reliableCheckpointDir = Some(dir.getAbsolutePath))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(reliable == local)
-    assert(reliable.forall(_._2 == 0L), "path graph is one component rooted at 0")
-    def countFiles(f: java.io.File): Int =
-      if (f.isDirectory) f.listFiles().map(countFiles).sum else 1
-    assert(countFiles(dir) > 0, "no checkpoint data written to the reliable dir")
-  }
-
   test("connected components: exceeding maxIters fails loudly instead of splitting components") {
     // a 6-node path needs ~5 propagation rounds; cap at 2 must throw, not
     // silently report several clusters (distributedOnly forces the

@@ -3,19 +3,20 @@ package graft.ops
 import graft.SparkSpec
 
 /** Lifecycle guard for the frames operators pin for one query: each
-  * family `localCheckpoint`s or persists the intermediates its returned
-  * (lazy) frame reads — deduplicated edge lists, oriented edges, degree
-  * frames, verified LSH pairs, the BPE model, quartile rows. Checkpoints
-  * live OUTSIDE the cacheManager, so each must be tracked: `clearPinned`
-  * after a query releases every one of them, and `releaseAll` also sweeps
-  * any block left untracked, or a long-lived session (Verify's 300+
-  * queries, the bench, a notebook) leaks storage query over query.
+  * family checkpoints or persists the intermediates its returned (lazy)
+  * frame reads — deduplicated edge lists, oriented edges, degree frames,
+  * verified LSH pairs, the BPE model, quartile rows — through `Exec.pin`
+  * and `Exec.checkpoint`, which register every frame with the calling
+  * thread. Nothing is pinned untracked, so `clearPinned` after a query
+  * alone must leave no RDD block and no cached plan, or a long-lived
+  * session (Verify's 300+ queries, the bench, a notebook) leaks storage
+  * query over query.
   */
 class ExecReleaseSpec extends SparkSpec {
 
   test("clearPinned alone releases the shared-build operators' checkpoints") {
     import spark.implicits._
-    Exec.releaseAll(spark) // clean slate
+    Exec.clearPinned(spark) // clean slate
     val edges = (1 to 400)
       .map(i => (i.toLong, 1000L + (i % 60).toLong))
       .toDF("a", "b")
@@ -43,7 +44,7 @@ class ExecReleaseSpec extends SparkSpec {
     Exec.clearPinned(spark)
   }
 
-  test("late-round operators' checkpoints and pins are fully swept by releaseAll") {
+  test("late-round operators' checkpoints and pins are released by clearPinned") {
     import spark.implicits._
     // pcaHead: 1 cell checkpoint + one per power-iteration round;
     // perplexityBuckets: token persist + per-doc checkpoint; bfsLayers:
@@ -58,16 +59,16 @@ class ExecReleaseSpec extends SparkSpec {
     val edges = (1L to 50L).map(i => (i, i + 1)).toDF("a", "b")
     GraphOps.bfsLayers(edges, seedMod = 10L, rounds = 2).collect()
     assert(spark.sparkContext.getPersistentRDDs.nonEmpty,
-      "fixture should have pinned blocks before the sweep")
-    Exec.releaseAll(spark)
+      "fixture should have pinned blocks before the release")
+    Exec.clearPinned(spark)
     val leaked = spark.sparkContext.getPersistentRDDs
     assert(leaked.isEmpty,
-      s"leaked RDD blocks after releaseAll: ids=${leaked.keys.toSeq.sorted}")
+      s"leaked RDD blocks after clearPinned: ids=${leaked.keys.toSeq.sorted}")
   }
 
   test("bench-mode contract: clearPinned alone sweeps un-memoized transient checkpoints") {
     import spark.implicits._
-    Exec.releaseAll(spark) // clean slate
+    Exec.clearPinned(spark) // clean slate
     // every operator family whose per-call localCheckpoint frames outlive the
     // call (the returned query reads them lazily): PCA heads, BFS layers,
     // CC labels, BPE vocab rounds, perplexity per-doc, pageRank degree frames
@@ -88,8 +89,7 @@ class ExecReleaseSpec extends SparkSpec {
     GraphOps.bfsLayers(edges, seedMod = 10L, rounds = 2).collect()
     GraphOps.pageRank(edges, iters = 2).collect()
     GraphOps.degreeAssortativity(edges).collect()
-    // bench-mode between-query cleanup: cacheManager clear + transient drain,
-    // NO releaseAll
+    // bench-mode between-query cleanup: the calling thread's pins only
     Exec.clearPinned(spark)
     val leaked = spark.sparkContext.getPersistentRDDs
     assert(leaked.isEmpty,
@@ -109,14 +109,13 @@ class ExecReleaseSpec extends SparkSpec {
     // returned frame); every superseded round frame and survivor set is gone
     assert(after.size <= 1,
       s"kCore left ${after.size} pinned frames behind: ids=${after.keys.toSeq.sorted}")
-    Exec.releaseAll(spark)
+    Exec.clearPinned(spark)
   }
 
   test("driver gate: measured bytes, row and byte legs at an explicit cap") {
     import spark.implicits._
     // checkpoint-backed frame: block-manager bytes
-    val ck = (1 to 1000).map(i => (i.toLong, i.toLong)).toDF("a", "b")
-      .localCheckpoint()
+    val ck = Exec.checkpoint((1 to 1000).map(i => (i.toLong, i.toLong)).toDF("a", "b"))
     val ckBytes = Exec.measuredBytes(ck)
     assert(ckBytes.exists(_ > 0), s"checkpoint bytes not measured: $ckBytes")
     assert(Exec.collectInternalIfSmall(ck, Exec.DriverLoopRows).map(_.length)
@@ -126,13 +125,13 @@ class ExecReleaseSpec extends SparkSpec {
     // the row cap still vetoes on its own
     assert(Exec.collectInternalIfSmall(ck, 10L).isEmpty)
     // persisted frame: in-memory relation stats
-    val p = (1 to 1000).map(i => (i.toLong, "x" * 50)).toDF("a", "s").persist()
+    val p = Exec.pin((1 to 1000).map(i => (i.toLong, "x" * 50)).toDF("a", "s"))
     p.count()
     val pBytes = Exec.measuredBytes(p)
     assert(pBytes.exists(_ > 0), s"cached bytes not measured: $pBytes")
     assert(Exec.collectInternalIfSmall(p, Exec.DriverLoopRows, maxBytes = 100L).isEmpty)
     p.unpersist()
-    Exec.releaseAll(spark)
+    Exec.clearPinned(spark)
   }
 
   test("driver gate: DriverLoopRows admits a frame above SmallInputRows") {
@@ -170,8 +169,8 @@ class ExecReleaseSpec extends SparkSpec {
       (out, jobs.get)
     }
     // a checkpointed input is read by a job (a local relation is not)
-    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 4L))
-      .toDF("src", "dst").localCheckpoint()
+    val edges = Exec.checkpoint(Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 4L))
+      .toDF("src", "dst"))
     val li = Seq(10.0, 10.0, 10.0, 90.0, 90.0, 90.0).zipWithIndex.map { case (q, i) =>
       ("A", java.sql.Timestamp.valueOf(f"2024-${i + 1}%02d-15 00:00:00"), q)
     }.toDF("l_returnflag", "l_shipdate", "l_quantity")
@@ -195,7 +194,7 @@ class ExecReleaseSpec extends SparkSpec {
       spark.sparkContext.removeSparkListener(listener)
       spark.conf.set("spark.sql.adaptive.enabled", aqe)
     }
-    Exec.releaseAll(spark)
+    Exec.clearPinned(spark)
   }
 
   test("broadcastIfKnownSmall hints only a frame whose bytes are measured") {
@@ -209,15 +208,15 @@ class ExecReleaseSpec extends SparkSpec {
       posexplode(expr("sequence(1, 1000)")).as(Seq("pos", "h"))).select(col("h"))
     assert(!hinted(exploded), "an unmaterialized frame was hinted from its estimate")
     // persisted but not yet computed: its relation stats are still an estimate
-    val p = spark.range(1000).toDF("a").persist()
+    val p = Exec.pin(spark.range(1000).toDF("a"))
     assert(Exec.measuredBytes(p).isEmpty, "a not-yet-computed cache reported bytes")
     assert(!hinted(p), "a not-yet-computed cache was hinted")
     p.count()
     assert(hinted(p), "a small computed cache was not hinted")
     p.unpersist()
     // a small materialized checkpoint is hinted from its block bytes
-    assert(hinted(spark.range(1000).toDF("a").localCheckpoint()))
-    Exec.releaseAll(spark)
+    assert(hinted(Exec.checkpoint(spark.range(1000).toDF("a"))))
+    Exec.clearPinned(spark)
   }
 
   test("collectIfSmall: every row up to the small-input cap, None one row above it") {

@@ -455,10 +455,10 @@ class GraphOpsSpec extends SparkSpec {
     val edges = (k4 ++ chain ++ ring ++ dyad).toDF("a", "b")
     val fast = GraphOps.corenessValues(edges).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    graft.ops.Exec.releaseAll(spark)
+    graft.ops.Exec.clearPinned(spark)
     val slow = Exec.distributedOnly(GraphOps.corenessValues(edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
-    graft.ops.Exec.releaseAll(spark)
+    graft.ops.Exec.clearPinned(spark)
     assert(fast == slow, s"fast=$fast slow=$slow")
   }
 
@@ -472,8 +472,8 @@ class GraphOpsSpec extends SparkSpec {
     // shape's census, so a regression to two actions/round trips them.
     val k4 = for { a <- 0L to 3L; b <- (a + 1) to 3L } yield (a, b)
     val chain = Seq((3L, 4L), (4L, 5L), (5L, 6L), (6L, 7L), (7L, 8L))
-    // NOT checkpointed: the mid-test releaseAll sweep unpersists every
-    // persistent RDD, which would kill a checkpointed fixture
+    // NOT checkpointed: the mid-test clearPinned releases every frame this
+    // thread pinned, which would kill a checkpointed fixture
     val edges = (k4 ++ chain).toDF("a", "b")
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -505,13 +505,13 @@ class GraphOpsSpec extends SparkSpec {
       // + final collect + AQE stage jobs; old shape measured ~3-4x this
       assert(kcoreJobs <= 6 * (rounds + 2),
         s"kCore submitted $kcoreJobs jobs for $rounds rounds")
-      graft.ops.Exec.releaseAll(spark)
+      graft.ops.Exec.clearPinned(spark)
       jobs.set(0)
       Exec.distributedOnly(GraphOps.corenessValues(edges).collect())
       val corenessJobs = settled()
       assert(corenessJobs <= 60,
         s"coreness submitted $corenessJobs jobs")
-      graft.ops.Exec.releaseAll(spark)
+      graft.ops.Exec.clearPinned(spark)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
@@ -598,10 +598,10 @@ class GraphOpsSpec extends SparkSpec {
       .toDF("a", "b")
     val fast = GraphOps.bfsLayers(edges, seedMod = 20L, rounds = 2)
       .collect().map(_.toSeq).toSeq
-    graft.ops.Exec.releaseAll(spark)
+    graft.ops.Exec.clearPinned(spark)
     val slow = Exec.distributedOnly(GraphOps.bfsLayers(edges, seedMod = 20L, rounds = 2)
       .collect().map(_.toSeq).toSeq)
-    graft.ops.Exec.releaseAll(spark)
+    graft.ops.Exec.clearPinned(spark)
     assert(fast == slow, s"fast=$fast slow=$slow")
   }
 
@@ -616,12 +616,12 @@ class GraphOpsSpec extends SparkSpec {
     val g = (clique ++ fringe).toDF("a", "b")
     val (fd, fr) = GraphOps.kTrussWithRounds(g, k = 4, rounds = 3)
     val fast = fd.collect().map(_.toSeq).toSeq
-    graft.ops.Exec.releaseAll(spark)
+    graft.ops.Exec.clearPinned(spark)
     val (slow, sr) = Exec.distributedOnly {
       val (sd, sr) = GraphOps.kTrussWithRounds(g, k = 4, rounds = 3)
       (sd.collect().map(_.toSeq).toSeq, sr)
     }
-    graft.ops.Exec.releaseAll(spark)
+    graft.ops.Exec.clearPinned(spark)
     assert(fast == slow, s"fast=$fast slow=$slow")
     assert(fr == sr, s"rounds: $fr vs $sr")
   }
@@ -634,10 +634,10 @@ class GraphOpsSpec extends SparkSpec {
       .toDF("a", "b")
     val fast = GraphOps.hyperballHarmonic(und).collect()
       .map(_.toSeq).toSeq
-    graft.ops.Exec.releaseAll(spark)
+    graft.ops.Exec.clearPinned(spark)
     val slow = Exec.distributedOnly(GraphOps.hyperballHarmonic(und)
       .collect().map(_.toSeq).toSeq)
-    graft.ops.Exec.releaseAll(spark)
+    graft.ops.Exec.clearPinned(spark)
     assert(fast == slow, s"fast=$fast slow=$slow")
   }
 
@@ -651,7 +651,7 @@ class GraphOpsSpec extends SparkSpec {
       .toDF("a", "b")
     def run(f: => org.apache.spark.sql.DataFrame): Seq[(Long, Double)] = {
       val r = f.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      graft.ops.Exec.releaseAll(spark); r
+      graft.ops.Exec.clearPinned(spark); r
     }
     val prFast = run(GraphOps.pageRank(edges, topK = 20))
     val prSlow = Exec.distributedOnly(run(GraphOps.pageRank(edges, topK = 20)))
@@ -672,10 +672,10 @@ class GraphOpsSpec extends SparkSpec {
       .toDF("a", "b")
     val fast = GraphOps.randomWalkCensusEdges(und, walkLen = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    graft.ops.Exec.releaseAll(spark)
+    graft.ops.Exec.clearPinned(spark)
     val slow = Exec.distributedOnly(GraphOps.randomWalkCensusEdges(und, walkLen = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq)
-    graft.ops.Exec.releaseAll(spark)
+    graft.ops.Exec.clearPinned(spark)
     assert(fast == slow, s"fast=$fast slow=$slow")
   }
 
@@ -702,11 +702,11 @@ class GraphOpsSpec extends SparkSpec {
       .toDF("a", "b")
     val fast = GraphOps.betweennessBounded(edges).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
-    graft.ops.Exec.releaseAll(spark)
+    graft.ops.Exec.clearPinned(spark)
     val slow = Exec.distributedOnly(GraphOps.betweennessBounded(edges)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq)
-    graft.ops.Exec.releaseAll(spark)
+    graft.ops.Exec.clearPinned(spark)
     assert(fast == slow, s"fast=$fast slow=$slow")
   }
 
@@ -719,11 +719,11 @@ class GraphOpsSpec extends SparkSpec {
       .toDF("l_orderkey", "l_partkey")
     val fast = GraphOps.hitsBounded(li, n = 10).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
-    graft.ops.Exec.releaseAll(spark)
+    graft.ops.Exec.clearPinned(spark)
     val slow = Exec.distributedOnly(GraphOps.hitsBounded(li, n = 10)
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sorted.toSeq)
-    graft.ops.Exec.releaseAll(spark)
+    graft.ops.Exec.clearPinned(spark)
     assert(fast == slow, s"fast=$fast slow=$slow")
   }
 

@@ -633,10 +633,10 @@ class TextOpsSpec extends SparkSpec {
       (4L, "mauve red blue mauve")).toDF("doc_id", "text")
     val fast = TextOps.textrankKeywords(docs).collect()
       .map(r => (r.getString(0), r.getDouble(1))).toSeq
-    graft.ops.Exec.releaseAll(spark)
+    graft.ops.Exec.clearPinned(spark)
     val slow = Exec.distributedOnly(TextOps.textrankKeywords(docs).collect()
       .map(r => (r.getString(0), r.getDouble(1))).toSeq)
-    graft.ops.Exec.releaseAll(spark)
+    graft.ops.Exec.clearPinned(spark)
     assert(fast == slow, s"fast=$fast slow=$slow")
   }
 
@@ -650,7 +650,7 @@ class TextOpsSpec extends SparkSpec {
     def norm(rs: Array[org.apache.spark.sql.Row]): Seq[Seq[Any]] =
       rs.map(r => (0 until r.length)
         .map(i => if (r.isNullAt(i)) null else r.get(i))).toSeq
-    graft.ops.Exec.releaseAll(spark)
+    graft.ops.Exec.clearPinned(spark)
     val runs: Seq[(String, () => Array[org.apache.spark.sql.Row])] = Seq(
       ("tokenFrequency", () => TextOps.tokenFrequency(docs, 5).collect()),
       ("heavyHitters", () => TextOps.heavyHitters(docs, 10.0).collect()),
