@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale-graduation data generator: inflates a driver SF directory by an
@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * × 10). Not part of the shipped library — harness-side evidence tooling.
   *
   * Replication discipline:
-  *  - every table key is shifted by `copy * 10_000_000`, one consistent
+  *  - every table key is shifted by `copy * KeyOffset`, one consistent
   *    offset per copy, so copy c's orders reference copy c's customers and
   *    the fact/dim ratios stay exactly proportional;
   *  - region/nation are fixed dimensions and are NOT replicated (as in
@@ -27,7 +27,15 @@ import org.apache.spark.sql.functions._
   *   sbt "runMain graft.GenScale <srcSfDir> <outDir> [factor]"
   */
 object GenScale {
-  private val Off = 10000000L // > every sf0.1 key (max observed 149_999)
+  /** Per-copy key offset. Above every sf0.1 key (max 149,999), so copies
+    * never collide; and prime, so no key modulus (the graph family's
+    * `lineitemEdges(_, 2000)`) folds every copy onto copy 0's residues and
+    * sees the same edge set at every factor.
+    */
+  private[graft] val KeyOffset = 10000019L
+
+  /** Key column `c` of the copy numbered by the replication column `id`. */
+  private[graft] def shift(c: String): Column = col(c) + col("id") * KeyOffset
 
   def main(args: Array[String]): Unit = {
     val srcDir = args(0)
@@ -48,8 +56,6 @@ object GenScale {
     // cross join against a `factor`-row range: `id` is the copy number
     def replicate(df: DataFrame): DataFrame =
       spark.range(factor).crossJoin(df)
-    def shift(c: String): org.apache.spark.sql.Column =
-      col(c) + col("id") * Off
 
     val keepSlice = col("doc_id") % 20 === 0
 

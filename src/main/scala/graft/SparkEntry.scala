@@ -4290,12 +4290,12 @@ object SparkEntry {
              |        SELECT event_id, event_type FROM events WHERE event_id % 7 = 0))
              |GROUP BY event_type ORDER BY event_type""".stripMargin)),
 
-    // batch twin of the streaming touch-state processor (r15 verdict item
-    // 5): per-user OR-fold of touch bits + converted flag — the latest
-    // emission per user after the stream drains, pinned stream==batch by
-    // EventStreamSpec — rolled into the (mask, conv) histogram
+    // per-user OR-fold of touch bits + converted flag rolled into the
+    // (mask, conv) histogram — the user-collapse stage of
+    // ev_shapley_attribution, whose exact Shapley values EventOpsSpec folds
+    // back from this histogram
     Q("ev_touch_census",
-      (s, d) => graft.stream.EventStream.touchCensus(events(s, d)),
+      (s, d) => EventOps.touchCensus(events(s, d)),
       Some("""SELECT mask, conv, count(*) AS n_users
              |FROM (
              |  SELECT user_id,
@@ -4440,8 +4440,7 @@ object SparkEntry {
              |    / 10000 AS shapley
              |FROM ph ORDER BY channel""".stripMargin)),
 
-    // batch twin of the stream-stream interval join (EventStream
-    // .viewClickAttribution): clicks within 30min after a view, per user —
+    // interval join: clicks within 30min after a view, per user —
     // compared on exact ns timestamps so the interval boundary is tie-free
     Q("ev_attribution",
       (s, d) => {
@@ -9599,15 +9598,13 @@ object SparkEntry {
               |    AS imbalance
               |FROM sizes, tot ORDER BY cell""".stripMargin)),
 
-    // batch twin of the streaming IVF maintenance loop (r15 verdict item
-    // 5): cells frozen on the corpus (vec_id % 10 <> 0), corpus + batch
-    // assigned to them, census anchored on ALL frozen cells (a zero-hit
-    // cell still counts toward n_cells). IvfStreamSpec pins stream ==
-    // one-shot; this puts the same semantics under the DuckDB hash gate.
+    // IVF maintenance census: cells frozen on the corpus (vec_id % 10 <> 0),
+    // corpus + batch assigned to them, census anchored on ALL frozen cells
+    // (a zero-hit cell still counts toward n_cells)
     Q("vec_ivf_stream_census",
       (s, d) => {
         val emb = embeddings(s, d)
-        graft.stream.IvfStream.batchCensus(
+        VectorOps.ivfFrozenCensus(
           emb.filter(col("vec_id") % 10 =!= 0),
           emb.filter(col("vec_id") % 10 === 0))
       },

@@ -140,7 +140,7 @@ object HdrSketch {
     if (edge < (1L << (M + 1))) 1L
     else 1L << (64 - java.lang.Long.numberOfLeadingZeros(edge) - (M + 1))
 
-  def fromExprs(exprs: Seq[Expression]): Expression = {
+  private def fromExprs(exprs: Seq[Expression]): Expression = {
     if (exprs.length != 1)
       throw new IllegalArgumentException(
         s"hdr_sketch(value) takes exactly 1 argument, got ${exprs.length}")

@@ -142,9 +142,8 @@ case class MisraGries(child: Expression, k: Int,
 }
 
 object MisraGries {
-  /** Build from raw argument expressions with validated k (shared by
-    * [[register]] and the GraftExtensions injection). */
-  def fromExprs(exprs: Seq[Expression]): Expression = {
+  /** Build from raw argument expressions with validated k. */
+  private def fromExprs(exprs: Seq[Expression]): Expression = {
     if (exprs.length != 2)
       throw new IllegalArgumentException(
         s"misra_gries(key, k) takes exactly 2 arguments, got ${exprs.length}")

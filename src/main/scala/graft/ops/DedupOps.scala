@@ -21,17 +21,13 @@ import graft.functions.SimHash61
   */
 object DedupOps {
 
-  /** 3-token shingle set (distinct) of the normalized text. Empty when the
-    * document has fewer than `n` tokens.
-    */
-  def shingles(text: Column, n: Int = 3): Column =
-    shinglesFromTokens(TextOps.tokens(text), n)
-
-  /** Shingles from an ALREADY-MATERIALIZED token array column. Callers on a
-    * hot path must bind tokens to a real column first (`withColumn("toks",
-    * TextOps.tokens(...))`): expressions captured inside a higher-order
-    * lambda are inlined into its body, so passing the raw tokenizer
-    * expression here would re-run regexp+split once per shingle.
+  /** `n`-token shingle set (distinct) of an ALREADY-MATERIALIZED token
+    * array column; empty when the document has fewer than `n` tokens.
+    * Callers on a hot path must bind tokens to a real column first
+    * (`withColumn("toks", TextOps.tokens(...))`): expressions captured
+    * inside a higher-order lambda are inlined into its body, so passing the
+    * raw tokenizer expression here would re-run regexp+split once per
+    * shingle.
     */
   def shinglesFromTokens(toks: Column, n: Int = 3): Column = {
     val sh = transform(
@@ -949,11 +945,11 @@ object DedupOps {
     * check joins 61-bit content keys, never text. Everything is linear in
     * corpus + batch rows.
     */
-  /** Per-doc, per-hash-function bit positions of the Bloom filter —
-    * shared by [[bloomDedupGate]] and the streaming
-    * [[graft.stream.BloomStream]] twin so both sides hash identically. */
-  private[graft] def bloomPositions(docs: DataFrame, mBits: Int,
-                                    k: Int): DataFrame = {
+  /** Per-doc, per-hash-function bit positions of the Bloom filter — shared
+    * by the corpus and the batch side of [[bloomDedupGate]] so both hash
+    * identically. */
+  private def bloomPositions(docs: DataFrame, mBits: Int,
+                             k: Int): DataFrame = {
     graft.functions.MinHashFunctions.register(docs.sparkSession)
     val bitCols = (0 until k).map(i =>
       expr(s"hash61(concat('$i:', text)) % $mBits").as(s"p$i"))
@@ -963,7 +959,7 @@ object DedupOps {
   }
 
   /** 61-bit content keys (the dedup_exact fingerprint family). */
-  private[graft] def bloomKeys(docs: DataFrame): DataFrame = {
+  private def bloomKeys(docs: DataFrame): DataFrame = {
     graft.functions.MinHashFunctions.register(docs.sparkSession)
     docs.select(col("doc_id"), expr("hash61(text)").as("h"))
   }
@@ -971,10 +967,10 @@ object DedupOps {
   /** Judge one batch against a standing bit set + key set: per doc, does
     * it pass the Bloom gate (all k bits set) and is it a TRUE duplicate
     * (content key present). Returns (doc_id, pass, dup) — the row-level
-    * form [[bloomDedupGate]] aggregates and the stream twin persists. */
-  private[graft] def bloomJudge(bits: DataFrame, keys: DataFrame,
-                                batch: DataFrame, mBits: Int,
-                                k: Int): DataFrame = {
+    * form [[bloomDedupGate]] aggregates. */
+  private def bloomJudge(bits: DataFrame, keys: DataFrame,
+                         batch: DataFrame, mBits: Int,
+                         k: Int): DataFrame = {
     val gate = bloomPositions(batch, mBits, k)
       // bounded: ≤ mBits distinct rows by construction — broadcastable at
       // any corpus size, which is the whole point of a Bloom gate

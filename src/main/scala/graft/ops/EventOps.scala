@@ -6,9 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** Event-stream operators over the driver's `events` table (SURVEY.md §2.10,
   * §2.12): JSON property extraction, tumbling/sliding event-time windows,
-  * gap-based sessionization, and exact dedup. These are the batch-mode
-  * semantics; `graft.stream.EventStream` runs the same logic under Structured
-  * Streaming with watermarks.
+  * gap-based sessionization, and exact dedup.
   *
   * `events.ts` is nanosecond-precision in parquet and Spark truncates to µs,
   * so every time output is emitted as a formatted string of a `date_trunc`
@@ -1832,6 +1830,28 @@ object EventOps {
             / 100.0 * 1000000 + 0.5) / 1000000).as("naive_diff"))
   }
 
+  /** Per user: the touch channels OR-folded into a bit mask (view 1,
+    * click 2, signup 4, error 8) and a converted flag (any purchase). One
+    * shuffle on user_id with map-side combine (bit_or and max are both
+    * partial-aggregable).
+    */
+  private def userTouches(events: DataFrame): DataFrame =
+    events.groupBy(col("user_id")).agg(
+      expr("bit_or(CASE event_type WHEN 'view' THEN 1 WHEN 'click' THEN 2 " +
+        "WHEN 'signup' THEN 4 WHEN 'error' THEN 8 ELSE 0 END)").as("mask"),
+      max(when(col("event_type") === "purchase", 1).otherwise(0)).as("conv"))
+
+  /** Touch census: the [[userTouches]] collapse rolled into a (mask, conv)
+    * histogram of user counts, at most 32 cells. The collapse is the first
+    * stage of [[shapleyAttribution]], so the exact Shapley values fold from
+    * this histogram alone (EventOpsSpec checks the equality).
+    */
+  def touchCensus(events: DataFrame): DataFrame =
+    userTouches(events)
+      .groupBy(col("mask"), col("conv"))
+      .agg(count(lit(1)).as("n_users"))
+      .orderBy(col("mask"), col("conv"))
+
   /** EXACT Shapley-value channel attribution — the coalition-game member
     * of the attribution family ([[viewClickAttribution]] is last-touch;
     * [[markovChain]] is removal-effect): with the four touch channels
@@ -1844,18 +1864,14 @@ object EventOps {
     * and cross-engine equality is bitwise by construction. Efficiency
     * axiom Σφ = v(N) − v(∅) rides along as the audit identity in the spec.
     *
-    * Scale shape: one groupBy collapses the event log to per-user
+    * Scale shape: [[userTouches]] collapses the event log to per-user
     * (mask, converted) — the only data-sized exchange; everything after
     * lives on the 16-row subset lattice and the 4-row player set (tiny
     * broadcast crosses, the accepted tiny-frame-stats shape).
     */
   def shapleyAttribution(ev: DataFrame): DataFrame = {
     val spark = ev.sparkSession
-    val users = ev.groupBy(col("user_id")).agg(
-      expr("bit_or(CASE event_type WHEN 'view' THEN 1 WHEN 'click' THEN 2 " +
-        "WHEN 'signup' THEN 4 WHEN 'error' THEN 8 ELSE 0 END)").as("mask"),
-      max(when(col("event_type") === "purchase", 1).otherwise(0)).as("conv"))
-    val convByMask = users.filter(col("conv") === 1)
+    val convByMask = userTouches(ev).filter(col("conv") === 1)
       .groupBy(col("mask")).agg(count(lit(1)).as("c"))
     val sets = spark.range(16).select(col("id").as("s"))
     val v = sets.join(broadcast(convByMask),

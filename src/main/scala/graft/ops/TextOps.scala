@@ -124,9 +124,9 @@ object TextOps {
     * threshold — so the full pass stays one shuffle on the token key and the
     * output is bounded by 100/φ rows REGARDLESS of corpus size (the property
     * that makes the support threshold, unlike a raw top-k, safe to compute
-    * distributed: no global sort, no skew on the limit). The streaming twin
-    * (Misra–Gries within partitions, merged) trades exactness for one pass;
-    * this is the exact batch form.
+    * distributed: no global sort, no skew on the limit). The `misra_gries`
+    * aggregate (Misra–Gries within partitions, merged) trades exactness for
+    * one pass; this is the exact form.
     * Building the frame runs the [[sourceTokenCounts]] checkpoint job.
     */
   def heavyHitters(docs: DataFrame, supportPct: Double): DataFrame = {

@@ -1433,13 +1433,12 @@ object TimeSeriesOps {
       .orderBy(col("priority"), col("t"))
   }
 
-  /** The generic Kalman recursion core shared by [[kalmanFilter]] and the
-    * streaming twin's batch-equivalence spec: input (g, t, x) rows with t a
-    * 1-based per-key rank; output (g, t, l, k) raw (unquantized) doubles —
-    * the SAME left-to-right IEEE sequence the streaming processor replays
-    * per event, so the two are comparable BITWISE, not by tolerance.
+  /** The generic Kalman recursion core of [[kalmanFilter]]: input (g, t, x)
+    * rows with t a 1-based per-key rank; output (g, t, l, k) raw
+    * (unquantized) doubles, folded in one left-to-right IEEE sequence per
+    * key.
     */
-  def kalmanStates(seq: DataFrame, maxLen: Int = 512): DataFrame = {
+  private def kalmanStates(seq: DataFrame, maxLen: Int = 512): DataFrame = {
     // series collapsed to ONE ordered array per key (bounded by the
     // calendar: ≤ maxLen months — guarded like holtState's len fuse)
     seq

@@ -453,12 +453,6 @@ object VectorOps {
     Seq.fill(nPlanes)(Seq.fill(dim)(if (((next() >>> 32) & 1L) == 1L) 1.0 else -1.0))
   }
 
-  /** LSH bucket id: sign bit per hyperplane, packed into a long. */
-  def lshBucket(emb: Column, planes: Seq[Seq[Double]]): Column =
-    planes.zipWithIndex.map { case (p, b) =>
-      when(dot(emb, typedLit(p)) > 0, lit(1L << b)).otherwise(lit(0L))
-    }.reduce(_ + _)
-
   /** Maximum-inner-product top-k (MIPS — the retrieval scoring used when
     * embeddings are trained unnormalized): same broadcast-queries /
     * stream-corpus shape as [[knnBruteForce]], but ranked on the raw dot
@@ -601,6 +595,61 @@ object VectorOps {
       .agg(min(struct(col("dist"), col("cell"))).as("mc"))
       .select(col("mc.cell").as("cell"))
     val sizes = assign.groupBy(col("cell")).agg(count(lit(1)).as("n"))
+    val tot = sizes.agg(sum(col("n")).as("total"),
+      count(lit(1)).as("n_cells"), max(col("n")).as("max_n"))
+    sizes.crossJoin(broadcast(tot))
+      .select(col("cell"), col("n"),
+        q4(col("n").cast("double") * col("n_cells") / col("total"))
+          .as("load_factor"),
+        q4(col("max_n").cast("double") * col("n_cells") / col("total"))
+          .as("imbalance"))
+      .orderBy(col("cell"))
+  }
+
+  /** IVF index-maintenance census: the coarse quantizer is FROZEN on
+    * `corpus` (its per-label centroid arrays, as production IVF retrains
+    * cells offline and ingest only assigns), corpus ∪ `batch` is assigned
+    * to the frozen cells, and the [[ivfBalance]] readout is taken over that
+    * assignment — anchored on EVERY frozen cell, so a cell that received no
+    * vector still counts toward n_cells instead of hiding the drift the
+    * census exists to warn about. One broadcast of the cells-sized centroid
+    * table; vector arrays never shuffle.
+    */
+  def ivfFrozenCensus(corpus: DataFrame, batch: DataFrame): DataFrame = {
+    val cells = centroidArrays(corpus).withColumnRenamed("c_label", "cell")
+    val assigned = assignToCells(
+      corpus.select(col("vec_id"), col("embedding"))
+        .unionByName(batch.select(col("vec_id"), col("embedding"))),
+      cells)
+    censusOf(cells, assigned.groupBy(col("cell")).agg(count(lit(1)).as("dn")))
+  }
+
+  /** Nearest-frozen-centroid assignment: broadcast the cells-sized
+    * centroid table, fold the quantized sq-L2 argmin per row (aggregate
+    * argmin via min(struct) — map-side combine, one narrow row per
+    * vector in the exchange, ties to the lowest cell id).
+    */
+  private def assignToCells(vecs: DataFrame, cells: DataFrame): DataFrame = {
+    graft.functions.SqL2.register(vecs.sparkSession)
+    vecs.select(col("vec_id"),
+        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
+      .crossJoin(broadcast(cells))
+      .withColumn("dist",
+        floor(call_function("sq_l2", col("v"), col("cvec")) * 1000000 + 0.5)
+          / 1000000)
+      .groupBy(col("vec_id"))
+      .agg(min(struct(col("dist"), col("cell"))).as("mc"))
+      .select(col("vec_id"), col("mc.cell").as("cell"))
+  }
+
+  /** Per-cell population, load factor and global imbalance over ALL of
+    * `allCells`, from per-cell counts `dn` (cells absent from `counts` read
+    * 0).
+    */
+  private def censusOf(allCells: DataFrame, counts: DataFrame): DataFrame = {
+    val sizes = allCells.select(col("cell"))
+      .join(counts, Seq("cell"), "left")
+      .select(col("cell"), coalesce(col("dn"), lit(0L)).as("n"))
     val tot = sizes.agg(sum(col("n")).as("total"),
       count(lit(1)).as("n_cells"), max(col("n")).as("max_n"))
     sizes.crossJoin(broadcast(tot))

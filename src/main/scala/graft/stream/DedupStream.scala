@@ -4,14 +4,13 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType,
   StringType, StructField, StructType}
 
 import graft.functions.IntersectCount
 import graft.ops.{DedupOps, Exec, TextOps}
 
-/** Streaming incremental near-duplicate detection — the CONTINUOUS-ingest
+/** Micro-batched incremental near-duplicate detection — the CONTINUOUS-ingest
   * form of [[graft.ops.DedupOps.incrementalMinhashPairs]]: micro-batches of
   * new documents probe a GROWING on-disk LSH index (seeded from the
   * standing corpus), emit verified near-dup pairs for everything ingested
@@ -19,16 +18,15 @@ import graft.ops.{DedupOps, Exec, TextOps}
   * production pipeline runs between the daily-batch and the
   * per-event extremes.
   *
-  * Exactly-once contract (the idempotentHourlySink discipline): every
-  * micro-batch writes its pair output and its index contribution (bands,
-  * then sets) to the leaf directories `…/src_batch=<id>` in overwrite mode,
-  * and the probe EXCLUDES the current batch id from the index read. An
-  * overwrite deletes its leaf when the write starts and fills it when the
-  * job commits, so a crash leaves each of the batch's three partitions
-  * whole, absent, or holding only the hidden `_temporary` files readers
-  * skip; replaying the batch (Structured Streaming does, because its
-  * checkpoint commit never happened) REPLACES all three and never
-  * double-pairs against its own half-written index rows.
+  * Exactly-once contract: every micro-batch writes its pair output and its
+  * index contribution (bands, then sets) to the leaf directories
+  * `…/src_batch=<id>` in overwrite mode, and the probe EXCLUDES the current
+  * batch id from the index read. An overwrite deletes its leaf when the
+  * write starts and fills it when the job commits, so a crash leaves each
+  * of the batch's three partitions whole, absent, or holding only the
+  * hidden `_temporary` files readers skip; replaying the batch (as a caller
+  * does when its own commit of the batch never happened) REPLACES all three
+  * and never double-pairs against its own half-written index rows.
   *
   * Pair-uniqueness invariant: a pair is emitted exactly once, by the LATER
   * of its two documents' batches (corpus rows live in the seed partition
@@ -88,7 +86,7 @@ object DedupStream {
       .drop("src_batch")
 
   /** Seed the index directories with the standing corpus (partition
-    * `src_batch=-1`) — run once before the stream starts; linear in the
+    * `src_batch=-1`) — run once before the first batch; linear in the
     * corpus, the one-time cost every incremental scheme pays.
     */
   def seedIndex(corpus: DataFrame, indexDir: String,
@@ -255,20 +253,4 @@ object DedupStream {
 
   private def local(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-
-  /** Wire a streaming `docs` source (doc_id, text) into the incremental
-    * dedup loop. Seed the index from the corpus first.
-    */
-  def run(docs: DataFrame, indexDir: String, outDir: String,
-          checkpoint: String, k: Int = 32, bands: Int = 8,
-          threshold: Double = 0.5): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        // the batch runs on the stream's thread: release its pins there,
-        // also when it throws
-        try processBatch(batch, batchId, indexDir, outDir, k, bands, threshold)
-        finally Exec.clearPinned(batch.sparkSession)
-      }
-      .start()
 }

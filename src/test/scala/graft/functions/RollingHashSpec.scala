@@ -58,4 +58,39 @@ class RollingHashSpec extends SparkSpec {
       ((BigInt(RollingHash.M) - 1) * (BigInt(RollingHash.M) - 1))
         .mod(BigInt(RollingHash.M)).toLong)
   }
+
+  test("codegen'd kernels compile under CODEGEN_ONLY (no silent interpreter fallback)") {
+    // only the scalar per-pair kernels carry doGenCode — the array kernels
+    // stay CodegenFallback by measurement (see CODEGEN NOTE in MinHash.scala)
+    graft.functions.CosineSim.register(spark)
+    graft.functions.SqL2.register(spark)
+    graft.functions.DotProduct.register(spark)
+    graft.functions.MinHashFunctions.register(spark)
+    val prev = spark.conf.getOption("spark.sql.codegen.factoryMode")
+    // CODEGEN_ONLY turns a broken doGenCode into a hard failure instead of
+    // a quiet (and slower) interpreted fallback
+    spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+    try {
+      // spark.range keeps this off the constant-folding / LocalRelation
+      // path, so the expressions really evaluate inside generated code
+      graft.functions.RollingHash.register(spark)
+      val r = spark.range(1, 4).selectExpr(
+        "cosine_sim(array(CAST(id AS DOUBLE), 1.0D), array(CAST(id AS DOUBLE), 1.0D)) AS c",
+        "sq_l2(array(CAST(id AS DOUBLE)), array(CAST(id AS DOUBLE) + 3.0D)) AS d2",
+        "sorted_intersect_count(array(id, id + 2), array(id + 2, id + 4)) AS i",
+        "dot_product(array(CAST(id AS DOUBLE), 3.0D), array(0.0D, 2.0D)) AS dp",
+        "size(rolling_hashes(concat('abcdef', CAST(id AS STRING)), 3)) AS rh")
+        .collect()
+      assert(r.forall(row => math.abs(row.getDouble(0) - 1.0) < 1e-12))
+      assert(r.forall(_.getDouble(1) == 9.0))
+      assert(r.forall(_.getInt(2) == 1))
+      assert(r.forall(_.getDouble(3) == 6.0))
+      assert(r.forall(_.getInt(4) == 5))
+    } finally {
+      prev match {
+        case Some(v) => spark.conf.set("spark.sql.codegen.factoryMode", v)
+        case None => spark.conf.unset("spark.sql.codegen.factoryMode")
+      }
+    }
+  }
 }

@@ -12,7 +12,9 @@ class DedupOpsSpec extends SparkSpec {
 
   test("shingles: distinct 3-gram set; short docs yield empty") {
     val df = Seq((1L, "a b c d"), (2L, "a b"), (3L, "x x x x x")).toDF("doc_id", "text")
-    val got = df.select(col("doc_id"), DedupOps.shingles(col("text")).as("sh"))
+    val got = df
+      .select(col("doc_id"),
+        DedupOps.shinglesFromTokens(TextOps.tokens(col("text"))).as("sh"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1).sorted.toSeq).toMap
     assert(got(1L) == Seq("a b c", "b c d"))
     assert(got(2L) == Seq())
@@ -29,7 +31,7 @@ class DedupOpsSpec extends SparkSpec {
   test("MinHash-LSH finds all near-dup pairs that brute-force Jaccard finds") {
     // brute force over all pairs (500 docs -> 125k pairs, fine at sf0.001)
     val base = docs
-      .withColumn("sh", DedupOps.shingles(col("text")))
+      .withColumn("sh", DedupOps.shinglesFromTokens(TextOps.tokens(col("text"))))
       .filter(size(col("sh")) > 0)
       .select(col("doc_id"), col("sh"))
     val a = base.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"))

@@ -621,4 +621,39 @@ class EventOpsSpec extends SparkSpec {
     val byCh = got.map(t => t._1 -> t._2).toMap
     assert(byCh("view") > byCh("error"))
   }
+
+  test("touch census: the (mask, conv) histogram folds back to the exact Shapley values; " +
+    "replayed touches change nothing") {
+    import spark.implicits._
+    val b1 = Seq((1L, "view"), (2L, "view"), (3L, "click"), (4L, "signup"))
+    val b2 = Seq((1L, "click"), (1L, "purchase"), (2L, "purchase"),
+      (5L, "purchase"), (4L, "error"))
+    // the replayed batch repeats already-seen touches verbatim
+    val replay = Seq((1L, "view"), (2L, "purchase"), (3L, "click"))
+    val b4 = Seq((3L, "purchase"), (4L, "purchase"))
+    def census(ev: Seq[(Long, String)]): Map[(Int, Int), Long] =
+      EventOps.touchCensus(ev.toDF("user_id", "event_type")).collect()
+        .map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
+    val all = b1 ++ b2 ++ replay ++ b4
+    val hist = census(all)
+    // per user: 1 view|click, 2 view, 3 click, 4 signup|error, 5 none —
+    // every one converted
+    assert(hist == Map((3, 1) -> 1L, (1, 1) -> 1L, (2, 1) -> 1L, (12, 1) -> 1L,
+      (0, 1) -> 1L), s"census $hist")
+    assert(census(b1 ++ b2 ++ b4) == hist, "the replayed touches changed the census")
+    // exact Shapley x24 from the histogram alone (weighted-subset form)
+    def v(s: Int): Long = hist.collect { case ((m, 1), n) if (m & s) == m => n }.sum
+    def w24(sz: Int) = if (sz == 0 || sz == 3) 6 else 2
+    val phiFromCensus = (0 until 4).map { cbit =>
+      cbit -> (0 until 16).filter(s => ((s >> cbit) & 1) == 0)
+        .map(s => w24(Integer.bitCount(s)) * (v(s | (1 << cbit)) - v(s))).sum
+    }.toMap
+    val shapley = EventOps.shapleyAttribution(all.toDF("user_id", "event_type"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val nameBit = Map("view" -> 0, "click" -> 1, "signup" -> 2, "error" -> 3)
+    nameBit.foreach { case (ch, bit) =>
+      assert(shapley(ch) == phiFromCensus(bit),
+        s"$ch: shapleyAttribution ${shapley(ch)} vs census ${phiFromCensus(bit)}")
+    }
+  }
 }

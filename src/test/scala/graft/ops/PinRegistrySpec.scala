@@ -119,31 +119,6 @@ class PinRegistrySpec extends SparkSpec {
     assert(spark.sharedState.cacheManager.isEmpty, "cached plans left after clearPinned")
   }
 
-  test("a streamed batch that throws releases its pins on the stream's thread") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    Exec.clearPinned(spark)
-    val corpus = (1L to 20L).map(i => (i, s"w${i % 5} x${i % 3} shared words $i"))
-      .toDF("doc_id", "text")
-    val tmp = tempDir("pin-bloom")
-    val index = tmp.resolve("index").toString
-    graft.stream.BloomStream.seedIndex(corpus, index)
-    // the output directory is a plain file: the batch pins its judged
-    // frame, then fails writing it
-    Files.write(tmp.resolve("out"), Array[Byte](1))
-    val mem = MemoryStream[(Long, String)]
-    val q = graft.stream.BloomStream.run(mem.toDF().toDF("doc_id", "text"), index,
-      tmp.resolve("out").toString, tmp.resolve("ckpt").toString)
-    try {
-      mem.addData(Seq((100L, "w1 x2 shared words 100"), (101L, "fresh text entirely")))
-      intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.processAllAvailable())
-    } finally q.stop()
-    // no clearPinned on this thread: the stream's own thread released them
-    assert(persistentIds.isEmpty, s"blocks left by the failed batch: ${persistentIds.toSeq.sorted}")
-    assert(spark.sharedState.cacheManager.isEmpty, "cached plans left by the failed batch")
-  }
-
   test("main code pins frames only through Exec.pin and Exec.checkpoint") {
     val root = Paths.get("src/main/scala")
     val pinCall = """\.(persist\(|cache\(\)|localCheckpoint\(|checkpoint\()""".r

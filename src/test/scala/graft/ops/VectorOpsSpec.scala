@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -7,6 +8,15 @@ class VectorOpsSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
   private lazy val emb = graft.Tables.embeddings(spark, sfDir)
+
+  /** Reference LSH bucket id, one higher-order fold per hyperplane: the
+    * sign bit per plane, packed into a long. The native `lsh_buckets`
+    * kernel must reproduce it.
+    */
+  private def lshBucket(emb: Column, planes: Seq[Seq[Double]]): Column =
+    planes.zipWithIndex.map { case (p, b) =>
+      when(VectorOps.dot(emb, typedLit(p)) > 0, lit(1L << b)).otherwise(lit(0L))
+    }.reduce(_ + _)
 
   test("dot/cosine: unit vectors have norm ~1 and self-cosine 1") {
     import spark.implicits._
@@ -51,9 +61,9 @@ class VectorOpsSpec extends SparkSpec {
 
   test("LSH bucketing is deterministic") {
     val planes = VectorOps.hyperplanes()
-    val b1 = emb.withColumn("b", VectorOps.lshBucket(col("embedding"), planes))
+    val b1 = emb.withColumn("b", lshBucket(col("embedding"), planes))
       .select("vec_id", "b").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val b2 = emb.withColumn("b", VectorOps.lshBucket(col("embedding"), planes))
+    val b2 = emb.withColumn("b", lshBucket(col("embedding"), planes))
       .select("vec_id", "b").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(b1 == b2)
     assert(b1.values.toSet.size > 1, "all vectors in one bucket: hyperplanes broken")
@@ -202,7 +212,7 @@ class VectorOpsSpec extends SparkSpec {
     val planes = VectorOps.hyperplanes(nTables * ppt)
     graft.functions.LshBuckets.register(spark, planes.map(_.toArray).toArray, ppt)
     val hofCols = (0 until nTables).map { t =>
-      VectorOps.lshBucket(col("embedding"), planes.slice(t * ppt, (t + 1) * ppt)).as(s"h$t")
+      lshBucket(col("embedding"), planes.slice(t * ppt, (t + 1) * ppt)).as(s"h$t")
     }
     val rows = emb
       .select(col("vec_id") +: call_function("lsh_buckets", col("embedding")).as("nb") +: hofCols: _*)
@@ -213,6 +223,29 @@ class VectorOpsSpec extends SparkSpec {
         assert(native(t) == r.getAs[Long](s"h$t"), s"vec ${r.getLong(0)} table $t")
       }
     }
+  }
+
+  test("frozen IVF census: the batch joins the corpus cells, a zero-hit cell still counts") {
+    import spark.implicits._
+    // label 0 (centroid (0,0)) and label 1 ((10,0)) take their own vectors;
+    // label 2's two vectors sit on the other centroids, so its centroid
+    // (5,0) draws no corpus vector
+    val corpus = Seq(
+      (1L, Seq(0f, 1f), 0), (2L, Seq(0f, -1f), 0),
+      (3L, Seq(10f, 1f), 1), (4L, Seq(10f, -1f), 1),
+      (5L, Seq(0f, 0f), 2), (6L, Seq(10f, 0f), 2))
+      .toDF("vec_id", "embedding", "label")
+    def census(batch: Seq[(Long, Seq[Float])]) =
+      VectorOps.ivfFrozenCensus(corpus, batch.toDF("vec_id", "embedding"))
+        .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
+        .toSeq
+    def q4(x: Double) = math.floor(x * 10000 + 0.5) / 10000
+    assert(census(Nil) == Seq((0, 3L, 1.5, 1.5), (1, 3L, 1.5, 1.5), (2, 0L, 0.0, 1.5)))
+    // a batch vector near (5,0) lands in the frozen cell 2; the cells are
+    // not retrained on the batch
+    assert(census(Seq(7L -> Seq(5f, 0.1f))) == Seq(
+      (0, 3L, q4(9.0 / 7), q4(9.0 / 7)), (1, 3L, q4(9.0 / 7), q4(9.0 / 7)),
+      (2, 1L, q4(3.0 / 7), q4(9.0 / 7))))
   }
 
   test("centroid drift: parity halves average separately, gap per dimension") {

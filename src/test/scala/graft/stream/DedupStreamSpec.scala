@@ -44,7 +44,9 @@ class DedupStreamSpec extends SparkSpec {
     // three micro-batches split by doc_id — arrival order is ingest order
     val rows = batchAll.select("doc_id", "text").collect()
       .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-    branches.foreach { case (name, branch) =>
+    // each branch, and the gated step that picks one per batch
+    val gated: Branch = (b, id, idx, out) => DedupStream.processBatch(b, id, idx, out)
+    (branches :+ ("gated" -> gated)).foreach { case (name, branch) =>
       val tmp = tempDir("dedup_stream").toString
       DedupStream.seedIndex(corpus, s"$tmp/index")
       val mem = MemoryStream[(Long, String)]
@@ -65,23 +67,6 @@ class DedupStreamSpec extends SparkSpec {
           s"only-batch=${(want -- got).take(3)}")
     }
     assert(want.nonEmpty, "the split must produce at least one pair")
-  }
-
-  test("DedupStream.run wires the gated batch step into the stream") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val corpus = docs.filter(col("doc_id") % 10 =!= 0)
-    val batch = docs.filter(col("doc_id") % 10 === 0)
-    val tmp = tempDir("dedup_run").toString
-    DedupStream.seedIndex(corpus, s"$tmp/index")
-    val mem = MemoryStream[(Long, String)]
-    val q = DedupStream.run(mem.toDF().toDF("doc_id", "text"),
-      s"$tmp/index", s"$tmp/pairs", s"$tmp/ckpt")
-    mem.addData(batch.select("doc_id", "text").as[(Long, String)].collect().toSeq)
-    q.processAllAvailable()
-    q.stop()
-    assert(triples(spark.read.parquet(s"$tmp/pairs")) ==
-      triples(DedupOps.incrementalMinhashPairs(corpus, batch)))
   }
 
   test("replaying a micro-batch is idempotent (partitions replaced, no double pairs)") {

@@ -24,8 +24,8 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 
 echo "== 0/5 testdata mtime stamp =="
-# A mid-round driver regeneration of /root/testdata invalidated a green
-# sbt-test run silently in r15 (BloomStreamSpec fixture guard). Record the
+# A mid-round driver regeneration of /root/testdata once invalidated a green
+# sbt-test run silently (a spec's fixture guard). Record the
 # newest parquet mtime in the gate log and in a tracked stamp file, so any
 # regeneration is loud here and visible in git history; the full sbt test
 # in step 1 then re-validates against the regenerated corpus.
